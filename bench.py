@@ -182,14 +182,14 @@ def phase_suite(cpus: int, sf_dir: str) -> dict:
     return {"times": out, "build": build}
 
 
-def phase_scale(cores: int, n_docs: int, repeats: int) -> dict:
+def phase_scale(cores: int, n_docs: int, repeats: int, udf_heavy: bool = True) -> dict:
     from pyspark.sql import functions as F
 
     from doc_agent_spark.operators import extractor
     from doc_agent_spark.session import get_spark
 
     spark = get_spark(app=f"bench-scale-{cores}", master=f"local[{cores}]",
-                      shuffle_partitions=cores * 2, udf_heavy=True)
+                      shuffle_partitions=cores * 2, udf_heavy=udf_heavy)
     corpus_path = ensure_corpus(spark, n_docs)
     sec = _timed_extraction(spark, corpus_path, n_docs, repeats)
     # identical-results fingerprint: order-insensitive over all span fields
@@ -305,7 +305,8 @@ def main() -> None:
         elif phase == "suite":
             print(json.dumps(phase_suite(cpus, sf_dir)))
         elif phase == "scale":
-            print(json.dumps(phase_scale(int(sys.argv[2]), n_docs, repeats)))
+            print(json.dumps(phase_scale(int(sys.argv[2]), n_docs, repeats,
+                                         udf_heavy=sys.argv[3:] != ["plain"])))
         elif phase == "skew":
             print(json.dumps(phase_skew(cpus, int(os.environ.get("BENCH_SKEW_DOCS", "200000")))))
         return
@@ -346,8 +347,12 @@ def main() -> None:
         def measure_pair(lo_=None, hi_=None):
             nonlocal best
             lo_, hi_ = lo_ or lo, hi_ or hi
-            small = _run_phase(["scale", str(lo_)])
-            large = _run_phase(["scale", str(hi_)])
+            # task.cpus=2 cannot start local[1] (Spark refuses fewer cores
+            # than cpus per task), so a 1-core small leg runs BOTH legs on
+            # plain 1-cpu slots: the worker ratio stays exactly hi/lo
+            slots = ["plain"] if lo_ < 2 else []
+            small = _run_phase(["scale", str(lo_), *slots])
+            large = _run_phase(["scale", str(hi_), *slots])
             eff = (large["docs_per_sec"] / small["docs_per_sec"]) / (hi_ / lo_)
             cand = {
                 "n_small": lo_, "n_large": hi_,

@@ -4,7 +4,7 @@ Plan shape (the plan we WANT at 100 TB, verified via .explain in tests):
 
     Scan parquet/Iceberg (column-pruned: doc_id, spans)
       → [optional salted repartition — only when input layout is skewed]
-      → ArrowEvalPython[mapInPandas extract_batch]   (narrow, no shuffle)
+      → MapInArrow[extract_batches_arrow]   (narrow, no shuffle)
       → sink (MERGE INTO / parquet)
 
 Extraction is per-document independent, so the whole pipeline is ONE narrow
@@ -15,9 +15,12 @@ a batch of heavy docs can't blow memory; (b) ``plans.skew.spread_by_doc``
 salts rows across partitions when the INPUT FILES are clustered (e.g. one
 parquet file holding all heavy docs) — a shuffle we only pay when needed.
 
-The per-batch Python calls ``spec.extract_document`` — the same function the
-test oracle uses — inside Arrow-batched pandas; there is no row-at-a-time
-Python UDF serialization (input_hint requirement).
+The default engine is ``mapInArrow``: each Arrow batch decodes the span
+structs column-wise and calls ``spec.extract_document_cols`` — the bit-exact
+column twin of ``spec.extract_document``, the function the test oracle uses;
+there is no row-at-a-time Python UDF serialization (input_hint requirement).
+``extract(engine="pandas")`` keeps the older ``mapInPandas extract_batch``
+stage over the dict path (identical values, pinned by tests).
 """
 
 from __future__ import annotations

@@ -1,17 +1,16 @@
-"""Per-partition lineage + run metrics (north_star: docs processed, spans
-emitted, parse failures; SURVEY §4.2.3 checkpoint/resume bookkeeping).
+"""Per-partition lineage reads (north_star: docs processed, spans emitted,
+parse failures; SURVEY §4.2.3 checkpoint/resume bookkeeping).
 
-Lineage rows are produced INSIDE the extraction pass (mapInPandas
-side-accumulation — no extra job), appended to a lineage table; resume =
-anti-join completed partitions. Metrics are a one-row rollup per stage.
+Every resumable job appends its own lineage rows (schema.LINEAGE) after the
+output write commits, from a separate pruned aggregate or a driver-side row
+list, and a one-row metrics rollup per stage. The helpers here are the read
+side: resume = anti-join the completed partitions, and a reused artifact
+takes its row count from the lineage row written when it was committed.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
-
-import pandas as pd
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,51 +18,33 @@ from pyspark.sql import functions as F
 from ..schema import LINEAGE
 
 
-def lineage_rows(result_with_partition: DataFrame, run_id: str, stage: str) -> DataFrame:
-    """Aggregate extraction results into per-partition lineage rows.
-
-    Input must carry a ``_partition_id`` column (spark_partition_id()).
-    """
-    return result_with_partition.groupBy("_partition_id").agg(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        F.lit("done").alias("status"),
-        F.count("*").alias("docs_in"),
-        F.count("*").alias("docs_out"),
-        F.sum(F.size("out_spans")).alias("spans_out"),
-        F.sum(F.col("parse_failure").cast("long")).alias("parse_failures"),
-        F.lit(0).cast("long").alias("wall_ms"),
-        F.current_timestamp().alias("finished_at"),
-    ).select(
-        "run_id", "stage", F.col("_partition_id").alias("partition_id"),
-        "status", "docs_in", "docs_out", "spans_out", "parse_failures",
-        "wall_ms", "finished_at",
+def _stage_rows(spark: SparkSession, lineage_path: str, run_id: str,
+                stage: str) -> DataFrame | None:
+    if not os.path.exists(lineage_path):
+        return None
+    return spark.read.schema(LINEAGE).parquet(lineage_path).filter(
+        (F.col("run_id") == run_id) & (F.col("stage") == stage)
+        & (F.col("status") == "done")
     )
 
 
 def completed_partitions(spark: SparkSession, lineage_path: str, run_id: str, stage: str) -> set[int]:
-    import os
-
-    if not os.path.exists(lineage_path):
+    rows = _stage_rows(spark, lineage_path, run_id, stage)
+    if rows is None:
         return set()
-    rows = (
-        spark.read.schema(LINEAGE).parquet(lineage_path)
-        .filter((F.col("run_id") == run_id) & (F.col("stage") == stage) & (F.col("status") == "done"))
-        .select("partition_id")
-        .collect()
+    return {r.partition_id for r in rows.select("partition_id").collect()}
+
+
+def committed_outputs(spark: SparkSession, lineage_path: str, run_id: str,
+                      stage: str) -> dict[int, tuple[int, float]]:
+    """partition_id → (docs_out, finished_at as epoch seconds) of the NEWEST
+    lineage row per partition, in one collect. Newest wins: a partition
+    rebuilt under the same run id appends a second row."""
+    rows = _stage_rows(spark, lineage_path, run_id, stage)
+    if rows is None:
+        return {}
+    newest = rows.groupBy("partition_id").agg(
+        F.max_by("docs_out", "finished_at").alias("docs_out"),
+        F.max(F.unix_micros("finished_at")).alias("at_us"),
     )
-    return {r.partition_id for r in rows}
-
-
-def append_lineage(lineage: DataFrame, lineage_path: str) -> None:
-    lineage.write.mode("append").parquet(lineage_path)
-
-
-def run_metrics(result: DataFrame, run_id: str, stage: str) -> DataFrame:
-    return result.agg(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        F.count("*").alias("docs_processed"),
-        F.sum(F.size("out_spans")).alias("spans_emitted"),
-        F.sum(F.col("parse_failure").cast("long")).alias("parse_failures"),
-    )
+    return {r.partition_id: (r.docs_out, r.at_us / 1e6) for r in newest.collect()}

@@ -5,8 +5,8 @@ deterministically, plus the deterministic replacement of its one
 non-deterministic stage (the vision-LLM call), per BASELINE.json north_star.
 
 It is used in TWO places:
-  1. inside the Spark pipeline's Arrow-batched pandas UDFs
-     (``operators/extractor.py``) — the distributed execution;
+  1. inside the Spark pipeline's Arrow-batched Python stage (``mapInArrow``
+     by default, ``operators/extractor.py``) — the distributed execution;
   2. as the test oracle (``tests/``) — golden span sequences are produced by
      these same functions on collected rows, so any divergence between the
      distributed plan and the spec (ordering, grouping, null handling) fails
@@ -607,8 +607,8 @@ def _finish_document(doc_id: str, raw_text: str, doc_type: str, lines: list[Page
 def finish_fields(doc_id: str, raw_text: str, doc_type: str, fields: dict) -> dict:
     """Normalize extracted fields and render the golden span sequence.
 
-    Shared tail of the scalar path and the vectorized batch path
-    (:mod:`doc_agent_spark.specvec`) — everything downstream of the
+    Shared tail of the dict path (:func:`extract_document`) and the column
+    path (:func:`extract_document_cols`) — everything downstream of the
     per-line battery is identical by construction."""
     # Route through the Zod-exact normalizer for parity with the reference's
     # validate step (ollama.ts:232): build the "model JSON" equivalent.

@@ -540,81 +540,84 @@ def run_curate(
         "bucket", F.pmod(F.hash("text_md5"), F.lit(buckets))
     )
     done = completed_partitions(spark, lineage_path, run_id, "curate")
-    if done:
-        docs = docs.filter(~F.col("bucket").isin(*sorted(done)))
-    docs = docs.repartition(max(buckets, spark.sparkContext.defaultParallelism), "bucket")
-
-    staged = curate_bucket_plan(docs, min_quality, langs, sample_fraction,
-                                lm_max_ce, tuple(blocklist) if blocklist else None,
-                                c4_rules)
-
-    obs = Observation("curate_metrics")
-    staged = staged.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum((F.col("_stage") >= 1).cast("long")).alias("after_dedup"),
-        F.sum((F.col("_stage") >= 2).cast("long")).alias("after_filters"),
-        F.sum((F.col("_stage") == 3).cast("long")).alias("kept"),
-        F.sum("n_lines_removed").alias("lines_removed"),
-        F.sum("span_tokens_removed").alias("span_tokens_removed"),
-    )
-
-    out = (
-        staged.filter(F.col("_stage") == 3)
-        .withColumn("text", redact.redact_pii(F.col("text")))
-        .select("bucket", "doc_id", "text", "lang", "pred_lang", "quality",
-                "lm_ce", "source", "n_chars", "text_md5")
-    )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
-    m = obs.get
+    # Skip rule (jobs/extract.py): every bucket committed ⇒ the resume
+    # filter selects no row, so skip the funnel, its write and lineage.
+    m: dict = {}
+    if not set(range(buckets)) <= done:
+        if done:
+            docs = docs.filter(~F.col("bucket").isin(*sorted(done)))
+        docs = docs.repartition(max(buckets, spark.sparkContext.defaultParallelism), "bucket")
 
-    # Per-bucket lineage from the STAGED frame (pre-kept-filter), written
-    # only AFTER the output write commits — same crash-safe ordering as
-    # jobs/extract.py (die between the two writes ⇒ no lineage row ⇒ the
-    # bucket re-runs idempotently under dynamic partition overwrite).
-    # Deriving lineage from the written output (the round-2 shape) lost
-    # every bucket whose docs were ALL deduped/filtered/sampled out: no
-    # parquet partition ⇒ no lineage row ⇒ the bucket re-ran on every
-    # resume, and docs_in falsely recorded the kept count. Here docs_in is
-    # the bucket's true input count and empty-output buckets are marked
-    # done. The second action re-executes the funnel, but it reuses the
-    # bucket repartition's shuffle files (same lineage, same context) and
-    # aggregates only (bucket, _stage).
+        staged = curate_bucket_plan(docs, min_quality, langs, sample_fraction,
+                                    lm_max_ce, tuple(blocklist) if blocklist else None,
+                                    c4_rules)
+
+        obs = Observation("curate_metrics")
+        staged = staged.observe(
+            obs,
+            F.count(F.lit(1)).alias("docs_in"),
+            F.sum((F.col("_stage") >= 1).cast("long")).alias("after_dedup"),
+            F.sum((F.col("_stage") >= 2).cast("long")).alias("after_filters"),
+            F.sum((F.col("_stage") == 3).cast("long")).alias("kept"),
+            F.sum("n_lines_removed").alias("lines_removed"),
+            F.sum("span_tokens_removed").alias("span_tokens_removed"),
+        )
+
+        out = (
+            staged.filter(F.col("_stage") == 3)
+            .withColumn("text", redact.redact_pii(F.col("text")))
+            .select("bucket", "doc_id", "text", "lang", "pred_lang", "quality",
+                    "lm_ce", "source", "n_chars", "text_md5")
+        )
+        out.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
+        m = obs.get
+
+        # Per-bucket lineage from the STAGED frame (pre-kept-filter), written
+        # only AFTER the output write commits — same crash-safe ordering as
+        # jobs/extract.py (die between the two writes ⇒ no lineage row ⇒ the
+        # bucket re-runs idempotently under dynamic partition overwrite).
+        # Deriving lineage from the written output (the round-2 shape) lost
+        # every bucket whose docs were ALL deduped/filtered/sampled out: no
+        # parquet partition ⇒ no lineage row ⇒ the bucket re-ran on every
+        # resume, and docs_in falsely recorded the kept count. Here docs_in is
+        # the bucket's true input count and empty-output buckets are marked
+        # done. The second action re-executes the funnel, but it reuses the
+        # bucket repartition's shuffle files (same lineage, same context) and
+        # aggregates only (bucket, _stage).
+        lineage = staged.groupBy("bucket").agg(
+            F.lit(run_id).alias("run_id"),
+            F.lit("curate").alias("stage"),
+            F.lit("done").alias("status"),
+            F.count("*").alias("docs_in"),
+            F.sum((F.col("_stage") == 3).cast("long")).alias("docs_out"),
+            F.sum((F.col("_stage") == 3).cast("long")).alias("spans_out"),
+            F.lit(0).cast("long").alias("parse_failures"),
+            F.lit(int((time.time() - t0) * 1000)).cast("long").alias("wall_ms"),
+            F.current_timestamp().alias("finished_at"),
+        ).select(
+            "run_id", "stage", F.col("bucket").cast("int").alias("partition_id"),
+            "status", "docs_in", "docs_out", "spans_out", "parse_failures",
+            "wall_ms", "finished_at",
+        )
+        lineage.write.mode("append").parquet(lineage_path)
+
     wall_ms = int((time.time() - t0) * 1000)
-    lineage = staged.groupBy("bucket").agg(
-        F.lit(run_id).alias("run_id"),
-        F.lit("curate").alias("stage"),
-        F.lit("done").alias("status"),
-        F.count("*").alias("docs_in"),
-        F.sum((F.col("_stage") == 3).cast("long")).alias("docs_out"),
-        F.sum((F.col("_stage") == 3).cast("long")).alias("spans_out"),
-        F.lit(0).cast("long").alias("parse_failures"),
-        F.lit(wall_ms).cast("long").alias("wall_ms"),
-        F.current_timestamp().alias("finished_at"),
-    ).select(
-        "run_id", "stage", F.col("bucket").cast("int").alias("partition_id"),
-        "status", "docs_in", "docs_out", "spans_out", "parse_failures",
-        "wall_ms", "finished_at",
-    )
-    lineage.write.mode("append").parquet(lineage_path)
-
+    counts = {k: int(m.get(k) or 0) for k in (
+        "docs_in", "after_dedup", "after_filters", "kept", "lines_removed",
+        "span_tokens_removed",
+    )}
     metrics_row = spark.createDataFrame(
         [(
-            run_id, "curate", int(m["docs_in"] or 0), int(m["after_dedup"] or 0),
-            int(m["after_filters"] or 0), int(m["kept"] or 0),
+            run_id, "curate", counts["docs_in"], counts["after_dedup"],
+            counts["after_filters"], counts["kept"],
         )],
         "run_id string, stage string, docs_in long, after_dedup long, "
         "after_filters long, kept long",
     )
     metrics_row.write.mode("append").parquet(metrics_path)
     return {
-        "docs_in": int(m["docs_in"] or 0),
-        "after_dedup": int(m["after_dedup"] or 0),
-        "after_filters": int(m["after_filters"] or 0),
-        "kept": int(m["kept"] or 0),
-        "lines_removed": int(m["lines_removed"] or 0),
-        "span_tokens_removed": int(m["span_tokens_removed"] or 0),
+        **counts,
         "boilerplate_artifact_reused": boiler_reused,
         "span_artifact_reused": span_reused,
         "lm_artifact_reused": lm_reused,

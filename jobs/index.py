@@ -31,7 +31,9 @@ of the input corpus, its parquet write is the commit point, and a re-run
 skips any artifact that already reads back (a crash mid-write leaves an
 unreadable artifact that rebuilds identically). One lineage row per
 artifact (partition_id = artifact ordinal) commits AFTER its write, so
-`resumed` in the stats reflects exactly what was skipped.
+`resumed` in the stats reflects exactly what was skipped, and a reused
+artifact reports the row count its newest lineage row recorded at commit
+instead of re-counting (count() only when no such row postdates it).
 
 Scale notes: every artifact is one relational pass over the corpus;
 ivf_cells is the single Arrow stage (broadcast-codebook matmul assign —
@@ -43,6 +45,7 @@ scan."""
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 import time
@@ -76,6 +79,48 @@ def _readable(spark: SparkSession, path: str):
         return None
 
 
+# Stamp keys that only say the artifacts are OUT OF DATE (a new embedder,
+# a rewritten input snapshot): rebuild_stale may wipe and rebuild. Every
+# other key is the build config itself, which is never wiped.
+STALE_KEYS = ("embedder_version", "input_fp")
+
+
+def _check_stamp(out: str, cfg: dict, rebuild_stale: bool) -> None:
+    """Fail fast when the stamp beside ``out`` differs from ``cfg``: a
+    resume under another config would mix artifacts that cannot agree
+    (dim-16 embeddings quantized as dim-32 dequantize to garbage forever)
+    — the jobs/publish.py contract. A stale-only difference wipes and
+    rebuilds under ``rebuild_stale`` (the "re-embed on model update" path);
+    a config difference always raises, naming the differing keys."""
+    import json
+    import shutil
+
+    from doc_agent_spark.operators.publish import check_or_write_config
+
+    stamp = out + "_config.json"
+    if os.path.exists(stamp):
+        with open(stamp) as fh:
+            prev = json.load(fh)
+        differ = sorted(k for k in prev.keys() | cfg.keys() if prev.get(k) != cfg.get(k))
+        config = [k for k in differ if k not in STALE_KEYS]
+        if config:
+            raise ValueError(
+                f"index config mismatch for {out}: {config} differ "
+                f"(existing {[prev.get(k) for k in config]}, asked "
+                f"{[cfg.get(k) for k in config]}); a new config needs a new "
+                "output path — --rebuild-stale never wipes a config change"
+            )
+        if differ:
+            if not rebuild_stale:
+                raise ValueError(
+                    f"index config mismatch for {out}: stale stamp {differ}; "
+                    "pass --rebuild-stale to wipe and rebuild"
+                )
+            shutil.rmtree(out, ignore_errors=True)
+            os.remove(stamp)
+    check_or_write_config(out, cfg)
+
+
 def run_index(
     spark: SparkSession,
     input_path: str,
@@ -92,6 +137,7 @@ def run_index(
     from doc_agent_spark.functions import embedder
     from doc_agent_spark.functions.textfns import words_of
     from doc_agent_spark.operators import dedup, similarity
+    from doc_agent_spark.sinks.metrics import committed_outputs
 
     t0 = time.time()
     docs = (
@@ -99,39 +145,28 @@ def run_index(
         else spark.read.table(input_path)
     )
     out = output_path.rstrip("/")
-    # every artifact is a function of (input, dim, stride, k, bands): a
-    # resume under a different config would mix artifacts that cannot agree
-    # (dim-16 embeddings quantized as dim-32 dequantize to garbage forever)
-    # — same fail-fast contract as jobs/publish.py
-    # ... and of the EMBEDDING SPACE + input SNAPSHOT (roadmap :349
-    # embeddings versioning): the stamp carries the embedder version and the
-    # input content fingerprint, so an embedder upgrade or an input rewrite
-    # makes every artifact stale. Default is the fail-fast contract;
-    # rebuild_stale=True wipes and rebuilds under the new stamp instead
-    # (the "re-embed on model update" path).
+    # every artifact is a function of (input, dim, stride, k, bands) AND of
+    # the embedding space + input snapshot (roadmap :349 embeddings
+    # versioning): the stamp carries all of them — see _check_stamp for
+    # which differences may be wiped and rebuilt
     from doc_agent_spark.cache import input_fingerprint
-    from doc_agent_spark.operators.publish import check_or_write_config
 
-    cfg = {
+    _check_stamp(out, {
         "input": input_path, "dim": dim, "centroid_stride": centroid_stride,
         "minhash_k": minhash_k, "bands": bands,
         "embedder_version": embedder.EMBEDDER_VERSION,
         "input_fp": (input_fingerprint(input_path) if "/" in input_path
                      else "table:" + input_path),
-    }
-    try:
-        check_or_write_config(out, cfg)
-    except ValueError:
-        if not rebuild_stale:
-            raise
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
-        os.remove(out + "_config.json")
-        check_or_write_config(out, cfg)
+    }, rebuild_stale)
     built: dict[str, int] = {}
     reused: dict[str, bool] = {}
     lineage_rows = []
+
+    # a reused artifact's count comes from its commit-time lineage row: one
+    # lineage collect, paid only once something is reused
+    committed_rows = functools.cache(
+        lambda: committed_outputs(spark, lineage_path, run_id, "index")
+    )
 
     def commit(name: str, build, partition_by: str | None = None):
         """Build-or-reuse one artifact; lineage row appended after commit."""
@@ -139,7 +174,13 @@ def run_index(
         existing = _readable(spark, path)
         if existing is not None:
             reused[name] = True
-            built[name] = existing.count()
+            row = committed_rows().get(ARTIFACTS.index(name))
+            # the row must postdate the _SUCCESS marker: a rebuild whose
+            # lineage append never landed leaves an older row behind
+            fresh = row is not None and os.path.isdir(path) and (
+                row[1] >= os.path.getmtime(os.path.join(path, "_SUCCESS"))
+            )
+            built[name] = row[0] if fresh else existing.count()
             return existing
         t = time.time()
         frame = build()
@@ -200,9 +241,13 @@ def run_index(
         ),
         partition_by="cell",
     )
-    sq = similarity.sq_quantize(emb, dim=dim, id_col="id", vec_col="embedding")
-    commit("sq_stats", lambda: sq.select("mins", "spans").limit(1))
-    commit("sq_codes", lambda: sq.select("id", "codes"))
+    # planned lazily too: building the 2×dim-column quantize plan costs a
+    # fully-resumed run ~0.2 s of driver round trips for nothing
+    sq = functools.cache(
+        lambda: similarity.sq_quantize(emb, dim=dim, id_col="id", vec_col="embedding")
+    )
+    commit("sq_stats", lambda: sq().select("mins", "spans").limit(1))
+    commit("sq_codes", lambda: sq().select("id", "codes"))
 
     toks = docs.select(
         F.col("doc_id").alias("id"), words_of(F.col("text")).alias("w")
@@ -255,8 +300,9 @@ def main() -> None:
     ap.add_argument("--bands", type=int, default=4)
     ap.add_argument("--rebuild-stale", action="store_true",
                     help="on a stale stamp (embedder version / input "
-                         "fingerprint / config mismatch) wipe and rebuild "
-                         "instead of failing fast")
+                         "fingerprint) wipe and rebuild instead of failing "
+                         "fast; a config mismatch (dim, stride, k, bands, "
+                         "input) always fails")
     args = ap.parse_args()
 
     from extract import ship_package  # same zip+addPyFile bootstrap

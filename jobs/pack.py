@@ -122,149 +122,157 @@ def run_pack(
         tokens_expr = textfns.bpe_ish_tokens(F.col("text"))
 
     done = completed_partitions(spark, lineage_path, run_id, "pack")
-    if done:
-        docs = docs.filter(~F.col("shard").isin(*sorted(done)))
-    # token-free paths (lineage counts, shard joins) use the plain frame —
-    # mapInPandas blocks column pruning; and tokenization applies AFTER the
-    # resume filter so a resume never re-tokenizes completed shards (merge
-    # TRAINING above ran on the full input, so resumes tokenize identically)
-    docs_plain = docs
-    if merges is not None:
-        from doc_agent_spark.operators import tokenizer as tok
-
-        docs = tok.apply_bpe(docs, merges, out_col="_toks")
-
-    staged = sampling.split_assign(
-        docs, splits or {"train": 0.9, "val": 0.05, "test": 0.05}, key_col="doc_id"
-    ).select(
-        "split", "shard", "doc_id",
-        token_count_expr.alias("n_tokens"),
-    )
-    plan = packing.pack_chunks(
-        staged, tokens_col="n_tokens", key_col="doc_id",
-        budget=budget, n_shards=shards, seed=seed, stream_cols=("split",),
-    )
-
-    obs = Observation("pack_metrics")
-    plan = plan.observe(
-        obs,
-        F.count(F.lit(1)).alias("slices"),
-        F.sum("slice_len").alias("tokens"),
-        F.sum((F.col("seq_offset") == 0).cast("long")).alias("windows"),
-    )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    plan.write.mode("overwrite").partitionBy("shard").parquet(output_path)
-    m = obs.get
+    # Skip rule (jobs/extract.py): every shard in range(shards) committed ⇒
+    # the resume filter selects no row, so skip the plan, the windows and
+    # the lineage job. The whole-output shuffle pass below still runs.
+    pending = not set(range(shards)) <= done
+    m: dict = {}
+    if pending:
+        if done:
+            docs = docs.filter(~F.col("shard").isin(*sorted(done)))
+        # token-free paths (lineage counts, shard joins) use the plain frame —
+        # mapInPandas blocks column pruning; and tokenization applies AFTER the
+        # resume filter so a resume never re-tokenizes completed shards (merge
+        # TRAINING above ran on the full input, so resumes tokenize identically)
+        docs_plain = docs
+        if merges is not None:
+            from doc_agent_spark.operators import tokenizer as tok
 
-    if materialize:
-        # restrict to THIS run's shard set: the output dir may hold stale
-        # partitions from a previous run with a different --shards mapping
-        # (dynamic overwrite only replaces partitions this run writes);
-        # folding those in would double-count docs whose shard id moved
-        committed = spark.read.parquet(output_path).join(
-            docs_plain.select("shard").distinct(), "shard", "left_semi"
+            docs = tok.apply_bpe(docs, merges, out_col="_toks")
+
+        staged = sampling.split_assign(
+            docs, splits or {"train": 0.9, "val": 0.05, "test": 0.05}, key_col="doc_id"
+        ).select(
+            "split", "shard", "doc_id",
+            token_count_expr.alias("n_tokens"),
+        )
+        plan = packing.pack_chunks(
+            staged, tokens_col="n_tokens", key_col="doc_id",
+            budget=budget, n_shards=shards, seed=seed, stream_cols=("split",),
+        )
+
+        obs = Observation("pack_metrics")
+        plan = plan.observe(
+            obs,
+            F.count(F.lit(1)).alias("slices"),
+            F.sum("slice_len").alias("tokens"),
+            F.sum((F.col("seq_offset") == 0).cast("long")).alias("windows"),
+        )
+        plan.write.mode("overwrite").partitionBy("shard").parquet(output_path)
+        m = obs.get
+
+        if materialize:
+            # restrict to THIS run's shard set: the output dir may hold stale
+            # partitions from a previous run with a different --shards mapping
+            # (dynamic overwrite only replaces partitions this run writes);
+            # folding those in would double-count docs whose shard id moved
+            committed = spark.read.parquet(output_path).join(
+                docs_plain.select("shard").distinct(), "shard", "left_semi"
+            )
+            if done:
+                committed = committed.filter(~F.col("shard").isin(*sorted(done)))
+            windows = packing.assemble_windows(
+                committed,
+                docs,
+                tokens=tokens_expr,  # the SAME token space the plan counted
+                key_col="doc_id",
+                stream_cols=("split",),
+            )
+            windows.write.mode("overwrite").partitionBy("shard").parquet(
+                output_path.rstrip("/") + "_windows"
+            )
+
+    if shuffle_windows:
+        # Deterministic global training order over the COMPLETE window
+        # set (this run's + previously-committed shards): the order key
+        # spans shards, so this is a whole-output final pass, re-run
+        # from the windows dir each time (cheap: one range exchange) —
+        # not a per-shard resumable unit. Guard completeness first: a
+        # prior run WITHOUT --materialize marks shards done in lineage
+        # but never wrote their windows, and silently shuffling a
+        # partial window set would train on a truncated corpus.
+        # Every comparison and the shuffle input are scoped to THIS
+        # config's shard set: stale partitions from a previous
+        # --shards mapping must neither trip the guard nor ride the
+        # training order twice.
+        cfg = {r["shard"] for r in cfg_shards.collect()}
+        try:
+            all_windows = spark.read.parquet(
+                output_path.rstrip("/") + "_windows"
+            )
+            have = {r["shard"] for r in
+                    all_windows.select("shard").distinct().collect()} & cfg
+        except Exception:  # schema-less dir: nothing materialized yet
+            all_windows, have = None, set()
+        # every shard that produced plan windows must be present
+        need = {r["shard"] for r in
+                spark.read.parquet(output_path)
+                .filter(F.col("seq_offset") == 0)
+                .select("shard").distinct().collect()} & cfg
+        missing = sorted(need - have)
+        if missing:
+            raise RuntimeError(
+                f"--shuffle-windows: windows dir is missing shards "
+                f"{missing[:10]}{'...' if len(missing) > 10 else ''} "
+                f"(a prior run committed them without --materialize); "
+                f"re-run the full pack with --materialize into a fresh "
+                f"output/run-id before shuffling"
+            )
+        if all_windows is not None and need:
+            packing.shuffle_windows(
+                all_windows.join(cfg_shards, "shard", "left_semi"),
+                seed=shuffle_seed,
+            ).write.mode("overwrite").parquet(
+                output_path.rstrip("/") + "_windows_shuffled"
+            )
+
+    wall_ms = int((time.time() - t0) * 1000)
+    if pending:
+        # Lineage from the INPUT shard set (left-joined to plan aggregates):
+        # a shard whose docs all tokenize to zero writes no plan rows but must
+        # still be marked done, or it re-runs on every resume.
+        # mapInPandas blocks column pruning, so the lineage count and the
+        # shard semi-join run on the un-tokenized frame
+        shard_docs = docs_plain.groupBy("shard").agg(F.count("*").alias("docs_in"))
+        plan_agg = (
+            spark.read.parquet(output_path)
+            .groupBy("shard")
+            .agg(
+                F.sum((F.col("seq_offset") == 0).cast("long")).alias("windows"),
+                F.count("*").alias("slices"),
+            )
         )
         if done:
-            committed = committed.filter(~F.col("shard").isin(*sorted(done)))
-        windows = packing.assemble_windows(
-            committed,
-            docs,
-            tokens=tokens_expr,  # the SAME token space the plan counted
-            key_col="doc_id",
-            stream_cols=("split",),
+            plan_agg = plan_agg.filter(~F.col("shard").isin(*sorted(done)))
+        lineage = (
+            shard_docs.join(plan_agg, "shard", "left")
+            .select(
+                F.lit(run_id).alias("run_id"),
+                F.lit("pack").alias("stage"),
+                F.col("shard").cast("int").alias("partition_id"),
+                F.lit("done").alias("status"),
+                F.col("docs_in"),
+                F.coalesce(F.col("windows"), F.lit(0)).cast("long").alias("docs_out"),
+                F.coalesce(F.col("slices"), F.lit(0)).cast("long").alias("spans_out"),
+                F.lit(0).cast("long").alias("parse_failures"),
+                F.lit(wall_ms).cast("long").alias("wall_ms"),
+                F.current_timestamp().alias("finished_at"),
+            )
         )
-        windows.write.mode("overwrite").partitionBy("shard").parquet(
-            output_path.rstrip("/") + "_windows"
-        )
-        if shuffle_windows:
-            # Deterministic global training order over the COMPLETE window
-            # set (this run's + previously-committed shards): the order key
-            # spans shards, so this is a whole-output final pass, re-run
-            # from the windows dir each time (cheap: one range exchange) —
-            # not a per-shard resumable unit. Guard completeness first: a
-            # prior run WITHOUT --materialize marks shards done in lineage
-            # but never wrote their windows, and silently shuffling a
-            # partial window set would train on a truncated corpus.
-            # Every comparison and the shuffle input are scoped to THIS
-            # config's shard set: stale partitions from a previous
-            # --shards mapping must neither trip the guard nor ride the
-            # training order twice.
-            cfg = {r["shard"] for r in cfg_shards.collect()}
-            try:
-                all_windows = spark.read.parquet(
-                    output_path.rstrip("/") + "_windows"
-                )
-                have = {r["shard"] for r in
-                        all_windows.select("shard").distinct().collect()} & cfg
-            except Exception:  # schema-less dir: nothing materialized yet
-                all_windows, have = None, set()
-            # every shard that produced plan windows must be present
-            need = {r["shard"] for r in
-                    spark.read.parquet(output_path)
-                    .filter(F.col("seq_offset") == 0)
-                    .select("shard").distinct().collect()} & cfg
-            missing = sorted(need - have)
-            if missing:
-                raise RuntimeError(
-                    f"--shuffle-windows: windows dir is missing shards "
-                    f"{missing[:10]}{'...' if len(missing) > 10 else ''} "
-                    f"(a prior run committed them without --materialize); "
-                    f"re-run the full pack with --materialize into a fresh "
-                    f"output/run-id before shuffling"
-                )
-            if all_windows is not None and need:
-                packing.shuffle_windows(
-                    all_windows.join(cfg_shards, "shard", "left_semi"),
-                    seed=shuffle_seed,
-                ).write.mode("overwrite").parquet(
-                    output_path.rstrip("/") + "_windows_shuffled"
-                )
+        lineage.write.mode("append").parquet(lineage_path)
 
-    # Lineage from the INPUT shard set (left-joined to plan aggregates):
-    # a shard whose docs all tokenize to zero writes no plan rows but must
-    # still be marked done, or it re-runs on every resume.
-    wall_ms = int((time.time() - t0) * 1000)
-    # mapInPandas blocks column pruning, so the lineage count and the
-    # shard semi-join run on the un-tokenized frame
-    shard_docs = docs_plain.groupBy("shard").agg(F.count("*").alias("docs_in"))
-    plan_agg = (
-        spark.read.parquet(output_path)
-        .groupBy("shard")
-        .agg(
-            F.sum((F.col("seq_offset") == 0).cast("long")).alias("windows"),
-            F.count("*").alias("slices"),
-        )
-    )
-    if done:
-        plan_agg = plan_agg.filter(~F.col("shard").isin(*sorted(done)))
-    lineage = (
-        shard_docs.join(plan_agg, "shard", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit("pack").alias("stage"),
-            F.col("shard").cast("int").alias("partition_id"),
-            F.lit("done").alias("status"),
-            F.col("docs_in"),
-            F.coalesce(F.col("windows"), F.lit(0)).cast("long").alias("docs_out"),
-            F.coalesce(F.col("slices"), F.lit(0)).cast("long").alias("spans_out"),
-            F.lit(0).cast("long").alias("parse_failures"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.current_timestamp().alias("finished_at"),
-        )
-    )
-    lineage.write.mode("append").parquet(lineage_path)
-
+    n_slices, n_tokens, n_windows = (int(m.get(k) or 0) for k in ("slices", "tokens", "windows"))
     metrics_row = spark.createDataFrame(
-        [(run_id, "pack", int(m["slices"] or 0), int(m["tokens"] or 0),
-          int(m["windows"] or 0), budget)],
+        [(run_id, "pack", n_slices, n_tokens, n_windows, budget)],
         "run_id string, stage string, slices long, tokens long, "
         "windows long, budget long",
     )
     metrics_row.write.mode("append").parquet(metrics_path)
     return {
-        "slices": int(m["slices"] or 0),
-        "tokens": int(m["tokens"] or 0),
-        "windows": int(m["windows"] or 0),
+        "slices": n_slices,
+        "tokens": n_tokens,
+        "windows": n_windows,
         "resumed_shards_skipped": len(done),
         "wall_ms": wall_ms,
     }

@@ -10,7 +10,12 @@ Each stage keeps its own resume model (extract/curate: bucket lineage;
 pack: shard lineage; index: per-artifact commits), so re-running the
 SAME pipeline command after a crash resumes every stage at its own
 granularity — the driver adds no state of its own beyond the bridge
-artifact.
+artifact. A stage whose lineage already holds every unit (all buckets,
+all shards) is complete: it reads only its lineage, skips its plan, its
+output write and its lineage job, and appends the same zero-count
+metrics row. A fully-resumed index reuses each artifact on its commit
+proof and takes its row count from the artifact's newest lineage row
+(one lineage collect), not from a count() job.
 
 The bridge (extract's exploded span rows -> curate's documents contract)
 is a real pipeline stage, not glue: per doc it reassembles span text in

@@ -183,6 +183,40 @@ def test_stale_stamp_refuses_then_rebuilds(spark, tmp_path, monkeypatch):
                   centroid_stride=10, minhash_k=4, bands=2)
 
 
+def test_config_change_never_wipes_even_with_rebuild_stale(spark, built):
+    """--rebuild-stale may only wipe a STALE stamp (embedder version, input
+    snapshot); a config change raises, names the key, and keeps every
+    committed artifact and the stamp as they were."""
+    _, in_p, out, lin, met = built
+    stamp = open(out + "_config.json").read()
+    with pytest.raises(ValueError, match=r"config mismatch.*\['dim'\]"):
+        run_index(spark, in_p, out, lin, met, run_id="i3", dim=32,
+                  centroid_stride=20, rebuild_stale=True)
+    assert open(out + "_config.json").read() == stamp
+    for name in ARTIFACTS:
+        assert os.path.exists(os.path.join(out, name, "_SUCCESS")), name
+
+
+def test_reuse_after_stale_rebuild_reports_new_counts(spark, tmp_path):
+    """A stale rebuild under the SAME run id appends a second lineage row
+    per artifact; a later reuse takes its counts from the newest one."""
+    in_p, out, lin, met = (str(tmp_path / n) for n in
+                           ("in.parquet", "idx", "lin", "met"))
+    kw = dict(run_id="n1", dim=4, centroid_stride=10, minhash_k=4, bands=2)
+    _docs(spark, 30).write.parquet(in_p)
+    run_index(spark, in_p, out, lin, met, **kw)
+    _docs(spark, 31).write.mode("overwrite").parquet(in_p)
+    rebuilt = run_index(spark, in_p, out, lin, met, rebuild_stale=True, **kw)
+    assert rebuilt["artifacts_reused"] == 0
+    assert rebuilt["artifacts"]["embeddings"] == 31
+    emb_rows = spark.read.parquet(lin).filter(F.col("partition_id") == 0)
+    assert sorted(r.docs_out for r in emb_rows.collect()) == [30, 31]
+
+    reused = run_index(spark, in_p, out, lin, met, **kw)
+    assert reused["artifacts_reused"] == len(ARTIFACTS)
+    assert reused["artifacts"] == rebuilt["artifacts"]
+
+
 def test_incremental_refuses_stale_index(spark, tmp_path, monkeypatch):
     """jobs/incremental.py refuses an index stamped by another embedder
     version (the 'handle embedding model updates' contract)."""

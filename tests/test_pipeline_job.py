@@ -22,9 +22,15 @@ def corpus(spark, tmp_path_factory):
     return path
 
 
-def test_pipeline_all_stages_and_resume(spark, corpus, tmp_path_factory):
+@pytest.fixture(scope="module")
+def cold(spark, corpus, tmp_path_factory):
+    """One cold pipeline run; the resume tests below only read its workdir."""
     wd = str(tmp_path_factory.mktemp("pipe") / "run")
-    stats = run_pipeline(spark, corpus, wd, "p1", buckets=4, shards=2, publish=True)
+    return wd, run_pipeline(spark, corpus, wd, "p1", buckets=4, shards=2, publish=True)
+
+
+def test_pipeline_all_stages_and_resume(spark, corpus, cold):
+    wd, stats = cold
     assert stats["extract"]["docs_processed"] == 40
     assert stats["bridge"]["docs"] == 40
     assert stats["curate"]["docs_in"] == 40
@@ -56,6 +62,75 @@ def test_pipeline_all_stages_and_resume(spark, corpus, tmp_path_factory):
     assert stats2["publish"]["shards_written"] == 0
     assert stats2["publish"]["complete"] is True
     assert spark.read.parquet(f"{wd}/curated").count() == curated.count()
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number of
+    Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+def test_fully_resumed_stage_reads_only_lineage(spark, corpus, cold, tmp_path):
+    """A stage whose every bucket/shard is in lineage launches only the
+    input schema probe, the lineage read and the metrics append — never
+    a job over the input rows (running the full path over the empty
+    remainder takes 7-8 jobs). A bucket missing from lineage still takes
+    the full path and rebuilds exactly the cold output."""
+    import shutil
+
+    from jobs.curate import run_curate
+    from jobs.extract import run_extract
+    from jobs.pack import run_pack
+
+    wd, _ = cold
+    lin = f"{wd}/lineage"
+    met = lambda name: str(tmp_path / f"metrics_{name}")  # noqa: E731
+    stages = {
+        "extract": (lambda: run_extract(
+            spark, corpus, f"{wd}/extracted", lin, met("extract"), "p1", buckets=4),
+            "resumed_buckets_skipped", 4),
+        "curate": (lambda: run_curate(
+            spark, f"{wd}/documents", f"{wd}/curated", lin, met("curate"), "p1",
+            buckets=4), "resumed_buckets_skipped", 4),
+        "pack": (lambda: run_pack(
+            spark, f"{wd}/curated", f"{wd}/packed", lin, met("pack"), "p1",
+            budget=256, shards=2), "resumed_shards_skipped", 2),
+    }
+    for name, (run, skipped, units) in stages.items():
+        st, n_jobs = _jobs_in_group(spark, f"resume-{name}", run)
+        assert n_jobs <= 3, (name, n_jobs)
+        assert st[skipped] == units
+        # a full resume still reports zero counts and appends one zero metrics row
+        assert all(v in (0, None) for k, v in st.items() if k not in (skipped, "wall_ms"))
+        (row,) = spark.read.parquet(met(name)).collect()
+        assert all(v == 0 for k, v in row.asDict().items()
+                   if k not in ("run_id", "stage", "budget")), row
+
+    # drop one extract bucket's lineage: that bucket alone re-runs
+    lineage = spark.read.parquet(lin)
+    bucket, n_docs = (
+        lineage.filter((F.col("stage") == "extract") & (F.col("docs_in") > 0))
+        .orderBy("partition_id").select("partition_id", "docs_in").first()
+    )
+    partial = str(tmp_path / "lineage")
+    lineage.filter(~((F.col("stage") == "extract") & (F.col("partition_id") == bucket))) \
+        .write.parquet(partial)
+    out = str(tmp_path / "extracted")
+    shutil.copytree(f"{wd}/extracted", out)
+    st = run_extract(spark, corpus, out, partial, met("partial"), "p1", buckets=4)
+    assert st["resumed_buckets_skipped"] == 3
+    assert st["docs_processed"] == n_docs
+    assert _rows(spark, out) == _rows(spark, f"{wd}/extracted")
 
 
 def test_pipeline_jsonl_ingest_with_quarantine(spark, tmp_path_factory):

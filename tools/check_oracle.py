@@ -80,7 +80,8 @@ def type_map(names, types):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app="oracle-check", master="local[8]", shuffle_partitions=8)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark(app="oracle-check", master=f"local[{cpus}]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
