@@ -89,13 +89,10 @@ class ResultCache:
         return os.path.join(self.dir, key)
 
     def lookup(self, spark, key: str):
-        """Cached result DataFrame, or None. Counts the hit/miss."""
+        """Cached result DataFrame, or None. The caller reports the
+        request's actual outcome through :meth:`stats`."""
         p = self.path(key)
-        if os.path.isdir(p):
-            self.hits += 1
-            return spark.read.parquet(p)
-        self.misses += 1
-        return None
+        return spark.read.parquet(p) if os.path.isdir(p) else None
 
     def store(self, df, row_limit: int, key: str):
         """Materialize the (bounded) result under the key and return the
@@ -112,7 +109,13 @@ class ResultCache:
         with self._lock:
             if os.path.isdir(final):    # concurrent fill: last writer wins
                 shutil.rmtree(final)
-            os.rename(tmp, final)
+            try:
+                os.rename(tmp, final)
+            except OSError:
+                # another PROCESS re-created the entry between the rmtree
+                # and the rename: serve this fill's result uncached
+                shutil.rmtree(tmp, ignore_errors=True)
+                return df
             self._evict()
         return df.sparkSession.read.parquet(final)
 
@@ -145,5 +148,11 @@ class ResultCache:
             shutil.rmtree(p, ignore_errors=True)
 
     def stats(self, hit: bool, key: str) -> dict:
-        return {"hit": hit, "key": key,
-                "hits": self.hits, "misses": self.misses}
+        """Counts one request's outcome; returns its cache debug struct."""
+        with self._lock:        # request threads share the counters
+            if hit:
+                self.hits += 1
+            else:
+                self.misses += 1
+            return {"hit": hit, "key": key,
+                    "hits": self.hits, "misses": self.misses}

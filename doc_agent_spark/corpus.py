@@ -162,26 +162,3 @@ def make_doc(i: int, seed: int = 42) -> dict:
 def gen_docs(n: int, seed: int = 42, start: int = 0) -> Iterator[dict]:
     for i in range(start, start + n):
         yield make_doc(i, seed)
-
-
-def write_parquet(path: str, n: int, seed: int = 42, batch: int = 20_000) -> None:
-    """Write the corpus as parquet (pyarrow, chunked, constant memory)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pa.schema([
-        ("doc_id", pa.string()),
-        ("spans", pa.list_(pa.struct([
-            ("kind", pa.string()),
-            ("text", pa.string()),
-            ("media_ref", pa.string()),
-            ("offset", pa.int32()),
-        ]))),
-    ])
-    writer = pq.ParquetWriter(path, schema, compression="zstd")
-    try:
-        for lo in range(0, n, batch):
-            rows = [make_doc(i, seed) for i in range(lo, min(lo + batch, n))]
-            writer.write_table(pa.Table.from_pylist(rows, schema=schema))
-    finally:
-        writer.close()

@@ -159,16 +159,6 @@ from doc_agent_spark.functions.textfns import word_ngrams_of  # noqa: E402
   # (one counting-gram builder — see textfns.word_ngrams_of docstring)
 
 
-def word_ngrams_all(text: Column, n: int) -> Column:
-    """Word n-grams WITH multiplicity (the counting input; word_ngrams in
-    textfns is distinct-only for shingling). Generalizes word_bigrams_all —
-    n=2 produces the identical gram strings. Tokens let_-bound (the
-    per-position lambda slices them; see assembly.let_)."""
-    from doc_agent_spark.functions.assembly import let_
-
-    return let_(words_of(text), lambda w: word_ngrams_of(w, n))
-
-
 def ngram_repetition_profile(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -346,18 +336,6 @@ def alpha_word_fraction_sql(words: str) -> str:
 def required_stopword_hits_sql(words: str) -> str:
     req = ", ".join(f"'{s}'" for s in REQUIRED_STOPWORDS)
     return f"len(list_filter([{req}], s -> list_contains({words}, s)))"
-
-
-def gopher_outlier_pass_sql(text: str, words: str, page: str) -> str:
-    return (
-        f"(len({words}) >= 50 AND len({words}) <= 100000"
-        f" AND {mean_word_length_sql(words)} BETWEEN 3.0 AND 10.0"
-        f" AND {symbol_word_ratio_sql(text, words)} <= 0.1"
-        f" AND {bullet_line_fraction_sql(page)} < 0.9"
-        f" AND {ellipsis_line_fraction_sql(page)} < 0.3"
-        f" AND {alpha_word_fraction_sql(words)} >= 0.8"
-        f" AND {required_stopword_hits_sql(words)} >= 2)"
-    )
 
 
 def ngram_repetition_sql(

@@ -227,23 +227,6 @@ def top_bigram_char_fraction(df, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def char_ngrams(text: Column, n: int = 3) -> Column:
-    """Character n-gram shingles over the normalized text (distinct).
-
-    ``norm`` is let_-bound: the per-position lambda substrings it, and an
-    unbound reference would re-run the normalize regex once per character
-    position — O(len²) per doc (the assembly.let_ lesson)."""
-    def _with_norm(norm: Column) -> Column:
-        idx = F.sequence(
-            F.lit(1), F.greatest(F.length(norm) - F.lit(n - 1), F.lit(0))
-        )
-        return F.array_distinct(
-            F.transform(idx, lambda i: F.substring(norm, i, n))
-        )
-
-    return let_(F.regexp_replace(F.lower(text), r"\s+", " "), _with_norm)
-
-
 def word_ngrams(text: Column, n: int = 3) -> Column:
     """Word n-gram shingles (distinct), over the shared tokenizer.
 

@@ -97,16 +97,6 @@ def url_pathq(url: Column) -> Column:
     return F.when(pathq == "", F.lit("/")).otherwise(pathq)
 
 
-def url_pathq_sql(url_expr: str) -> str:
-    """DuckDB mirror of url_pathq."""
-    nofrag = f"split_part({url_expr}, '#', 1)"
-    scheme = f"lower(split_part({nofrag}, '://', 1))"
-    rest = f"substring({nofrag}, length({scheme}) + 4)"
-    hostport = f"split_part(split_part({rest}, '/', 1), '?', 1)"
-    pathq = f"substring({rest}, length({hostport}) + 1)"
-    return f"(CASE WHEN {pathq} = '' THEN '/' ELSE {pathq} END)"
-
-
 def registered_domain(url: Column) -> Column:
     """Naive registered domain: the host's last two dot-labels (production:
     Public Suffix List broadcast join — same plan shape)."""

@@ -15,65 +15,19 @@ a batch of heavy docs can't blow memory; (b) ``plans.skew.spread_by_doc``
 salts rows across partitions when the INPUT FILES are clustered (e.g. one
 parquet file holding all heavy docs) — a shuffle we only pay when needed.
 
-The default engine is ``mapInArrow``: each Arrow batch decodes the span
+The one engine is ``mapInArrow``: each Arrow batch decodes the span
 structs column-wise and calls ``spec.extract_document_cols`` — the bit-exact
 column twin of ``spec.extract_document``, the function the test oracle uses;
 there is no row-at-a-time Python UDF serialization (input_hint requirement).
-``extract(engine="pandas")`` keeps the older ``mapInPandas extract_batch``
-stage over the dict path (identical values, pinned by tests).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import spec
 from ..schema import EXTRACTION_RESULT
-
-
-def _spans_to_list(spans) -> list[dict]:
-    out = []
-    for s in spans:
-        d = s if isinstance(s, dict) else s.asDict()
-        out.append({
-            "kind": d.get("kind"),
-            "text": d.get("text"),
-            "media_ref": d.get("media_ref"),
-            "offset": int(d.get("offset") or 0),
-        })
-    return out
-
-
-_RESULT_COLS = tuple(f.name for f in EXTRACTION_RESULT.fields)
-
-
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id, spans) → EXTRACTION_RESULT rows.
-
-    Output assembles column-wise (dict of lists — the cheap pandas
-    constructor). A/B at 300k docs showed the stage is bound by spec
-    compute + Arrow (de)serialization of the nested span structs, not by
-    row assembly: wall was unchanged vs list-of-row-dicts, and Arrow batch
-    size 2048 beat both 512 (equal) and 8192 (2× worse load balance).
-    The remaining gap to the pure-python ceiling (≈6.2k docs/s/core vs
-    ≈3.3k in-stage) is the serialization tax on interleaved span structs —
-    halving it means vectorizing spec itself, which risks the bit-exact
-    goldens and stays deprioritized.
-    """
-    extract_document = spec.extract_document
-    for pdf in batches:
-        data = {c: [] for c in _RESULT_COLS}
-        appends = [data[c].append for c in _RESULT_COLS]
-        for doc_id, spans in zip(pdf["doc_id"].to_numpy(), pdf["spans"].to_numpy()):
-            r = extract_document(str(doc_id), _spans_to_list(spans))
-            for c, append in zip(_RESULT_COLS, appends):
-                append(r[c])
-        yield pd.DataFrame(data, columns=list(_RESULT_COLS))
 
 
 def extract_batches_arrow(batches):
@@ -121,18 +75,15 @@ def extract_batches_arrow(batches):
         )
 
 
-def extract(documents: DataFrame, engine: str = "arrow") -> DataFrame:
+def extract(documents: DataFrame) -> DataFrame:
     """Run the deterministic extractor over a (doc_id, spans) DataFrame.
 
-    Returns the doc-level EXTRACTION_RESULT frame (docdata + out_spans).
-    ``engine='arrow'`` (default) uses mapInArrow with explicit-typed array
-    builders; ``engine='pandas'`` keeps the original mapInPandas stage
-    (identical values — pinned by tests/test_extractor.py).
+    Returns the doc-level EXTRACTION_RESULT frame (docdata + out_spans),
+    built by one mapInArrow stage with explicit-typed array builders.
     """
-    cols = documents.select("doc_id", "spans")
-    if engine == "arrow":
-        return cols.mapInArrow(extract_batches_arrow, schema=EXTRACTION_RESULT)
-    return cols.mapInPandas(extract_batch, schema=EXTRACTION_RESULT)
+    return documents.select("doc_id", "spans").mapInArrow(
+        extract_batches_arrow, schema=EXTRACTION_RESULT
+    )
 
 
 def extracted_spans(documents: DataFrame) -> DataFrame:

@@ -449,11 +449,3 @@ def zone_map_sql(src: str, file_expr: str, value_cols: list[str]) -> str:
     return f"""
 SELECT {file_expr} AS file_id, count(*) AS n_rows, {stats}
 FROM ({src}) GROUP BY 1"""
-
-
-def prune_files_sql(zmap_sql: str, col: str, lo, hi) -> str:
-    """DuckDB mirror of :func:`prune_files` over a zone-map SELECT."""
-    return f"""
-SELECT file_id, n_rows,
-       coalesce(max_{col} >= {lo} AND min_{col} <= {hi}, false) AS scan
-FROM ({zmap_sql})"""

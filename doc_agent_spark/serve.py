@@ -69,19 +69,20 @@ def _run_op(spark, op: str, params: dict, row_limit: int, cache=None):
         if k.endswith("_path") and isinstance(v, str) and v
     }
     key = cache.key(op, canon, row_limit, fps)
-    df = cache.lookup(spark, key)
-    hit = df is not None
     rows = None
-    if hit:
-        try:
+    try:
+        df = cache.lookup(spark, key)
+        if df is not None:
             rows = [json.loads(x) for x in df.limit(row_limit).toJSON().collect()]
-        except Exception:
-            # entry evicted/corrupted between lookup and read (concurrent
-            # --port traffic): recompute rather than surface a 500
-            hit = False
-    if rows is None:
+    except Exception:
+        # entry evicted/corrupted between lookup and read (concurrent
+        # --port traffic): recompute rather than surface a 500
+        pass
+    hit = rows is not None
+    if not hit:
         df = cache.store(api.execute(spark, op, **params), row_limit, key)
         rows = [json.loads(x) for x in df.limit(row_limit).toJSON().collect()]
+    # counted here, from the outcome: a lookup whose read failed is a miss
     return rows, cache.stats(hit, key)
 
 

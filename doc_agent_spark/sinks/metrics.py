@@ -1,11 +1,14 @@
 """Per-partition lineage reads (north_star: docs processed, spans emitted,
 parse failures; SURVEY §4.2.3 checkpoint/resume bookkeeping).
 
-Every resumable job appends its own lineage rows (schema.LINEAGE) after the
-output write commits, from a separate pruned aggregate or a driver-side row
-list, and a one-row metrics rollup per stage. The helpers here are the read
-side: resume = anti-join the completed partitions, and a reused artifact
-takes its row count from the lineage row written when it was committed.
+Bucket/shard jobs (extract, curate, pack) append their own lineage rows
+(schema.LINEAGE) after the output write commits, from a separate pruned
+aggregate, and a one-row metrics rollup per stage. Artifact-granular jobs
+(index, frontier, incremental) commit through sinks/ledger.py, which owns
+the artifact-resume contract and their lineage rows. The helpers here are
+the read side: resume = anti-join the completed partitions, and a reused
+artifact takes its row count from the lineage row written when it was
+committed.
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ progress callback. This module exists for the continuous-ingest deployment
 mode: the SAME extraction transformation applied to a file stream, plus an
 event-time windowed aggregation with watermarked late-data handling for the
 metrics feed. Batch and streaming share one code path (extractor.extract is
-a mapInPandas over a streaming-compatible plan), so span outputs are
+a mapInArrow over a streaming-compatible plan), so span outputs are
 byte-identical to the batch pipeline — tests assert exactly that.
 """
 

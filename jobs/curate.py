@@ -184,15 +184,10 @@ def _load_or_build(spark, path: str, build, params: dict | None = None):
       marker is a partial job-commit (driver died mid-rename, or a
       direct-write committer) — rebuilt, not reused; 'reads back' alone
       is not 'committed'."""
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution
-        committed = (not os.path.isdir(path)) or os.path.exists(
-            os.path.join(path, "_SUCCESS")
-        )
-    except Exception:
-        committed = False
-    if committed:
+    from doc_agent_spark.sinks.ledger import readable
+
+    df = readable(spark, path)
+    if df is not None:
         _artifact_params_guard(path, params)
         return df, True
     build().write.mode("overwrite").parquet(path)

@@ -10,8 +10,8 @@ Inputs: ``--fetched`` (doc_id, url, text) — the pages this cycle actually
 retrieved (e.g. the WARC ingest's docs bridge); ``--seen`` (url) — every
 canonical URL already fetched or enqueued, snapshot N's dedup state;
 ``--robots`` (host, body) — the per-host robots.txt bodies. Outputs, each
-independently committed (the jobs/index.py artifact-resume pattern —
-parquet + _SUCCESS == done, re-run skips):
+independently committed through the artifact ledger (sinks/ledger.py:
+parquet + _SUCCESS == done, re-run skips, one lineage row per artifact):
 
   discovered/  (url, host, n_refs)  distinct canonical outlinks extracted
                from fetched HTML + how many fetched pages referenced each
@@ -49,10 +49,8 @@ from pyspark.sql import functions as F
 
 ARTIFACTS = ["discovered", "frontier", "blocked"]
 
-# shared job helpers — one definition, one future fix (jobs/pipeline.py
-# imports _readable the same way)
+from doc_agent_spark.sinks.ledger import Ledger, readable  # noqa: E402
 from jobs.incremental import _read  # noqa: E402
-from jobs.index import _readable  # noqa: E402
 
 
 def run_frontier(
@@ -72,17 +70,16 @@ def run_frontier(
 ) -> dict:
     from doc_agent_spark.functions import urls
     from doc_agent_spark.operators import frontier as frontops
-    from doc_agent_spark.operators.publish import check_or_write_config
     from doc_agent_spark.plans import runtime_filter
 
     t0 = time.time()
-    out = output_path.rstrip("/")
     # frontier artifacts are a deterministic function of (inputs, config);
     # resuming under a different config would mix disagreeing artifacts.
     # The optional channels change artifact CONTENT (records → redirect
     # edges in discovered/, ranks → host_rank in frontier/, bloom_min →
     # seen-set reduction shape), so their presence is part of the identity.
-    check_or_write_config(out, {
+    # No stale keys here: any stamp difference raises.
+    ledger = Ledger(spark, output_path, lineage_path, run_id, "frontier", ARTIFACTS, {
         "job": "frontier", "crawl_delay_s": crawl_delay_s,
         "bloom_min": bloom_min,
         "sitemaps": sitemaps_path, "records": records_path,
@@ -91,53 +88,6 @@ def run_frontier(
     fetched = _read(spark, fetched_path).select("url", "text")
     seen = _read(spark, seen_path).select("url")
     robots = _read(spark, robots_path).select("host", "body")
-    built: dict[str, int] = {}
-    reused: dict[str, bool] = {}
-
-    def _append_lineage(name: str, rows: int, wall_ms: int) -> None:
-        spark.createDataFrame(
-            [(run_id, "frontier", ARTIFACTS.index(name), "done",
-              rows, rows, 0, 0, wall_ms)],
-            "run_id string, stage string, partition_id int, status string, "
-            "docs_in long, docs_out long, spans_out long, parse_failures long, "
-            "wall_ms long",
-        ).withColumn("finished_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(lineage_path)
-
-    def _lineage_row_exists(pid: int) -> bool:
-        try:
-            from doc_agent_spark.schema import LINEAGE
-
-            return bool(
-                spark.read.schema(LINEAGE).parquet(lineage_path)
-                .filter(
-                    (F.col("run_id") == run_id)
-                    & (F.col("stage") == "frontier")
-                    & (F.col("partition_id") == pid)
-                )
-                .head(1)
-            )
-        except Exception:
-            return False
-
-    def commit(name: str, build):
-        path = f"{out}/{name}"
-        existing = _readable(spark, path)
-        if existing is not None:
-            reused[name] = True
-            built[name] = existing.count()
-            if not _lineage_row_exists(ARTIFACTS.index(name)):
-                _append_lineage(name, built[name], 0)
-            return existing
-        t = time.time()
-        frame = build()
-        frame.write.mode("overwrite").parquet(path)
-        committed = spark.read.parquet(path)
-        reused[name] = False
-        built[name] = committed.count()
-        _append_lineage(name, built[name], int((time.time() - t) * 1000))
-        return committed
 
     def build_discovered():
         # n_refs = DISTINCT referencing sources (a nav that repeats one
@@ -180,8 +130,6 @@ def run_frontier(
             urls.url_host(F.col("link")).alias("host"),
             "n_refs",
         )
-
-    discovered = commit("discovered", build_discovered)
 
     def build_new():
         n_seen = seen.count()
@@ -236,29 +184,32 @@ def run_frontier(
             )
         return sched
 
-    commit("frontier", build_frontier)
-    commit("blocked", lambda: (
-        flagged().filter(F.col("blocked")).select("url", "host")
-    ))
+    with ledger:
+        discovered = ledger.commit("discovered", build_discovered)
+        ledger.commit("frontier", build_frontier)
+        ledger.commit("blocked", lambda: (
+            flagged().filter(F.col("blocked")).select("url", "host")
+        ))
+    seen_out = None
     if seen_out_path is not None:
         # snapshot N+1's dedup state = seen ∪ discovered, written to a NEW
         # path (never a rewrite of snapshot N — the mergeable-artifact
         # rule); committed with the same _SUCCESS/resume contract so a
         # crashed cycle re-runs cleanly
-        if _readable(spark, seen_out_path) is None:
+        if readable(spark, seen_out_path) is None:
             seen.unionByName(discovered.select("url")).distinct().write.mode(
                 "overwrite"
             ).parquet(seen_out_path)
-        built["seen_out"] = spark.read.parquet(seen_out_path).count()
+        seen_out = spark.read.parquet(seen_out_path).count()
     return {
         "run_id": run_id,
         "fetched_pages": fetched.count(),
-        "discovered": built["discovered"],
-        "frontier": built["frontier"],
-        "blocked": built["blocked"],
-        "seen_out": built.get("seen_out"),
-        "reused": reused,
-        "artifacts_reused": sum(reused.values()),
+        "discovered": ledger.counts["discovered"],
+        "frontier": ledger.counts["frontier"],
+        "blocked": ledger.counts["blocked"],
+        "seen_out": seen_out,
+        "reused": ledger.reused,
+        "artifacts_reused": sum(ledger.reused.values()),
         "wall_ms": int((time.time() - t0) * 1000),
     }
 

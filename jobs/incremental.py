@@ -40,10 +40,10 @@ for the docs some candidate pair names (verify_pairs_jaccard left-semi
 prunes to participants before shingling) — the cost of an increment
 scales with the BATCH and its match surface, not with the corpus.
 
-Resume model: artifact-granular (the jobs/index.py pattern) — each
-artifact is a deterministic function of (batch, index snapshot), its
-parquet write is the commit point, a re-run skips whatever reads back.
-One lineage row per artifact commits after its write.
+Resume model: artifact-granular, through the artifact ledger
+(sinks/ledger.py) — each artifact is a deterministic function of (batch,
+index snapshot), its parquet write is the commit point, a re-run skips
+whatever reads back. One lineage row per artifact.
 
 Reference parity: the reference re-extracts and re-upserts one document
 at a time (packages/cli/src/commands/extract.ts); incremental corpus
@@ -72,22 +72,6 @@ def _read(spark: SparkSession, path: str):
     )
 
 
-def _readable(spark: SparkSession, path: str):
-    """Committed-artifact probe (the jobs/index.py contract): parquet must
-    read back AND the committer's _SUCCESS marker must exist — a driver
-    killed mid-job-commit leaves a readable fraction of the part files."""
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution
-        if os.path.isdir(path) and not os.path.exists(
-            os.path.join(path, "_SUCCESS")
-        ):
-            return None
-        return df
-    except Exception:
-        return None
-
-
 def run_incremental(
     spark: SparkSession,
     batch_path: str,
@@ -102,6 +86,7 @@ def run_incremental(
     metrics_path: str | None = None,
 ) -> dict:
     from doc_agent_spark.operators import dedup
+    from doc_agent_spark.sinks.ledger import Ledger
 
     t0 = time.time()
     raw_batch = _read(spark, batch_path).select("doc_id", "text")
@@ -144,65 +129,6 @@ def run_incremental(
     hist_bands = spark.read.parquet(
         index_path.rstrip("/") + "/minhash_bands"
     )
-    out = output_path.rstrip("/")
-    built: dict[str, int] = {}
-    reused: dict[str, bool] = {}
-
-    def _lineage_row_exists(pid: int) -> bool:
-        try:
-            from doc_agent_spark.schema import LINEAGE
-
-            return bool(
-                spark.read.schema(LINEAGE).parquet(lineage_path)
-                .filter(
-                    (F.col("run_id") == run_id)
-                    & (F.col("stage") == "incremental")
-                    & (F.col("partition_id") == pid)
-                )
-                .head(1)
-            )
-        except Exception:
-            return False
-
-    def _append_lineage(name: str, rows: int, wall_ms: int) -> None:
-        # shared LINEAGE schema (schema.py): every job appends to ONE
-        # lineage table, so column names/types must agree or mixed-schema
-        # parquet reads silently null out the divergent columns
-        spark.createDataFrame(
-            [(run_id, "incremental", ARTIFACTS.index(name), "done",
-              rows, rows, 0, 0, wall_ms)],
-            "run_id string, stage string, partition_id int, status string, "
-            "docs_in long, docs_out long, spans_out long, parse_failures long, "
-            "wall_ms long",
-        ).withColumn("finished_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(lineage_path)
-
-    def commit(name: str, build):
-        path = f"{out}/{name}"
-        existing = _readable(spark, path)
-        if existing is not None:
-            reused[name] = True
-            built[name] = existing.count()
-            # converge lineage on resume: a crash BETWEEN the artifact
-            # write and its lineage append left the artifact committed but
-            # unaccounted — backfill exactly the missing row
-            if not _lineage_row_exists(ARTIFACTS.index(name)):
-                _append_lineage(name, built[name], 0)
-            return existing
-        t = time.time()
-        frame = build()
-        frame.write.mode("overwrite").parquet(path)
-        committed = spark.read.parquet(path)
-        reused[name] = False
-        built[name] = committed.count()
-        # lineage commits per artifact, immediately after its write (the
-        # module contract) — not batched to job end, where a crash after
-        # artifact 1 would lose its row forever (the resume path above
-        # backfills even this window)
-        _append_lineage(name, built[name], int((time.time() - t) * 1000))
-        return committed
-
     # batch band rows once; the DAG below branches it three ways
     # (vs-history join, self-join, kept-bands projection). LAZY: banding is
     # the dominant cost of the job, and a fully-resumed re-run must not pay
@@ -257,8 +183,6 @@ def run_incremental(
         )
         return vh.unionByName(vs)
 
-    pairs = commit("pairs_delta", build_pairs)
-
     def build_drops():
         # anything matching history: history is canonical (it shipped)
         hist_hit = pairs.filter(F.col("kind") == "history").select(
@@ -275,14 +199,17 @@ def run_incremental(
         # re-fetches of already-shipped ids drop outright (see top of job)
         return hist_hit.unionByName(non_canon).unionByName(recrawled).distinct()
 
-    drops = commit("drop_delta", build_drops)
-
-    commit(
-        "bands_delta",
-        lambda: batch_bands().join(
-            drops.withColumnRenamed("doc_id", "id"), "id", "left_anti"
-        ),
-    )
+    with Ledger(spark, output_path, lineage_path, run_id, "incremental",
+                ARTIFACTS, None) as ledger:
+        pairs = ledger.commit("pairs_delta", build_pairs)
+        drops = ledger.commit("drop_delta", build_drops)
+        ledger.commit(
+            "bands_delta",
+            lambda: batch_bands().join(
+                drops.withColumnRenamed("doc_id", "id"), "id", "left_anti"
+            ),
+        )
+    built = ledger.counts
 
     if metrics_path:
         spark.createDataFrame(
@@ -298,8 +225,8 @@ def run_incremental(
         "pairs_delta": built["pairs_delta"],
         "dropped": built["drop_delta"],
         "bands_delta": built["bands_delta"],
-        "artifacts_reused": sum(reused.values()),
-        "reused": reused,
+        "artifacts_reused": sum(ledger.reused.values()),
+        "reused": ledger.reused,
         "wall_ms": int((time.time() - t0) * 1000),
     }
 

@@ -29,11 +29,11 @@ Resume model — artifact-granular, the jobs/curate.py corpus-stat pattern
 rather than the bucket pattern: every artifact is a deterministic function
 of the input corpus, its parquet write is the commit point, and a re-run
 skips any artifact that already reads back (a crash mid-write leaves an
-unreadable artifact that rebuilds identically). One lineage row per
-artifact (partition_id = artifact ordinal) commits AFTER its write, so
-`resumed` in the stats reflects exactly what was skipped, and a reused
-artifact reports the row count its newest lineage row recorded at commit
-instead of re-counting (count() only when no such row postdates it).
+unreadable artifact that rebuilds identically). Every commit goes
+through sinks/ledger.py: one lineage row per artifact (partition_id =
+artifact ordinal), `resumed` in the stats reflects exactly what was
+skipped, and a reused artifact reports the row count its newest lineage
+row recorded at commit instead of re-counting.
 
 Scale notes: every artifact is one relational pass over the corpus;
 ivf_cells is the single Arrow stage (broadcast-codebook matmul assign —
@@ -61,66 +61,6 @@ ARTIFACTS = [
 ]
 
 
-def _readable(spark: SparkSession, path: str):
-    """Committed-artifact probe: parquet must read back AND the committer's
-    _SUCCESS marker must exist (a driver killed mid-job-commit leaves a
-    readable fraction of the part files — 'reads back' alone would resume
-    against a silently truncated artifact). Non-local paths without a
-    listable directory fall back to the read-back probe."""
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution
-        if os.path.isdir(path) and not os.path.exists(
-            os.path.join(path, "_SUCCESS")
-        ):
-            return None
-        return df
-    except Exception:
-        return None
-
-
-# Stamp keys that only say the artifacts are OUT OF DATE (a new embedder,
-# a rewritten input snapshot): rebuild_stale may wipe and rebuild. Every
-# other key is the build config itself, which is never wiped.
-STALE_KEYS = ("embedder_version", "input_fp")
-
-
-def _check_stamp(out: str, cfg: dict, rebuild_stale: bool) -> None:
-    """Fail fast when the stamp beside ``out`` differs from ``cfg``: a
-    resume under another config would mix artifacts that cannot agree
-    (dim-16 embeddings quantized as dim-32 dequantize to garbage forever)
-    — the jobs/publish.py contract. A stale-only difference wipes and
-    rebuilds under ``rebuild_stale`` (the "re-embed on model update" path);
-    a config difference always raises, naming the differing keys."""
-    import json
-    import shutil
-
-    from doc_agent_spark.operators.publish import check_or_write_config
-
-    stamp = out + "_config.json"
-    if os.path.exists(stamp):
-        with open(stamp) as fh:
-            prev = json.load(fh)
-        differ = sorted(k for k in prev.keys() | cfg.keys() if prev.get(k) != cfg.get(k))
-        config = [k for k in differ if k not in STALE_KEYS]
-        if config:
-            raise ValueError(
-                f"index config mismatch for {out}: {config} differ "
-                f"(existing {[prev.get(k) for k in config]}, asked "
-                f"{[cfg.get(k) for k in config]}); a new config needs a new "
-                "output path — --rebuild-stale never wipes a config change"
-            )
-        if differ:
-            if not rebuild_stale:
-                raise ValueError(
-                    f"index config mismatch for {out}: stale stamp {differ}; "
-                    "pass --rebuild-stale to wipe and rebuild"
-                )
-            shutil.rmtree(out, ignore_errors=True)
-            os.remove(stamp)
-    check_or_write_config(out, cfg)
-
-
 def run_index(
     spark: SparkSession,
     input_path: str,
@@ -134,145 +74,85 @@ def run_index(
     bands: int = 4,
     rebuild_stale: bool = False,
 ) -> dict:
+    from doc_agent_spark.cache import input_fingerprint
     from doc_agent_spark.functions import embedder
     from doc_agent_spark.functions.textfns import words_of
     from doc_agent_spark.operators import dedup, similarity
-    from doc_agent_spark.sinks.metrics import committed_outputs
+    from doc_agent_spark.sinks.ledger import Ledger
 
     t0 = time.time()
     docs = (
         spark.read.parquet(input_path) if "/" in input_path
         else spark.read.table(input_path)
     )
-    out = output_path.rstrip("/")
     # every artifact is a function of (input, dim, stride, k, bands) AND of
     # the embedding space + input snapshot (roadmap :349 embeddings
-    # versioning): the stamp carries all of them — see _check_stamp for
-    # which differences may be wiped and rebuilt
-    from doc_agent_spark.cache import input_fingerprint
-
-    _check_stamp(out, {
+    # versioning): the stamp carries all of them — embedder_version and
+    # input_fp are the stale keys --rebuild-stale may wipe (sinks/ledger.py)
+    with Ledger(spark, output_path, lineage_path, run_id, "index", ARTIFACTS, {
         "input": input_path, "dim": dim, "centroid_stride": centroid_stride,
         "minhash_k": minhash_k, "bands": bands,
         "embedder_version": embedder.EMBEDDER_VERSION,
         "input_fp": (input_fingerprint(input_path) if "/" in input_path
                      else "table:" + input_path),
-    }, rebuild_stale)
-    built: dict[str, int] = {}
-    reused: dict[str, bool] = {}
-    lineage_rows = []
+    }, rebuild_stale) as ledger:
+        emb = ledger.commit(
+            "embeddings",
+            lambda: embedder.embed(docs, "doc_id", "text", dim=dim)
+            .select(F.col("id"), F.col("embedding")),
+        )
+        ledger.commit(
+            "minhash_bands",
+            lambda: dedup.minhash_band_table(docs, k=minhash_k, bands=bands),
+        )
+        # IVF: codebook rows persist relationally; the broadcast form is
+        # rebuilt by consumers from the committed table (model-sized collect).
+        # The string-id/xxhash64 key derivation and the tiny-corpus stride
+        # degradation live in similarity.ivf_codebook_safe (shared with the
+        # sharded graph-ANN serve path). Built LAZILY inside commit(): the
+        # stride probes + driver collect are corpus-touching work a fully-
+        # resumed run must not pay.
+        cents_df = ledger.commit(
+            "ivf_codebook",
+            lambda: similarity.ivf_codebook_safe(
+                emb, centroid_stride, id_col="id", vec_col="embedding"
+            )[0],
+        )
+        # ivf_cells always assigns against the COMMITTED codebook (not a
+        # freshly re-derived one), so a resume can never pair cells with cids
+        # the persisted codebook doesn't contain
+        ledger.commit(
+            "ivf_cells",
+            lambda: similarity.ivf_assign(
+                emb, similarity.codebook_broadcast(cents_df),
+                id_col="id", vec_col="embedding",
+            ),
+            partition_by="cell",
+        )
+        # planned lazily too: building the 2×dim-column quantize plan costs a
+        # fully-resumed run ~0.2 s of driver round trips for nothing
+        sq = functools.cache(
+            lambda: similarity.sq_quantize(emb, dim=dim, id_col="id", vec_col="embedding")
+        )
+        ledger.commit("sq_stats", lambda: sq().select("mins", "spans").limit(1))
+        ledger.commit("sq_codes", lambda: sq().select("id", "codes"))
 
-    # a reused artifact's count comes from its commit-time lineage row: one
-    # lineage collect, paid only once something is reused
-    committed_rows = functools.cache(
-        lambda: committed_outputs(spark, lineage_path, run_id, "index")
-    )
-
-    def commit(name: str, build, partition_by: str | None = None):
-        """Build-or-reuse one artifact; lineage row appended after commit."""
-        path = f"{out}/{name}"
-        existing = _readable(spark, path)
-        if existing is not None:
-            reused[name] = True
-            row = committed_rows().get(ARTIFACTS.index(name))
-            # the row must postdate the _SUCCESS marker: a rebuild whose
-            # lineage append never landed leaves an older row behind
-            fresh = row is not None and os.path.isdir(path) and (
-                row[1] >= os.path.getmtime(os.path.join(path, "_SUCCESS"))
-            )
-            built[name] = row[0] if fresh else existing.count()
-            return existing
-        t = time.time()
-        frame = build()
-        w = frame.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        # artifacts are whole-directory overwrites: force STATIC partition
-        # overwrite for this write even when a caller (jobs/pipeline.py)
-        # left the session in dynamic mode — dynamic overwrite emits no
-        # root _SUCCESS marker, which _readable requires as the commit
-        # proof, so a dynamic-mode artifact would rebuild on every resume
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
-            w.parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        committed = spark.read.parquet(path)
-        reused[name] = False
-        built[name] = committed.count()
-        lineage_rows.append((
-            run_id, "index", ARTIFACTS.index(name), "done",
-            built[name], built[name], 0, 0,
-            int((time.time() - t) * 1000),
-        ))
-        return committed
-
-    emb = commit(
-        "embeddings",
-        lambda: embedder.embed(docs, "doc_id", "text", dim=dim)
-        .select(F.col("id"), F.col("embedding")),
-    )
-    commit(
-        "minhash_bands",
-        lambda: dedup.minhash_band_table(docs, k=minhash_k, bands=bands),
-    )
-    # IVF: codebook rows persist relationally; the broadcast form is
-    # rebuilt by consumers from the committed table (model-sized collect).
-    # The string-id/xxhash64 key derivation and the tiny-corpus stride
-    # degradation live in similarity.ivf_codebook_safe (shared with the
-    # sharded graph-ANN serve path). Built LAZILY inside commit(): the
-    # stride probes + driver collect are corpus-touching work a fully-
-    # resumed run must not pay.
-    cents_df = commit(
-        "ivf_codebook",
-        lambda: similarity.ivf_codebook_safe(
-            emb, centroid_stride, id_col="id", vec_col="embedding"
-        )[0],
-    )
-    # ivf_cells always assigns against the COMMITTED codebook (not a
-    # freshly re-derived one), so a resume can never pair cells with cids
-    # the persisted codebook doesn't contain
-    commit(
-        "ivf_cells",
-        lambda: similarity.ivf_assign(
-            emb, similarity.codebook_broadcast(cents_df),
-            id_col="id", vec_col="embedding",
-        ),
-        partition_by="cell",
-    )
-    # planned lazily too: building the 2×dim-column quantize plan costs a
-    # fully-resumed run ~0.2 s of driver round trips for nothing
-    sq = functools.cache(
-        lambda: similarity.sq_quantize(emb, dim=dim, id_col="id", vec_col="embedding")
-    )
-    commit("sq_stats", lambda: sq().select("mins", "spans").limit(1))
-    commit("sq_codes", lambda: sq().select("id", "codes"))
-
-    toks = docs.select(
-        F.col("doc_id").alias("id"), words_of(F.col("text")).alias("w")
-    ).withColumn("dl", F.size("w"))
-    commit(
-        "bm25_postings",
-        lambda: toks.select("id", F.explode("w").alias("term"))
-        .groupBy("term", "id").agg(F.count(F.lit(1)).alias("tf")),
-    )
-    commit("bm25_docstats", lambda: toks.select("id", "dl"))
-    commit(
-        "bm25_corpus",
-        lambda: toks.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")),
-    )
+        toks = docs.select(
+            F.col("doc_id").alias("id"), words_of(F.col("text")).alias("w")
+        ).withColumn("dl", F.size("w"))
+        ledger.commit(
+            "bm25_postings",
+            lambda: toks.select("id", F.explode("w").alias("term"))
+            .groupBy("term", "id").agg(F.count(F.lit(1)).alias("tf")),
+        )
+        ledger.commit("bm25_docstats", lambda: toks.select("id", "dl"))
+        ledger.commit(
+            "bm25_corpus",
+            lambda: toks.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")),
+        )
 
     wall_ms = int((time.time() - t0) * 1000)
-    if lineage_rows:
-        spark.createDataFrame(
-            [r + (None,) for r in lineage_rows],
-            "run_id string, stage string, partition_id int, status string, "
-            "docs_in long, docs_out long, spans_out long, parse_failures long, "
-            "wall_ms long, finished_at timestamp",
-        ).withColumn("finished_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(lineage_path)
+    built, reused = ledger.counts, ledger.reused
     spark.createDataFrame(
         [(run_id, "index", built.get("embeddings", 0),
           built.get("bm25_postings", 0), sum(reused.values()), wall_ms)],

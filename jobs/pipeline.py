@@ -23,8 +23,8 @@ is a real pipeline stage, not glue: per doc it reassembles span text in
 carries a media_ref ('scanned' vs 'digital' — the provenance axis the
 curation quota/stats stages group on), runs the engine's own language-ID
 for ``lang``, and counts chars. It commits as a parquet artifact under
-the workdir (the jobs/index.py artifact-resume pattern: readable ==
-done, a crash mid-write rebuilds identically).
+the workdir (the sinks/ledger.py commit proof: readable == done, a
+crash mid-write rebuilds identically).
 
 Layout under --workdir:
   extracted/   span rows        (extract stage, bucket-partitioned)
@@ -47,9 +47,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from doc_agent_spark.sinks.ledger import readable
 from jobs.curate import run_curate
 from jobs.extract import run_extract
-from jobs.index import _readable, run_index
+from jobs.index import run_index
 from jobs.pack import run_pack
 from jobs.publish import run_publish
 
@@ -60,7 +61,7 @@ def build_documents(spark: SparkSession, extracted_path: str, docs_path: str) ->
     order), then a zero-shuffle enrichment projection."""
     from doc_agent_spark.functions import textfns
 
-    if _readable(spark, docs_path) is not None:
+    if readable(spark, docs_path) is not None:
         return {"resumed": True}
     spans = spark.read.parquet(extracted_path)
     docs = (
@@ -96,13 +97,14 @@ def ingest_jsonl(spark: SparkSession, input_path: str, spans_path: str,
     from doc_agent_spark.schema import DOCUMENTS_SPANS
     from doc_agent_spark.sources import ingest
 
-    if _readable(spark, spans_path) is not None:
+    if readable(spark, spans_path) is not None:
         return {"resumed": True}
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in DOCUMENTS_SPANS.fields
     )
     raw = ingest.read_jsonl(spark, input_path, ddl)
     clean, bad = ingest.split_quarantine(raw, materialize=True)
+    n_bad = bad.count()
     bad.write.mode("overwrite").json(quarantine_path)
     clean.write.mode("overwrite").parquet(spans_path)
     raw.unpersist()
@@ -110,8 +112,7 @@ def ingest_jsonl(spark: SparkSession, input_path: str, spans_path: str,
     return {
         "resumed": False,
         "docs": out.count(),
-        "quarantined": spark.read.json(quarantine_path).count()
-        if _readable_json(spark, quarantine_path) else 0,
+        "quarantined": n_bad,
     }
 
 
@@ -130,7 +131,7 @@ def ingest_warc(spark: SparkSession, input_path: str, spans_path: str,
     from doc_agent_spark.functions import urls
     from doc_agent_spark.sources import warc as warcsrc
 
-    if _readable(spark, spans_path) is not None:
+    if readable(spark, spans_path) is not None:
         return {"resumed": True}
     records = warcsrc.read_warc(spark, input_path).cache()
     bad = records.filter(F.col("error").isNotNull())
@@ -172,14 +173,6 @@ def ingest_warc(spark: SparkSession, input_path: str, spans_path: str,
         "docs": spark.read.parquet(spans_path).count(),
         "quarantined": n_bad,
     }
-
-
-def _readable_json(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.json(path).schema
-        return True
-    except Exception:
-        return False
 
 
 def run_pipeline(

@@ -14,6 +14,11 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the wide leg runs one slot per host core; the shuffle-partition pair
+# (2 vs 8) keeps the two plans different even on a 2-core host
+NPROC = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+# each subprocess JVM runs beside the test session's own: a small heap
+ENV = {**os.environ, "SPARK_DRIVER_MEMORY": "2g"}
 
 _RUN_SRC = r"""
 import hashlib, sys
@@ -39,7 +44,8 @@ spark.stop()
 def _run(master: str, parts: int) -> str:
     src = _RUN_SRC.format(repo=REPO, master=master, parts=parts)
     proc = subprocess.run(
-        [sys.executable, "-c", src], capture_output=True, text=True, timeout=600
+        [sys.executable, "-c", src], capture_output=True, text=True, timeout=600,
+        env=ENV,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     for line in proc.stdout.splitlines():
@@ -50,7 +56,7 @@ def _run(master: str, parts: int) -> str:
 
 def test_output_identical_across_parallelism():
     h2 = _run("local[2]", 2)
-    h8 = _run("local[8]", 8)
+    h8 = _run(f"local[{NPROC}]", 8)
     assert h2 == h8
 
 
@@ -115,7 +121,8 @@ _DET_QUERIES = [
 def _run_queries(master: str, parts: int) -> str:
     src = _QUERY_RUN_SRC.format(repo=REPO, master=master, parts=parts, names=_DET_QUERIES)
     proc = subprocess.run(
-        [sys.executable, "-c", src], capture_output=True, text=True, timeout=900
+        [sys.executable, "-c", src], capture_output=True, text=True, timeout=900,
+        env=ENV,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     for line in proc.stdout.splitlines():
@@ -126,6 +133,6 @@ def _run_queries(master: str, parts: int) -> str:
 
 def test_round2_operators_identical_across_parallelism():
     a = _run_queries("local[2]", 2)
-    b = _run_queries("local[8]", 8)
+    b = _run_queries(f"local[{NPROC}]", 8)
     for qa, qb in zip(a.split(";"), b.split(";")):
         assert qa == qb, f"parallelism-dependent result: {qa.split('=')[0]}"

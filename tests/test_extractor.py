@@ -105,18 +105,3 @@ def test_cols_path_bit_exact():
             [0 if s["offset"] is None else s["offset"] for s in spans],
         )
         assert a == b, d["doc_id"]
-
-
-def test_engines_identical(spark, docs):
-    arrow = collect_spans(extractor.extracted_spans(docs))
-    res_pd = extractor.extract(docs, engine="pandas")
-    pd_spans = collect_spans(
-        res_pd.select("doc_id", F.explode("out_spans").alias("s")).select(
-            "doc_id",
-            F.col("s.order").alias("order"),
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-        )
-    )
-    assert arrow == pd_spans

@@ -186,3 +186,26 @@ def test_lineage_rows_use_shared_schema_per_artifact(spark, tmp_path_factory):
         .filter("run_id = 'l1' AND stage = 'incremental'").collect()
     )
     assert len(again) == 3
+
+
+def test_fully_resumed_run_takes_counts_from_lineage(spark, tmp_path_factory):
+    """A fully-resumed run reports every artifact's count from its commit
+    lineage row: no per-artifact count() and no lineage head() job. What
+    is left is the input/artifact schema probes, one lineage collect and
+    the batch_docs count — 10 jobs here, where a count() plus a head job
+    per reused artifact takes 18."""
+    d = tmp_path_factory.mktemp("inc_resume")
+    hist_p, idx, batch_p = _setup(spark, d)
+    out, lin = str(d / "delta"), str(d / "lineage")
+    cold = run_incremental(spark, batch_p, hist_p, idx, out, lin, run_id="r1")
+    sc = spark.sparkContext
+    sc.setJobGroup("inc-resume", "inc-resume")
+    try:
+        again = run_incremental(spark, batch_p, hist_p, idx, out, lin, run_id="r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("inc-resume"))
+    assert again["artifacts_reused"] == 3
+    keys = ("batch_docs", "pairs_delta", "dropped", "bands_delta")
+    assert {k: again[k] for k in keys} == {k: cold[k] for k in keys}
+    assert n_jobs <= 10, n_jobs

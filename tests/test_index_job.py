@@ -217,6 +217,31 @@ def test_reuse_after_stale_rebuild_reports_new_counts(spark, tmp_path):
     assert reused["artifacts"] == rebuilt["artifacts"]
 
 
+def test_reuse_backfills_lost_lineage(spark, tmp_path):
+    """A driver killed after the artifact writes but before the lineage
+    append leaves committed artifacts with no lineage rows: the resumed run
+    reuses all of them with the same counts and backfills one row each."""
+    import shutil
+
+    in_p, out, lin, met = (str(tmp_path / n) for n in
+                           ("in.parquet", "idx", "lin", "met"))
+    kw = dict(run_id="b1", dim=4, centroid_stride=10, minhash_k=4, bands=2)
+    _docs(spark, 30).write.parquet(in_p)
+    cold = run_index(spark, in_p, out, lin, met, **kw)
+    shutil.rmtree(lin)
+    resumed = run_index(spark, in_p, out, lin, met, **kw)
+    assert resumed["artifacts_reused"] == len(ARTIFACTS)
+    assert resumed["artifacts"] == cold["artifacts"]
+    rows = spark.read.parquet(lin).filter(F.col("stage") == "index").collect()
+    assert sorted(r.partition_id for r in rows) == list(range(len(ARTIFACTS)))
+    for r in rows:
+        assert r.wall_ms == 0
+        assert r.docs_out == cold["artifacts"][ARTIFACTS[r.partition_id]]
+    # the next resume reads the backfilled rows and appends nothing
+    assert run_index(spark, in_p, out, lin, met, **kw)["artifacts"] == cold["artifacts"]
+    assert spark.read.parquet(lin).count() == len(ARTIFACTS)
+
+
 def test_incremental_refuses_stale_index(spark, tmp_path, monkeypatch):
     """jobs/incremental.py refuses an index stamped by another embedder
     version (the 'handle embedding model updates' contract)."""

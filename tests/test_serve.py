@@ -278,3 +278,70 @@ def test_result_cache_hit_miss_invalidation(tmp_path):
     assert fourth["cache"]["hit"] is False
     assert fourth["cache"]["key"] != first["cache"]["key"]
     assert fourth["rows"] == first["rows"]
+
+
+@pytest.fixture(scope="module")
+def docs_path(spark, tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("serve_docs") / "docs.parquet")
+    spark.createDataFrame(
+        [(i, f"spark join plan {i} " + "shuffle stage " * (i % 4),
+          "en", "digital") for i in range(40)],
+        "doc_id long, text string, lang string, source string",
+    ).write.parquet(p)
+    return p
+
+
+SEARCH = {"query": "spark join shuffle", "limit": 3}
+
+
+def test_cache_entry_lost_after_lookup_counts_a_miss(spark, docs_path, tmp_path,
+                                                    monkeypatch):
+    """An entry deleted between lookup and read is recomputed, and the
+    counters record that request as a miss, never as a hit."""
+    import shutil
+
+    from doc_agent_spark import serve
+    from doc_agent_spark.cache import ResultCache
+
+    params = {**SEARCH, "input_path": docs_path}
+    want, _ = serve._run_op(spark, "search_documents", params, 3)
+    serve._run_op(spark, "search_documents", params, 3,
+                  ResultCache(str(tmp_path / "cache")))        # fill the entry
+    cache = ResultCache(str(tmp_path / "cache"))
+    lookup = cache.lookup
+
+    def lookup_then_evict(spark_, key):
+        df = lookup(spark_, key)
+        shutil.rmtree(cache.path(key))      # a concurrent eviction
+        return df
+
+    monkeypatch.setattr(cache, "lookup", lookup_then_evict)
+    rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    assert rows == want and len(rows) == 3
+    assert dbg["hit"] is False
+    assert (cache.hits, cache.misses) == (0, 1)
+
+
+def test_cache_store_rename_collision_serves_uncached(spark, docs_path, tmp_path,
+                                                      monkeypatch):
+    """Another process re-creating the entry between store's rmtree and its
+    rename must not fail the request: the computed rows are served
+    uncached and the staging dir is cleaned up."""
+    from doc_agent_spark import cache as cache_mod
+    from doc_agent_spark import serve
+
+    params = {**SEARCH, "input_path": docs_path}
+    want, _ = serve._run_op(spark, "search_documents", params, 3)
+    cache = cache_mod.ResultCache(str(tmp_path / "cache"))
+    rename = os.rename
+
+    def collide(src, dst):
+        os.makedirs(dst)                    # the other process's fill lands
+        open(os.path.join(dst, "part-other"), "w").close()
+        rename(src, dst)                    # ENOTEMPTY
+
+    monkeypatch.setattr(cache_mod.os, "rename", collide)
+    rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    assert rows == want and len(rows) == 3
+    assert dbg["hit"] is False
+    assert not [d for d in os.listdir(cache.dir) if ".tmp-" in d]
