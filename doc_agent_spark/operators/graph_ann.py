@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sinks.metrics import local_frame
+
 
 def _beam_search(V, pos, adj, entries, qv, k, beam):
     """Deterministic best-first beam search over one in-memory shard:
@@ -189,7 +191,7 @@ def graph_ann_topk(
 
     rows = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).collect()
     if not rows:  # empty corpus: top-k of nothing is nothing
-        return emb.sparkSession.createDataFrame([], out_schema)
+        return local_frame(emb.sparkSession, [], out_schema)
     rows.sort(key=lambda r: r.id)
     # ids stay raw (long OR string — the index is id-type-agnostic, like
     # build_knn_graph); only the vectors become a dense matrix

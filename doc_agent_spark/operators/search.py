@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textfns import words_of
+from ..sinks.metrics import local_frame
 
 
 def _bm25_tokens(docs: DataFrame, id_col: str, text_col: str,
@@ -917,8 +918,8 @@ def mmr_rerank(
         out.append((len(out) + 1, best[0], best[1], float(marg)))
 
     id_type = cands.schema[id_col].dataType.simpleString()
-    return cands.sparkSession.createDataFrame(
-        out, f"rank int, id {id_type}, rel double, mmr double"
+    return local_frame(
+        cands.sparkSession, out, f"rank int, id {id_type}, rel double, mmr double"
     )
 
 

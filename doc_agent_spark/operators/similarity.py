@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, lsh_bucket
+from ..sinks.metrics import local_frame
 
 
 def cosine_topk(
@@ -588,7 +589,8 @@ def kmeans_fit(
             newM[r["ci"], r["pos"]] = r["m"]
         M = newM
 
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(int(c), [float(x) for x in row]) for c, row in zip(cids, M)],
         "cid long, cv array<double>",
     )

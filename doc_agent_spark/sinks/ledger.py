@@ -13,17 +13,22 @@ Contract, per artifact ``<out>/<name>`` (partition_id = its ordinal in
   ``stamp`` (``None`` = the job keeps no stamp). A stale-only difference
   (``STALE_KEYS``) wipes and rebuilds under ``rebuild_stale``; any other
   difference raises "<stage> config mismatch", naming the keys.
-- **Reuse.** An artifact is committed when ``readable`` passes. Its count
-  is the ``docs_out`` of its newest lineage row that postdates the
-  ``_SUCCESS`` marker (one ``committed_outputs`` collect per job, paid only
-  once something is reused). With no such row it is counted and one
+- **Reuse.** An artifact is committed when ``readable`` passes: its
+  ``_SUCCESS`` marker is probed through the path's Hadoop FileSystem (one
+  driver call, no Spark job, any URI scheme), and only a committed path is
+  read back. Its count is the ``docs_out`` of its newest lineage row that
+  postdates the marker (one ``committed_outputs`` collect per job, paid
+  only once something is reused). With no such row it is counted and one
   lineage row is backfilled (``wall_ms`` 0) — this converges a driver
   killed between the artifact write and the lineage append.
 - **Build.** The write is a whole-directory static overwrite (forced, so
   the root ``_SUCCESS`` marker exists even when the caller left the
-  session in dynamic mode), then the artifact is read back and counted.
+  session in dynamic mode). Its row count is observed on the write
+  (``Observation``), and the returned frame reads the artifact back with
+  the written schema, so a build launches no inference or count job.
 - **Lineage.** Rows (schema.LINEAGE) are appended in ONE write when the
-  ``with`` block ends, also when a commit raised.
+  ``with`` block ends, also when a commit raised; they are built on the
+  driver with ``metrics.local_frame``.
 """
 
 from __future__ import annotations
@@ -32,14 +37,16 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.publish import check_or_write_config
 from ..schema import LINEAGE
-from .metrics import committed_outputs
+from .metrics import committed_outputs, local_frame
 
 # Stamp keys that only say the artifacts are OUT OF DATE (a new embedder,
 # a rewritten input snapshot): rebuild_stale may wipe and rebuild. Every
@@ -50,22 +57,55 @@ STALE_KEYS = ("embedder_version", "input_fp")
 _ROW = StructType(LINEAGE.fields[:-1])
 
 
-def readable(spark: SparkSession, path: str) -> DataFrame | None:
-    """Committed-artifact probe: parquet must read back AND the committer's
-    _SUCCESS marker must exist (a driver killed mid-job-commit leaves a
-    readable fraction of the part files — 'reads back' alone would resume
-    against a silently truncated artifact). Non-local paths without a
-    listable directory fall back to the read-back probe."""
+def _success_at(spark: SparkSession, path: str) -> float | None:
+    """Modification time (epoch seconds) of the committer's ``_SUCCESS``
+    marker under ``path``, None when there is none. One call on the path's
+    Hadoop FileSystem from the driver — the same probe for plain paths and
+    ``file:``/``hdfs://``/``s3a://`` URIs — and no Spark job."""
+    sc = spark.sparkContext
+    marker = sc._jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    try:
+        fs = marker.getFileSystem(sc._jsc.hadoopConfiguration())
+        # exists() first: a miss raising FileNotFoundException through
+        # py4j costs more than the probe itself
+        if not fs.exists(marker):
+            return None
+        return fs.getFileStatus(marker).getModificationTime() / 1000
+    except Py4JJavaError:  # no filesystem for the path's scheme
+        return None
+
+
+def _commit_proof(spark: SparkSession, path: str) -> tuple[DataFrame, float] | None:
+    """(the artifact read back, its ``_SUCCESS`` time) when ``path`` is
+    committed, else None; see :func:`readable`."""
+    at = _success_at(spark, path)
+    if at is None:
+        return None
     try:
         df = spark.read.parquet(path)
         df.schema  # force resolution
-        if os.path.isdir(path) and not os.path.exists(
-            os.path.join(path, "_SUCCESS")
-        ):
-            return None
-        return df
     except Exception:
         return None
+    return df, at
+
+
+def readable(spark: SparkSession, path: str) -> DataFrame | None:
+    """Committed-artifact probe: the committer's _SUCCESS marker must exist
+    (a driver killed mid-job-commit leaves a readable fraction of the part
+    files — 'reads back' alone would resume against a silently truncated
+    artifact) AND the parquet must read back. The marker is probed first,
+    so a missing or partial artifact costs no Spark job."""
+    proof = _commit_proof(spark, path)
+    return None if proof is None else proof[0]
+
+
+def write_counted(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
+    """Run ``write`` on ``df`` and return how many rows it wrote, observed
+    on the write action itself (an ``Observation``): no read-back, no
+    count job."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return obs.get["rows"]
 
 
 def _check_stamp(stage: str, out: str, cfg: dict, rebuild_stale: bool) -> None:
@@ -122,7 +162,7 @@ class Ledger:
 
     def __exit__(self, *exc) -> None:
         if self._rows:
-            self.spark.createDataFrame(self._rows, _ROW).withColumn(
+            local_frame(self.spark, self._rows, _ROW).withColumn(
                 "finished_at", F.current_timestamp()
             ).write.mode("append").parquet(self.lineage_path)
             self._rows = []
@@ -134,8 +174,9 @@ class Ledger:
 
     def commit(self, name: str, build, partition_by: str | None = None) -> DataFrame:
         path, pid = f"{self.out}/{name}", self.artifacts.index(name)
-        existing = readable(self.spark, path)
-        if existing is not None:
+        proof = _commit_proof(self.spark, path)
+        if proof is not None:
+            existing, success_at = proof
             self.reused[name] = True
             if self._committed is None:
                 self._committed = committed_outputs(
@@ -144,28 +185,31 @@ class Ledger:
             row = self._committed.get(pid)
             # the row must postdate the _SUCCESS marker: a rebuild whose
             # lineage append never landed leaves an older row behind
-            success = os.path.join(path, "_SUCCESS")
-            if row is not None and os.path.exists(success) and (
-                row[1] >= os.path.getmtime(success)
-            ):
+            if row is not None and row[1] >= success_at:
                 self.counts[name] = row[0]
             else:
                 self.counts[name] = existing.count()
                 self._row(pid, self.counts[name], 0)
             return existing
         t = time.time()
-        w = build().write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
+        df = build()
+
+        def write(observed: DataFrame) -> None:
+            w = observed.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(partition_by)
+            w.parquet(path)
+
         conf = "spark.sql.sources.partitionOverwriteMode"
         prev = self.spark.conf.get(conf, "static")
         self.spark.conf.set(conf, "static")
         try:
-            w.parquet(path)
+            self.counts[name] = write_counted(df, write)
         finally:
             self.spark.conf.set(conf, prev)
-        committed = self.spark.read.parquet(path)
         self.reused[name] = False
-        self.counts[name] = committed.count()
         self._row(pid, self.counts[name], int((time.time() - t) * 1000))
-        return committed
+        # the data columns as written; a partition column is appended by
+        # partition discovery with the type a plain read infers for it
+        written = StructType([f for f in df.schema if f.name != partition_by])
+        return self.spark.read.schema(written).parquet(path)

@@ -9,16 +9,46 @@ the artifact-resume contract and their lineage rows. The helpers here are
 the read side: resume = anti-join the completed partitions, and a reused
 artifact takes its row count from the lineage row written when it was
 committed.
+
+Driver-built rows (metrics rollups, lineage rows, small lookup tables) go
+through :func:`local_frame`: an Arrow table becomes a one-partition local
+relation, where ``createDataFrame(<python list>)`` pickles the rows into a
+``defaultParallelism``-partition RDD and runs every action on it through
+Python workers.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schema import LINEAGE
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples or Rows, positional in ``schema``) as a DataFrame
+    with exactly ``createDataFrame(rows, schema)``'s schema and values,
+    built column-wise as a ``pyarrow.Table``: Spark plans it as one local
+    partition, and no action on it starts a Python worker. ``schema`` is a
+    StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    # a local relation splits into min(rows, cores) partitions; one is
+    # enough for a driver-built table, and appends one file per write
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def _stage_rows(spark: SparkSession, lineage_path: str, run_id: str,

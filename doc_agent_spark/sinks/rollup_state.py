@@ -33,6 +33,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .metrics import local_frame
+
 LEDGER_SCHEMA = (
     "batch_id string, version long, n_state_rows long, batch_rows long,"
     " wall_ms long"
@@ -135,8 +137,8 @@ def apply_batch(
     n_state = spark.read.parquet(snap_path).count()
     wall_ms = int((time.time() - t0) * 1000)
     check_or_write_config(cfg_base, cfg)  # first commit records the config
-    spark.createDataFrame(
-        [(batch_id, new_version, n_state, batch_rows, wall_ms)], LEDGER_SCHEMA
+    local_frame(
+        spark, [(batch_id, new_version, n_state, batch_rows, wall_ms)], LEDGER_SCHEMA
     ).withColumn("applied_at", F.current_timestamp()).write.mode("append").parquet(
         os.path.join(state_path, "applied")
     )

@@ -409,7 +409,7 @@ def run_curate(
 
     from doc_agent_spark.functions import redact
     from doc_agent_spark.operators import dedup as dedup_ops
-    from doc_agent_spark.sinks.metrics import completed_partitions
+    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
 
     t0 = time.time()
     docs = (
@@ -602,7 +602,8 @@ def run_curate(
         "docs_in", "after_dedup", "after_filters", "kept", "lines_removed",
         "span_tokens_removed",
     )}
-    metrics_row = spark.createDataFrame(
+    metrics_row = local_frame(
+        spark,
         [(
             run_id, "curate", counts["docs_in"], counts["after_dedup"],
             counts["after_filters"], counts["kept"],

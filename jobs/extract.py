@@ -53,7 +53,7 @@ def run_extract(
 ) -> dict:
     from doc_agent_spark.operators import extractor
     from doc_agent_spark.plans.skew import split_heavy
-    from doc_agent_spark.sinks.metrics import completed_partitions
+    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
 
     t0 = time.time()
     docs = spark.read.parquet(input_path) if "/" in input_path else spark.read.table(input_path)
@@ -112,7 +112,8 @@ def run_extract(
 
     wall_ms = int((time.time() - t0) * 1000)
     n_docs, n_spans, n_failures = (int(m.get(k) or 0) for k in ("docs", "spans", "failures"))
-    metrics_row = spark.createDataFrame(
+    metrics_row = local_frame(
+        spark,
         [(run_id, "extract", n_docs, n_spans, n_failures)],
         "run_id string, stage string, docs_processed long, spans_emitted long, parse_failures long",
     )

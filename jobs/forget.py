@@ -237,6 +237,8 @@ def main() -> None:
 
     from extract import ship_package  # same zip+addPyFile bootstrap
 
+    from doc_agent_spark.sinks.metrics import local_frame
+
     spark = SparkSession.builder.appName("forget").getOrCreate()
     ship_package(spark)
     if os.path.exists(args.drop):
@@ -245,9 +247,9 @@ def main() -> None:
         ids = [s.strip() for s in args.drop.split(",") if s.strip()]
         try:
             rows = [(int(s),) for s in ids]
-            drop_df = spark.createDataFrame(rows, "id long")
+            drop_df = local_frame(spark, rows, "id long")
         except ValueError:
-            drop_df = spark.createDataFrame([(s,) for s in ids], "id string")
+            drop_df = local_frame(spark, [(s,) for s in ids], "id string")
     out = run_forget(spark, args.index, drop_df, bloom_min=args.bloom_min)
     print(json.dumps(out))
     if not out["clean"]:

@@ -87,6 +87,7 @@ def run_incremental(
 ) -> dict:
     from doc_agent_spark.operators import dedup
     from doc_agent_spark.sinks.ledger import Ledger
+    from doc_agent_spark.sinks.metrics import local_frame
 
     t0 = time.time()
     raw_batch = _read(spark, batch_path).select("doc_id", "text")
@@ -212,7 +213,8 @@ def run_incremental(
     built = ledger.counts
 
     if metrics_path:
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(run_id, "incremental", built["pairs_delta"],
               built["drop_delta"], built["bands_delta"],
               int((time.time() - t0) * 1000))],

@@ -81,7 +81,7 @@ def run_pack(
 
     from doc_agent_spark.functions import textfns
     from doc_agent_spark.operators import packing, sampling
-    from doc_agent_spark.sinks.metrics import completed_partitions
+    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
 
     t0 = time.time()
     materialize = materialize or shuffle_windows  # order needs the windows
@@ -110,7 +110,8 @@ def run_pack(
             merges = [(r["a"], r["b"]) for r in mrows]
         except Exception:
             merges = tok.train_bpe(docs, n_merges=bpe_merges)
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(i, a, b) for i, (a, b) in enumerate(merges)],
                 "rank int, a string, b string",
             ).write.mode("overwrite").parquet(mpath)
@@ -263,7 +264,8 @@ def run_pack(
         lineage.write.mode("append").parquet(lineage_path)
 
     n_slices, n_tokens, n_windows = (int(m.get(k) or 0) for k in ("slices", "tokens", "windows"))
-    metrics_row = spark.createDataFrame(
+    metrics_row = local_frame(
+        spark,
         [(run_id, "pack", n_slices, n_tokens, n_windows, budget)],
         "run_id string, stage string, slices long, tokens long, "
         "windows long, budget long",

@@ -17,6 +17,15 @@ metrics row. A fully-resumed index reuses each artifact on its commit
 proof and takes its row count from the artifact's newest lineage row
 (one lineage collect), not from a count() job.
 
+What a fully resumed run still launches (22 Spark jobs with two buckets
+and two shards): extract, curate and pack each read their input schema,
+collect their lineage and append one metrics row (3 jobs each); the
+bridge reads ``documents`` back (1); index reads each of its 9 artifacts
+back, collects its lineage once and appends its metrics row (11). Probing
+``_SUCCESS`` is a driver-side FileSystem call, and metrics rows are
+Arrow-built local relations (sinks/metrics.local_frame), so none of it
+runs a Python worker.
+
 The bridge (extract's exploded span rows -> curate's documents contract)
 is a real pipeline stage, not glue: per doc it reassembles span text in
 ``order`` (the W2 invariant), derives ``source`` from whether any span
@@ -24,7 +33,8 @@ carries a media_ref ('scanned' vs 'digital' — the provenance axis the
 curation quota/stats stages group on), runs the engine's own language-ID
 for ``lang``, and counts chars. It commits as a parquet artifact under
 the workdir (the sinks/ledger.py commit proof: readable == done, a
-crash mid-write rebuilds identically).
+crash mid-write rebuilds identically). Its document count, like the
+ingest stages', is observed on its write, not read back.
 
 Layout under --workdir:
   extracted/   span rows        (extract stage, bucket-partitioned)
@@ -47,7 +57,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from doc_agent_spark.sinks.ledger import readable
+from doc_agent_spark.sinks.ledger import readable, write_counted
 from jobs.curate import run_curate
 from jobs.extract import run_extract
 from jobs.index import run_index
@@ -84,8 +94,8 @@ def build_documents(spark: SparkSession, extracted_path: str, docs_path: str) ->
         .withColumn("lang", textfns.lang_id(F.col("text")))
         .withColumn("n_chars", F.length("text"))
     )
-    docs.write.mode("overwrite").parquet(docs_path)
-    return {"resumed": False, "docs": spark.read.parquet(docs_path).count()}
+    n = write_counted(docs, lambda d: d.write.mode("overwrite").parquet(docs_path))
+    return {"resumed": False, "docs": n}
 
 
 def ingest_jsonl(spark: SparkSession, input_path: str, spans_path: str,
@@ -104,16 +114,10 @@ def ingest_jsonl(spark: SparkSession, input_path: str, spans_path: str,
     )
     raw = ingest.read_jsonl(spark, input_path, ddl)
     clean, bad = ingest.split_quarantine(raw, materialize=True)
-    n_bad = bad.count()
-    bad.write.mode("overwrite").json(quarantine_path)
-    clean.write.mode("overwrite").parquet(spans_path)
+    n_bad = write_counted(bad, lambda d: d.write.mode("overwrite").json(quarantine_path))
+    n = write_counted(clean, lambda d: d.write.mode("overwrite").parquet(spans_path))
     raw.unpersist()
-    out = spark.read.parquet(spans_path)
-    return {
-        "resumed": False,
-        "docs": out.count(),
-        "quarantined": n_bad,
-    }
+    return {"resumed": False, "docs": n, "quarantined": n_bad}
 
 
 def ingest_warc(spark: SparkSession, input_path: str, spans_path: str,
@@ -135,8 +139,7 @@ def ingest_warc(spark: SparkSession, input_path: str, spans_path: str,
         return {"resumed": True}
     records = warcsrc.read_warc(spark, input_path).cache()
     bad = records.filter(F.col("error").isNotNull())
-    n_bad = bad.count()
-    bad.write.mode("overwrite").parquet(quarantine_path)
+    n_bad = write_counted(bad, lambda d: d.write.mode("overwrite").parquet(quarantine_path))
     ok = records.filter(
         F.col("error").isNull()
         & (F.col("warc_type") == "response")
@@ -166,13 +169,9 @@ def ingest_warc(spark: SparkSession, input_path: str, spans_path: str,
             ).alias("spans"),
         )
     )
-    spans.write.mode("overwrite").parquet(spans_path)
+    n = write_counted(spans, lambda d: d.write.mode("overwrite").parquet(spans_path))
     records.unpersist()
-    return {
-        "resumed": False,
-        "docs": spark.read.parquet(spans_path).count(),
-        "quarantined": n_bad,
-    }
+    return {"resumed": False, "docs": n, "quarantined": n_bad}
 
 
 def run_pipeline(

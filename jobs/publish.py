@@ -65,7 +65,7 @@ def run_publish(
 ) -> dict:
     from doc_agent_spark.operators import publish
     from doc_agent_spark.operators.packing import shard_of
-    from doc_agent_spark.sinks.metrics import completed_partitions
+    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
 
     t0 = time.time()
     df = (
@@ -116,14 +116,15 @@ def run_publish(
         delta_rows = delta.collect()  # manifest is n_shards rows: metadata-sized
         n_written = sum(r["n_rows"] for r in delta_rows)
         wrote = sorted(r["shard"] for r in delta_rows)
-        spark.createDataFrame(delta_rows, delta.schema).write.mode("append").parquet(
+        local_frame(spark, delta_rows, delta.schema).write.mode("append").parquet(
             manifest_path
         )
         # one LINEAGE-schema row per committed shard (docs_in = docs_out =
         # rows serialized; spans_out carries the shard's byte count)
         by_shard = {r["shard"]: r for r in delta_rows}
         commit_ms = int((time.time() - t0) * 1000)
-        lineage = spark.createDataFrame(
+        lineage = local_frame(
+            spark,
             [
                 (run_id, "publish", int(s), "done",
                  int(by_shard[s]["n_rows"]), int(by_shard[s]["n_rows"]),
@@ -137,7 +138,8 @@ def run_publish(
         lineage.write.mode("append").parquet(lineage_path)
 
     wall_ms = int((time.time() - t0) * 1000)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(run_id, "publish", n_written, len(wrote), len(done), wall_ms)],
         "run_id string, stage string, rows_written long, shards_written int,"
         " shards_skipped int, wall_ms long",

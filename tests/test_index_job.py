@@ -270,3 +270,38 @@ def test_incremental_refuses_stale_index(spark, tmp_path, monkeypatch):
         increm.run_incremental(
             spark, batch, hist, out, str(tmp_path / "delta"),
             str(tmp_path / "dlin"), run_id="s1", minhash_k=4, bands=2)
+
+
+def test_cold_build_observes_counts_and_writes_no_probe_jobs(spark, tmp_path, monkeypatch):
+    """A cold run launches no read of a missing artifact, no read-back
+    inference and no count() job: every count is observed on its write,
+    and each returned frame carries the schema a plain read infers. It
+    takes 24 jobs; probing, re-reading and counting every artifact took
+    51. Each reported count is the artifact's real row count."""
+    from doc_agent_spark.sinks.ledger import Ledger
+
+    returned = {}
+    commit = Ledger.commit
+
+    def recording(self, name, build, partition_by=None):
+        returned[name] = commit(self, name, build, partition_by)
+        return returned[name]
+
+    monkeypatch.setattr(Ledger, "commit", recording)
+    in_p, out, lin, met = (str(tmp_path / n) for n in
+                           ("in.parquet", "idx", "lin", "met"))
+    _docs(spark, 30).write.parquet(in_p)
+    sc = spark.sparkContext
+    sc.setJobGroup("cold-index", "cold-index")
+    try:
+        stats = run_index(spark, in_p, out, lin, met, run_id="c1", dim=4,
+                          centroid_stride=10, minhash_k=4, bands=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cold-index"))
+    assert n_jobs <= 30, n_jobs
+    assert sorted(returned) == sorted(ARTIFACTS)
+    for name in ARTIFACTS:
+        written = spark.read.parquet(f"{out}/{name}")
+        assert stats["artifacts"][name] == written.count(), name
+        assert returned[name].schema == written.schema, name
