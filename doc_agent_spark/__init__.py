@@ -29,4 +29,54 @@ Layout
 - ``api``         : named-operation service surface (MCP/REST shell analog)
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _guard_zip_invalidation() -> None:
+    """In a PySpark worker (``setup_spark_files`` marks it), make
+    ``zipimporter.invalidate_caches`` re-read an archive only when its
+    ``(st_mtime_ns, st_size)`` stamp changed since that importer last read
+    it; the Spark driver and plain Python imports keep the interpreter's own
+    behaviour. CPython < 3.12 re-reads the whole zip directory on every
+    call (CPython 3.12 made it lazy), and a worker calls
+    ``importlib.invalidate_caches()`` at the start of every task while
+    holding one importer per imported package of ``pyspark.zip``: ~16
+    re-reads of a 1,328-entry archive, 0.15-0.3 s of CPU per task.
+
+    Importers already cached are stamped now: in a worker this runs while
+    a task deserializes its function, right after that task's
+    ``setup_spark_files`` re-read every one of them. An importer created
+    later is stamped at its first guarded call, which still re-reads."""
+    files = sys.modules.get("pyspark.core.files")
+    if files is None or not files.SparkFiles._is_running_on_worker:
+        return
+    import os
+    import zipimport
+
+    original = zipimport.zipimporter.invalidate_caches
+    if hasattr(original, "__wrapped__"):
+        return
+
+    def stamp(archive: str) -> tuple[int, int] | None:
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    def invalidate_caches(self) -> None:
+        now = stamp(self.archive)
+        if now is None or getattr(self, "_stat_stamp", None) != now:
+            original(self)
+            self._stat_stamp = now
+
+    invalidate_caches.__wrapped__ = original
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder._stat_stamp = stamp(finder.archive)
+
+
+_guard_zip_invalidation()

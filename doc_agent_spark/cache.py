@@ -9,7 +9,8 @@ is re-usable iff (operation, canonicalized params, input snapshot) are
 unchanged — so the cache key is
 
     sha256(op + params-with-defaults-applied + row_limit
-           + fingerprint(every *_path param))
+           + fingerprint(every *_path param)
+           + engine version + EMBEDDER_VERSION)
 
 where the input fingerprint is the sorted (relative-path, size, mtime_ns)
 listing of the parquet path — the cheap snapshot proxy: any rewrite,
@@ -35,6 +36,9 @@ import json
 import os
 import shutil
 import threading
+
+from . import __version__
+from .functions import embedder
 
 
 def input_fingerprint(path: str) -> str:
@@ -78,9 +82,12 @@ class ResultCache:
 
     def key(self, op: str, canon_params: dict, row_limit: int,
             input_fps: dict) -> str:
+        # the engine and embedder versions: an upgrade must miss, not
+        # serve results the old code computed
         blob = json.dumps(
             {"op": op, "params": canon_params, "row_limit": row_limit,
-             "inputs": input_fps},
+             "inputs": input_fps, "engine": __version__,
+             "embedder": embedder.EMBEDDER_VERSION},
             sort_keys=True, default=str,
         )
         return hashlib.sha256(blob.encode()).hexdigest()[:32]

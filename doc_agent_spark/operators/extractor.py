@@ -19,6 +19,16 @@ The one engine is ``mapInArrow``: each Arrow batch decodes the span
 structs column-wise and calls ``spec.extract_document_cols`` — the bit-exact
 column twin of ``spec.extract_document``, the function the test oracle uses;
 there is no row-at-a-time Python UDF serialization (input_hint requirement).
+
+Every Python task also pays a fixed cost before its first batch: the
+worker's ``setup_spark_files`` calls ``importlib.invalidate_caches()``, and
+on CPython < 3.12 each cached ``zipimporter`` (one per imported package of
+``pyspark.zip``, ~16) eagerly re-reads the archive's directory — 0.15-0.3 s
+of CPU per task, a large share of a short extraction task's transport
+time. Importing ``doc_agent_spark`` in a worker installs a stat-guarded
+``invalidate_caches`` (``doc_agent_spark/__init__.py``) that re-reads an
+archive only when its mtime or size changed, so only a worker's first
+task pays.
 """
 
 from __future__ import annotations

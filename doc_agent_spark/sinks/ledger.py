@@ -39,14 +39,13 @@ import shutil
 import time
 from collections.abc import Callable
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.publish import check_or_write_config
 from ..schema import LINEAGE
-from .metrics import committed_outputs, local_frame
+from .metrics import committed_outputs, fs_mtime, local_frame
 
 # Stamp keys that only say the artifacts are OUT OF DATE (a new embedder,
 # a rewritten input snapshot): rebuild_stale may wipe and rebuild. Every
@@ -57,28 +56,10 @@ STALE_KEYS = ("embedder_version", "input_fp")
 _ROW = StructType(LINEAGE.fields[:-1])
 
 
-def _success_at(spark: SparkSession, path: str) -> float | None:
-    """Modification time (epoch seconds) of the committer's ``_SUCCESS``
-    marker under ``path``, None when there is none. One call on the path's
-    Hadoop FileSystem from the driver — the same probe for plain paths and
-    ``file:``/``hdfs://``/``s3a://`` URIs — and no Spark job."""
-    sc = spark.sparkContext
-    marker = sc._jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    try:
-        fs = marker.getFileSystem(sc._jsc.hadoopConfiguration())
-        # exists() first: a miss raising FileNotFoundException through
-        # py4j costs more than the probe itself
-        if not fs.exists(marker):
-            return None
-        return fs.getFileStatus(marker).getModificationTime() / 1000
-    except Py4JJavaError:  # no filesystem for the path's scheme
-        return None
-
-
 def _commit_proof(spark: SparkSession, path: str) -> tuple[DataFrame, float] | None:
     """(the artifact read back, its ``_SUCCESS`` time) when ``path`` is
     committed, else None; see :func:`readable`."""
-    at = _success_at(spark, path)
+    at = fs_mtime(spark, path, "_SUCCESS")
     if at is None:
         return None
     try:

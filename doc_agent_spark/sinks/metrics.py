@@ -8,7 +8,9 @@ aggregate, and a one-row metrics rollup per stage. Artifact-granular jobs
 the artifact-resume contract and their lineage rows. The helpers here are
 the read side: resume = anti-join the completed partitions, and a reused
 artifact takes its row count from the lineage row written when it was
-committed.
+committed. Whether a lineage directory (or a commit marker) exists is
+asked of the path's Hadoop FileSystem (:func:`fs_mtime`), so a ``file:``,
+``hdfs://`` or ``s3a://`` lineage path resumes like a plain one.
 
 Driver-built rows (metrics rollups, lineage rows, small lookup tables) go
 through :func:`local_frame`: an Arrow table becomes a one-partition local
@@ -19,9 +21,9 @@ Python workers.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -51,9 +53,28 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence],
     return spark.createDataFrame(table, schema).coalesce(1)
 
 
+def fs_mtime(spark: SparkSession, path: str, *child: str) -> float | None:
+    """Modification time (epoch seconds) of ``path`` (joined with
+    ``child``, e.g. ``"_SUCCESS"``), None when it does not exist. One call
+    on the path's Hadoop FileSystem from the Spark driver — the same probe
+    for plain paths and ``file:``/``hdfs://``/``s3a://`` URIs — and no
+    Spark job."""
+    sc = spark.sparkContext
+    target = sc._jvm.org.apache.hadoop.fs.Path(path, *child)
+    try:
+        fs = target.getFileSystem(sc._jsc.hadoopConfiguration())
+        # exists() first: a miss raising FileNotFoundException through
+        # py4j costs more than the probe itself
+        if not fs.exists(target):
+            return None
+        return fs.getFileStatus(target).getModificationTime() / 1000
+    except Py4JJavaError:  # no filesystem for the path's scheme
+        return None
+
+
 def _stage_rows(spark: SparkSession, lineage_path: str, run_id: str,
                 stage: str) -> DataFrame | None:
-    if not os.path.exists(lineage_path):
+    if fs_mtime(spark, lineage_path) is None:
         return None
     return spark.read.schema(LINEAGE).parquet(lineage_path).filter(
         (F.col("run_id") == run_id) & (F.col("stage") == stage)

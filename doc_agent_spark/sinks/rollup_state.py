@@ -33,6 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ledger import write_counted
 from .metrics import local_frame
 
 LEDGER_SCHEMA = (
@@ -59,12 +60,24 @@ def read_ledger(spark: SparkSession, state_path: str) -> DataFrame | None:
         ) from e
 
 
-def current_version(spark: SparkSession, state_path: str) -> int:
+def _newest() -> tuple:
+    """Aggregates naming the ledger's newest version and the row count its
+    snapshot was committed with."""
+    return F.max("version"), F.max_by("n_state_rows", "version")
+
+
+def ledger_head(spark: SparkSession, state_path: str) -> tuple[int, int]:
+    """(version, n_state_rows) of the newest committed snapshot, read from
+    the ledger alone; (0, 0) with no ledger."""
     led = read_ledger(spark, state_path)
     if led is None:
-        return 0
-    row = led.agg(F.max("version").alias("v")).collect()[0]
-    return int(row["v"] or 0)
+        return 0, 0
+    v, n = led.agg(*_newest()).collect()[0]
+    return int(v or 0), int(n or 0)
+
+
+def current_version(spark: SparkSession, state_path: str) -> int:
+    return ledger_head(spark, state_path)[0]
 
 
 def latest_snapshot(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -99,23 +112,16 @@ def apply_batch(
         check_or_write_config(cfg_base, cfg)
 
     led = read_ledger(spark, state_path)
-    applied: set = set()
-    version = 0
+    version, n_state, applied = 0, 0, set()
     if led is not None:
-        agg = led.agg(
-            F.max("version").alias("v"), F.collect_set("batch_id").alias("ids")
-        ).collect()[0]
-        version = int(agg["v"] or 0)
-        applied = set(agg["ids"] or [])
+        v, n, ids = led.agg(*_newest(), F.collect_set("batch_id")).collect()[0]
+        version, n_state, applied = int(v or 0), int(n or 0), set(ids or [])
 
     if batch_id in applied:
-        n_state = (
-            spark.read.parquet(os.path.join(state_path, f"snapshot_v{version}")).count()
-            if version > 0 else 0
-        )
+        # the ledger row recorded the snapshot's row count at its commit
         return {
             "batch_id": batch_id, "skipped": True, "version": version,
-            "n_state_rows": int(n_state), "batch_rows": 0,
+            "n_state_rows": n_state, "batch_rows": 0,
             "wall_ms": int((time.time() - t0) * 1000),
         }
 
@@ -132,9 +138,9 @@ def apply_batch(
     new_version = version + 1
     snap_path = os.path.join(state_path, f"snapshot_v{new_version}")
     # overwrite: an orphan dir from a crash before the ledger commit is
-    # rewritten with the identical deterministic content
-    state.write.mode("overwrite").parquet(snap_path)
-    n_state = spark.read.parquet(snap_path).count()
+    # rewritten with the identical deterministic content; the row count is
+    # observed on the write, not read back
+    n_state = write_counted(state, lambda df: df.write.mode("overwrite").parquet(snap_path))
     wall_ms = int((time.time() - t0) * 1000)
     check_or_write_config(cfg_base, cfg)  # first commit records the config
     local_frame(
@@ -144,7 +150,7 @@ def apply_batch(
     )
     return {
         "batch_id": batch_id, "skipped": False, "version": new_version,
-        "n_state_rows": int(n_state), "batch_rows": batch_rows,
+        "n_state_rows": n_state, "batch_rows": batch_rows,
         "wall_ms": wall_ms,
     }
 

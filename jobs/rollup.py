@@ -64,14 +64,10 @@ def run_rollup(
     # no-op never mutates state (no snapshot expiry under the re-run's
     # possibly-different retain_last)
     if rs.is_applied(spark, state_path, batch_id):
-        version = rs.current_version(spark, state_path)
-        n_state = (
-            spark.read.parquet(os.path.join(state_path, f"snapshot_v{version}")).count()
-            if version > 0 else 0
-        )
+        version, n_state = rs.ledger_head(spark, state_path)
         out = {
             "batch_id": batch_id, "skipped": True, "version": version,
-            "n_state_rows": int(n_state), "batch_rows": 0,
+            "n_state_rows": n_state, "batch_rows": 0,
             "expired_versions": [],
         }
     else:

@@ -1,6 +1,8 @@
 """Commit bookkeeping (sinks/ledger.py, sinks/metrics.py): the `_SUCCESS`
-probe holds on URI paths, and `local_frame` builds exactly the frame
-`createDataFrame(<python list>)` builds, as one local partition."""
+probe holds on URI paths, `local_frame` builds exactly the frame
+`createDataFrame(<python list>)` builds, as one local partition, and the
+rollup state (sinks/rollup_state.py) counts its snapshot without reading
+it back."""
 
 from __future__ import annotations
 
@@ -99,3 +101,23 @@ def test_create_dataframe_only_inside_local_frame():
         for owner in _create_dataframe_calls(ast.parse(path.read_text()))
     ]
     assert calls == [("doc_agent_spark/sinks/metrics.py", "local_frame")], calls
+
+
+def test_rollup_counts_come_from_the_write_and_the_ledger(spark, tmp_path):
+    """The rollup snapshot is counted on its write, and a batch already
+    applied answers its state size from the ledger row alone: it still
+    does with the snapshot directory gone."""
+    import shutil
+
+    from doc_agent_spark.sinks import rollup_state as rs
+
+    state = str(tmp_path / "state")
+    batch = spark.createDataFrame([("a", 1.0), ("b", 2.0), ("a", 3.0)],
+                                  "k string, value double")
+    out = rs.apply_batch(spark, batch, state, ["k"], "value", "d1")
+    snap = os.path.join(state, "snapshot_v1")
+    assert out["n_state_rows"] == spark.read.parquet(snap).count() == 2
+    shutil.rmtree(snap)
+    again = rs.apply_batch(spark, batch, state, ["k"], "value", "d1")
+    assert again["skipped"] and again["n_state_rows"] == 2
+    assert rs.ledger_head(spark, state) == (1, 2)

@@ -112,3 +112,20 @@ def test_streaming_extraction_equals_batch(spark, tmp_path, corpus_path):
         (r.doc_id, r.order, r.kind, r.text, r.media_ref) for r in batch.collect()
     }
     assert stream_spans == batch_spans
+
+
+def test_uri_lineage_path_resumes(spark, tmp_path, corpus_path):
+    """A ``file://`` lineage path resumes like a plain one: the second run
+    skips every bucket, and the committed counts read back through it."""
+    from doc_agent_spark.sinks.metrics import committed_outputs
+
+    out, met = str(tmp_path / "o"), str(tmp_path / "m")
+    lin = (tmp_path / "l").as_uri()
+    first = run_extract(spark, corpus_path, out, lin, met, run_id="u1", buckets=8)
+    assert first["docs_processed"] == N
+    again = run_extract(spark, corpus_path, out, lin, met, run_id="u1", buckets=8)
+    assert again["resumed_buckets_skipped"] == 8
+    assert again["docs_processed"] == 0
+    counts = committed_outputs(spark, lin, "u1", "extract")
+    assert counts == committed_outputs(spark, str(tmp_path / "l"), "u1", "extract")
+    assert sum(docs for docs, _ in counts.values()) == N

@@ -345,3 +345,23 @@ def test_cache_store_rename_collision_serves_uncached(spark, docs_path, tmp_path
     assert rows == want and len(rows) == 3
     assert dbg["hit"] is False
     assert not [d for d in os.listdir(cache.dir) if ".tmp-" in d]
+
+
+def test_cache_key_folds_in_engine_and_embedder_versions(tmp_path, monkeypatch):
+    """An upgrade must miss instead of serving results the old code
+    computed: the key changes with ``EMBEDDER_VERSION`` and the package
+    version, and stays the same otherwise."""
+    from doc_agent_spark import cache as cache_mod
+    from doc_agent_spark.functions import embedder
+
+    cache = cache_mod.ResultCache(str(tmp_path / "cache"))
+    args = ("search_documents", {"query": "spark", "limit": 3}, 3,
+            {"input_path": "fp"})
+    key = cache.key(*args)
+    assert cache.key(*args) == key
+    monkeypatch.setattr(embedder, "EMBEDDER_VERSION", embedder.EMBEDDER_VERSION + "-next")
+    assert cache.key(*args) != key
+    monkeypatch.undo()
+    assert cache.key(*args) == key
+    monkeypatch.setattr(cache_mod, "__version__", cache_mod.__version__ + ".1")
+    assert cache.key(*args) != key
