@@ -14,13 +14,15 @@ Contract, per artifact ``<out>/<name>`` (partition_id = its ordinal in
   (``STALE_KEYS``) wipes and rebuilds under ``rebuild_stale``; any other
   difference raises "<stage> config mismatch", naming the keys.
 - **Reuse.** An artifact is committed when ``readable`` passes: its
-  ``_SUCCESS`` marker is probed through the path's Hadoop FileSystem (one
-  driver call, no Spark job, any URI scheme), and only a committed path is
-  read back. Its count is the ``docs_out`` of its newest lineage row that
-  postdates the marker (one ``committed_outputs`` collect per job, paid
-  only once something is reused). With no such row it is counted and one
-  lineage row is backfilled (``wall_ms`` 0) — this converges a driver
-  killed between the artifact write and the lineage append.
+  ``_SUCCESS`` marker is probed through the path's Hadoop FileSystem, then
+  one data file's parquet footer is read on the driver through the same
+  FileSystem, and the artifact is read back with the Spark schema that
+  footer records — no Spark job, any URI scheme. Its count is the
+  ``docs_out`` of its newest lineage row that postdates the marker (one
+  ``committed_outputs`` collect per job, paid only once something is
+  reused). With no such row it is counted and one lineage row is
+  backfilled (``wall_ms`` 0) — this converges a driver killed between
+  the artifact write and the lineage append.
 - **Build.** The write is a whole-directory static overwrite (forced, so
   the root ``_SUCCESS`` marker exists even when the caller left the
   session in dynamic mode). Its row count is observed on the write
@@ -45,7 +47,7 @@ from pyspark.sql.types import StructType
 
 from ..operators.publish import check_or_write_config
 from ..schema import LINEAGE
-from .metrics import committed_outputs, fs_mtime, local_frame
+from .metrics import committed_outputs, fs_mtime, fs_parquet_schema, local_frame
 
 # Stamp keys that only say the artifacts are OUT OF DATE (a new embedder,
 # a rewritten input snapshot): rebuild_stale may wipe and rebuild. Every
@@ -62,20 +64,21 @@ def _commit_proof(spark: SparkSession, path: str) -> tuple[DataFrame, float] | N
     at = fs_mtime(spark, path, "_SUCCESS")
     if at is None:
         return None
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution
-    except Exception:
+    schema = fs_parquet_schema(spark, path)
+    if schema is None:
         return None
-    return df, at
+    return spark.read.schema(schema).parquet(path), at
 
 
 def readable(spark: SparkSession, path: str) -> DataFrame | None:
     """Committed-artifact probe: the committer's _SUCCESS marker must exist
     (a driver killed mid-job-commit leaves a readable fraction of the part
     files — 'reads back' alone would resume against a silently truncated
-    artifact) AND the parquet must read back. The marker is probed first,
-    so a missing or partial artifact costs no Spark job."""
+    artifact) AND one data file's footer must parse and carry the schema
+    Spark wrote (``metrics.fs_parquet_schema``). The artifact is read back
+    with that schema. Spark's own inference (``mergeSchema`` off) parses
+    exactly one footer too, so the check is the same; both probes are
+    driver-side FileSystem calls, and a probe launches no Spark job."""
     proof = _commit_proof(spark, path)
     return None if proof is None else proof[0]
 

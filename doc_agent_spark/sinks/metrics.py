@@ -10,7 +10,9 @@ the read side: resume = anti-join the completed partitions, and a reused
 artifact takes its row count from the lineage row written when it was
 committed. Whether a lineage directory (or a commit marker) exists is
 asked of the path's Hadoop FileSystem (:func:`fs_mtime`), so a ``file:``,
-``hdfs://`` or ``s3a://`` lineage path resumes like a plain one.
+``hdfs://`` or ``s3a://`` lineage path resumes like a plain one; the
+schema a committed parquet artifact was written with is read from one
+footer through the same FileSystem (:func:`fs_parquet_schema`).
 
 Driver-built rows (metrics rollups, lineage rows, small lookup tables) go
 through :func:`local_frame`: an Arrow table becomes a one-partition local
@@ -21,6 +23,8 @@ Python workers.
 
 from __future__ import annotations
 
+import functools
+import json
 from collections.abc import Sequence
 
 from py4j.protocol import Py4JJavaError
@@ -53,6 +57,17 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence],
     return spark.createDataFrame(table, schema).coalesce(1)
 
 
+@functools.cache
+def _jclass(jvm, name: str):
+    """The JVM class (or static member) ``name``, resolved once per
+    gateway: py4j resolves a dotted name with one round trip per segment,
+    more than the probe that uses it."""
+    obj = jvm
+    for part in name.split("."):
+        obj = getattr(obj, part)
+    return obj
+
+
 def fs_mtime(spark: SparkSession, path: str, *child: str) -> float | None:
     """Modification time (epoch seconds) of ``path`` (joined with
     ``child``, e.g. ``"_SUCCESS"``), None when it does not exist. One call
@@ -60,7 +75,7 @@ def fs_mtime(spark: SparkSession, path: str, *child: str) -> float | None:
     for plain paths and ``file:``/``hdfs://``/``s3a://`` URIs — and no
     Spark job."""
     sc = spark.sparkContext
-    target = sc._jvm.org.apache.hadoop.fs.Path(path, *child)
+    target = _jclass(sc._jvm, "org.apache.hadoop.fs.Path")(path, *child)
     try:
         fs = target.getFileSystem(sc._jsc.hadoopConfiguration())
         # exists() first: a miss raising FileNotFoundException through
@@ -69,6 +84,55 @@ def fs_mtime(spark: SparkSession, path: str, *child: str) -> float | None:
             return None
         return fs.getFileStatus(target).getModificationTime() / 1000
     except Py4JJavaError:  # no filesystem for the path's scheme
+        return None
+
+
+# the footer key under which Spark's parquet writer records the row schema
+SPARK_ROW_SCHEMA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def fs_parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The Spark schema recorded in the footer of one data file of the
+    parquet directory ``path``; None when it has no data file, the footer
+    does not parse, or the footer carries no Spark row schema (a file
+    Spark did not write). Read on the driver with parquet-hadoop through
+    the path's Hadoop FileSystem, as :func:`fs_mtime` probes: one
+    ``listStatus`` per directory level (a partitioned artifact descends
+    into its first partition directory) and one footer read that skips
+    the row-group metadata, as Spark's own schema inference does. No Spark
+    job. The schema holds the data columns only: partition columns live in
+    directory names."""
+    sc = spark.sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    try:
+        node = _jclass(jvm, "org.apache.hadoop.fs.Path")(path)
+        fs = node.getFileSystem(conf)
+        while True:
+            # skip what Spark's file index hides: _SUCCESS, _temporary, .crc
+            first = next((st for st in fs.listStatus(node)
+                          if st.getPath().getName()[:1] not in "_."), None)
+            if first is None:
+                return None
+            node = first.getPath()
+            if first.isFile():
+                break
+        parquet = "org.apache.parquet."
+        skip = _jclass(jvm, parquet + "format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS")
+        options = _jclass(jvm, parquet + "HadoopReadOptions").builder(conf) \
+            .withMetadataFilter(skip).build()
+        reader = _jclass(jvm, parquet + "hadoop.ParquetFileReader").open(
+            _jclass(jvm, parquet + "hadoop.util.HadoopInputFile").fromPath(node, conf), options)
+        try:
+            row_schema = reader.getFileMetaData().getKeyValueMetaData().get(SPARK_ROW_SCHEMA)
+        finally:
+            reader.close()
+    except Py4JJavaError:  # no filesystem, or not a parquet footer
+        return None
+    if row_schema is None:
+        return None
+    try:
+        return StructType.fromJson(json.loads(row_schema))
+    except (ValueError, KeyError, TypeError):
         return None
 
 

@@ -93,6 +93,7 @@ buckets — identical mechanics to the extraction job.
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 import time
@@ -166,10 +167,10 @@ def curate_bucket_plan(docs, min_quality: float, langs: list[str] | None,
 def _load_or_build(spark, path: str, build, params: dict | None = None):
     """Corpus-stat checkpoint: try the committed parquet artifact, else run
     ``build()`` (which must return the frame to persist), write it, and
-    read the committed copy back. Every artifact is a deterministic
-    function of the input AND its build parameters, so a crash before the
-    parquet commit just rebuilds the identical frame. Returns
-    (frame, reused).
+    read the committed copy back with the written schema (no inference
+    job). Every artifact is a deterministic function of the input AND its
+    build parameters, so a crash before the parquet commit just rebuilds
+    the identical frame. Returns (frame, reused).
 
     Two reuse guards:
     - ``params``: the artifact records the parameters it was built under
@@ -190,9 +191,10 @@ def _load_or_build(spark, path: str, build, params: dict | None = None):
     if df is not None:
         _artifact_params_guard(path, params)
         return df, True
-    build().write.mode("overwrite").parquet(path)
+    built = build()
+    built.write.mode("overwrite").parquet(path)
     _artifact_params_guard(path, params)
-    return spark.read.parquet(path), False
+    return spark.read.schema(built.schema).parquet(path), False
 
 
 def _artifact_params_guard(path: str, params: dict | None) -> None:
@@ -213,11 +215,19 @@ def _artifact_params_guard(path: str, params: dict | None) -> None:
             _json.dump(params, fh)
 
 
+def _then(docs, step):
+    """The lazy stage input ``step(docs())`` as another cached thunk.
+    ``run_curate`` chains its input through these, so the input is read
+    (an eager schema inference, a Spark job) only once a corpus-stat
+    artifact builds or a bucket is pending."""
+    return functools.cache(lambda: step(docs()))
+
+
 def _boilerplate_build(docs, min_docs: int):
     """The ≥min_docs line set (shared header/footer boilerplate)."""
     from doc_agent_spark.operators.dedup import boilerplate_lines
 
-    return lambda: boilerplate_lines(docs, min_docs=min_docs)
+    return lambda: boilerplate_lines(docs(), min_docs=min_docs)
 
 
 def _fuzzy_drops_build(docs, threshold: float, minhash_k: int = 8,
@@ -235,9 +245,10 @@ def _fuzzy_drops_build(docs, threshold: float, minhash_k: int = 8,
     from doc_agent_spark.operators import dedup as dedup_ops
 
     def build():
-        cand = dedup_ops.minhash_lsh_pairs(docs, k=minhash_k, bands=bands)
+        docs_ = docs()
+        cand = dedup_ops.minhash_lsh_pairs(docs_, k=minhash_k, bands=bands)
         verified = dedup_ops.verify_pairs_jaccard(
-            cand, docs, threshold=threshold
+            cand, docs_, threshold=threshold
         )
         # star contraction, not min-label: verified-Jaccard components can
         # be CHAINS (serial edit histories), and min-label needs
@@ -251,7 +262,7 @@ def _fuzzy_drops_build(docs, threshold: float, minhash_k: int = 8,
             )
         if keep != "quality":
             raise ValueError(f"unknown fuzzy keep policy {keep!r}")
-        scored = docs.select(
+        scored = docs_.select(
             F.col("doc_id").alias("id"),
             textfns.quality_score(F.col("text")).alias("score"),
         )
@@ -275,9 +286,9 @@ def _dsir_keep_build(docs, k: int, target_pred: str, n_buckets: int):
     from doc_agent_spark.operators import dsir
 
     def build():
-        target = docs.filter(F.expr(target_pred))
+        target = docs().filter(F.expr(target_pred))
         return dsir.dsir_select(
-            docs, target, k=k, n_buckets=n_buckets, id_col="doc_id"
+            docs(), target, k=k, n_buckets=n_buckets, id_col="doc_id"
         ).select(F.col("id").alias("doc_id"))
 
     return build
@@ -292,7 +303,7 @@ def _domain_cap_drops_build(docs, cap: int, domain_col: str):
     from doc_agent_spark.operators import sampling
 
     def build():
-        ids = docs.select("doc_id", domain_col)
+        ids = docs().select("doc_id", domain_col)
         kept = sampling.cap_per_domain(
             ids, cap=cap, domain_col=domain_col, key_col="doc_id"
         )
@@ -305,43 +316,39 @@ def _domain_cap_drops_build(docs, cap: int, domain_col: str):
 
 def _load_or_build_lm(spark, docs, path: str, min_count: int):
     """Corpus-stat checkpoint for the stupid-backoff bigram count model —
-    bespoke (three tables) rather than via :func:`_load_or_build`: totals
-    is written LAST, so a crash mid-artifact leaves totals unreadable and
-    the whole model rebuilds identically. The FULL (untruncated) unigram
-    aggregate is cached before its first action so the model write, the
-    totals sum (which must cover the full counts, not the truncated
-    model), and the bigram pass don't each re-scan the corpus for it."""
+    bespoke (three tables) rather than via :func:`_load_or_build`: the
+    model is committed when all three tables pass ``readable`` (each
+    table's ``_SUCCESS`` marker and footer), and totals is written LAST,
+    so a crash mid-artifact leaves it uncommitted and the whole model
+    rebuilds identically. The FULL (untruncated) unigram aggregate is
+    cached before its first action so the model write, the totals sum
+    (which must cover the full counts, not the truncated model), and the
+    bigram pass don't each re-scan the corpus for it."""
     from doc_agent_spark.operators import lm_quality
+    from doc_agent_spark.sinks.ledger import readable
 
     paths = [f"{path}/uni", f"{path}/big", f"{path}/tot"]
-    try:
-        uni, big, tot = (spark.read.parquet(p) for p in paths)
-        tot.head()  # force: totals readable == artifact committed
-        committed = True
-    except Exception:
-        committed = False
-    if committed:
-        # guard OUTSIDE the try: a params mismatch must raise, not be
-        # swallowed into a silent rebuild-under-new-params
+    model = [readable(spark, p) for p in paths]
+    if None not in model:
         _artifact_params_guard(path, {"lm_min_count": min_count})
-        return (uni, big, tot), True
-    uni_full = lm_quality.corpus_unigrams(docs).persist()
+        return tuple(model), True
+    uni_full = lm_quality.corpus_unigrams(docs()).persist()
     try:
-        uni_full.filter(F.col("c") >= min_count).write.mode(
-            "overwrite"
-        ).parquet(paths[0])
-        lm_quality.corpus_bigrams(docs, min_count).write.mode(
-            "overwrite"
-        ).parquet(paths[1])
-        # T must cover the FULL counts (min_count truncates the model,
-        # not the denominator) — summed from the cached full aggregate
-        uni_full.agg(F.sum("c").cast("double").alias("t")).write.mode(
-            "overwrite"
-        ).parquet(paths[2])
+        built = (
+            uni_full.filter(F.col("c") >= min_count),
+            lm_quality.corpus_bigrams(docs(), min_count),
+            # T must cover the FULL counts (min_count truncates the model,
+            # not the denominator) — summed from the cached full aggregate
+            uni_full.agg(F.sum("c").cast("double").alias("t")),
+        )
+        for df, p in zip(built, paths):
+            df.write.mode("overwrite").parquet(p)
     finally:
         uni_full.unpersist()
     _artifact_params_guard(path, {"lm_min_count": min_count})
-    return tuple(spark.read.parquet(p) for p in paths), False
+    return tuple(
+        spark.read.schema(df.schema).parquet(p) for df, p in zip(built, paths)
+    ), False
 
 
 def _apply_drop_list(docs, drops, n_drops: int, bloom_min: int):
@@ -412,8 +419,8 @@ def run_curate(
     from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
 
     t0 = time.time()
-    docs = (
-        spark.read.parquet(input_path) if "/" in input_path
+    docs = functools.cache(
+        lambda: spark.read.parquet(input_path) if "/" in input_path
         else spark.read.table(input_path)
     )
     if c4_rules:
@@ -425,11 +432,11 @@ def run_curate(
         from doc_agent_spark.functions import c4rules as c4f
 
         clean = c4f.c4_clean(F.col("text"))
-        docs = (
-            docs.withColumn("_c4_pass", c4f.c4_page_pass(F.col("text"), clean))
+        docs = _then(docs, lambda d: (
+            d.withColumn("_c4_pass", c4f.c4_page_pass(F.col("text"), clean))
             .withColumn("text", clean)
             .withColumn("n_chars", F.length("text").cast("long"))
-        )
+        ))
     boiler_reused = None
     if strip_min_docs > 0:
         bpath = boilerplate_path or (output_path.rstrip("/") + "_boilerplate_lines")
@@ -437,52 +444,62 @@ def run_curate(
             spark, bpath, _boilerplate_build(docs, strip_min_docs),
             params={"strip_min_docs": strip_min_docs},
         )
-        stripped = dedup_ops.strip_duplicated_lines(
-            docs, min_docs=strip_min_docs, boiler=boiler
-        )
-        docs = (
-            docs.drop("text", "n_chars")
-            .join(
-                stripped.select(
-                    "doc_id",
-                    F.col("text_clean").alias("text"),
-                    "n_lines_removed",
-                ),
-                "doc_id",
+
+        def strip(d):
+            stripped = dedup_ops.strip_duplicated_lines(
+                d, min_docs=strip_min_docs, boiler=boiler
             )
-            .withColumn("n_chars", F.length("text").cast("long"))
-        )
+            return (
+                d.drop("text", "n_chars")
+                .join(
+                    stripped.select(
+                        "doc_id",
+                        F.col("text_clean").alias("text"),
+                        "n_lines_removed",
+                    ),
+                    "doc_id",
+                )
+                .withColumn("n_chars", F.length("text").cast("long"))
+            )
+
+        docs = _then(docs, strip)
     else:
-        docs = docs.withColumn("n_lines_removed", F.lit(0).cast("long"))
+        docs = _then(docs, lambda d: d.withColumn(
+            "n_lines_removed", F.lit(0).cast("long")))
     span_reused = None
     if span_k > 0:
         spath = span_shingles_path or (output_path.rstrip("/") + "_dup_shingles")
         dup_sh, span_reused = _load_or_build(
             spark, spath,
             lambda: dedup_ops.duplicated_shingles(
-                docs, k=span_k, min_count=span_min_count
+                docs(), k=span_k, min_count=span_min_count
             ),
             params={"span_k": span_k, "span_min_count": span_min_count},
         )
-        cleaned = dedup_ops.strip_duplicated_spans(docs, dup_sh, k=span_k)
-        docs = (
-            docs.join(
-                cleaned.select(
-                    F.col("id").alias("doc_id"),
-                    F.col("text_clean"), F.col("n_tokens_removed"),
-                ),
-                "doc_id", "left",
+
+        def strip_spans(d):
+            cleaned = dedup_ops.strip_duplicated_spans(d, dup_sh, k=span_k)
+            return (
+                d.join(
+                    cleaned.select(
+                        F.col("id").alias("doc_id"),
+                        F.col("text_clean"), F.col("n_tokens_removed"),
+                    ),
+                    "doc_id", "left",
+                )
+                .withColumn("text", F.coalesce("text_clean", "text"))
+                .withColumn(
+                    "span_tokens_removed",
+                    F.coalesce("n_tokens_removed", F.lit(0)).cast("long"),
+                )
+                .drop("text_clean", "n_tokens_removed")
+                .withColumn("n_chars", F.length("text").cast("long"))
             )
-            .withColumn("text", F.coalesce("text_clean", "text"))
-            .withColumn(
-                "span_tokens_removed",
-                F.coalesce("n_tokens_removed", F.lit(0)).cast("long"),
-            )
-            .drop("text_clean", "n_tokens_removed")
-            .withColumn("n_chars", F.length("text").cast("long"))
-        )
+
+        docs = _then(docs, strip_spans)
     else:
-        docs = docs.withColumn("span_tokens_removed", F.lit(0).cast("long"))
+        docs = _then(docs, lambda d: d.withColumn(
+            "span_tokens_removed", F.lit(0).cast("long")))
     fuzzy_reused = None
     n_fuzzy_dropped = 0
     if fuzzy_jaccard is not None:
@@ -492,7 +509,9 @@ def run_curate(
             params={"fuzzy_jaccard": fuzzy_jaccard, "fuzzy_keep": fuzzy_keep},
         )
         n_fuzzy_dropped = drops.count()
-        docs = _apply_drop_list(docs, drops, n_fuzzy_dropped, bloom_droplist_min)
+        docs = _then(docs, functools.partial(
+            _apply_drop_list, drops=drops, n_drops=n_fuzzy_dropped,
+            bloom_min=bloom_droplist_min))
     cap_reused = None
     n_domain_capped = 0
     if domain_cap > 0:
@@ -502,7 +521,9 @@ def run_curate(
             params={"domain_cap": domain_cap, "domain_col": domain_col},
         )
         n_domain_capped = cap_drops.count()
-        docs = _apply_drop_list(docs, cap_drops, n_domain_capped, bloom_droplist_min)
+        docs = _then(docs, functools.partial(
+            _apply_drop_list, drops=cap_drops, n_drops=n_domain_capped,
+            bloom_min=bloom_droplist_min))
     dsir_reused = None
     n_dsir_kept = 0
     if dsir_keep > 0:
@@ -515,7 +536,7 @@ def run_curate(
         )
         n_dsir_kept = keep.count()
         # keep list is at most dsir_keep rows — let AQE broadcast it
-        docs = docs.join(keep, "doc_id", "left_semi")
+        docs = _then(docs, lambda d: d.join(keep, "doc_id", "left_semi"))
     lm_reused = None
     if lm_max_ce is not None:
         from doc_agent_spark.operators import lm_quality
@@ -524,22 +545,23 @@ def run_curate(
         (uni, big, tot), lm_reused = _load_or_build_lm(
             spark, docs, lpath, lm_min_count
         )
-        scores = lm_quality.doc_cross_entropy(docs, uni, big, tot).select(
-            "doc_id", "lm_ce"
-        )
         # left join: < 2-token docs have no score and fail the filter stage
-        docs = docs.join(scores, "doc_id", "left")
+        docs = _then(docs, lambda d: d.join(
+            lm_quality.doc_cross_entropy(d, uni, big, tot).select("doc_id", "lm_ce"),
+            "doc_id", "left",
+        ))
     else:
-        docs = docs.withColumn("lm_ce", F.lit(None).cast("double"))
-    docs = docs.withColumn("text_md5", F.md5("text")).withColumn(
-        "bucket", F.pmod(F.hash("text_md5"), F.lit(buckets))
-    )
+        docs = _then(docs, lambda d: d.withColumn("lm_ce", F.lit(None).cast("double")))
     done = completed_partitions(spark, lineage_path, run_id, "curate")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # Skip rule (jobs/extract.py): every bucket committed ⇒ the resume
-    # filter selects no row, so skip the funnel, its write and lineage.
+    # filter selects no row, so skip the funnel, its write and lineage —
+    # and, with every corpus-stat artifact reused, the input read itself.
     m: dict = {}
     if not set(range(buckets)) <= done:
+        docs = docs().withColumn("text_md5", F.md5("text")).withColumn(
+            "bucket", F.pmod(F.hash("text_md5"), F.lit(buckets))
+        )
         if done:
             docs = docs.filter(~F.col("bucket").isin(*sorted(done)))
         docs = docs.repartition(max(buckets, spark.sparkContext.defaultParallelism), "bucket")

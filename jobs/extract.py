@@ -17,8 +17,8 @@ records one row per completed bucket; resume anti-joins completed buckets
 and processes only the remainder. Killing the job between buckets loses at
 most in-flight buckets, never corrupts finished ones. When lineage already
 holds every bucket in range(buckets) the remainder is provably empty, so a
-full resume reads only its lineage and the input's schema: no scan of the
-input rows, no plan, no output or lineage write — just the (zero-count)
+full resume reads only its lineage: no read of the input (not even its
+schema), no plan, no output or lineage write — just the (zero-count)
 metrics row. If any bucket is missing from lineage (an empty bucket never
 gets a row) the job takes the full path.
 
@@ -56,8 +56,6 @@ def run_extract(
     from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
 
     t0 = time.time()
-    docs = spark.read.parquet(input_path) if "/" in input_path else spark.read.table(input_path)
-
     bucket_of = F.pmod(F.hash("doc_id"), F.lit(buckets))
     done = completed_partitions(spark, lineage_path, run_id, "extract")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -67,7 +65,9 @@ def run_extract(
     # then carries the zero counts an empty Observation yields.
     m: dict = {}
     if not set(range(buckets)) <= done:
-        docs = docs.withColumn("bucket", bucket_of)
+        # read only here: the read infers the input's schema, a Spark job
+        docs = (spark.read.parquet(input_path) if "/" in input_path
+                else spark.read.table(input_path)).withColumn("bucket", bucket_of)
         if done:
             docs = docs.filter(~F.col("bucket").isin(*sorted(done)))
         docs = docs.repartition(max(buckets, spark.sparkContext.defaultParallelism), "bucket")

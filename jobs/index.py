@@ -28,15 +28,18 @@ Artifacts (under --output):
 Resume model — artifact-granular, the jobs/curate.py corpus-stat pattern
 rather than the bucket pattern: every artifact is a deterministic function
 of the input corpus, its parquet write is the commit point, and a re-run
-skips any artifact that already reads back (a crash mid-write leaves an
-unreadable artifact that rebuilds identically). Every commit goes
-through sinks/ledger.py: one lineage row per artifact (partition_id =
-artifact ordinal), `resumed` in the stats reflects exactly what was
-skipped, and a reused artifact reports the row count its newest lineage
-row recorded at commit instead of re-counting.
+skips any committed artifact: its ``_SUCCESS`` marker exists and one
+footer carries the schema Spark wrote, both read on the driver (a crash
+mid-write leaves an uncommitted artifact that rebuilds identically).
+Every commit goes through sinks/ledger.py: one lineage row per artifact
+(partition_id = artifact ordinal), `resumed` in the stats reflects
+exactly what was skipped, and a reused artifact reports the row count
+its newest lineage row recorded at commit instead of re-counting.
 
-The input is read (its schema inferred) only once some artifact builds;
-a fully-resumed run never touches it.
+The input is read (its schema inferred) only once some artifact builds.
+A fully-resumed run never touches it and launches 3 Spark jobs: the one
+lineage collect (two jobs under adaptive execution) and the metrics
+append.
 
 Scale notes: every artifact is one relational pass over the corpus;
 ivf_cells is the single Arrow stage (broadcast-codebook matmul assign —

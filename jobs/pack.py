@@ -38,6 +38,7 @@ path + run id, same as jobs/extract.py.
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 import time
@@ -85,36 +86,40 @@ def run_pack(
 
     t0 = time.time()
     materialize = materialize or shuffle_windows  # order needs the windows
-    docs = (
-        spark.read.parquet(input_path) if "/" in input_path
-        else spark.read.table(input_path)
+    # the input is read (an eager schema inference, a Spark job) only by
+    # work that needs its rows: a pending shard, merge training, the
+    # shuffle pass — a full resume never touches it
+    source = functools.cache(
+        lambda: (spark.read.parquet(input_path) if "/" in input_path
+                 else spark.read.table(input_path))
+        .withColumn("shard", packing.shard_of(F.col("doc_id"), shards, seed))
     )
-    docs = docs.withColumn("shard", packing.shard_of(F.col("doc_id"), shards, seed))
-    # THIS config's shard set (pre-resume): the guard and input of the
-    # shuffle pass must ignore stale partitions left by a previous run
-    # with a different --shards mapping (dynamic overwrite never removes
-    # them — see the committed semi-join below for the same hazard)
-    cfg_shards = docs.select("shard").distinct()
 
     if tokenizer == "bpe":
         # Learned-merge tokenizer: the merge table is a corpus statistic,
         # trained once per run on the FULL input (before any resume
         # filtering — a resumed run must tokenize identically) and
         # persisted; the vocabulary-sized count collect is the only
-        # driver-side data movement (operators/tokenizer.py).
+        # driver-side data movement (operators/tokenizer.py). A committed
+        # table (sinks/ledger.readable) is reused.
         from doc_agent_spark.operators import tokenizer as tok
+        from doc_agent_spark.sinks.ledger import readable
 
         mpath = bpe_path or (output_path.rstrip("/") + "_bpe_merges")
-        try:
-            mrows = spark.read.parquet(mpath).orderBy("rank").collect()
-            merges = [(r["a"], r["b"]) for r in mrows]
-        except Exception:
-            merges = tok.train_bpe(docs, n_merges=bpe_merges)
+
+        @functools.cache
+        def merges() -> list[tuple[str, str]]:
+            committed = readable(spark, mpath)
+            if committed is not None:
+                return [(r["a"], r["b"]) for r in committed.orderBy("rank").collect()]
+            trained = tok.train_bpe(source(), n_merges=bpe_merges)
             local_frame(
                 spark,
-                [(i, a, b) for i, (a, b) in enumerate(merges)],
+                [(i, a, b) for i, (a, b) in enumerate(trained)],
                 "rank int, a string, b string",
             ).write.mode("overwrite").parquet(mpath)
+            return trained
+
         token_count_expr = F.size("_toks").cast("long")
         tokens_expr = F.col("_toks")
     else:
@@ -130,17 +135,18 @@ def run_pack(
     pending = not set(range(shards)) <= done
     m: dict = {}
     if pending:
+        docs = source()
         if done:
             docs = docs.filter(~F.col("shard").isin(*sorted(done)))
         # token-free paths (lineage counts, shard joins) use the plain frame —
         # mapInPandas blocks column pruning; and tokenization applies AFTER the
         # resume filter so a resume never re-tokenizes completed shards (merge
-        # TRAINING above ran on the full input, so resumes tokenize identically)
+        # TRAINING reads the full input, source(), so resumes tokenize identically)
         docs_plain = docs
         if merges is not None:
             from doc_agent_spark.operators import tokenizer as tok
 
-            docs = tok.apply_bpe(docs, merges, out_col="_toks")
+            docs = tok.apply_bpe(docs, merges(), out_col="_toks")
 
         staged = sampling.split_assign(
             docs, splits or {"train": 0.9, "val": 0.05, "test": 0.05}, key_col="doc_id"
@@ -194,9 +200,11 @@ def run_pack(
         # but never wrote their windows, and silently shuffling a
         # partial window set would train on a truncated corpus.
         # Every comparison and the shuffle input are scoped to THIS
-        # config's shard set: stale partitions from a previous
-        # --shards mapping must neither trip the guard nor ride the
-        # training order twice.
+        # config's shard set (pre-resume): stale partitions from a
+        # previous --shards mapping must neither trip the guard nor ride
+        # the training order twice (dynamic overwrite never removes them —
+        # see the committed semi-join above for the same hazard).
+        cfg_shards = source().select("shard").distinct()
         cfg = {r["shard"] for r in cfg_shards.collect()}
         try:
             all_windows = spark.read.parquet(

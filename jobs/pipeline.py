@@ -17,14 +17,15 @@ metrics row. A fully-resumed index reuses each artifact on its commit
 proof and takes its row count from the artifact's newest lineage row
 (one lineage collect), not from a count() job.
 
-What a fully resumed run still launches (22 Spark jobs with two buckets
-and two shards): extract, curate and pack each read their input schema,
-collect their lineage and append one metrics row (3 jobs each); the
-bridge reads ``documents`` back (1); index reads each of its 9 artifacts
-back, collects its lineage once and appends its metrics row (11). Probing
-``_SUCCESS`` is a driver-side FileSystem call, and metrics rows are
-Arrow-built local relations (sinks/metrics.local_frame), so none of it
-runs a Python worker.
+What a fully resumed run still launches (9 Spark jobs with two buckets
+and two shards): extract, curate and pack each collect their lineage and
+append one metrics row (2 jobs each) and never read their input; the
+bridge launches none; index collects its lineage once (2 jobs under
+adaptive execution) and appends its metrics row (3). A commit proof
+(sinks/ledger.readable) is driver-side: a FileSystem probe of
+``_SUCCESS`` and one parquet footer read for the written schema. Metrics
+rows are Arrow-built local relations (sinks/metrics.local_frame), so
+none of it runs a Python worker.
 
 The bridge (extract's exploded span rows -> curate's documents contract)
 is a real pipeline stage, not glue: per doc it reassembles span text in

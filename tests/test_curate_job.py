@@ -193,6 +193,32 @@ def test_lm_perplexity_filter_stage(spark, tmp_path_factory):
     assert {r.doc_id for r in spark.read.parquet(out2).select("doc_id").collect()} == ids
 
 
+def test_lm_model_without_totals_marker_rebuilds(spark, tmp_path):
+    """The LM model is committed only when all three tables carry their
+    `_SUCCESS` marker: a totals table whose job commit never finished is
+    rebuilt, not reused, and the rebuilt model keeps the same docs."""
+    common = "the data pipeline reads the table and writes the table again"
+    rows = [(i, f"{common} in part {i} of the corpus") for i in range(8)]
+    rows.append((100, "zx qv jj wq kx vz bb nn pq rr ss tt"))
+    in_p = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        [(i, t, "en", "s0", len(t)) for i, t in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(in_p)
+    run = lambda tag, **kw: run_curate(  # noqa: E731
+        spark, in_p, str(tmp_path / f"out{tag}"), str(tmp_path / f"lin{tag}"),
+        str(tmp_path / f"met{tag}"), run_id=f"lmc{tag}", buckets=2,
+        lm_max_ce=3.5, **kw)
+    assert run(1)["lm_artifact_reused"] is False
+    model = str(tmp_path / "out1_lm_model")
+    os.remove(f"{model}/tot/_SUCCESS")
+    assert run(2, lm_model_path=model)["lm_artifact_reused"] is False
+    assert os.path.exists(f"{model}/tot/_SUCCESS")
+    kept = lambda tag: {r.doc_id for r in  # noqa: E731
+                        spark.read.parquet(str(tmp_path / f"out{tag}")).collect()}
+    assert kept(2) == kept(1) and 100 not in kept(1)
+
+
 def test_lm_filter_drops_unscorable_tiny_docs(spark, tmp_path_factory):
     """Docs with < 2 tokens have no bigrams, score NULL, and fail the LM
     filter stage (stage 1) rather than slipping through."""

@@ -1,8 +1,9 @@
 """Commit bookkeeping (sinks/ledger.py, sinks/metrics.py): the `_SUCCESS`
-probe holds on URI paths, `local_frame` builds exactly the frame
-`createDataFrame(<python list>)` builds, as one local partition, and the
-rollup state (sinks/rollup_state.py) counts its snapshot without reading
-it back."""
+probe holds on URI paths, the footer proof rejects what does not read
+back as Spark wrote it and launches no Spark job, `local_frame` builds
+exactly the frame `createDataFrame(<python list>)` builds, as one local
+partition, and the rollup state (sinks/rollup_state.py) counts its
+snapshot without reading it back."""
 
 from __future__ import annotations
 
@@ -30,6 +31,106 @@ def test_readable_requires_success_marker_on_uri_paths(spark, tmp_path):
     assert readable(spark, path) is None
     assert readable(spark, uri) is None
     assert readable(spark, str(tmp_path / "missing")) is None
+
+
+def _data_files(path):
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(path)
+                  for f in fs if not f.startswith(("_", ".")))
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_marker_without_data_files_is_not_readable(spark, tmp_path):
+    path = str(tmp_path / "art")
+    spark.range(5).write.parquet(path)
+    for f in _data_files(path):
+        os.remove(f)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert readable(spark, path) is None
+
+
+@pytest.mark.parametrize("damage", ["truncate", "garble"])
+def test_damaged_footer_is_not_readable_and_rebuilds(spark, tmp_path, damage):
+    """The probe parses the footer it opens: a cut-off file or a footer
+    overwritten in place (magic bytes and length intact) is not
+    committed, and the ledger rebuilds the artifact."""
+    from doc_agent_spark.sinks.ledger import Ledger
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    build = lambda: spark.range(6).coalesce(1)  # noqa: E731 — one data file
+    with Ledger(spark, out, lin, "r1", "t", ["a"], None) as ledger:
+        ledger.commit("a", build)
+    (part,) = _data_files(f"{out}/a")
+    size = os.path.getsize(part)
+    with open(part, "r+b") as fh:
+        if damage == "truncate":
+            fh.truncate(size // 2)
+        else:  # ...<footer><4-byte footer length>PAR1
+            fh.seek(size - 8)
+            n = int.from_bytes(fh.read(4), "little")
+            fh.seek(size - 8 - n)
+            fh.write(b"\xff" * n)
+    # the local FileSystem would fail the stale checksum first; drop it so
+    # the footer parser is what rejects the file
+    crc = os.path.join(os.path.dirname(part), "." + os.path.basename(part) + ".crc")
+    os.remove(crc)
+    assert readable(spark, f"{out}/a") is None
+    with Ledger(spark, out, lin, "r1", "t", ["a"], None) as ledger:
+        df = ledger.commit("a", build)
+    assert ledger.reused == {"a": False}
+    assert sorted(r.id for r in df.collect()) == list(range(6))
+
+
+def test_footer_without_spark_schema_is_not_readable(spark, tmp_path):
+    """Every probed artifact is written by Spark; a parquet directory with
+    a `_SUCCESS` marker but no Spark row schema in its footer (here
+    written by pyarrow) is not taken for one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "art"
+    path.mkdir()
+    pq.write_table(pa.table({"id": [1, 2, 3]}), str(path / "part-0.parquet"))
+    (path / "_SUCCESS").touch()
+    assert spark.read.parquet(str(path)).count() == 3
+    assert readable(spark, str(path)) is None
+
+
+def test_uri_artifact_is_reused_without_a_spark_job(spark, tmp_path):
+    path = str(tmp_path / "art")
+    spark.range(7).selectExpr("id", "id % 3 AS cell").write.partitionBy("cell") \
+        .parquet(path)
+    uri = pathlib.Path(path).as_uri()
+    df, n_jobs = _jobs_in_group(spark, "uri-reuse", lambda: readable(spark, uri))
+    assert n_jobs == 0
+    assert df.schema == spark.read.parquet(uri).schema
+    assert df.count() == 7
+
+
+def test_footer_schema_equals_inferred_schema_for_index_artifacts(spark, tmp_path):
+    """Reading a reused artifact with its footer schema gives exactly the
+    frame schema inference gives, including the partition column of the
+    cell-partitioned `ivf_cells`."""
+    from jobs.index import ARTIFACTS, run_index
+
+    in_p, out = str(tmp_path / "in.parquet"), str(tmp_path / "idx")
+    spark.createDataFrame(
+        [(i, f"doc {i} spark pipeline token{i % 5}") for i in range(30)],
+        "doc_id long, text string",
+    ).write.parquet(in_p)
+    run_index(spark, in_p, out, str(tmp_path / "lin"), str(tmp_path / "met"),
+              run_id="s1", dim=4, centroid_stride=10, minhash_k=4, bands=2)
+    for name in ARTIFACTS:
+        p = f"{out}/{name}"
+        assert readable(spark, p).schema == spark.read.parquet(p).schema, name
 
 
 # (schema, rows) pairs: the ledger's lineage rows, every stage's metrics

@@ -277,3 +277,27 @@ def test_bpe_tokenizer_pack(spark, tmp_path_factory):
         materialize=True, tokenizer="bpe", bpe_merges=50,
     )
     assert r2["resumed_shards_skipped"] == 4 and r2["slices"] == 0
+
+
+def test_bpe_merges_without_success_marker_retrain(spark, tmp_path):
+    """The merge table is reused only when committed: a table whose job
+    commit never finished (`_SUCCESS` missing) is retrained and
+    recommitted, to the same merges."""
+    in_p = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        [(i, "the data pipeline reads the table " * (1 + i % 3)) for i in range(20)],
+        "doc_id long, text string",
+    ).write.parquet(in_p)
+    mpath = str(tmp_path / "merges")
+    run = lambda tag: run_pack(  # noqa: E731
+        spark, in_p, str(tmp_path / f"out{tag}"), str(tmp_path / "lin"),
+        str(tmp_path / "met"), run_id=f"bm{tag}", budget=32, shards=2,
+        tokenizer="bpe", bpe_merges=20, bpe_path=mpath)
+    merges = lambda: sorted(map(tuple, spark.read.parquet(mpath).collect()))  # noqa: E731
+    first = run(1)
+    want = merges()
+    os.remove(os.path.join(mpath, "_SUCCESS"))
+    again = run(2)
+    assert os.path.exists(os.path.join(mpath, "_SUCCESS"))
+    assert merges() == want
+    assert again["tokens"] == first["tokens"]

@@ -82,10 +82,10 @@ def _rows(spark, path):
 
 def test_fully_resumed_stage_reads_only_lineage(spark, corpus, cold, tmp_path):
     """A stage whose every bucket/shard is in lineage launches only the
-    input schema probe, the lineage read and the metrics append — never
-    a job over the input rows (running the full path over the empty
-    remainder takes 7-8 jobs). A bucket missing from lineage still takes
-    the full path and rebuilds exactly the cold output."""
+    lineage read and the metrics append — it never reads its input, not
+    even its schema (running the full path over the empty remainder
+    takes 7-8 jobs). A bucket missing from lineage still takes the full
+    path and rebuilds exactly the cold output."""
     import shutil
 
     from jobs.curate import run_curate
@@ -108,7 +108,7 @@ def test_fully_resumed_stage_reads_only_lineage(spark, corpus, cold, tmp_path):
     }
     for name, (run, skipped, units) in stages.items():
         st, n_jobs = _jobs_in_group(spark, f"resume-{name}", run)
-        assert n_jobs <= 3, (name, n_jobs)
+        assert n_jobs <= 2, (name, n_jobs)
         assert st[skipped] == units
         # a full resume still reports zero counts and appends one zero metrics row
         assert all(v in (0, None) for k, v in st.items() if k not in (skipped, "wall_ms"))
@@ -131,6 +131,32 @@ def test_fully_resumed_stage_reads_only_lineage(spark, corpus, cold, tmp_path):
     assert st["resumed_buckets_skipped"] == 3
     assert st["docs_processed"] == n_docs
     assert _rows(spark, out) == _rows(spark, f"{wd}/extracted")
+
+
+def test_fully_resumed_pipeline_job_inventory(spark, corpus, cold, monkeypatch):
+    """A whole resumed pipeline leg: extract, curate and pack read only
+    their lineage and append a metrics row, the bridge's commit proof is
+    driver-side (no job), and index collects its lineage once and appends
+    its metrics row: 10 jobs at most."""
+    import jobs.pipeline as jp
+
+    wd, _ = cold
+    n_jobs = {}
+    for attr, stage in (("run_extract", "extract"), ("build_documents", "bridge"),
+                        ("run_curate", "curate"), ("run_pack", "pack"),
+                        ("run_index", "index")):
+        def counted(*a, _fn=getattr(jp, attr), _stage=stage, **k):
+            out, n_jobs[_stage] = _jobs_in_group(
+                spark, f"pipeline-resume-{_stage}", lambda: _fn(*a, **k))
+            return out
+        monkeypatch.setattr(jp, attr, counted)
+    stats = run_pipeline(spark, corpus, wd, "p1", buckets=4, shards=2)
+    assert stats["bridge"]["resumed"] is True
+    assert stats["index"]["artifacts_reused"] == 9
+    assert n_jobs["bridge"] == 0, n_jobs
+    assert n_jobs["index"] <= 3, n_jobs
+    assert all(n_jobs[s] <= 2 for s in ("extract", "curate", "pack")), n_jobs
+    assert sum(n_jobs.values()) <= 10, n_jobs
 
 
 def test_pipeline_jsonl_ingest_with_quarantine(spark, tmp_path_factory):
