@@ -13,17 +13,18 @@ unchanged — so the cache key is
            + engine version + EMBEDDER_VERSION)
 
 where the input fingerprint is the sorted (relative-path, size, mtime_ns)
-listing of the parquet path — the cheap snapshot proxy: any rewrite,
-compaction, or append changes it, and reading zero data bytes keeps cache
-lookups O(#files). Param canonicalization applies the operation's declared
-defaults first, so `{"limit": 10}` and `{}` (default limit 10) hit the same
-entry.
+listing of the parquet path (a plain path or a ``file:`` URI) — the cheap
+snapshot proxy: any rewrite, compaction, or append changes it, and reading
+zero data bytes keeps cache lookups O(#files). Param canonicalization
+applies the operation's declared defaults first, so `{"limit": 10}` and
+`{}` (default limit 10) hit the same entry.
 
-Entries are parquet directories (one file each — results are row_limit-
-bounded and written through ``coalesce(1)`` so the read-back preserves the
-result ORDER, which matters for ranked search output). Store is
-write-to-tmp-then-rename so a crashed write never leaves a half entry that
-lookup would trust. Eviction is oldest-mtime beyond ``max_entries``.
+An entry is the response itself: the row_limit-bounded JSON rows, in result
+order, in one ``<key>.json`` file, so a hit is one ``json.load`` and no
+Spark. A fill writes a per-thread tmp file and ``os.replace``s it onto the
+entry: the replace is atomic, so a lookup sees a whole entry or none, and
+concurrent fills of one key leave one whole entry. Eviction is oldest-mtime
+beyond ``max_entries``.
 
 Hit/miss counters ride in each response's ``cache`` debug struct
 (serve.py), the observability the roadmap item asks for.
@@ -36,27 +37,32 @@ import json
 import os
 import shutil
 import threading
+import time
+import urllib.parse
 
 from . import __version__
 from .functions import embedder
 
 
-def input_fingerprint(path: str) -> str:
+def input_fingerprint(path: str) -> str | None:
     """Snapshot fingerprint of an input path: sha256 over the sorted
-    (relative file path, size, mtime_ns) listing. Missing paths fingerprint
-    distinctly (the operation will fail the same way either run)."""
-    if not os.path.exists(path):
-        return "missing:" + path
+    (relative file path, size, mtime_ns) listing. None when the snapshot
+    cannot be listed locally (a URI scheme other than ``file:``, or a
+    missing path)."""
+    url = urllib.parse.urlparse(path)
+    local = urllib.parse.unquote(url.path) if url.scheme else path
+    if url.scheme not in ("", "file") or not os.path.exists(local):
+        return None
     entries = []
-    if os.path.isfile(path):
-        st = os.stat(path)
-        entries.append((os.path.basename(path), st.st_size, st.st_mtime_ns))
+    if os.path.isfile(local):
+        st = os.stat(local)
+        entries.append((os.path.basename(local), st.st_size, st.st_mtime_ns))
     else:
-        for root, _dirs, files in os.walk(path):
+        for root, _dirs, files in os.walk(local):
             for f in files:
                 p = os.path.join(root, f)
                 st = os.stat(p)
-                entries.append((os.path.relpath(p, path), st.st_size,
+                entries.append((os.path.relpath(p, local), st.st_size,
                                 st.st_mtime_ns))
         entries.sort()
     return hashlib.sha256(
@@ -64,19 +70,29 @@ def input_fingerprint(path: str) -> str:
     ).hexdigest()
 
 
+def _remove(p: str) -> None:
+    """Deletes a file, or a directory: an entry of the pre-JSON parquet
+    layout, which no lookup matches and only eviction reclaims."""
+    try:
+        if os.path.isdir(p):
+            shutil.rmtree(p)
+        else:
+            os.remove(p)
+    except OSError:       # removed by a concurrent process
+        pass
+
+
 class ResultCache:
-    """Parquet-backed deterministic result cache for the serve layer."""
+    """Deterministic result cache for the serve layer: one JSON file of
+    response rows per key."""
 
     def __init__(self, cache_dir: str, max_entries: int = 256):
         self.dir = cache_dir
         self.max_entries = max_entries
         self.hits = 0
         self.misses = 0
-        # serve --port is a ThreadingHTTPServer: store/evict for the same
-        # key can race across request threads. One lock serializes the
-        # commit/evict window (the Spark write itself runs outside it);
-        # cross-PROCESS writers still converge because every fill writes
-        # the same deterministic bytes and tmp names are per-thread.
+        # serve --port is a ThreadingHTTPServer: request threads share the
+        # counters and the evict pass
         self._lock = threading.Lock()
         os.makedirs(cache_dir, exist_ok=True)
 
@@ -93,68 +109,55 @@ class ResultCache:
         return hashlib.sha256(blob.encode()).hexdigest()[:32]
 
     def path(self, key: str) -> str:
-        return os.path.join(self.dir, key)
+        return os.path.join(self.dir, key + ".json")
 
-    def lookup(self, spark, key: str):
-        """Cached result DataFrame, or None. The caller reports the
-        request's actual outcome through :meth:`stats`."""
-        p = self.path(key)
-        return spark.read.parquet(p) if os.path.isdir(p) else None
+    def lookup(self, key: str) -> list | None:
+        """The cached rows, or None (a miss) when the entry is missing,
+        evicted, truncated or garbled. The caller reports the request's
+        outcome through :meth:`stats`."""
+        try:
+            with open(self.path(key), encoding="utf-8") as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            return None
+        return rows if isinstance(rows, list) else None
 
-    def store(self, df, row_limit: int, key: str):
-        """Materialize the (bounded) result under the key and return the
-        read-back frame. coalesce(1) keeps one file so row order survives
-        the round-trip; tmp-then-rename keeps half-written entries
-        invisible to lookup."""
-        # per-thread tmp name: two concurrent fills of the SAME key must
-        # not share a staging dir, or one thread renames the other's
-        # half-overwritten directory into place (a permanently poisoned
-        # entry — review finding r5)
-        tmp = self.path(key) + f".tmp-{os.getpid()}-{threading.get_ident()}"
-        df.limit(row_limit).coalesce(1).write.mode("overwrite").parquet(tmp)
-        final = self.path(key)
+    def store(self, key: str, rows: list) -> None:
+        """Makes ``rows`` the entry of ``key``. The per-thread tmp name
+        keeps concurrent fills of one key apart until their atomic
+        replace; when the fill fails the rows are served uncached."""
+        tmp = os.path.join(
+            self.dir, f"{key}.tmp-{os.getpid()}-{threading.get_ident()}")
+        try:
+            with open(tmp, "w", encoding="utf-8") as f:
+                json.dump(rows, f, separators=(",", ":"))
+            os.replace(tmp, self.path(key))
+        except OSError:
+            _remove(tmp)
+            return
         with self._lock:
-            if os.path.isdir(final):    # concurrent fill: last writer wins
-                shutil.rmtree(final)
-            try:
-                os.rename(tmp, final)
-            except OSError:
-                # another PROCESS re-created the entry between the rmtree
-                # and the rename: serve this fill's result uncached
-                shutil.rmtree(tmp, ignore_errors=True)
-                return df
             self._evict()
-        return df.sparkSession.read.parquet(final)
 
     def _evict(self) -> None:
         """Caller holds self._lock. Drops oldest entries beyond the cap and
-        sweeps leaked staging dirs from crashed fills."""
-        def mtime(p):
+        sweeps tmp files leaked by crashed fills."""
+        entries, now_ns = [], time.time_ns()
+        for name in os.listdir(self.dir):
+            p = os.path.join(self.dir, name)
             try:
-                return os.stat(p).st_mtime_ns
-            except OSError:       # deleted by a concurrent process: ignore
-                return 0
-        entries, now_ns = [], None
-        for d in os.listdir(self.dir):
-            p = os.path.join(self.dir, d)
-            if ".tmp-" in d:
-                # leaked staging dir from a crashed fill: sweep once it is
-                # clearly abandoned (no growing write renames it anymore)
-                import time
-
-                if now_ns is None:
-                    now_ns = time.time_ns()
-                if now_ns - mtime(p) > 3600 * 1_000_000_000:
-                    shutil.rmtree(p, ignore_errors=True)
+                mtime = os.stat(p).st_mtime_ns
+            except OSError:       # removed by a concurrent process
                 continue
-            entries.append(p)
-        if len(entries) <= self.max_entries:
-            return
-        entries.sort(key=mtime)
-        for p in entries[: len(entries) - self.max_entries]:
-            shutil.rmtree(p, ignore_errors=True)
+            if ".tmp-" not in name:
+                entries.append((mtime, p))
+            elif now_ns - mtime > 3600 * 1_000_000_000:
+                # a live fill replaces its tmp file within its request
+                _remove(p)
+        entries.sort()
+        for _, p in entries[: max(0, len(entries) - self.max_entries)]:
+            _remove(p)
 
-    def stats(self, hit: bool, key: str) -> dict:
+    def stats(self, hit: bool, key: str | None) -> dict:
         """Counts one request's outcome; returns its cache debug struct."""
         with self._lock:        # request threads share the counters
             if hit:

@@ -35,6 +35,7 @@ import json
 import sys
 
 from . import api
+from . import cache as cache_mod
 
 
 def _op_schemas() -> list[dict]:
@@ -50,40 +51,31 @@ def _op_schemas() -> list[dict]:
 
 
 def _run_op(spark, op: str, params: dict, row_limit: int, cache=None):
-    """Execute an operation; returns (rows, cache_debug). With a
-    ResultCache configured, deterministic results round-trip through the
-    parquet-backed cache keyed on (op, defaults-canonicalized params,
-    row_limit, input snapshot fingerprints) — a changed input file listing
-    changes the key, which IS the invalidation."""
-    if cache is None:
-        df = api.execute(spark, op, **params)
-        rows = [json.loads(s) for s in df.limit(row_limit).toJSON().collect()]
-        return rows, None
-    from . import cache as cache_mod
-
-    spec = api.OPERATIONS[op]
-    canon = {**spec.defaults, **params}
-    fps = {
-        k: cache_mod.input_fingerprint(v)
-        for k, v in canon.items()
-        if k.endswith("_path") and isinstance(v, str) and v
-    }
-    key = cache.key(op, canon, row_limit, fps)
-    rows = None
-    try:
-        df = cache.lookup(spark, key)
-        if df is not None:
-            rows = [json.loads(x) for x in df.limit(row_limit).toJSON().collect()]
-    except Exception:
-        # entry evicted/corrupted between lookup and read (concurrent
-        # --port traffic): recompute rather than surface a 500
-        pass
+    """Execute an operation; returns (rows, cache_debug): the rows of one
+    collect of the row_limit-bounded result. With a ResultCache they are
+    the entry of (op, defaults-canonicalized params, row_limit, input
+    snapshot fingerprints): a hit reads them without Spark, a miss stores
+    them. A changed input listing changes the key, which IS the
+    invalidation; an input with no local listing runs uncached."""
+    key = rows = None
+    if cache is not None:
+        canon = {**api.OPERATIONS[op].defaults, **params}
+        fps = {
+            k: cache_mod.input_fingerprint(v)
+            for k, v in canon.items()
+            if k.endswith("_path") and isinstance(v, str) and v
+        }
+        if None not in fps.values():
+            key = cache.key(op, canon, row_limit, fps)
+            rows = cache.lookup(key)
     hit = rows is not None
     if not hit:
-        df = cache.store(api.execute(spark, op, **params), row_limit, key)
-        rows = [json.loads(x) for x in df.limit(row_limit).toJSON().collect()]
-    # counted here, from the outcome: a lookup whose read failed is a miss
-    return rows, cache.stats(hit, key)
+        df = api.execute(spark, op, **params)
+        rows = [json.loads(s) for s in df.limit(row_limit).toJSON().collect()]
+        if key is not None:
+            cache.store(key, rows)
+    # counted here, from the outcome: an unreadable entry is a miss
+    return rows, cache.stats(hit, key) if cache is not None else None
 
 
 def _serve_stdio(spark, inp, out, cache=None) -> None:
@@ -326,9 +318,7 @@ def main(argv: list[str] | None = None) -> int:
 
     cache = None
     if cfg["cache_dir"]:
-        from .cache import ResultCache
-
-        cache = ResultCache(cfg["cache_dir"])
+        cache = cache_mod.ResultCache(cfg["cache_dir"])
 
     spark = get_spark(app="doc-agent-serve", master=cfg["master"])
     try:
@@ -357,8 +347,8 @@ def main(argv: list[str] | None = None) -> int:
             if v is not None
         }
         if args.output:
-            # full-result sink: the cache stores row_limit-bounded rows, so
-            # it cannot stand in for a complete parquet export
+            # full-result sink: a cache entry is the row_limit-bounded JSON
+            # response, so it cannot stand in for a complete parquet export
             df = api.execute(spark, args.operation, **params)
             df.write.mode("overwrite").parquet(args.output)
             print(json.dumps({"ok": True, "output": args.output}))

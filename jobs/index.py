@@ -100,8 +100,8 @@ def run_index(
         "input": input_path, "dim": dim, "centroid_stride": centroid_stride,
         "minhash_k": minhash_k, "bands": bands,
         "embedder_version": embedder.EMBEDDER_VERSION,
-        "input_fp": (input_fingerprint(input_path) if "/" in input_path
-                     else "table:" + input_path),
+        "input_fp": ((input_fingerprint(input_path) or "missing:" + input_path)
+                     if "/" in input_path else "table:" + input_path),
     }, rebuild_stale) as ledger:
         emb = ledger.commit(
             "embeddings",

@@ -294,57 +294,244 @@ def docs_path(spark, tmp_path_factory):
 SEARCH = {"query": "spark join shuffle", "limit": 3}
 
 
-def test_cache_entry_lost_after_lookup_counts_a_miss(spark, docs_path, tmp_path,
-                                                    monkeypatch):
-    """An entry deleted between lookup and read is recomputed, and the
-    counters record that request as a miss, never as a hit."""
-    import shutil
-
+def _filled_cache(spark, docs_path, cache_dir):
+    """(params, uncached rows, path of the cache entry holding them)."""
     from doc_agent_spark import serve
     from doc_agent_spark.cache import ResultCache
 
     params = {**SEARCH, "input_path": docs_path}
     want, _ = serve._run_op(spark, "search_documents", params, 3)
-    serve._run_op(spark, "search_documents", params, 3,
-                  ResultCache(str(tmp_path / "cache")))        # fill the entry
+    cache = ResultCache(cache_dir)
+    _, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    return params, want, cache.path(dbg["key"])
+
+
+def test_cache_entry_lost_after_lookup_counts_a_miss(spark, docs_path, tmp_path,
+                                                    monkeypatch):
+    """An entry evicted between the key and its read is recomputed, and the
+    counters record that request as a miss, never as a hit."""
+    from doc_agent_spark import serve
+    from doc_agent_spark.cache import ResultCache
+
+    params, want, entry = _filled_cache(spark, docs_path,
+                                        str(tmp_path / "cache"))
     cache = ResultCache(str(tmp_path / "cache"))
     lookup = cache.lookup
 
-    def lookup_then_evict(spark_, key):
-        df = lookup(spark_, key)
-        shutil.rmtree(cache.path(key))      # a concurrent eviction
-        return df
+    def evict_then_lookup(key):
+        os.remove(cache.path(key))          # a concurrent eviction
+        return lookup(key)
 
-    monkeypatch.setattr(cache, "lookup", lookup_then_evict)
+    monkeypatch.setattr(cache, "lookup", evict_then_lookup)
     rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
     assert rows == want and len(rows) == 3
     assert dbg["hit"] is False
     assert (cache.hits, cache.misses) == (0, 1)
+    with open(entry) as f:                  # the miss filled it again
+        assert json.load(f) == want
 
 
 def test_cache_store_rename_collision_serves_uncached(spark, docs_path, tmp_path,
                                                       monkeypatch):
-    """Another process re-creating the entry between store's rmtree and its
-    rename must not fail the request: the computed rows are served
-    uncached and the staging dir is cleaned up."""
+    """Another process's fill landing on the entry between this fill's write
+    and its replace never fails the request: the replace wins atomically,
+    the entry holds one whole response and no staging file is left."""
     from doc_agent_spark import cache as cache_mod
     from doc_agent_spark import serve
 
     params = {**SEARCH, "input_path": docs_path}
     want, _ = serve._run_op(spark, "search_documents", params, 3)
     cache = cache_mod.ResultCache(str(tmp_path / "cache"))
-    rename = os.rename
+    replace = os.replace
 
     def collide(src, dst):
-        os.makedirs(dst)                    # the other process's fill lands
-        open(os.path.join(dst, "part-other"), "w").close()
-        rename(src, dst)                    # ENOTEMPTY
+        with open(dst, "w") as f:           # the other process's fill lands
+            json.dump(want, f)
+        replace(src, dst)
 
-    monkeypatch.setattr(cache_mod.os, "rename", collide)
+    monkeypatch.setattr(cache_mod.os, "replace", collide)
     rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
     assert rows == want and len(rows) == 3
     assert dbg["hit"] is False
-    assert not [d for d in os.listdir(cache.dir) if ".tmp-" in d]
+    assert os.listdir(cache.dir) == [dbg["key"] + ".json"]
+    assert cache.lookup(dbg["key"]) == want
+
+
+def test_cache_concurrent_fills_of_one_key_leave_one_entry(spark, docs_path,
+                                                           tmp_path,
+                                                           monkeypatch):
+    """Two request threads miss the same key and fill it at once: both get
+    the uncached rows, one whole entry remains and no tmp file is left."""
+    import threading
+
+    from doc_agent_spark import cache as cache_mod
+    from doc_agent_spark import serve
+
+    params = {**SEARCH, "input_path": docs_path}
+    want, _ = serve._run_op(spark, "search_documents", params, 3)
+    cache = cache_mod.ResultCache(str(tmp_path / "cache"))
+    both_written = threading.Barrier(2, timeout=120)
+    replace = os.replace
+
+    def replace_together(src, dst):
+        both_written.wait()                 # both tmp files exist now
+        replace(src, dst)
+
+    monkeypatch.setattr(cache_mod.os, "replace", replace_together)
+    out = [None, None]
+
+    def request(i):
+        out[i] = serve._run_op(spark, "search_documents", params, 3, cache)
+
+    threads = [threading.Thread(target=request, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert [rows for rows, _ in out] == [want, want]
+    assert [dbg["hit"] for _, dbg in out] == [False, False]
+    assert (cache.hits, cache.misses) == (0, 2)
+    key = out[0][1]["key"]
+    assert os.listdir(cache.dir) == [key + ".json"]
+    assert cache.lookup(key) == want
+
+
+@pytest.mark.parametrize("damage", ["truncated", "garbled", "not_a_list"])
+def test_cache_damaged_entry_is_a_miss_and_refilled(spark, docs_path,
+                                                    tmp_path, damage):
+    """An entry that does not load as a list of rows is a miss: the request
+    recomputes the uncached rows (it never fails) and rewrites the entry."""
+    from doc_agent_spark import serve
+    from doc_agent_spark.cache import ResultCache
+
+    params, want, entry = _filled_cache(spark, docs_path,
+                                        str(tmp_path / "cache"))
+    with open(entry, "rb") as f:
+        good = f.read()
+    bad = {"truncated": good[: len(good) // 2],
+           "garbled": b"\xff\xfe\x00[{garbage",
+           "not_a_list": b'{"rows": []}'}[damage]
+    with open(entry, "wb") as f:
+        f.write(bad)
+    cache = ResultCache(str(tmp_path / "cache"))
+    rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    assert rows == want and dbg["hit"] is False
+    with open(entry, "rb") as f:
+        assert f.read() == good
+    rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    assert rows == want and dbg["hit"] is True
+
+
+def test_cache_failed_replace_serves_uncached(spark, docs_path, tmp_path,
+                                              monkeypatch):
+    """A fill whose replace fails returns the uncached rows, leaves no entry
+    and removes its tmp file."""
+    from doc_agent_spark import cache as cache_mod
+    from doc_agent_spark import serve
+
+    params = {**SEARCH, "input_path": docs_path}
+    want, _ = serve._run_op(spark, "search_documents", params, 3)
+    cache = cache_mod.ResultCache(str(tmp_path / "cache"))
+
+    def fail(src, dst):
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(cache_mod.os, "replace", fail)
+    rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    assert rows == want and dbg["hit"] is False
+    assert os.listdir(cache.dir) == []
+
+
+def test_cache_evicts_old_layout_directory_entries(tmp_path):
+    """A cache dir filled by the parquet-entry layout holds ``<key>/``
+    directories that no lookup matches: eviction still removes them."""
+    from doc_agent_spark.cache import ResultCache
+
+    cache = ResultCache(str(tmp_path / "cache"), max_entries=1)
+    old = os.path.join(cache.dir, "0" * 32)
+    os.makedirs(old)
+    open(os.path.join(old, "part-00000.parquet"), "w").close()
+    os.utime(old, (1, 1))
+    rows = [{"doc_id": 1}]
+    cache.store("a" * 32, rows)
+    cache.store("b" * 32, rows)
+    assert os.listdir(cache.dir) == ["b" * 32 + ".json"]
+    assert cache.lookup("b" * 32) == rows and cache.lookup("a" * 32) is None
+
+
+def test_cache_hit_runs_no_spark_job_and_miss_runs_the_uncached_jobs(
+        spark, docs_path, tmp_path):
+    """A hit launches 0 Spark jobs; a miss launches as many as the uncached
+    path."""
+    from doc_agent_spark import serve
+    from doc_agent_spark.cache import ResultCache
+
+    sc = spark.sparkContext
+    params = {**SEARCH, "input_path": docs_path}
+    cache = ResultCache(str(tmp_path / "cache"))
+    out = {}
+    for group, c in (("uncached", None), ("miss", cache), ("hit", cache)):
+        sc.setJobGroup(group, group)
+        try:
+            out[group] = serve._run_op(spark, "search_documents", params, 3, c)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = {g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in out}
+    assert out["miss"][1]["hit"] is False and out["hit"][1]["hit"] is True
+    assert out["uncached"][0] == out["miss"][0] == out["hit"][0]
+    assert jobs["hit"] == 0
+    assert jobs["miss"] == jobs["uncached"] > 0
+
+
+def test_cache_sees_rewrite_of_file_uri_input(spark, tmp_path):
+    """A ``file://`` input is fingerprinted by its local listing: rewriting
+    it changes the key, so the next request returns the new rows."""
+    from doc_agent_spark import serve
+    from doc_agent_spark.cache import ResultCache
+
+    local = str(tmp_path / "docs.parquet")
+    schema = "doc_id long, text string, lang string, source string"
+
+    def write(offset):
+        spark.createDataFrame(
+            [(offset + i, f"spark join plan {i}", "en", "digital")
+             for i in range(10)], schema,
+        ).write.mode("overwrite").parquet(local)
+
+    params = {**SEARCH, "input_path": "file://" + local}
+    cache = ResultCache(str(tmp_path / "cache"))
+    write(0)
+    first, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    assert dbg["hit"] is False and dbg["key"] is not None
+    write(100)
+    fresh, _ = serve._run_op(spark, "search_documents", params, 3)
+    assert fresh != first
+    rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+    assert rows == fresh and dbg["hit"] is False
+
+
+def test_cache_runs_unlistable_inputs_uncached(spark, docs_path, tmp_path,
+                                               monkeypatch):
+    """An input whose snapshot cannot be listed locally (another URI
+    scheme, a missing path) has no fingerprint: the request runs uncached,
+    counts a miss and stores nothing."""
+    from doc_agent_spark import cache as cache_mod
+    from doc_agent_spark import serve
+
+    assert cache_mod.input_fingerprint("s3a://bucket/docs.parquet") is None
+    assert cache_mod.input_fingerprint(str(tmp_path / "missing")) is None
+    assert (cache_mod.input_fingerprint("file://" + docs_path)
+            == cache_mod.input_fingerprint(docs_path) is not None)
+    params = {**SEARCH, "input_path": docs_path}
+    want, _ = serve._run_op(spark, "search_documents", params, 3)
+    cache = cache_mod.ResultCache(str(tmp_path / "cache"))
+    monkeypatch.setattr(cache_mod, "input_fingerprint", lambda p: None)
+    for n in (1, 2):
+        rows, dbg = serve._run_op(spark, "search_documents", params, 3, cache)
+        assert rows == want
+        assert dbg == {"hit": False, "key": None, "hits": 0, "misses": n}
+    assert os.listdir(cache.dir) == []
 
 
 def test_cache_key_folds_in_engine_and_embedder_versions(tmp_path, monkeypatch):
