@@ -179,5 +179,30 @@ def bloom_anti_join(big: DataFrame, keys: DataFrame, key_col: str,
     definite_keep = flagged.filter(~F.col("_rtf_maybe")).drop("_rtf_maybe")
     maybe = flagged.filter(F.col("_rtf_maybe")).drop("_rtf_maybe")
     cleared = maybe.join(keys.select(key_col), key_col, "left_anti")
-    # left_anti preserves the left schema; realign for the union
-    return definite_keep.unionByName(cleared.select(*definite_keep.columns))
+    # a USING left_anti puts the key column first: align the keep slice
+    # to it, so both paths have the plain anti join's column order
+    return definite_keep.select(*cleared.columns).unionByName(cleared)
+
+
+def drop_list_anti_join(big: DataFrame, keys: DataFrame, key_col: str,
+                        n_keys: int, bloom_min: int) -> DataFrame:
+    """``big LEFT ANTI JOIN keys`` on ``key_col``, switching to
+    ``bloom_anti_join`` once the key list (``n_keys`` rows, an exact count
+    the caller already has) is big enough that the exact join's shuffle
+    dominates.
+
+    Below ``bloom_min`` keys the list is comfortably AQE-broadcastable and
+    the plain left-anti is optimal (no broadcast hint: a drop list scales
+    with near-dup mass, not with a model size — AQE picks the join). Above
+    it — near-dup drop lists are 30-50 % of a web crawl — the Bloom split
+    lets every definite-keep row bypass the join with zero shuffle; the
+    filter is sized to ~10 bits/key (~2 % FP), a power of two in
+    [2^14, 2^30] bits (2^30 is a ~130 MB packed word table). Past the cap
+    the bits/key ratio degrades; below 4 bits/key nearly every row would
+    be flagged maybe, so the plain join runs instead of probes that prune
+    nothing. Every path is row-identical (no false negatives)."""
+    if n_keys >= bloom_min:
+        m_bits = min(1 << 30, max(1 << 14, 1 << (10 * n_keys).bit_length()))
+        if m_bits >= 4 * n_keys:
+            return bloom_anti_join(big, keys, key_col, m_bits=m_bits)
+    return big.join(keys, key_col, "left_anti")

@@ -10,15 +10,29 @@ Every knob here is chosen for the big case and merely harmless locally:
 - Arrow enabled with a bounded batch size: extraction UDFs carry full page
   text; 10k-row batches of 100 KB docs would be ~1 GB per batch. 2048 keeps
   peak executor memory flat regardless of document size distribution.
-- shuffle partitions default to max(cores*4, 64) locally; on a real cluster
-  AQE coalesces from a deliberately high initial number.
+- the master defaults to local[$SPARK_GRAFT_CPUS] (else one slot per CPU
+  this process may run on) unless a launcher set one; shuffle partitions
+  default to max(cores*2, 16), and AQE coalesces from there.
 """
 
 from __future__ import annotations
 
 import os
+import shlex
 
 from pyspark.sql import SparkSession
+
+
+def _launcher_master() -> bool:
+    """True when a launcher chose the master: spark-submit started the JVM
+    (it exports PYSPARK_GATEWAY_PORT, the sign ``pyspark/java_gateway.py``
+    reads, and always sets ``spark.master``), or ``PYSPARK_SUBMIT_ARGS``,
+    which the gateway hands to spark-submit, names one. A builder
+    ``.master()`` would override either."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        return True
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    return any(a == "--master" or a.startswith("--master=") for a in args)
 
 
 def get_spark(
@@ -36,16 +50,17 @@ def get_spark(
     2 cores per task keeps runnable processes == cores. Cluster equivalent:
     size executor cores so concurrent-python-tasks × 2 ≤ cores per executor.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    if master is None and not _launcher_master():
+        master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if not master.startswith("local[") else int(
-            master.removeprefix("local[").removesuffix("]").replace("*", str(os.cpu_count() or 8))
-        )
+        n = cpus
+        if master and master.startswith("local["):
+            n = int(master.removeprefix("local[").removesuffix("]")
+                    .replace("*", str(len(os.sched_getaffinity(0)))))
         shuffle_partitions = max(n * 2, 16)
     b = (
         SparkSession.builder.appName(app)
-        .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -58,6 +73,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master is not None:
+        b = b.master(master)
     if udf_heavy:
         b = b.config("spark.task.cpus", "2")
     for k, v in (extra or {}).items():

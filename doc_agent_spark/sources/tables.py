@@ -1,6 +1,8 @@
 """Table loaders.
 
 ``load(spark, sf_dir, name)`` reads one driver-testdata parquet table.
+``read_input(spark, name)`` reads a job's input: a parquet path, or a
+catalog table when the name holds no "/".
 ``spans_from_documents`` derives the interleaved-span input shape
 (BASELINE.json input_hint) deterministically from the driver's flat
 ``documents`` table — pure expressions, DuckDB-mirrorable, so the derived
@@ -22,6 +24,10 @@ TABLES = (
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def read_input(spark: SparkSession, name: str) -> DataFrame:
+    return spark.read.parquet(name) if "/" in name else spark.read.table(name)
 
 
 def spans_from_documents(docs: DataFrame) -> DataFrame:

@@ -351,34 +351,6 @@ def _load_or_build_lm(spark, docs, path: str, min_count: int):
     ), False
 
 
-def _apply_drop_list(docs, drops, n_drops: int, bloom_min: int):
-    """Anti-join ``docs`` against a persisted drop list, switching to the
-    Bloom anti-join reduction (plans/runtime_filter.bloom_anti_join) once
-    the list is big enough that the exact join's shuffle dominates.
-
-    Below ``bloom_min`` rows the drop list is comfortably AQE-broadcastable
-    and the plain left-anti is optimal. Above it — near-dup drop lists
-    scale with the corpus's duplicate mass, 30-50 % of a web crawl — the
-    Bloom split lets every definite-keep row (the majority) bypass the
-    join with zero shuffle; the filter is sized to ~10 bits/key (~2 % FP)
-    from the already-computed exact count, capped at 2^30 bits (a ~130 MB
-    packed word table — big-broadcast territory). Past the cap the
-    bits/key ratio degrades; below 4 bits/key the filter would flag
-    nearly every row maybe, so the helper falls back to the plain join
-    rather than pay probes for no pruning. Results are row-identical on
-    every path (no false negatives), so the switch is purely physical."""
-    if n_drops < bloom_min:
-        # no broadcast hint: the drop list scales with near-dup mass, not
-        # with a model size — let AQE pick broadcast vs shuffle join
-        return docs.join(drops, "doc_id", "left_anti")
-    m_bits = min(1 << 30, max(1 << 14, 1 << (10 * n_drops).bit_length()))
-    if m_bits < 4 * n_drops:
-        return docs.join(drops, "doc_id", "left_anti")
-    from doc_agent_spark.plans import runtime_filter
-
-    return runtime_filter.bloom_anti_join(docs, drops, "doc_id", m_bits=m_bits)
-
-
 def run_curate(
     spark: SparkSession,
     input_path: str,
@@ -416,13 +388,12 @@ def run_curate(
 
     from doc_agent_spark.functions import redact
     from doc_agent_spark.operators import dedup as dedup_ops
+    from doc_agent_spark.plans.runtime_filter import drop_list_anti_join
     from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
-    docs = functools.cache(
-        lambda: spark.read.parquet(input_path) if "/" in input_path
-        else spark.read.table(input_path)
-    )
+    docs = functools.cache(lambda: read_input(spark, input_path))
     if c4_rules:
         # C4 line/page rules FIRST (Raffel et al. 2020 §2.2): the page flag
         # reads the raw text; the kept text is the line-cleaned form, so
@@ -510,8 +481,8 @@ def run_curate(
         )
         n_fuzzy_dropped = drops.count()
         docs = _then(docs, functools.partial(
-            _apply_drop_list, drops=drops, n_drops=n_fuzzy_dropped,
-            bloom_min=bloom_droplist_min))
+            drop_list_anti_join, keys=drops, key_col="doc_id",
+            n_keys=n_fuzzy_dropped, bloom_min=bloom_droplist_min))
     cap_reused = None
     n_domain_capped = 0
     if domain_cap > 0:
@@ -522,8 +493,8 @@ def run_curate(
         )
         n_domain_capped = cap_drops.count()
         docs = _then(docs, functools.partial(
-            _apply_drop_list, drops=cap_drops, n_drops=n_domain_capped,
-            bloom_min=bloom_droplist_min))
+            drop_list_anti_join, keys=cap_drops, key_col="doc_id",
+            n_keys=n_domain_capped, bloom_min=bloom_droplist_min))
     dsir_reused = None
     n_dsir_kept = 0
     if dsir_keep > 0:

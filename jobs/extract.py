@@ -54,6 +54,7 @@ def run_extract(
     from doc_agent_spark.operators import extractor
     from doc_agent_spark.plans.skew import split_heavy
     from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
     bucket_of = F.pmod(F.hash("doc_id"), F.lit(buckets))
@@ -66,8 +67,7 @@ def run_extract(
     m: dict = {}
     if not set(range(buckets)) <= done:
         # read only here: the read infers the input's schema, a Spark job
-        docs = (spark.read.parquet(input_path) if "/" in input_path
-                else spark.read.table(input_path)).withColumn("bucket", bucket_of)
+        docs = read_input(spark, input_path).withColumn("bucket", bucket_of)
         if done:
             docs = docs.filter(~F.col("bucket").isin(*sorted(done)))
         docs = docs.repartition(max(buckets, spark.sparkContext.defaultParallelism), "bucket")

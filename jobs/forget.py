@@ -34,10 +34,11 @@ influence of dropped docs persists until the next scheduled rebuild
 (documented limitation — same posture as Parquet zone maps after row
 deletion).
 
-Drop-list application mirrors the jobs/curate.py discipline exactly: a
-plain anti join below ``--bloom-min`` (no broadcast hint — AQE decides),
-the Bloom-reduced anti join above it with the filter sized ~10 bits/key
-from the exact count (2^30-bit cap; <4 bits/key falls back to plain).
+Drop-list application is ``plans/runtime_filter.drop_list_anti_join``,
+the policy jobs/curate.py and jobs/frontier.py use too: a plain anti join
+below ``--bloom-min`` (no broadcast hint — AQE decides), the Bloom-reduced
+anti join above it with the filter sized ~10 bits/key from the exact count
+(2^30-bit cap; <4 bits/key falls back to plain).
 Verification semi-joins follow the same small-list-broadcast /
 big-list-AQE switch — a mass deletion never forces a broadcast OOM.
 
@@ -68,20 +69,6 @@ PLAIN_ARTIFACTS = (
 
 def _is_local(path: str) -> bool:
     return "://" not in path
-
-
-def _anti(df: DataFrame, drops: DataFrame, n_drops: int, bloom_min: int) -> DataFrame:
-    """jobs/curate.py _apply_drop_list, keyed on 'id': plain anti below
-    bloom_min (AQE picks the join), Bloom-reduced above it with ~10
-    bits/key from the exact count, plain again below 4 bits/key."""
-    if n_drops < bloom_min:
-        return df.join(drops, "id", "left_anti")
-    m_bits = min(1 << 30, max(1 << 14, 1 << (10 * n_drops).bit_length()))
-    if m_bits < 4 * n_drops:
-        return df.join(drops, "id", "left_anti")
-    from doc_agent_spark.plans import runtime_filter
-
-    return runtime_filter.bloom_anti_join(df, drops, "id", m_bits=m_bits)
 
 
 def _semi(df: DataFrame, drops: DataFrame, n_drops: int, bloom_min: int) -> DataFrame:
@@ -123,6 +110,8 @@ def run_forget(
     drop_df: DataFrame,
     bloom_min: int = 100_000,
 ) -> dict:
+    from doc_agent_spark.plans.runtime_filter import drop_list_anti_join
+
     t0 = time.time()
     drops = drop_df.select(F.col(drop_df.columns[0]).alias("id")).distinct()
     drops = drops.localCheckpoint()  # one pass; reused by every artifact
@@ -136,7 +125,8 @@ def run_forget(
         before = spark.read.parquet(p).count()
         _swap_in(
             spark, p,
-            lambda p=p: _anti(spark.read.parquet(p), drops, n_drops, bloom_min),
+            lambda p=p: drop_list_anti_join(spark.read.parquet(p), drops, "id",
+                                            n_drops, bloom_min),
         )
         after = spark.read.parquet(p)
         removed[name] = before - after.count()
@@ -157,7 +147,7 @@ def run_forget(
     if affected:
         slice_df = cells.filter(F.col("cell").isin(affected)).localCheckpoint()
         before = slice_df.count()
-        kept = _anti(slice_df, drops, n_drops, bloom_min).localCheckpoint()
+        kept = drop_list_anti_join(slice_df, drops, "id", n_drops, bloom_min).localCheckpoint()
         kept_cells = {r["cell"] for r in kept.select("cell").distinct().collect()}
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

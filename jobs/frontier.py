@@ -18,7 +18,7 @@ parquet + _SUCCESS == done, re-run skips, one lineage row per artifact):
                — the in-batch citation count that doubles as priority
   frontier/    (url, host, priority, slot, fetch_offset_s)  NEW urls only
                (anti-joined against --seen; Bloom-reduced past
-               --bloom-min, the jobs/curate.py drop-list shape),
+               --bloom-min: plans/runtime_filter.drop_list_anti_join),
                robots-filtered, politeness-scheduled per host
   blocked/     (url, host)  robots-disallowed discoveries, kept for audit
                (the never-silently-drop contract)
@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 ARTIFACTS = ["discovered", "frontier", "blocked"]
 
 from doc_agent_spark.sinks.ledger import Ledger, readable  # noqa: E402
-from jobs.incremental import _read  # noqa: E402
+from doc_agent_spark.sources.tables import read_input  # noqa: E402
 
 
 def run_frontier(
@@ -85,9 +85,9 @@ def run_frontier(
         "sitemaps": sitemaps_path, "records": records_path,
         "ranks": ranks_path,
     })
-    fetched = _read(spark, fetched_path).select("url", "text")
-    seen = _read(spark, seen_path).select("url")
-    robots = _read(spark, robots_path).select("host", "body")
+    fetched = read_input(spark, fetched_path).select("url", "text")
+    seen = read_input(spark, seen_path).select("url")
+    robots = read_input(spark, robots_path).select("host", "body")
 
     def build_discovered():
         # n_refs = DISTINCT referencing sources (a nav that repeats one
@@ -108,7 +108,7 @@ def run_frontier(
             .select("src", urls.url_canonicalize(F.col("res")).alias("link"))
         )
         if sitemaps_path is not None:
-            sm = frontops.sitemap_locs(_read(spark, sitemaps_path))
+            sm = frontops.sitemap_locs(read_input(spark, sitemaps_path))
             links = links.unionByName(
                 sm.filter(F.col("url").rlike("^https?://")).select(
                     F.lit("sitemap").alias("src"),
@@ -119,7 +119,7 @@ def run_frontier(
             from doc_agent_spark.sources import warc as warcsrc
 
             links = links.unionByName(
-                warcsrc.redirect_edges(_read(spark, records_path)).select(
+                warcsrc.redirect_edges(read_input(spark, records_path)).select(
                     F.col("src"), F.col("dst").alias("link")
                 )
             )
@@ -131,18 +131,6 @@ def run_frontier(
             "n_refs",
         )
 
-    def build_new():
-        n_seen = seen.count()
-        if n_seen >= bloom_min:
-            # ~10 bits/key, capped at 2^30 (the jobs/curate.py sizing);
-            # under 4 bits/key the FP rate makes the maybe slice ~everything
-            m_bits = min(max(n_seen * 10, 1 << 20), 1 << 30)
-            if m_bits / max(n_seen, 1) >= 4:
-                return runtime_filter.bloom_anti_join(
-                    discovered, seen, "url", m_bits=m_bits
-                )
-        return discovered.join(seen, "url", "left_anti")
-
     # the seen anti-join + robots chain feeds BOTH remaining artifacts:
     # build it once (checkpoint) and only when an artifact actually needs
     # it — a fully-resumed run must pay neither the chain nor seen.count()
@@ -151,7 +139,9 @@ def run_frontier(
     def flagged():
         if not _fl:
             fl = frontops.robots_filter(
-                build_new(), frontops.parse_robots(robots)
+                runtime_filter.drop_list_anti_join(
+                    discovered, seen, "url", seen.count(), bloom_min),
+                frontops.parse_robots(robots)
             )
             _fl.append(fl.localCheckpoint(eager=True))
         return _fl[0]
@@ -174,7 +164,7 @@ def run_frontier(
         # granularity for the crawl prior
         if ranks_path is not None:
             hr = (
-                _read(spark, ranks_path)
+                read_input(spark, ranks_path)
                 .select(urls.url_host(F.col("id")).alias("host"),
                         F.col("rank"))
                 .groupBy("host").agg(F.sum("rank").alias("host_rank"))

@@ -66,12 +66,6 @@ from pyspark.sql import functions as F
 ARTIFACTS = ["pairs_delta", "drop_delta", "bands_delta"]
 
 
-def _read(spark: SparkSession, path: str):
-    return (
-        spark.read.parquet(path) if "/" in path else spark.read.table(path)
-    )
-
-
 def run_incremental(
     spark: SparkSession,
     batch_path: str,
@@ -88,10 +82,11 @@ def run_incremental(
     from doc_agent_spark.operators import dedup
     from doc_agent_spark.sinks.ledger import Ledger
     from doc_agent_spark.sinks.metrics import local_frame
+    from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
-    raw_batch = _read(spark, batch_path).select("doc_id", "text")
-    history = _read(spark, history_path).select("doc_id", "text")
+    raw_batch = read_input(spark, batch_path).select("doc_id", "text")
+    history = read_input(spark, history_path).select("doc_id", "text")
     # Re-crawled ids (batch doc_id already in history) are NOT near-dup
     # work: history is canonical, so the re-fetch is dropped outright
     # (identical text is trivially a dup; changed text is an UPDATE, which

@@ -86,12 +86,10 @@ def run_index(
     from doc_agent_spark.operators import dedup, similarity
     from doc_agent_spark.sinks.ledger import Ledger
     from doc_agent_spark.sinks.metrics import local_frame
+    from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
-    docs = functools.cache(
-        lambda: spark.read.parquet(input_path) if "/" in input_path
-        else spark.read.table(input_path)
-    )
+    docs = functools.cache(lambda: read_input(spark, input_path))
     # every artifact is a function of (input, dim, stride, k, bands) AND of
     # the embedding space + input snapshot (roadmap :349 embeddings
     # versioning): the stamp carries all of them — embedder_version and

@@ -83,6 +83,7 @@ def run_pack(
     from doc_agent_spark.functions import textfns
     from doc_agent_spark.operators import packing, sampling
     from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
     materialize = materialize or shuffle_windows  # order needs the windows
@@ -90,8 +91,7 @@ def run_pack(
     # work that needs its rows: a pending shard, merge training, the
     # shuffle pass — a full resume never touches it
     source = functools.cache(
-        lambda: (spark.read.parquet(input_path) if "/" in input_path
-                 else spark.read.table(input_path))
+        lambda: read_input(spark, input_path)
         .withColumn("shard", packing.shard_of(F.col("doc_id"), shards, seed))
     )
 

@@ -66,12 +66,10 @@ def run_publish(
     from doc_agent_spark.operators import publish
     from doc_agent_spark.operators.packing import shard_of
     from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
-    df = (
-        spark.read.parquet(input_path) if "/" in input_path
-        else spark.read.table(input_path)
-    )
+    df = read_input(spark, input_path)
     cols = columns or sorted(df.columns)
     shards_path = output_path.rstrip("/") + "_shards"
     manifest_path = output_path.rstrip("/") + "_manifest"

@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 from doc_agent_spark.sinks import rollup_state as rs
+from doc_agent_spark.sources.tables import read_input
 
 # re-exported for tests / callers
 LEDGER_SCHEMA = rs.LEDGER_SCHEMA
@@ -71,10 +72,7 @@ def run_rollup(
             "expired_versions": [],
         }
     else:
-        batch = (
-            spark.read.parquet(input_path) if "/" in input_path
-            else spark.read.table(input_path)
-        )
+        batch = read_input(spark, input_path)
         out = rs.apply_batch(spark, batch, state_path, keys, value_col, batch_id, scale)
         version = out["version"]
         out["expired_versions"] = rs.expire_snapshots(state_path, version, retain_last)

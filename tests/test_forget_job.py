@@ -23,9 +23,7 @@ N = 90
 DROPS = [3, 17, 44]
 
 
-@pytest.fixture(scope="module")
-def forgotten(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("forget_job")
+def _index(spark, d) -> str:
     rows = [
         (i, f"document {i} about the data pipeline and the spark engine "
             f"plus filler token{i % 7} repeated token{i % 7}")
@@ -36,6 +34,12 @@ def forgotten(spark, tmp_path_factory):
     df.write.parquet(in_p)
     idx, lin, met = (str(d / x) for x in ("idx", "lineage", "metrics"))
     run_index(spark, in_p, idx, lin, met, run_id="i1", dim=8, centroid_stride=20)
+    return idx
+
+
+@pytest.fixture(scope="module")
+def forgotten(spark, tmp_path_factory):
+    idx = _index(spark, tmp_path_factory.mktemp("forget_job"))
     drop_df = spark.createDataFrame([(i,) for i in DROPS], "id long")
     stats = run_forget(spark, idx, drop_df)
     return stats, idx, drop_df
@@ -55,6 +59,20 @@ def test_drops_vanish_everywhere(spark, forgotten):
     # survivors intact in the row-per-doc artifacts
     for name in ("embeddings", "bm25_docstats", "sq_codes"):
         assert _ids(spark, os.path.join(idx, name)) == set(range(N)) - set(DROPS)
+
+
+def test_bloom_path_matches_plain(spark, forgotten, tmp_path):
+    """bloom_min=1 sends every drop-list anti join through the Bloom
+    reduction: the artifacts equal the plain path's, with zero remnants."""
+    _, plain_idx, drop_df = forgotten
+    idx = _index(spark, tmp_path)
+    stats = run_forget(spark, idx, drop_df, bloom_min=1)
+    assert stats["clean"], stats
+    assert all(v == 0 for v in stats["remnants"].values()), stats["remnants"]
+    for name in list(PLAIN_ARTIFACTS) + ["ivf_cells", "bm25_corpus"]:
+        got, want = (sorted(spark.read.parquet(os.path.join(i, name)).collect(), key=repr)
+                     for i in (idx, plain_idx))
+        assert got == want, name
 
 
 def test_corpus_stats_recomputed(spark, forgotten):

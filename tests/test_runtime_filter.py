@@ -64,6 +64,7 @@ def test_bloom_anti_join_matches_plain_anti(spark):
     big, keys = _fact(spark), _keys(spark)
     plain = big.join(keys, "key", "left_anti")
     bloom = runtime_filter.bloom_anti_join(big, keys, "key")
+    assert bloom.columns == plain.columns
     assert sorted(map(tuple, plain.select(*bloom.columns).collect())) == sorted(
         map(tuple, bloom.collect())
     )
