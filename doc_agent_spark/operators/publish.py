@@ -35,6 +35,10 @@ manifest value-for-value.
 
 from __future__ import annotations
 
+import json
+import os
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -160,27 +164,45 @@ def verify_shards(
     )
 
 
-def check_or_write_config(output_path: str, cfg: dict) -> None:
-    """Config identity guard shared by jobs/publish.py and
-    streaming.publish_stream: shards/columns/seed/key define both the
-    doc→shard mapping and the serialized bytes, so batch and stream
-    touching the SAME output under different configs silently produces an
-    unverifiable mix (dynamic overwrite re-shards under a new mapping while
-    the old manifest still describes the old one). First writer records the
-    config beside the output; every later writer — batch or stream — must
-    match or fail fast."""
-    import json
-    import os
+def read_stamp(path: str) -> dict | None:
+    """The config recorded beside ``path``, None when there is none. A
+    legacy ``<path>_params.json`` (curate's old stamp name) is read when
+    no ``_config.json`` exists, so such an artifact keeps its guard."""
+    base = path.rstrip("/")
+    for stamp in (base + "_config.json", base + "_params.json"):
+        if os.path.exists(stamp):
+            with open(stamp) as fh:
+                return json.load(fh)
+    return None
 
-    cfg_path = output_path.rstrip("/") + "_config.json"
-    if os.path.exists(cfg_path):
-        prev = json.load(open(cfg_path))
-        if prev != cfg:
-            raise ValueError(
-                f"publish config mismatch for {output_path}: existing output "
-                f"was written with {prev}, this writer asked for {cfg}; use a "
-                "new output path for a new config"
-            )
-    else:
-        with open(cfg_path, "w") as fh:
+
+def write_stamp(path: str, cfg: dict) -> None:
+    """Record ``cfg`` beside ``path`` through a per-thread tmp file and
+    ``os.replace``: a crash mid-write leaves no truncated stamp."""
+    stamp = path.rstrip("/") + "_config.json"
+    tmp = f"{stamp}.tmp-{os.getpid()}-{threading.get_ident()}"
+    try:
+        with open(tmp, "w") as fh:
             json.dump(cfg, fh)
+        os.replace(tmp, stamp)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def check_or_write_config(output_path: str, cfg: dict) -> None:
+    """Config identity guard of every stamped output, first shared by
+    jobs/publish.py and streaming.publish_stream: shards/columns/seed/key
+    define both the doc→shard mapping and the serialized bytes, so batch
+    and stream touching the SAME output under different configs silently
+    produces an unverifiable mix. First writer records the config beside
+    the output; every later writer must match or fail fast."""
+    prev = read_stamp(output_path)
+    if prev is None:
+        write_stamp(output_path, cfg)
+    elif prev != cfg:
+        raise ValueError(
+            f"config mismatch for {output_path}: a stale artifact was "
+            f"written with {prev}, this writer asked for {cfg}; use a new "
+            "output path for a new config"
+        )

@@ -1,42 +1,47 @@
-"""Artifact ledger — the one build-or-reuse commit path for the
-artifact-granular jobs (jobs/index.py, jobs/frontier.py,
-jobs/incremental.py) and the one commit-proof probe every job shares.
+"""Artifact commits: the one place that knows how an artifact is
+committed, how its lineage row is shaped and where its config stamp
+lives.
 
+    df, rows, reused = commit(spark, path, build, params={"k": 5})
     with Ledger(spark, out, lineage, run_id, "index", ARTIFACTS, stamp) as ledger:
         emb = ledger.commit("embeddings", lambda: ...)
-        ledger.commit("ivf_cells", lambda: ..., partition_by="cell")
 
-Contract, per artifact ``<out>/<name>`` (partition_id = its ordinal in
-``artifacts``):
+:func:`commit` builds or reuses one artifact (curate's corpus-stat
+artifacts, pack's BPE merges, the pipeline's bridge and ingest outputs,
+frontier's seen set); ``Ledger`` (index, frontier, incremental) commits
+each artifact of one output directory and writes its lineage. Contract:
 
-- **Stamp.** At construction the config stamp beside ``out`` must match
-  ``stamp`` (``None`` = the job keeps no stamp). A stale-only difference
-  (``STALE_KEYS``) wipes and rebuilds under ``rebuild_stale``; any other
-  difference raises "<stage> config mismatch", naming the keys.
 - **Reuse.** An artifact is committed when ``readable`` passes: its
   ``_SUCCESS`` marker is probed through the path's Hadoop FileSystem, then
   one data file's parquet footer is read on the driver through the same
   FileSystem, and the artifact is read back with the Spark schema that
-  footer records — no Spark job, any URI scheme. Its count is the
-  ``docs_out`` of its newest lineage row that postdates the marker (one
-  ``committed_outputs`` collect per job, paid only once something is
-  reused). With no such row it is counted and one lineage row is
-  backfilled (``wall_ms`` 0) — this converges a driver killed between
-  the artifact write and the lineage append.
+  footer records — no Spark job, any URI scheme. A reuse reports no row
+  count (counting is a job).
 - **Build.** The write is a whole-directory static overwrite (forced, so
   the root ``_SUCCESS`` marker exists even when the caller left the
   session in dynamic mode). Its row count is observed on the write
   (``Observation``), and the returned frame reads the artifact back with
   the written schema, so a build launches no inference or count job.
-- **Lineage.** Rows (schema.LINEAGE) are appended in ONE write when the
-  ``with`` block ends, also when a commit raised; they are built on the
-  driver with ``metrics.local_frame``.
+- **Params.** ``params`` is checked against the config stamp beside the
+  artifact (operators/publish.check_or_write_config) before a reuse or a
+  build — a reused artifact with no stamp gets this run's — and recorded
+  after a build; a difference raises "config mismatch".
+- **Ledger stamp.** The stamp beside ``out`` must match ``stamp``
+  (``None`` = no stamp). A stale-only difference (``STALE_KEYS``) wipes
+  and rebuilds under ``rebuild_stale``; any other difference raises
+  "<stage> config mismatch", naming the keys.
+- **Ledger counts and lineage.** Artifact ``<out>/<name>`` is lineage
+  partition ``artifacts.index(name)``. A reused artifact's count is the
+  ``docs_out`` of its newest lineage row that postdates the marker (one
+  ``committed_outputs`` collect per job, paid only once something is
+  reused). With no such row it is counted and one row is backfilled
+  (``wall_ms`` 0) — this converges a driver killed between the artifact
+  write and the lineage append. The rows go to ``metrics.append_lineage``
+  in ONE write when the ``with`` block ends, also when a commit raised.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import shutil
 import time
 from collections.abc import Callable
@@ -45,17 +50,20 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.publish import check_or_write_config
-from ..schema import LINEAGE
-from .metrics import committed_outputs, fs_mtime, fs_parquet_schema, local_frame
+from ..operators.publish import check_or_write_config, read_stamp, write_stamp
+from .metrics import (
+    LINEAGE_UNITS,
+    append_lineage,
+    committed_outputs,
+    fs_mtime,
+    fs_parquet_schema,
+    local_frame,
+)
 
 # Stamp keys that only say the artifacts are OUT OF DATE (a new embedder,
 # a rewritten input snapshot): rebuild_stale may wipe and rebuild. Every
 # other key is the build config itself, which is never wiped.
 STALE_KEYS = ("embedder_version", "input_fp")
-
-# a lineage row before its finished_at, which the append stamps
-_ROW = StructType(LINEAGE.fields[:-1])
 
 
 def _commit_proof(spark: SparkSession, path: str) -> tuple[DataFrame, float] | None:
@@ -99,10 +107,8 @@ def _check_stamp(stage: str, out: str, cfg: dict, rebuild_stale: bool) -> None:
     — the jobs/publish.py contract. A stale-only difference wipes and
     rebuilds under ``rebuild_stale`` (the "re-embed on model update" path);
     a config difference always raises, naming the differing keys."""
-    stamp = out + "_config.json"
-    if os.path.exists(stamp):
-        with open(stamp) as fh:
-            prev = json.load(fh)
+    prev = read_stamp(out)
+    if prev is not None:
         differ = sorted(k for k in prev.keys() | cfg.keys() if prev.get(k) != cfg.get(k))
         config = [k for k in differ if k not in STALE_KEYS]
         if config:
@@ -119,8 +125,50 @@ def _check_stamp(stage: str, out: str, cfg: dict, rebuild_stale: bool) -> None:
                     "pass --rebuild-stale to wipe and rebuild"
                 )
             shutil.rmtree(out, ignore_errors=True)
-            os.remove(stamp)
-    check_or_write_config(out, cfg)
+    if prev != cfg:
+        write_stamp(out, cfg)
+
+
+def _commit(spark: SparkSession, path: str, build: Callable[[], DataFrame],
+            params: dict | None = None, partition_by: str | None = None
+            ) -> tuple[DataFrame, int | None, float | None]:
+    """(the artifact, rows written or None for a reuse, the reused
+    artifact's ``_SUCCESS`` time or None for a build); see :func:`commit`."""
+    proof = _commit_proof(spark, path)
+    if params is not None and (proof is not None or read_stamp(path) is not None):
+        check_or_write_config(path, params)
+    if proof is not None:
+        return proof[0], None, proof[1]
+    df = build()
+
+    def write(observed: DataFrame) -> None:
+        w = observed.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(path)
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf, "static")
+    spark.conf.set(conf, "static")
+    try:
+        rows = write_counted(df, write)
+    finally:
+        spark.conf.set(conf, prev)
+    if params is not None:
+        check_or_write_config(path, params)
+    # the data columns as written; a partition column is appended by
+    # partition discovery with the type a plain read infers for it
+    written = StructType([f for f in df.schema if f.name != partition_by])
+    return spark.read.schema(written).parquet(path), rows, None
+
+
+def commit(spark: SparkSession, path: str, build: Callable[[], DataFrame],
+           params: dict | None = None, partition_by: str | None = None
+           ) -> tuple[DataFrame, int | None, bool]:
+    """(the artifact at ``path``, rows written or None for a reuse,
+    reused); see the module docstring."""
+    df, rows, success_at = _commit(spark, path, build, params, partition_by)
+    return df, rows, success_at is not None
 
 
 class Ledger:
@@ -146,22 +194,17 @@ class Ledger:
 
     def __exit__(self, *exc) -> None:
         if self._rows:
-            local_frame(self.spark, self._rows, _ROW).withColumn(
-                "finished_at", F.current_timestamp()
-            ).write.mode("append").parquet(self.lineage_path)
+            units = local_frame(self.spark, self._rows, LINEAGE_UNITS + ", wall_ms long")
+            append_lineage(units, self.lineage_path, self.run_id, self.stage)
             self._rows = []
-
-    def _row(self, pid: int, rows: int, wall_ms: int) -> None:
-        self._rows.append(
-            (self.run_id, self.stage, pid, "done", rows, rows, 0, 0, wall_ms)
-        )
 
     def commit(self, name: str, build, partition_by: str | None = None) -> DataFrame:
         path, pid = f"{self.out}/{name}", self.artifacts.index(name)
-        proof = _commit_proof(self.spark, path)
-        if proof is not None:
-            existing, success_at = proof
-            self.reused[name] = True
+        t = time.time()
+        df, rows, success_at = _commit(self.spark, path, build, partition_by=partition_by)
+        wall_ms = int((time.time() - t) * 1000)
+        self.reused[name] = success_at is not None
+        if success_at is not None:
             if self._committed is None:
                 self._committed = committed_outputs(
                     self.spark, self.lineage_path, self.run_id, self.stage
@@ -171,29 +214,8 @@ class Ledger:
             # lineage append never landed leaves an older row behind
             if row is not None and row[1] >= success_at:
                 self.counts[name] = row[0]
-            else:
-                self.counts[name] = existing.count()
-                self._row(pid, self.counts[name], 0)
-            return existing
-        t = time.time()
-        df = build()
-
-        def write(observed: DataFrame) -> None:
-            w = observed.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(path)
-
-        conf = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(conf, "static")
-        self.spark.conf.set(conf, "static")
-        try:
-            self.counts[name] = write_counted(df, write)
-        finally:
-            self.spark.conf.set(conf, prev)
-        self.reused[name] = False
-        self._row(pid, self.counts[name], int((time.time() - t) * 1000))
-        # the data columns as written; a partition column is appended by
-        # partition discovery with the type a plain read infers for it
-        written = StructType([f for f in df.schema if f.name != partition_by])
-        return self.spark.read.schema(written).parquet(path)
+                return df
+            rows, wall_ms = df.count(), 0
+        self.counts[name] = rows
+        self._rows.append((pid, rows, rows, 0, 0, wall_ms))
+        return df

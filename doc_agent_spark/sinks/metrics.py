@@ -1,12 +1,13 @@
-"""Per-partition lineage reads (north_star: docs processed, spans emitted,
+"""Per-partition lineage (north_star: docs processed, spans emitted,
 parse failures; SURVEY §4.2.3 checkpoint/resume bookkeeping).
 
-Bucket/shard jobs (extract, curate, pack) append their own lineage rows
-(schema.LINEAGE) after the output write commits, from a separate pruned
-aggregate, and a one-row metrics rollup per stage. Artifact-granular jobs
-(index, frontier, incremental) commit through sinks/ledger.py, which owns
-the artifact-resume contract and their lineage rows. The helpers here are
-the read side: resume = anti-join the completed partitions, and a reused
+Every lineage row (schema.LINEAGE) is appended by :func:`append_lineage`
+from a per-unit count frame. Bucket/shard jobs (extract, curate, pack,
+publish) compute their units after the output write commits, each from
+its own pruned aggregate, and write a one-row metrics rollup per stage;
+artifact-granular jobs (index, frontier, incremental) commit through
+sinks/ledger.py, whose ``Ledger`` hands over one unit per artifact. The
+read side: resume = anti-join the completed partitions, and a reused
 artifact takes its row count from the lineage row written when it was
 committed. Whether a lineage directory (or a commit marker) exists is
 asked of the path's Hadoop FileSystem (:func:`fs_mtime`), so a ``file:``,
@@ -134,6 +135,22 @@ def fs_parquet_schema(spark: SparkSession, path: str) -> StructType | None:
         return StructType.fromJson(json.loads(row_schema))
     except (ValueError, KeyError, TypeError):
         return None
+
+
+# the per-unit counts of a lineage row: what append_lineage takes
+LINEAGE_UNITS = "partition_id int, docs_in long, docs_out long, spans_out long, parse_failures long"
+
+
+def append_lineage(units: DataFrame, lineage_path: str, run_id: str, stage: str,
+                   wall_ms: int | None = None) -> None:
+    """Append one ``done`` schema.LINEAGE row per unit of ``units``
+    (:data:`LINEAGE_UNITS`, plus a ``wall_ms`` column when ``wall_ms`` is
+    None), finished now."""
+    fixed = {"run_id": F.lit(run_id), "stage": F.lit(stage), "status": F.lit("done"),
+             "wall_ms": F.col("wall_ms") if wall_ms is None else F.lit(wall_ms),
+             "finished_at": F.current_timestamp()}
+    units.select(*(fixed.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
+                   for f in LINEAGE)).write.mode("append").parquet(lineage_path)
 
 
 def _stage_rows(spark: SparkSession, lineage_path: str, run_id: str,

@@ -16,9 +16,9 @@ Layout under ``state_path``:
   batch_rows, wall_ms, applied_at). The ledger append is the COMMIT
   point: a crash after the snapshot write but before the append leaves an
   orphan ``snapshot_v{N+1}`` the re-run deterministically overwrites.
-- ``rollup_config.json`` — keys/value/scale identity, recorded at the
-  first successful commit, enforced on every later writer (batch or
-  stream).
+- the ``rollup`` config stamp (operators/publish.check_or_write_config)
+  — keys/value/scale identity, recorded at the first successful commit,
+  enforced on every later writer (batch or stream).
 
 Single writer per state directory at a time (two concurrent appliers
 would both read version N and race on v{N+1}); batch job and stream take
@@ -99,7 +99,7 @@ def apply_batch(
     """Apply one batch to the state: snapshot N+1 = merge(snapshot N,
     state(batch)). Idempotent on batch_id; commit = the ledger append."""
     from ..operators import incremental_agg as ia
-    from ..operators.publish import check_or_write_config
+    from ..operators.publish import check_or_write_config, read_stamp
 
     t0 = time.time()
     os.makedirs(state_path, exist_ok=True)
@@ -108,7 +108,7 @@ def apply_batch(
     # fail fast on drift against an EXISTING config, but don't record a new
     # one until the first successful commit — a typo'd first run must not
     # poison the state dir with a config that then rejects the corrected run
-    if os.path.exists(cfg_base + "_config.json"):
+    if read_stamp(cfg_base) is not None:
         check_or_write_config(cfg_base, cfg)
 
     led = read_ledger(spark, state_path)

@@ -72,12 +72,23 @@ crash selects the identical set.
 LM-perplexity filtering (``--lm-max-ce X``, CCNet-style) is a
 corpus-stat stage as well: the stupid-backoff bigram count model
 (operators/lm_quality.py) is trained once per run over the (post-strip)
-corpus and persisted (``--lm-model`` path, default ``<output>_lm_model``;
-the totals table commits LAST so a partial artifact reads as absent and
-rebuilds identically). Every bucket — including resumes — scores against
-the same persisted model via broadcast joins, and documents with
+corpus and persisted (``--lm-model`` path, default ``<output>_lm_model``)
+as three tables — unigram counts, bigram counts, the unigram total —
+each committed on its own: each is a deterministic function of the input
+and ``--lm-min-count``, so a crash mid-model rebuilds just the tables
+that never committed, identically. Every bucket — including resumes —
+scores against the same persisted model via broadcast joins, and documents with
 cross-entropy above the cutoff (or with < 2 tokens, whose ce is
 undefined) fail the filter stage alongside quality/language.
+
+Every corpus-stat artifact commits through sinks/ledger.commit: reused
+when its ``_SUCCESS`` marker and footer prove it committed, and guarded
+by a config stamp of its build parameters (a 5-token shingle set joined
+against 10-token probes would no-op the whole span stage), so another
+config on the same path raises a config mismatch instead of applying
+it. Explicit cross-output sharing (``--fuzzy-drops`` etc.) works when
+the parameters agree. The drop/keep list sizes come from the artifact's
+write; a reused list is counted.
 
 Resume model — why this funnel is bucket-resumable AT ALL: the bucket key
 is the CONTENT hash (pmod(hash(md5(text)), buckets)), so every copy of a
@@ -162,57 +173,6 @@ def curate_bucket_plan(docs, min_quality: float, langs: list[str] | None,
         .when(F.col("_sampled_out"), 2)
         .otherwise(3),
     )
-
-
-def _load_or_build(spark, path: str, build, params: dict | None = None):
-    """Corpus-stat checkpoint: try the committed parquet artifact, else run
-    ``build()`` (which must return the frame to persist), write it, and
-    read the committed copy back with the written schema (no inference
-    job). Every artifact is a deterministic function of the input AND its
-    build parameters, so a crash before the parquet commit just rebuilds
-    the identical frame. Returns (frame, reused).
-
-    Two reuse guards:
-    - ``params``: the artifact records the parameters it was built under
-      in a ``<path>_params.json`` sidecar; reuse under DIFFERENT params
-      raises instead of silently applying a stale artifact (a 5-token
-      shingle set joined against 10-token probes would no-op the whole
-      span stage with `reused: True` as the only hint). Explicit
-      cross-output sharing (``--fuzzy-drops-path`` etc.) still works when
-      the params agree. A missing sidecar on a pre-existing artifact is
-      backfilled from the current run (trusted reuse).
-    - ``_SUCCESS``: a readable directory WITHOUT the committer's success
-      marker is a partial job-commit (driver died mid-rename, or a
-      direct-write committer) — rebuilt, not reused; 'reads back' alone
-      is not 'committed'."""
-    from doc_agent_spark.sinks.ledger import readable
-
-    df = readable(spark, path)
-    if df is not None:
-        _artifact_params_guard(path, params)
-        return df, True
-    built = build()
-    built.write.mode("overwrite").parquet(path)
-    _artifact_params_guard(path, params)
-    return spark.read.schema(built.schema).parquet(path), False
-
-
-def _artifact_params_guard(path: str, params: dict | None) -> None:
-    import json as _json
-
-    if params is None:
-        return
-    pp = path.rstrip("/") + "_params.json"
-    if os.path.exists(pp):
-        prev = _json.load(open(pp))
-        if prev != params:
-            raise ValueError(
-                f"stale artifact {path}: built with {prev}, this run "
-                f"needs {params}; delete it or point at a fresh path"
-            )
-    else:
-        with open(pp, "w") as fh:
-            _json.dump(params, fh)
 
 
 def _then(docs, step):
@@ -314,43 +274,6 @@ def _domain_cap_drops_build(docs, cap: int, domain_col: str):
     return build
 
 
-def _load_or_build_lm(spark, docs, path: str, min_count: int):
-    """Corpus-stat checkpoint for the stupid-backoff bigram count model —
-    bespoke (three tables) rather than via :func:`_load_or_build`: the
-    model is committed when all three tables pass ``readable`` (each
-    table's ``_SUCCESS`` marker and footer), and totals is written LAST,
-    so a crash mid-artifact leaves it uncommitted and the whole model
-    rebuilds identically. The FULL (untruncated) unigram aggregate is
-    cached before its first action so the model write, the totals sum
-    (which must cover the full counts, not the truncated model), and the
-    bigram pass don't each re-scan the corpus for it."""
-    from doc_agent_spark.operators import lm_quality
-    from doc_agent_spark.sinks.ledger import readable
-
-    paths = [f"{path}/uni", f"{path}/big", f"{path}/tot"]
-    model = [readable(spark, p) for p in paths]
-    if None not in model:
-        _artifact_params_guard(path, {"lm_min_count": min_count})
-        return tuple(model), True
-    uni_full = lm_quality.corpus_unigrams(docs()).persist()
-    try:
-        built = (
-            uni_full.filter(F.col("c") >= min_count),
-            lm_quality.corpus_bigrams(docs(), min_count),
-            # T must cover the FULL counts (min_count truncates the model,
-            # not the denominator) — summed from the cached full aggregate
-            uni_full.agg(F.sum("c").cast("double").alias("t")),
-        )
-        for df, p in zip(built, paths):
-            df.write.mode("overwrite").parquet(p)
-    finally:
-        uni_full.unpersist()
-    _artifact_params_guard(path, {"lm_min_count": min_count})
-    return tuple(
-        spark.read.schema(df.schema).parquet(p) for df, p in zip(built, paths)
-    ), False
-
-
 def run_curate(
     spark: SparkSession,
     input_path: str,
@@ -389,7 +312,12 @@ def run_curate(
     from doc_agent_spark.functions import redact
     from doc_agent_spark.operators import dedup as dedup_ops
     from doc_agent_spark.plans.runtime_filter import drop_list_anti_join
-    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sinks.ledger import commit
+    from doc_agent_spark.sinks.metrics import (
+        append_lineage,
+        completed_partitions,
+        local_frame,
+    )
     from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
@@ -411,7 +339,7 @@ def run_curate(
     boiler_reused = None
     if strip_min_docs > 0:
         bpath = boilerplate_path or (output_path.rstrip("/") + "_boilerplate_lines")
-        boiler, boiler_reused = _load_or_build(
+        boiler, _, boiler_reused = commit(
             spark, bpath, _boilerplate_build(docs, strip_min_docs),
             params={"strip_min_docs": strip_min_docs},
         )
@@ -440,7 +368,7 @@ def run_curate(
     span_reused = None
     if span_k > 0:
         spath = span_shingles_path or (output_path.rstrip("/") + "_dup_shingles")
-        dup_sh, span_reused = _load_or_build(
+        dup_sh, _, span_reused = commit(
             spark, spath,
             lambda: dedup_ops.duplicated_shingles(
                 docs(), k=span_k, min_count=span_min_count
@@ -475,11 +403,12 @@ def run_curate(
     n_fuzzy_dropped = 0
     if fuzzy_jaccard is not None:
         fpath = fuzzy_drops_path or (output_path.rstrip("/") + "_fuzzy_drops")
-        drops, fuzzy_reused = _load_or_build(
+        drops, n_fuzzy_dropped, fuzzy_reused = commit(
             spark, fpath, _fuzzy_drops_build(docs, fuzzy_jaccard, keep=fuzzy_keep),
             params={"fuzzy_jaccard": fuzzy_jaccard, "fuzzy_keep": fuzzy_keep},
         )
-        n_fuzzy_dropped = drops.count()
+        if fuzzy_reused:
+            n_fuzzy_dropped = drops.count()
         docs = _then(docs, functools.partial(
             drop_list_anti_join, keys=drops, key_col="doc_id",
             n_keys=n_fuzzy_dropped, bloom_min=bloom_droplist_min))
@@ -487,11 +416,12 @@ def run_curate(
     n_domain_capped = 0
     if domain_cap > 0:
         cpath = domain_cap_drops_path or (output_path.rstrip("/") + "_domain_cap_drops")
-        cap_drops, cap_reused = _load_or_build(
+        cap_drops, n_domain_capped, cap_reused = commit(
             spark, cpath, _domain_cap_drops_build(docs, domain_cap, domain_col),
             params={"domain_cap": domain_cap, "domain_col": domain_col},
         )
-        n_domain_capped = cap_drops.count()
+        if cap_reused:
+            n_domain_capped = cap_drops.count()
         docs = _then(docs, functools.partial(
             drop_list_anti_join, keys=cap_drops, key_col="doc_id",
             n_keys=n_domain_capped, bloom_min=bloom_droplist_min))
@@ -499,23 +429,53 @@ def run_curate(
     n_dsir_kept = 0
     if dsir_keep > 0:
         dpath = dsir_keep_path or (output_path.rstrip("/") + "_dsir_keep")
-        keep, dsir_reused = _load_or_build(
+        keep, n_dsir_kept, dsir_reused = commit(
             spark, dpath,
             _dsir_keep_build(docs, dsir_keep, dsir_target, dsir_buckets),
             params={"dsir_keep": dsir_keep, "dsir_target": dsir_target,
                     "dsir_buckets": dsir_buckets},
         )
-        n_dsir_kept = keep.count()
+        if dsir_reused:
+            n_dsir_kept = keep.count()
         # keep list is at most dsir_keep rows — let AQE broadcast it
         docs = _then(docs, lambda d: d.join(keep, "doc_id", "left_semi"))
     lm_reused = None
     if lm_max_ce is not None:
         from doc_agent_spark.operators import lm_quality
+        from doc_agent_spark.operators.publish import check_or_write_config, read_stamp
 
         lpath = lm_model_path or (output_path.rstrip("/") + "_lm_model")
-        (uni, big, tot), lm_reused = _load_or_build_lm(
-            spark, docs, lpath, lm_min_count
-        )
+        lm_params = {"lm_min_count": lm_min_count}
+        # a model committed before its tables were stamped one by one
+        # carries one stamp beside the model directory
+        if read_stamp(lpath) is not None:
+            check_or_write_config(lpath, lm_params)
+        # the FULL (untruncated) unigram aggregate is cached before its
+        # first action, so the unigram write and the totals sum (which must
+        # cover the full counts, not the truncated model) scan the corpus
+        # for it once
+        uni_full = functools.cache(
+            lambda: lm_quality.corpus_unigrams(docs()).persist())
+        try:
+            uni, _, uni_reused = commit(
+                spark, f"{lpath}/uni",
+                lambda: uni_full().filter(F.col("c") >= lm_min_count),
+                params=lm_params,
+            )
+            big, _, big_reused = commit(
+                spark, f"{lpath}/big",
+                lambda: lm_quality.corpus_bigrams(docs(), lm_min_count),
+                params=lm_params,
+            )
+            tot, _, tot_reused = commit(
+                spark, f"{lpath}/tot",
+                lambda: uni_full().agg(F.sum("c").cast("double").alias("t")),
+                params=lm_params,
+            )
+        finally:
+            if uni_full.cache_info().currsize:
+                uni_full().unpersist()
+        lm_reused = uni_reused and big_reused and tot_reused
         # left join: < 2-token docs have no score and fail the filter stage
         docs = _then(docs, lambda d: d.join(
             lm_quality.doc_cross_entropy(d, uni, big, tot).select("doc_id", "lm_ce"),
@@ -573,22 +533,15 @@ def run_curate(
         # done. The second action re-executes the funnel, but it reuses the
         # bucket repartition's shuffle files (same lineage, same context) and
         # aggregates only (bucket, _stage).
-        lineage = staged.groupBy("bucket").agg(
-            F.lit(run_id).alias("run_id"),
-            F.lit("curate").alias("stage"),
-            F.lit("done").alias("status"),
+        kept = F.sum((F.col("_stage") == 3).cast("long"))
+        units = staged.groupBy("bucket").agg(
             F.count("*").alias("docs_in"),
-            F.sum((F.col("_stage") == 3).cast("long")).alias("docs_out"),
-            F.sum((F.col("_stage") == 3).cast("long")).alias("spans_out"),
-            F.lit(0).cast("long").alias("parse_failures"),
-            F.lit(int((time.time() - t0) * 1000)).cast("long").alias("wall_ms"),
-            F.current_timestamp().alias("finished_at"),
-        ).select(
-            "run_id", "stage", F.col("bucket").cast("int").alias("partition_id"),
-            "status", "docs_in", "docs_out", "spans_out", "parse_failures",
-            "wall_ms", "finished_at",
-        )
-        lineage.write.mode("append").parquet(lineage_path)
+            kept.alias("docs_out"),
+            kept.alias("spans_out"),
+            F.lit(0).alias("parse_failures"),
+        ).withColumnRenamed("bucket", "partition_id")
+        append_lineage(units, lineage_path, run_id, "curate",
+                       int((time.time() - t0) * 1000))
 
     wall_ms = int((time.time() - t0) * 1000)
     counts = {k: int(m.get(k) or 0) for k in (

@@ -53,7 +53,11 @@ def run_extract(
 ) -> dict:
     from doc_agent_spark.operators import extractor
     from doc_agent_spark.plans.skew import split_heavy
-    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sinks.metrics import (
+        append_lineage,
+        completed_partitions,
+        local_frame,
+    )
     from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
@@ -105,10 +109,8 @@ def run_extract(
         flat.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
         m = obs.get
 
-        lineage = lineage_from_written(
-            spark, output_path, done, run_id, int((time.time() - t0) * 1000)
-        )
-        lineage.write.mode("append").parquet(lineage_path)
+        append_lineage(lineage_from_written(spark, output_path, done), lineage_path,
+                       run_id, "extract", int((time.time() - t0) * 1000))
 
     wall_ms = int((time.time() - t0) * 1000)
     n_docs, n_spans, n_failures = (int(m.get(k) or 0) for k in ("docs", "spans", "failures"))
@@ -127,9 +129,10 @@ def run_extract(
     }
 
 
-def lineage_from_written(spark, output_path, done, run_id, wall_ms):
-    """Per-bucket lineage from the WRITTEN data (source of truth: a crash
-    between write and lineage append just re-does those buckets).
+def lineage_from_written(spark, output_path, done):
+    """Per-bucket lineage counts (``metrics.LINEAGE_UNITS``) from the
+    WRITTEN data (source of truth: a crash between write and lineage
+    append just re-does those buckets).
 
     This is a deliberate PRUNED read-back, not a full second scan: bucket
     is the partition directory (no data read) and the scan touches only
@@ -145,19 +148,11 @@ def lineage_from_written(spark, output_path, done, run_id, wall_ms):
         written = written.filter(~F.col("bucket").isin(*sorted(done)))
     docs_n = F.sum(F.when(F.col("order") == 0, 1).otherwise(0))
     return written.groupBy("bucket").agg(
-        F.lit(run_id).alias("run_id"),
-        F.lit("extract").alias("stage"),
-        F.lit("done").alias("status"),
         docs_n.alias("docs_in"),
         docs_n.alias("docs_out"),
         F.count("*").alias("spans_out"),
         F.sum(F.when(F.col("parse_failure") & (F.col("order") == 0), 1).otherwise(0)).alias("parse_failures"),
-        F.lit(wall_ms).cast("long").alias("wall_ms"),
-        F.current_timestamp().alias("finished_at"),
-    ).select(
-        "run_id", "stage", F.col("bucket").cast("int").alias("partition_id"), "status",
-        "docs_in", "docs_out", "spans_out", "parse_failures", "wall_ms", "finished_at",
-    )
+    ).withColumnRenamed("bucket", "partition_id")
 
 
 def ship_package(spark: SparkSession) -> None:

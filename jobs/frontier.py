@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 ARTIFACTS = ["discovered", "frontier", "blocked"]
 
-from doc_agent_spark.sinks.ledger import Ledger, readable  # noqa: E402
+from doc_agent_spark.sinks.ledger import Ledger, commit  # noqa: E402
 from doc_agent_spark.sources.tables import read_input  # noqa: E402
 
 
@@ -185,12 +185,13 @@ def run_frontier(
         # snapshot N+1's dedup state = seen ∪ discovered, written to a NEW
         # path (never a rewrite of snapshot N — the mergeable-artifact
         # rule); committed with the same _SUCCESS/resume contract so a
-        # crashed cycle re-runs cleanly
-        if readable(spark, seen_out_path) is None:
-            seen.unionByName(discovered.select("url")).distinct().write.mode(
-                "overwrite"
-            ).parquet(seen_out_path)
-        seen_out = spark.read.parquet(seen_out_path).count()
+        # crashed cycle re-runs cleanly. A build counts on its write.
+        seen_set, seen_out, reused = commit(
+            spark, seen_out_path,
+            lambda: seen.unionByName(discovered.select("url")).distinct(),
+        )
+        if reused:
+            seen_out = seen_set.count()
     return {
         "run_id": run_id,
         "fetched_pages": fetched.count(),

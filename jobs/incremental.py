@@ -107,21 +107,17 @@ def run_incremental(
     # this run would add, so refusing here is the only safe answer (the
     # rebuild path is jobs/index.py --rebuild-stale). Unstamped (pre-
     # versioning) indexes pass, preserving old outputs.
-    import json as _json
-
     from doc_agent_spark.functions import embedder as _emb
+    from doc_agent_spark.operators.publish import read_stamp
 
-    _cfgp = index_path.rstrip("/") + "_config.json"
-    if os.path.exists(_cfgp):
-        with open(_cfgp) as _fh:
-            _stamped = _json.load(_fh).get("embedder_version")
-        if _stamped is not None and _stamped != _emb.EMBEDDER_VERSION:
-            raise ValueError(
-                f"stale index at {index_path}: stamped embedder_version="
-                f"{_stamped!r} but this run embeds with "
-                f"{_emb.EMBEDDER_VERSION!r}; rebuild the index "
-                "(jobs/index.py --rebuild-stale) before ingesting"
-            )
+    _stamped = (read_stamp(index_path) or {}).get("embedder_version")
+    if _stamped is not None and _stamped != _emb.EMBEDDER_VERSION:
+        raise ValueError(
+            f"stale index at {index_path}: stamped embedder_version="
+            f"{_stamped!r} but this run embeds with "
+            f"{_emb.EMBEDDER_VERSION!r}; rebuild the index "
+            "(jobs/index.py --rebuild-stale) before ingesting"
+        )
     hist_bands = spark.read.parquet(
         index_path.rstrip("/") + "/minhash_bands"
     )

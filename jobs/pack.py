@@ -82,7 +82,11 @@ def run_pack(
 
     from doc_agent_spark.functions import textfns
     from doc_agent_spark.operators import packing, sampling
-    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sinks.metrics import (
+        append_lineage,
+        completed_partitions,
+        local_frame,
+    )
     from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
@@ -101,24 +105,27 @@ def run_pack(
         # filtering — a resumed run must tokenize identically) and
         # persisted; the vocabulary-sized count collect is the only
         # driver-side data movement (operators/tokenizer.py). A committed
-        # table (sinks/ledger.readable) is reused.
+        # table (sinks/ledger.commit) is reused only under the same merge
+        # count: another count on a shared --bpe-path is a config mismatch.
         from doc_agent_spark.operators import tokenizer as tok
-        from doc_agent_spark.sinks.ledger import readable
+        from doc_agent_spark.sinks.ledger import commit
 
         mpath = bpe_path or (output_path.rstrip("/") + "_bpe_merges")
 
         @functools.cache
         def merges() -> list[tuple[str, str]]:
-            committed = readable(spark, mpath)
-            if committed is not None:
-                return [(r["a"], r["b"]) for r in committed.orderBy("rank").collect()]
-            trained = tok.train_bpe(source(), n_merges=bpe_merges)
-            local_frame(
-                spark,
-                [(i, a, b) for i, (a, b) in enumerate(trained)],
-                "rank int, a string, b string",
-            ).write.mode("overwrite").parquet(mpath)
-            return trained
+            trained: list[tuple[str, str]] = []
+
+            def train():
+                trained.extend(tok.train_bpe(source(), n_merges=bpe_merges))
+                return local_frame(
+                    spark,
+                    [(i, a, b) for i, (a, b) in enumerate(trained)],
+                    "rank int, a string, b string",
+                )
+
+            table, _, _ = commit(spark, mpath, train, params={"bpe_merges": bpe_merges})
+            return trained or [(r["a"], r["b"]) for r in table.orderBy("rank").collect()]
 
         token_count_expr = F.size("_toks").cast("long")
         tokens_expr = F.col("_toks")
@@ -254,22 +261,14 @@ def run_pack(
         )
         if done:
             plan_agg = plan_agg.filter(~F.col("shard").isin(*sorted(done)))
-        lineage = (
-            shard_docs.join(plan_agg, "shard", "left")
-            .select(
-                F.lit(run_id).alias("run_id"),
-                F.lit("pack").alias("stage"),
-                F.col("shard").cast("int").alias("partition_id"),
-                F.lit("done").alias("status"),
-                F.col("docs_in"),
-                F.coalesce(F.col("windows"), F.lit(0)).cast("long").alias("docs_out"),
-                F.coalesce(F.col("slices"), F.lit(0)).cast("long").alias("spans_out"),
-                F.lit(0).cast("long").alias("parse_failures"),
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-                F.current_timestamp().alias("finished_at"),
-            )
+        units = shard_docs.join(plan_agg, "shard", "left").select(
+            F.col("shard").alias("partition_id"),
+            "docs_in",
+            F.coalesce(F.col("windows"), F.lit(0)).alias("docs_out"),
+            F.coalesce(F.col("slices"), F.lit(0)).alias("spans_out"),
+            F.lit(0).alias("parse_failures"),
         )
-        lineage.write.mode("append").parquet(lineage_path)
+        append_lineage(units, lineage_path, run_id, "pack", wall_ms)
 
     n_slices, n_tokens, n_windows = (int(m.get(k) or 0) for k in ("slices", "tokens", "windows"))
     metrics_row = local_frame(

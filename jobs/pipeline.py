@@ -33,9 +33,9 @@ is a real pipeline stage, not glue: per doc it reassembles span text in
 carries a media_ref ('scanned' vs 'digital' — the provenance axis the
 curation quota/stats stages group on), runs the engine's own language-ID
 for ``lang``, and counts chars. It commits as a parquet artifact under
-the workdir (the sinks/ledger.py commit proof: readable == done, a
-crash mid-write rebuilds identically). Its document count, like the
-ingest stages', is observed on its write, not read back.
+the workdir through sinks/ledger.commit, like the ingest stages: a
+committed artifact is done, a crash mid-write rebuilds identically, and
+the document count is observed on the write, not read back.
 
 Layout under --workdir:
   extracted/   span rows        (extract stage, bucket-partitioned)
@@ -58,7 +58,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from doc_agent_spark.sinks.ledger import readable, write_counted
+from doc_agent_spark.sinks.ledger import commit, write_counted
 from jobs.curate import run_curate
 from jobs.extract import run_extract
 from jobs.index import run_index
@@ -72,31 +72,30 @@ def build_documents(spark: SparkSession, extracted_path: str, docs_path: str) ->
     order), then a zero-shuffle enrichment projection."""
     from doc_agent_spark.functions import textfns
 
-    if readable(spark, docs_path) is not None:
-        return {"resumed": True}
-    spans = spark.read.parquet(extracted_path)
-    docs = (
-        spans.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("order"), F.col("text")))
-            ).alias("sp"),
-            F.max((F.col("media_ref") != "").cast("int")).alias("has_media"),
+    def build():
+        return (
+            spark.read.parquet(extracted_path).groupBy("doc_id")
+            .agg(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("order"), F.col("text")))
+                ).alias("sp"),
+                F.max((F.col("media_ref") != "").cast("int")).alias("has_media"),
+            )
+            .select(
+                "doc_id",
+                F.array_join(F.transform(F.col("sp"), lambda s: s.text), "\n").alias(
+                    "text"
+                ),
+                F.when(F.col("has_media") == 1, F.lit("scanned"))
+                .otherwise(F.lit("digital"))
+                .alias("source"),
+            )
+            .withColumn("lang", textfns.lang_id(F.col("text")))
+            .withColumn("n_chars", F.length("text"))
         )
-        .select(
-            "doc_id",
-            F.array_join(F.transform(F.col("sp"), lambda s: s.text), "\n").alias(
-                "text"
-            ),
-            F.when(F.col("has_media") == 1, F.lit("scanned"))
-            .otherwise(F.lit("digital"))
-            .alias("source"),
-        )
-        .withColumn("lang", textfns.lang_id(F.col("text")))
-        .withColumn("n_chars", F.length("text"))
-    )
-    n = write_counted(docs, lambda d: d.write.mode("overwrite").parquet(docs_path))
-    return {"resumed": False, "docs": n}
+
+    _, n, reused = commit(spark, docs_path, build)
+    return {"resumed": True} if reused else {"resumed": False, "docs": n}
 
 
 def ingest_jsonl(spark: SparkSession, input_path: str, spans_path: str,
@@ -104,21 +103,27 @@ def ingest_jsonl(spark: SparkSession, input_path: str, spans_path: str,
     """Optional stage 0: a JSONL crawl drop read with corrupt-record
     quarantine (sources/ingest.py) — malformed lines land whole in
     ``quarantine_path`` for replay, clean rows become the spans parquet.
-    Artifact-resume like the bridge (readable == done)."""
+    Artifact-resume like the bridge (the spans commit == done)."""
     from doc_agent_spark.schema import DOCUMENTS_SPANS
     from doc_agent_spark.sources import ingest
 
-    if readable(spark, spans_path) is not None:
+    held: dict = {}
+
+    def build():
+        ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in DOCUMENTS_SPANS.fields
+        )
+        held["raw"] = raw = ingest.read_jsonl(spark, input_path, ddl)
+        clean, bad = ingest.split_quarantine(raw, materialize=True)
+        held["quarantined"] = write_counted(
+            bad, lambda d: d.write.mode("overwrite").json(quarantine_path))
+        return clean
+
+    _, n, reused = commit(spark, spans_path, build)
+    if reused:
         return {"resumed": True}
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in DOCUMENTS_SPANS.fields
-    )
-    raw = ingest.read_jsonl(spark, input_path, ddl)
-    clean, bad = ingest.split_quarantine(raw, materialize=True)
-    n_bad = write_counted(bad, lambda d: d.write.mode("overwrite").json(quarantine_path))
-    n = write_counted(clean, lambda d: d.write.mode("overwrite").parquet(spans_path))
-    raw.unpersist()
-    return {"resumed": False, "docs": n, "quarantined": n_bad}
+    held["raw"].unpersist()
+    return {"resumed": False, "docs": n, "quarantined": held["quarantined"]}
 
 
 def ingest_warc(spark: SparkSession, input_path: str, spans_path: str,
@@ -129,50 +134,55 @@ def ingest_warc(spark: SparkSession, input_path: str, spans_path: str,
     (file, offset) — crawl archives name files monotonically, so the order
     is the fetch order. Malformed/truncated records land whole in a parquet
     quarantine for replay (the JSONL ingest's never-drop contract; parquet
-    because the payload column is binary). Artifact-resume: readable spans
-    parquet == done."""
+    because the payload column is binary). Artifact-resume: the committed
+    spans parquet == done."""
     from pyspark.sql import Window
 
     from doc_agent_spark.functions import urls
     from doc_agent_spark.sources import warc as warcsrc
 
-    if readable(spark, spans_path) is not None:
+    held: dict = {}
+
+    def build():
+        held["records"] = records = warcsrc.read_warc(spark, input_path).cache()
+        bad = records.filter(F.col("error").isNotNull())
+        held["quarantined"] = write_counted(
+            bad, lambda d: d.write.mode("overwrite").parquet(quarantine_path))
+        ok = records.filter(
+            F.col("error").isNull()
+            & (F.col("warc_type") == "response")
+            & (F.col("http_status") == 200)
+        )
+        latest = Window.partitionBy("doc_id").orderBy(
+            F.col("file").desc(), F.col("record_offset").desc()
+        )
+        return (
+            ok.select(
+                urls.url_canonicalize(F.col("target_uri")).alias("doc_id"),
+                # lenient decode: malformed bytes → U+FFFD, never a crashed job
+                F.expr("make_valid_utf8(payload)").alias("text"),
+                "file", "record_offset",
+            )
+            .withColumn("_r", F.row_number().over(latest))
+            .filter(F.col("_r") == 1)
+            .select(
+                "doc_id",
+                F.array(
+                    F.struct(
+                        F.lit("text").alias("kind"),
+                        F.col("text").alias("text"),
+                        F.lit("").alias("media_ref"),
+                        F.lit(0).cast("int").alias("offset"),
+                    )
+                ).alias("spans"),
+            )
+        )
+
+    _, n, reused = commit(spark, spans_path, build)
+    if reused:
         return {"resumed": True}
-    records = warcsrc.read_warc(spark, input_path).cache()
-    bad = records.filter(F.col("error").isNotNull())
-    n_bad = write_counted(bad, lambda d: d.write.mode("overwrite").parquet(quarantine_path))
-    ok = records.filter(
-        F.col("error").isNull()
-        & (F.col("warc_type") == "response")
-        & (F.col("http_status") == 200)
-    )
-    latest = Window.partitionBy("doc_id").orderBy(
-        F.col("file").desc(), F.col("record_offset").desc()
-    )
-    spans = (
-        ok.select(
-            urls.url_canonicalize(F.col("target_uri")).alias("doc_id"),
-            # lenient decode: malformed bytes → U+FFFD, never a crashed job
-            F.expr("make_valid_utf8(payload)").alias("text"),
-            "file", "record_offset",
-        )
-        .withColumn("_r", F.row_number().over(latest))
-        .filter(F.col("_r") == 1)
-        .select(
-            "doc_id",
-            F.array(
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    F.col("text").alias("text"),
-                    F.lit("").alias("media_ref"),
-                    F.lit(0).cast("int").alias("offset"),
-                )
-            ).alias("spans"),
-        )
-    )
-    n = write_counted(spans, lambda d: d.write.mode("overwrite").parquet(spans_path))
-    records.unpersist()
-    return {"resumed": False, "docs": n, "quarantined": n_bad}
+    held["records"].unpersist()
+    return {"resumed": False, "docs": n, "quarantined": held["quarantined"]}
 
 
 def run_pipeline(

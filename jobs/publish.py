@@ -65,7 +65,12 @@ def run_publish(
 ) -> dict:
     from doc_agent_spark.operators import publish
     from doc_agent_spark.operators.packing import shard_of
-    from doc_agent_spark.sinks.metrics import completed_partitions, local_frame
+    from doc_agent_spark.sinks.metrics import (
+        LINEAGE_UNITS,
+        append_lineage,
+        completed_partitions,
+        local_frame,
+    )
     from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
@@ -119,21 +124,11 @@ def run_publish(
         )
         # one LINEAGE-schema row per committed shard (docs_in = docs_out =
         # rows serialized; spans_out carries the shard's byte count)
-        by_shard = {r["shard"]: r for r in delta_rows}
-        commit_ms = int((time.time() - t0) * 1000)
-        lineage = local_frame(
-            spark,
-            [
-                (run_id, "publish", int(s), "done",
-                 int(by_shard[s]["n_rows"]), int(by_shard[s]["n_rows"]),
-                 int(by_shard[s]["n_bytes"]), 0, commit_ms)
-                for s in wrote
-            ],
-            "run_id string, stage string, partition_id int, status string,"
-            " docs_in long, docs_out long, spans_out long, parse_failures long,"
-            " wall_ms long",
-        ).withColumn("finished_at", F.current_timestamp())
-        lineage.write.mode("append").parquet(lineage_path)
+        units = local_frame(spark, [
+            (r["shard"], r["n_rows"], r["n_rows"], r["n_bytes"], 0) for r in delta_rows
+        ], LINEAGE_UNITS)
+        append_lineage(units, lineage_path, run_id, "publish",
+                       int((time.time() - t0) * 1000))
 
     wall_ms = int((time.time() - t0) * 1000)
     local_frame(

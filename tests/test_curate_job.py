@@ -530,3 +530,43 @@ def test_stale_artifact_params_fail_fast(spark, tmp_path_factory):
     # same params reuse the artifact cleanly
     r = run_curate(spark, in_p, out, lin, met, run_id="sp3", buckets=2, span_k=5)
     assert r["span_artifact_reused"] is True
+
+
+def test_cold_fuzzy_run_counts_its_drop_list_on_the_write(spark, tmp_path):
+    """A cold run with fuzzy dedup takes the drop-list size from the
+    artifact's write (sinks/ledger.commit), not from a count job; a run
+    that reuses the list counts it, to the same number."""
+    base = ("the quarterly report shows the revenue number and the cost "
+            "number for the data pipeline team in the usual format")
+    in_p = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        [(0, base, "en", "s0", 100), (1, base.replace("usual", "updated"), "en", "s0", 100),
+         (2, "completely unrelated english words about some other topic "
+             "entirely with no overlap in the shingle space at all", "en", "s0", 100)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(in_p)
+    sc = spark.sparkContext
+
+    def run(tag):
+        sc.setJobGroup(tag, tag)
+        try:
+            r = run_curate(
+                spark, in_p, str(tmp_path / f"out{tag}"), str(tmp_path / f"lin{tag}"),
+                str(tmp_path / f"met{tag}"), run_id=tag, buckets=4, fuzzy_jaccard=0.5,
+                fuzzy_drops_path=str(tmp_path / "drops"),
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return r, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    cold, n_jobs = run("fzc")
+    assert cold["fuzzy_artifact_reused"] is False and cold["fuzzy_dropped"] == 1
+    assert n_jobs <= JOBS_COLD_FUZZY, n_jobs
+    again, _ = run("fzr")
+    assert again["fuzzy_artifact_reused"] is True and again["fuzzy_dropped"] == 1
+
+
+# Spark jobs of that cold run: the near-dup clustering rounds, the
+# drop-list write (which counts the list), the funnel write, its lineage
+# and metrics appends
+JOBS_COLD_FUZZY = 35

@@ -2,8 +2,9 @@
 probe holds on URI paths, the footer proof rejects what does not read
 back as Spark wrote it and launches no Spark job, `local_frame` builds
 exactly the frame `createDataFrame(<python list>)` builds, as one local
-partition, and the rollup state (sinks/rollup_state.py) counts its
-snapshot without reading it back."""
+partition, only sinks/ write lineage, the config stamp has one writer
+whose writes are atomic, and the rollup state (sinks/rollup_state.py)
+counts its snapshot without reading it back."""
 
 from __future__ import annotations
 
@@ -13,8 +14,8 @@ import pathlib
 
 import pytest
 
-from doc_agent_spark.sinks.ledger import _ROW, readable
-from doc_agent_spark.sinks.metrics import local_frame
+from doc_agent_spark.sinks.ledger import readable
+from doc_agent_spark.sinks.metrics import LINEAGE_UNITS, local_frame
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
@@ -136,8 +137,8 @@ def test_footer_schema_equals_inferred_schema_for_index_artifacts(spark, tmp_pat
 # (schema, rows) pairs: the ledger's lineage rows, every stage's metrics
 # row, a codebook-shaped table with the float edge cases, and no rows
 CASES = {
-    "lineage": (_ROW, [("r1", "index", i, "done", 7 * i, 7 * i, 0, 0, 12)
-                       for i in range(9)]),
+    "lineage": (LINEAGE_UNITS + ", wall_ms long",
+                [(i, 7 * i, 7 * i, 0, 0, 12) for i in range(9)]),
     "extract": ("run_id string, stage string, docs_processed long, "
                 "spans_emitted long, parse_failures long",
                 [("r1", "extract", 40, 311, 2)]),
@@ -202,6 +203,68 @@ def test_create_dataframe_only_inside_local_frame():
         for owner in _create_dataframe_calls(ast.parse(path.read_text()))
     ]
     assert calls == [("doc_agent_spark/sinks/metrics.py", "local_frame")], calls
+
+
+def _lineage_writes(tree: ast.AST) -> list[int]:
+    """Line numbers of every ``<writer>.<format>(<...lineage...>)`` call:
+    a write (``.write`` in the receiver) whose target names a lineage
+    path."""
+    return [
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and ".write" in ast.unparse(node.func.value)
+        and any("lineage" in ast.unparse(arg) for arg in node.args)
+    ]
+
+
+def test_lineage_and_stamp_have_one_writer():
+    """Lineage rows are appended only by sinks/ (metrics.append_lineage),
+    and one module names the config stamp file."""
+    sources = {
+        str(path.relative_to(ROOT)): path.read_text()
+        for top in ("doc_agent_spark", "jobs")
+        for path in sorted((ROOT / top).rglob("*.py"))
+    }
+    writes = [(name, line) for name, text in sources.items()
+              for line in _lineage_writes(ast.parse(text))]
+    assert writes and all(n.startswith("doc_agent_spark/sinks/") for n, _ in writes), writes
+    stamps = [name for name, text in sources.items() if "_config.json" in text]
+    assert stamps == ["doc_agent_spark/operators/publish.py"], stamps
+
+
+def test_stamp_write_is_atomic_and_reads_the_legacy_name(tmp_path, monkeypatch):
+    """A stamp write that dies part-way leaves no stamp, so the next call
+    records one (a truncated stamp would fail every later run to parse);
+    an artifact stamped under the legacy `_params.json` name keeps its
+    guard."""
+    import json
+
+    from doc_agent_spark.operators import publish
+
+    out = str(tmp_path / "out")
+    dump = json.dump
+
+    def torn(obj, fh, **kw):
+        fh.write('{"shards": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError, match="disk full"):
+        publish.check_or_write_config(out, {"shards": 4})
+    monkeypatch.setattr(json, "dump", dump)
+    assert os.listdir(tmp_path) == []
+    publish.check_or_write_config(out, {"shards": 4})
+    publish.check_or_write_config(out, {"shards": 4})
+    with pytest.raises(ValueError, match="config mismatch"):
+        publish.check_or_write_config(out, {"shards": 8})
+
+    legacy = str(tmp_path / "legacy")
+    with open(legacy + "_params.json", "w") as fh:
+        json.dump({"span_k": 5}, fh)
+    assert publish.read_stamp(legacy) == {"span_k": 5}
+    publish.check_or_write_config(legacy, {"span_k": 5})
+    with pytest.raises(ValueError, match="stale artifact"):
+        publish.check_or_write_config(legacy, {"span_k": 10})
 
 
 def test_rollup_counts_come_from_the_write_and_the_ledger(spark, tmp_path):

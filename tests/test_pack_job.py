@@ -301,3 +301,27 @@ def test_bpe_merges_without_success_marker_retrain(spark, tmp_path):
     assert os.path.exists(os.path.join(mpath, "_SUCCESS"))
     assert merges() == want
     assert again["tokens"] == first["tokens"]
+
+
+def test_bpe_merges_of_another_count_are_not_reused(spark, tmp_path):
+    """The merge table is stamped with its merge count: another count on
+    the same `bpe_path` raises a config mismatch instead of tokenizing
+    with the stale table, and the same count still reuses it."""
+    in_p = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        [(i, "the data pipeline reads the table " * (1 + i % 3)) for i in range(20)],
+        "doc_id long, text string",
+    ).write.parquet(in_p)
+    mpath = str(tmp_path / "merges")
+    run = lambda tag, n: run_pack(  # noqa: E731
+        spark, in_p, str(tmp_path / f"out{tag}"), str(tmp_path / "lin"),
+        str(tmp_path / "met"), run_id=f"bs{tag}", budget=32, shards=2,
+        tokenizer="bpe", bpe_merges=n, bpe_path=mpath)
+    merges = lambda: sorted(map(tuple, spark.read.parquet(mpath).collect()))  # noqa: E731
+    first = run(1, 20)
+    want = merges()
+    assert len(want) > 2
+    with pytest.raises(ValueError, match="config mismatch"):
+        run(2, 2)
+    assert merges() == want
+    assert run(3, 20)["tokens"] == first["tokens"]

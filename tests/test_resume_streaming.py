@@ -92,7 +92,7 @@ def test_lineage_readback_is_column_pruned(spark, tmp_path, corpus_path):
     out, lin, met = (str(tmp_path / x) for x in ("o", "l", "m"))
     run_extract(spark, corpus_path, out, lin, met, run_id="p1", buckets=8)
     plan = (
-        lineage_from_written(spark, out, set(), "p1", 0)
+        lineage_from_written(spark, out, set())
         ._jdf.queryExecution().executedPlan().toString()
     )
     scan = plan[plan.find("ReadSchema"):]
