@@ -33,8 +33,9 @@ each artifact of one output directory and writes its lineage. Contract:
 - **Ledger counts and lineage.** Artifact ``<out>/<name>`` is lineage
   partition ``artifacts.index(name)``. A reused artifact's count is the
   ``docs_out`` of its newest lineage row that postdates the marker (one
-  ``committed_outputs`` collect per job, paid only once something is
-  reused). With no such row it is counted and one row is backfilled
+  ``committed_outputs`` call per job, made only once something is reused
+  and answered from the run's lineage snapshot: no job when it is
+  current). With no such row it is counted and one row is backfilled
   (``wall_ms`` 0) — this converges a driver killed between the artifact
   write and the lineage append. The rows go to ``metrics.append_lineage``
   in ONE write when the ``with`` block ends, also when a commit raised.

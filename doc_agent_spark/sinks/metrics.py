@@ -9,7 +9,11 @@ artifact-granular jobs (index, frontier, incremental) commit through
 sinks/ledger.py, whose ``Ledger`` hands over one unit per artifact. The
 read side: resume = anti-join the completed partitions, and a reused
 artifact takes its row count from the lineage row written when it was
-committed. Whether a lineage directory (or a commit marker) exists is
+committed. Both are answered from one driver-side snapshot of the run's
+``done`` rows (:func:`_run_rows`): one collect, read again only when the
+lineage directory's stamp changes, so stages that write no lineage — a
+resumed pipeline leg — share a single read, and an append from any
+process invalidates it. Whether a lineage directory (or a commit marker) exists is
 asked of the path's Hadoop FileSystem (:func:`fs_mtime`), so a ``file:``,
 ``hdfs://`` or ``s3a://`` lineage path resumes like a plain one; the
 schema a committed parquet artifact was written with is read from one
@@ -153,33 +157,65 @@ def append_lineage(units: DataFrame, lineage_path: str, run_id: str, stage: str,
                    for f in LINEAGE)).write.mode("append").parquet(lineage_path)
 
 
-def _stage_rows(spark: SparkSession, lineage_path: str, run_id: str,
-                stage: str) -> DataFrame | None:
-    if fs_mtime(spark, lineage_path) is None:
+def _lineage_stamp(spark: SparkSession, lineage_path: str) -> tuple | None:
+    """What a committed write to the lineage directory always changes:
+    the (files, directories, bytes) under it, as one ``getContentSummary``
+    on the path's Hadoop FileSystem, and its ``_SUCCESS`` time. An append
+    adds a uniquely named part file, an overwrite rewrites ``_SUCCESS``.
+    None when the directory does not exist. A fixed number of FileSystem
+    calls whatever the file count, and no Spark job."""
+    sc = spark.sparkContext
+    target = _jclass(sc._jvm, "org.apache.hadoop.fs.Path")(lineage_path)
+    try:
+        fs = target.getFileSystem(sc._jsc.hadoopConfiguration())
+        if not fs.exists(target):
+            return None
+    except Py4JJavaError:  # no filesystem for the path's scheme
         return None
-    return spark.read.schema(LINEAGE).parquet(lineage_path).filter(
-        (F.col("run_id") == run_id) & (F.col("stage") == stage)
-        & (F.col("status") == "done")
-    )
+    summary = fs.getContentSummary(target)
+    return (summary.getFileCount(), summary.getDirectoryCount(), summary.getLength(),
+            fs_mtime(spark, lineage_path, "_SUCCESS"))
+
+
+# (lineage_path, run_id) → (stamp, snapshot), least recently used first
+_SNAPSHOTS: dict[tuple[str, str], tuple[tuple, dict]] = {}
+_SNAPSHOT_KEYS = 8
+
+
+def _run_rows(spark: SparkSession, lineage_path: str,
+              run_id: str) -> dict[str, dict[int, tuple[int, float]]]:
+    """stage → partition_id → (docs_out, finished_at as epoch seconds) of
+    the NEWEST ``done`` lineage row of ``run_id`` per partition (a
+    partition rebuilt under the same run id appends a second row). One
+    collect of the run's rows, kept on the driver and read again only
+    when the directory's stamp changes. The stamp is read before the
+    rows, so a write landing in between forces the next call to re-read."""
+    stamp = _lineage_stamp(spark, lineage_path)
+    if stamp is None:
+        return {}
+    key = (lineage_path, run_id)
+    cached = _SNAPSHOTS.pop(key, None)
+    if cached is None or cached[0] != stamp:
+        rows = spark.read.schema(LINEAGE).parquet(lineage_path).filter(
+            (F.col("run_id") == run_id) & (F.col("status") == "done")
+        ).select("stage", "partition_id", "docs_out",
+                 F.unix_micros("finished_at").alias("at_us")).collect()
+        snapshot: dict[str, dict[int, tuple[int, float]]] = {}
+        for r in sorted(rows, key=lambda r: r.at_us):  # the newest row wins
+            snapshot.setdefault(r.stage, {})[r.partition_id] = (r.docs_out, r.at_us / 1e6)
+        cached = (stamp, snapshot)
+    _SNAPSHOTS[key] = cached
+    while len(_SNAPSHOTS) > _SNAPSHOT_KEYS:
+        del _SNAPSHOTS[next(iter(_SNAPSHOTS))]
+    return cached[1]
 
 
 def completed_partitions(spark: SparkSession, lineage_path: str, run_id: str, stage: str) -> set[int]:
-    rows = _stage_rows(spark, lineage_path, run_id, stage)
-    if rows is None:
-        return set()
-    return {r.partition_id for r in rows.select("partition_id").collect()}
+    return set(_run_rows(spark, lineage_path, run_id).get(stage, ()))
 
 
 def committed_outputs(spark: SparkSession, lineage_path: str, run_id: str,
                       stage: str) -> dict[int, tuple[int, float]]:
     """partition_id → (docs_out, finished_at as epoch seconds) of the NEWEST
-    lineage row per partition, in one collect. Newest wins: a partition
-    rebuilt under the same run id appends a second row."""
-    rows = _stage_rows(spark, lineage_path, run_id, stage)
-    if rows is None:
-        return {}
-    newest = rows.groupBy("partition_id").agg(
-        F.max_by("docs_out", "finished_at").alias("docs_out"),
-        F.max(F.unix_micros("finished_at")).alias("at_us"),
-    )
-    return {r.partition_id: (r.docs_out, r.at_us / 1e6) for r in newest.collect()}
+    lineage row per partition."""
+    return dict(_run_rows(spark, lineage_path, run_id).get(stage, {}))

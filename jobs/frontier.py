@@ -37,6 +37,7 @@ per-host metadata and broadcast.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -85,9 +86,11 @@ def run_frontier(
         "sitemaps": sitemaps_path, "records": records_path,
         "ranks": ranks_path,
     })
-    fetched = read_input(spark, fetched_path).select("url", "text")
-    seen = read_input(spark, seen_path).select("url")
-    robots = read_input(spark, robots_path).select("host", "body")
+    # inputs are read (their schema inferred) only when something uses
+    # them: a run whose artifacts and seen set are reused reads fetched alone
+    fetched = functools.cache(lambda: read_input(spark, fetched_path).select("url", "text"))
+    seen = functools.cache(lambda: read_input(spark, seen_path).select("url"))
+    robots = functools.cache(lambda: read_input(spark, robots_path).select("host", "body"))
 
     def build_discovered():
         # n_refs = DISTINCT referencing sources (a nav that repeats one
@@ -95,7 +98,7 @@ def run_frontier(
         # channel is its own source — a page URL, a redirect's source URI,
         # or the sitemap listing
         links = (
-            fetched.select(
+            fetched().select(
                 "url",
                 F.explode(urls.extract_hrefs(F.col("text"))).alias("ref"),
             )
@@ -140,8 +143,8 @@ def run_frontier(
         if not _fl:
             fl = frontops.robots_filter(
                 runtime_filter.drop_list_anti_join(
-                    discovered, seen, "url", seen.count(), bloom_min),
-                frontops.parse_robots(robots)
+                    discovered, seen(), "url", seen().count(), bloom_min),
+                frontops.parse_robots(robots())
             )
             _fl.append(fl.localCheckpoint(eager=True))
         return _fl[0]
@@ -152,7 +155,7 @@ def run_frontier(
         sched = frontops.schedule_frontier(
             flagged().filter(~F.col("blocked")).drop("blocked"),
             "n_refs", crawl_delay_s=crawl_delay_s,
-            delays=frontops.crawl_delays(robots),
+            delays=frontops.crawl_delays(robots()),
         ).select(
             "url", "host", F.col("n_refs").alias("priority"),
             "slot", "fetch_offset_s",
@@ -188,13 +191,13 @@ def run_frontier(
         # crashed cycle re-runs cleanly. A build counts on its write.
         seen_set, seen_out, reused = commit(
             spark, seen_out_path,
-            lambda: seen.unionByName(discovered.select("url")).distinct(),
+            lambda: seen().unionByName(discovered.select("url")).distinct(),
         )
         if reused:
             seen_out = seen_set.count()
     return {
         "run_id": run_id,
-        "fetched_pages": fetched.count(),
+        "fetched_pages": fetched().count(),
         "discovered": ledger.counts["discovered"],
         "frontier": ledger.counts["frontier"],
         "blocked": ledger.counts["blocked"],

@@ -37,9 +37,9 @@ exactly what was skipped, and a reused artifact reports the row count
 its newest lineage row recorded at commit instead of re-counting.
 
 The input is read (its schema inferred) only once some artifact builds.
-A fully-resumed run never touches it and launches 3 Spark jobs: the one
-lineage collect (two jobs under adaptive execution) and the metrics
-append.
+A fully-resumed run never touches it and launches at most 2 Spark jobs:
+the metrics append, and one lineage collect unless the run's lineage
+snapshot (sinks/metrics) is current.
 
 Scale notes: every artifact is one relational pass over the corpus;
 ivf_cells is the single Arrow stage (broadcast-codebook matmul assign —

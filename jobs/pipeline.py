@@ -14,14 +14,16 @@ artifact. A stage whose lineage already holds every unit (all buckets,
 all shards) is complete: it reads only its lineage, skips its plan, its
 output write and its lineage job, and appends the same zero-count
 metrics row. A fully-resumed index reuses each artifact on its commit
-proof and takes its row count from the artifact's newest lineage row
-(one lineage collect), not from a count() job.
+proof and takes its row count from the artifact's newest lineage row,
+not from a count() job.
 
-What a fully resumed run still launches (9 Spark jobs with two buckets
-and two shards): extract, curate and pack each collect their lineage and
-append one metrics row (2 jobs each) and never read their input; the
-bridge launches none; index collects its lineage once (2 jobs under
-adaptive execution) and appends its metrics row (3). A commit proof
+What a fully resumed run still launches (at most 5 Spark jobs with two
+buckets and two shards): one metrics append per stage but the bridge,
+and at most one lineage collect. Every lineage question is answered from
+one driver-side snapshot of the run's rows (sinks/metrics), re-read only
+when the lineage directory changed, and a resumed stage writes no
+lineage, so the first stage reads it (or nobody does, when the last
+write was already read). No stage reads its input. A commit proof
 (sinks/ledger.readable) is driver-side: a FileSystem probe of
 ``_SUCCESS`` and one parquet footer read for the written schema. Metrics
 rows are Arrow-built local relations (sinks/metrics.local_frame), so

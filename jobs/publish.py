@@ -95,6 +95,9 @@ def run_publish(
         publish.json_line(*cols).alias("line"),
     )
     done = completed_partitions(spark, lineage_path, run_id, "publish")
+    # every shard id is < shards: lineage holding them all is complete,
+    # and the stage skips its plan, its write and the shard-set collect
+    complete = set(range(shards)) <= done
     if done:
         staged = staged.filter(~F.col("shard").isin(*sorted(done)))
 
@@ -104,10 +107,8 @@ def run_publish(
     # cheaper than materializing the serialized lines twice.
     delta = publish.manifest_agg(staged, shard_col="shard", line_col="line")
 
-    n_written = 0
-    if staged.isEmpty():
-        wrote = []
-    else:
+    n_written, wrote = 0, []
+    if not complete and not staged.isEmpty():
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             staged.repartition(min(shards, spark.sparkContext.defaultParallelism * 2), "shard")
@@ -139,12 +140,13 @@ def run_publish(
     ).write.mode("append").parquet(metrics_path)
 
     # terminal marker: all shards of THIS config have a lineage row
-    done_after = completed_partitions(spark, lineage_path, run_id, "publish")
-    all_shards = set(
-        r["shard"] for r in
-        df.select(shard_of(F.col(key_col), shards, seed).alias("shard")).distinct().collect()
-    )
-    complete = all_shards <= done_after
+    if not complete:
+        done_after = completed_partitions(spark, lineage_path, run_id, "publish")
+        all_shards = set(
+            r["shard"] for r in
+            df.select(shard_of(F.col(key_col), shards, seed).alias("shard")).distinct().collect()
+        )
+        complete = all_shards <= done_after
     marker = {"run_id": run_id, "shards": shards, "columns": cols, "seed": seed,
               "complete": complete}
     if complete:

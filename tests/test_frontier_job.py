@@ -216,9 +216,19 @@ def test_frontier_seen_out_snapshot(spark, inputs, tmp_path):
     assert "https://a.com/new1.html" in nxt
     assert "https://a.com/private/s.html" in nxt  # discovered even if blocked
     assert stats["seen_out"] == len(nxt)
-    # second run reuses the committed snapshot
-    stats2 = run_frontier(
-        spark, fetched, seen, robots, out, str(tmp_path / "lin5"), "f5",
-        seen_out_path=seen_out,
-    )
+    # second run reuses the committed snapshot and all three artifacts:
+    # it reads lineage once and counts fetched and the snapshot, and
+    # never reads seen or robots (not even their schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("frontier-reuse", "frontier-reuse")
+    try:
+        stats2 = run_frontier(
+            spark, fetched, seen, robots, out, str(tmp_path / "lin5"), "f5",
+            seen_out_path=seen_out,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats2["artifacts_reused"] == 3
     assert stats2["seen_out"] == stats["seen_out"]
+    assert stats2["fetched_pages"] == stats["fetched_pages"] == len(PAGES)
+    assert len(sc.statusTracker().getJobIdsForGroup("frontier-reuse")) <= 6

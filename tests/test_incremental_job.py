@@ -191,9 +191,9 @@ def test_lineage_rows_use_shared_schema_per_artifact(spark, tmp_path_factory):
 def test_fully_resumed_run_takes_counts_from_lineage(spark, tmp_path_factory):
     """A fully-resumed run reports every artifact's count from its commit
     lineage row: no per-artifact count() and no lineage head() job. What
-    is left is the input/artifact schema probes, one lineage collect and
-    the batch_docs count — 10 jobs here, where a count() plus a head job
-    per reused artifact takes 18."""
+    is left is the input/artifact schema probes, at most one lineage
+    collect and the batch_docs count — 6 jobs here, where a count() plus a
+    head job per reused artifact takes 18."""
     d = tmp_path_factory.mktemp("inc_resume")
     hist_p, idx, batch_p = _setup(spark, d)
     out, lin = str(d / "delta"), str(d / "lineage")

@@ -2,7 +2,8 @@
 probe holds on URI paths, the footer proof rejects what does not read
 back as Spark wrote it and launches no Spark job, `local_frame` builds
 exactly the frame `createDataFrame(<python list>)` builds, as one local
-partition, only sinks/ write lineage, the config stamp has one writer
+partition, only sinks/ write lineage, lineage questions share one
+snapshot that every write invalidates, the config stamp has one writer
 whose writes are atomic, and the rollup state (sinks/rollup_state.py)
 counts its snapshot without reading it back."""
 
@@ -285,3 +286,106 @@ def test_rollup_counts_come_from_the_write_and_the_ledger(spark, tmp_path):
     again = rs.apply_batch(spark, batch, state, ["k"], "value", "d1")
     assert again["skipped"] and again["n_state_rows"] == 2
     assert rs.ledger_head(spark, state) == (1, 2)
+
+
+def _lineage_units(spark, rows):
+    """``(partition_id, docs_out)`` pairs as append_lineage's unit frame."""
+    return local_frame(spark, [(p, n, n, 0, 0) for p, n in rows], LINEAGE_UNITS)
+
+
+@pytest.fixture(params=["plain", "uri"])
+def lineage(request, tmp_path):
+    path = str(tmp_path / "lineage")
+    return path if request.param == "plain" else pathlib.Path(path).as_uri()
+
+
+def test_unchanged_lineage_is_answered_without_a_spark_job(spark, lineage):
+    """Every lineage question of a run shares one driver-side snapshot:
+    only the first after a write collects."""
+    from doc_agent_spark.sinks.metrics import append_lineage, committed_outputs, completed_partitions
+
+    append_lineage(_lineage_units(spark, [(0, 3), (1, 4)]), lineage, "r1", "extract", 5)
+    append_lineage(_lineage_units(spark, [(0, 2)]), lineage, "r1", "curate", 5)
+    first, n_first = _jobs_in_group(
+        spark, f"snapshot-miss {lineage}", lambda: completed_partitions(spark, lineage, "r1", "extract"))
+    assert first == {0, 1} and n_first == 1
+    first.add(7)  # the caller's set is its own
+    again, n_again = _jobs_in_group(spark, f"snapshot-hit {lineage}", lambda: (
+        completed_partitions(spark, lineage, "r1", "extract"),
+        completed_partitions(spark, lineage, "r1", "curate"),
+        committed_outputs(spark, lineage, "r1", "extract"),
+        completed_partitions(spark, lineage, "r1", "pack"),
+    ))
+    assert n_again == 0
+    assert again[:2] == ({0, 1}, {0}) and again[3] == set()
+    assert {p: n for p, (n, _) in again[2].items()} == {0: 3, 1: 4}
+    other, n_other = _jobs_in_group(
+        spark, f"snapshot-other-run {lineage}", lambda: completed_partitions(spark, lineage, "r2", "extract"))
+    assert other == set() and n_other == 1
+    assert completed_partitions(spark, lineage + "_missing", "r1", "extract") == set()
+
+
+def test_lineage_snapshot_sees_every_write(spark, lineage):
+    """An append from this process, a file another writer drops into the
+    directory, and a rewrite with fewer rows are each seen by the next
+    question."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from doc_agent_spark.schema import LINEAGE
+    from doc_agent_spark.sinks.metrics import append_lineage, committed_outputs, completed_partitions
+
+    done = lambda: completed_partitions(spark, lineage, "r1", "extract")  # noqa: E731
+    append_lineage(_lineage_units(spark, [(0, 3)]), lineage, "r1", "extract", 5)
+    assert done() == {0}
+    append_lineage(_lineage_units(spark, [(1, 4)]), lineage, "r1", "extract", 5)
+    assert done() == {0, 1}
+
+    at = datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(seconds=1)
+    row = {"run_id": "r1", "stage": "extract", "partition_id": 0, "status": "done",
+           "docs_in": 9, "docs_out": 9, "spans_out": 0, "parse_failures": 0,
+           "wall_ms": 0, "finished_at": at}
+    pq.write_table(pa.Table.from_pylist([row, {**row, "partition_id": 2}],
+                                        schema=to_arrow_schema(LINEAGE)),
+                   os.path.join(lineage.removeprefix("file://"), "part-other-writer.parquet"))
+    assert done() == {0, 1, 2}
+    assert committed_outputs(spark, lineage, "r1", "extract")[0][0] == 9
+
+    # the partial-lineage pattern: the directory rewritten without a unit
+    kept = spark.read.schema(LINEAGE).parquet(lineage).filter("partition_id != 1").collect()
+    local_frame(spark, kept, LINEAGE).write.mode("overwrite").parquet(lineage)
+    assert done() == {0, 2}
+
+
+def test_committed_outputs_newest_row_wins(spark, tmp_path):
+    """A partition rebuilt under the same run id has two rows; the snapshot
+    answers exactly what a max_by(docs_out, finished_at) groupBy does."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from doc_agent_spark.schema import LINEAGE
+    from doc_agent_spark.sinks.metrics import append_lineage, committed_outputs
+
+    lin = str(tmp_path / "lineage")
+    append_lineage(_lineage_units(spark, [(0, 3), (1, 4), (2, 5)]), lin, "r1", "index", 5)
+    time.sleep(0.01)
+    append_lineage(_lineage_units(spark, [(1, 40)]), lin, "r1", "index", 5)
+    append_lineage(_lineage_units(spark, [(1, 99)]), lin, "r2", "index", 5)
+    time.sleep(0.01)
+    append_lineage(_lineage_units(spark, [(2, 50)]), lin, "r1", "index", 5)
+    expected = {
+        r.partition_id: (r.docs_out, r.at_us / 1e6) for r in
+        spark.read.schema(LINEAGE).parquet(lin)
+        .filter((F.col("run_id") == "r1") & (F.col("stage") == "index"))
+        .groupBy("partition_id").agg(
+            F.max_by("docs_out", "finished_at").alias("docs_out"),
+            F.max(F.unix_micros("finished_at")).alias("at_us"),
+        ).collect()
+    }
+    got = committed_outputs(spark, lin, "r1", "index")
+    assert got == expected
+    assert {p: n for p, (n, _) in got.items()} == {0: 3, 1: 40, 2: 50}

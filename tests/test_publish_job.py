@@ -65,10 +65,19 @@ def test_manifest_matches_content(spark, published):
 
 
 def test_resume_skips_everything(spark, published):
+    """Lineage holding every shard is a complete export: the resume reads
+    the input's schema (the config check), at most once its lineage, and
+    appends its metrics row; it plans, writes and collects nothing else."""
     stats, in_p, out, lin, met = published
-    again = run_publish(
-        spark, in_p, out, lin, met, run_id="pub1", shards=SHARDS,
-    )
+    sc = spark.sparkContext
+    sc.setJobGroup("publish-resume", "publish-resume")
+    try:
+        again = run_publish(
+            spark, in_p, out, lin, met, run_id="pub1", shards=SHARDS,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("publish-resume")) <= 3
     assert again["shards_written"] == 0
     assert again["shards_skipped"] == SHARDS
     assert again["complete"] is True
