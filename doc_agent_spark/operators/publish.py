@@ -133,15 +133,17 @@ def verify_shards(
 ) -> DataFrame:
     """Re-checksum WRITTEN shard files against the manifest: reads the
     published text shards back (`spark.read.text` preserves lines
-    byte-for-byte), recomputes (n_rows, n_bytes, checksum) per shard
+    byte-for-byte; partition discovery on the shards root yields each
+    line's ``shard``), recomputes (n_rows, n_bytes, checksum) per shard
     directory, and full-outer-joins the manifest — one row per shard with
     an ``ok`` verdict. A shard present on disk but absent from the
     manifest (or vice versa) surfaces as ok=false rather than vanishing
-    in an inner join. Audit cost = one scan of the published bytes; the
-    manifest side is metadata-sized and broadcast."""
+    in an inner join. Audit cost = one scan of the published bytes and a
+    shuffle join with the metadata-sized manifest (a full outer join
+    cannot broadcast either side)."""
     read_back = (
-        spark.read.text(shards_path + "/shard=*")
-        .withColumn("shard", F.regexp_extract(F.input_file_name(), r"shard=(\d+)", 1).cast("int"))
+        spark.read.text(shards_path)
+        .withColumn("shard", F.col("shard").cast("int"))
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("rb_rows"),
@@ -149,9 +151,8 @@ def verify_shards(
             F.sum(row_digest(F.col(line_col))).cast("decimal(38,0)").alias("rb_checksum"),
         )
     )
-    m = F.broadcast(manifest)
     return (
-        read_back.join(m, "shard", "full_outer")
+        read_back.join(manifest, "shard", "full_outer")
         .select(
             "shard", "n_rows", "n_bytes", "checksum",
             "rb_rows", "rb_bytes", "rb_checksum",

@@ -38,7 +38,8 @@ each artifact of one output directory and writes its lineage. Contract:
   current). With no such row it is counted and one row is backfilled
   (``wall_ms`` 0) — this converges a driver killed between the artifact
   write and the lineage append. The rows go to ``metrics.append_lineage``
-  in ONE write when the ``with`` block ends, also when a commit raised.
+  as ONE driver-side append (one part file, no Spark job) when the
+  ``with`` block ends, also when a commit raised.
 """
 
 from __future__ import annotations
@@ -52,14 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.publish import check_or_write_config, read_stamp, write_stamp
-from .metrics import (
-    LINEAGE_UNITS,
-    append_lineage,
-    committed_outputs,
-    fs_mtime,
-    fs_parquet_schema,
-    local_frame,
-)
+from .metrics import append_lineage, committed_outputs, fs_mtime, fs_parquet_schema
 
 # Stamp keys that only say the artifacts are OUT OF DATE (a new embedder,
 # a rewritten input snapshot): rebuild_stale may wipe and rebuild. Every
@@ -195,8 +189,7 @@ class Ledger:
 
     def __exit__(self, *exc) -> None:
         if self._rows:
-            units = local_frame(self.spark, self._rows, LINEAGE_UNITS + ", wall_ms long")
-            append_lineage(units, self.lineage_path, self.run_id, self.stage)
+            append_lineage(self.spark, self._rows, self.lineage_path, self.run_id, self.stage)
             self._rows = []
 
     def commit(self, name: str, build, partition_by: str | None = None) -> DataFrame:

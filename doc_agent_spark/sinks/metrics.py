@@ -2,34 +2,43 @@
 parse failures; SURVEY §4.2.3 checkpoint/resume bookkeeping).
 
 Every lineage row (schema.LINEAGE) is appended by :func:`append_lineage`
-from a per-unit count frame. Bucket/shard jobs (extract, curate, pack,
+from per-unit count rows. Bucket/shard jobs (extract, curate, pack,
 publish) compute their units after the output write commits, each from
-its own pruned aggregate, and write a one-row metrics rollup per stage;
-artifact-granular jobs (index, frontier, incremental) commit through
-sinks/ledger.py, whose ``Ledger`` hands over one unit per artifact. The
-read side: resume = anti-join the completed partitions, and a reused
-artifact takes its row count from the lineage row written when it was
-committed. Both are answered from one driver-side snapshot of the run's
-``done`` rows (:func:`_run_rows`): one collect, read again only when the
-lineage directory's stamp changes, so stages that write no lineage — a
-resumed pipeline leg — share a single read, and an append from any
-process invalidates it. Whether a lineage directory (or a commit marker) exists is
-asked of the path's Hadoop FileSystem (:func:`fs_mtime`), so a ``file:``,
+its own pruned aggregate collected to the driver (one row per unit), and
+write a one-row metrics rollup per stage; artifact-granular jobs (index,
+frontier, incremental) commit through sinks/ledger.py, whose ``Ledger``
+hands over one unit per artifact. The read side: resume = anti-join the
+completed partitions, and a reused artifact takes its row count from
+the lineage row written when it was committed. Both are answered from
+one driver-side snapshot of the run's ``done`` rows (:func:`_run_rows`):
+one collect, read again only when the lineage directory's stamp changes,
+so stages that write no lineage — a resumed pipeline leg — share a
+single read, and an append from any process invalidates it. Whether a
+lineage directory (or a commit marker) exists is asked of the path's
+Hadoop FileSystem (:func:`fs_mtime`), so a ``file:``,
 ``hdfs://`` or ``s3a://`` lineage path resumes like a plain one; the
 schema a committed parquet artifact was written with is read from one
 footer through the same FileSystem (:func:`fs_parquet_schema`).
 
-Driver-built rows (metrics rollups, lineage rows, small lookup tables) go
-through :func:`local_frame`: an Arrow table becomes a one-partition local
-relation, where ``createDataFrame(<python list>)`` pickles the rows into a
+Driver-built rows that are only appended — metrics rollups, lineage
+rows, publish's manifest delta, the rollup ledger's ``applied`` row — go
+through :func:`append_rows`: the driver serializes them with pyarrow and
+commits one part file through the path's Hadoop FileSystem, with no
+Spark job (a Spark append of one row is a whole write job: plan, task,
+``_temporary`` commit). Driver-built rows that feed a plan (BPE merges,
+centroids, id lists) go through :func:`local_frame`: an Arrow table
+becomes a one-partition local relation, where
+``createDataFrame(<python list>)`` pickles the rows into a
 ``defaultParallelism``-partition RDD and runs every action on it through
 Python workers.
 """
 
 from __future__ import annotations
 
+import datetime
 import functools
 import json
+import uuid
 from collections.abc import Sequence
 
 from py4j.protocol import Py4JJavaError
@@ -40,6 +49,19 @@ from pyspark.sql.types import StructType
 from ..schema import LINEAGE
 
 
+def _arrow_table(rows: Sequence[Sequence], schema: StructType):
+    """``rows`` (tuples or Rows, positional in ``schema``) as a
+    ``pyarrow.Table`` with the Arrow types Spark maps ``schema`` to."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
 def local_frame(spark: SparkSession, rows: Sequence[Sequence],
                 schema: StructType | str) -> DataFrame:
     """``rows`` (tuples or Rows, positional in ``schema``) as a DataFrame
@@ -47,19 +69,11 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence],
     built column-wise as a ``pyarrow.Table``: Spark plans it as one local
     partition, and no action on it starts a Python worker. ``schema`` is a
     StructType or a DDL string."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
     # a local relation splits into min(rows, cores) partitions; one is
     # enough for a driver-built table, and appends one file per write
-    return spark.createDataFrame(table, schema).coalesce(1)
+    return spark.createDataFrame(_arrow_table(rows, schema), schema).coalesce(1)
 
 
 @functools.cache
@@ -73,16 +87,23 @@ def _jclass(jvm, name: str):
     return obj
 
 
+def _filesystem(spark: SparkSession, path: str, *child: str):
+    """(the Hadoop FileSystem serving ``path``, the Hadoop Path of
+    ``path`` joined with ``child``): the driver's route to any URI scheme.
+    Raises Py4JJavaError when no FileSystem serves the scheme."""
+    sc = spark.sparkContext
+    target = _jclass(sc._jvm, "org.apache.hadoop.fs.Path")(path, *child)
+    return target.getFileSystem(sc._jsc.hadoopConfiguration()), target
+
+
 def fs_mtime(spark: SparkSession, path: str, *child: str) -> float | None:
     """Modification time (epoch seconds) of ``path`` (joined with
     ``child``, e.g. ``"_SUCCESS"``), None when it does not exist. One call
     on the path's Hadoop FileSystem from the Spark driver — the same probe
     for plain paths and ``file:``/``hdfs://``/``s3a://`` URIs — and no
     Spark job."""
-    sc = spark.sparkContext
-    target = _jclass(sc._jvm, "org.apache.hadoop.fs.Path")(path, *child)
     try:
-        fs = target.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs, target = _filesystem(spark, path, *child)
         # exists() first: a miss raising FileNotFoundException through
         # py4j costs more than the probe itself
         if not fs.exists(target):
@@ -141,20 +162,75 @@ def fs_parquet_schema(spark: SparkSession, path: str) -> StructType | None:
         return None
 
 
-# the per-unit counts of a lineage row: what append_lineage takes
-LINEAGE_UNITS = "partition_id int, docs_in long, docs_out long, spans_out long, parse_failures long"
+# Spark's parquet codec name -> (pyarrow's, the part-file suffix Spark
+# gives it); a codec pyarrow cannot write (lz4, lzo) falls back to snappy
+_CODECS = {"snappy": ("snappy", ".snappy"), "gzip": ("gzip", ".gz"),
+           "zstd": ("zstd", ".zstd"), "brotli": ("brotli", ".br"),
+           "none": ("none", ""), "uncompressed": ("none", "")}
 
 
-def append_lineage(units: DataFrame, lineage_path: str, run_id: str, stage: str,
-                   wall_ms: int | None = None) -> None:
-    """Append one ``done`` schema.LINEAGE row per unit of ``units``
-    (:data:`LINEAGE_UNITS`, plus a ``wall_ms`` column when ``wall_ms`` is
-    None), finished now."""
-    fixed = {"run_id": F.lit(run_id), "stage": F.lit(stage), "status": F.lit("done"),
-             "wall_ms": F.col("wall_ms") if wall_ms is None else F.lit(wall_ms),
-             "finished_at": F.current_timestamp()}
-    units.select(*(fixed.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
-                   for f in LINEAGE)).write.mode("append").parquet(lineage_path)
+def append_rows(spark: SparkSession, path: str, rows: Sequence[Sequence],
+                schema: StructType | str) -> None:
+    """Append ``rows`` (positional in ``schema``, a StructType or DDL
+    string) to the parquet directory ``path`` as one part file, written on
+    the driver: no Spark job. The file holds what
+    ``local_frame(spark, rows, schema).write.mode("append").parquet(path)``
+    writes — the same columns, types and values, compressed with the
+    session's parquet codec, timestamps as INT96 (Spark's default output
+    type), Spark's row schema and version in the footer — so Spark's
+    inference, :func:`fs_parquet_schema`, pyarrow and DuckDB read it as
+    they read a Spark-written file.
+
+    Through the path's Hadoop FileSystem (any URI scheme), with a fixed
+    number of calls: the bytes go to a hidden (``.``-prefixed) file in
+    one ``write``, which is renamed to its ``part-`` name, and
+    ``_SUCCESS`` is created if missing. A crash before the rename leaves
+    only the hidden file, which every reader skips; a failed rename
+    raises. Each append has its own file name, so concurrent appends
+    lose no row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = _arrow_table(rows, schema).replace_schema_metadata(
+        {SPARK_ROW_SCHEMA: schema.json(), "org.apache.spark.version": spark.version}
+    )
+    codec, ext = _CODECS.get(spark.conf.get("spark.sql.parquet.compression.codec").lower(),
+                             _CODECS["snappy"])
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, compression=codec, use_deprecated_int96_timestamps=True)
+    fs, directory = _filesystem(spark, path)
+    new_path = _jclass(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")
+    name = f"part-{uuid.uuid4()}-c000{ext}.parquet"
+    hidden = new_path(directory, "." + name)
+    out = fs.create(hidden, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(hidden, new_path(directory, name)):
+        raise OSError(f"could not rename {hidden} to {name} in {path}")
+    # the rename is the commit; the marker only has to exist. Rewriting it
+    # would cost a second create (on a local FileSystem without native
+    # libraries every create forks a chmod), and the lineage stamp already
+    # sees the new file in the directory's file count
+    success = new_path(directory, "_SUCCESS")
+    if not fs.exists(success):
+        fs.create(success, True).close()
+
+
+def append_lineage(spark: SparkSession, units: Sequence[Sequence], lineage_path: str,
+                   run_id: str, stage: str, wall_ms: int | None = None) -> None:
+    """Append one ``done`` schema.LINEAGE row per unit, finished now (the
+    driver's UTC clock), through :func:`append_rows`. A unit is
+    ``(partition_id, docs_in, docs_out, spans_out, parse_failures)``, plus
+    its own ``wall_ms`` when ``wall_ms`` is None."""
+    at = datetime.datetime.now(datetime.timezone.utc)
+    append_rows(spark, lineage_path, [
+        (run_id, stage, u[0], "done", *u[1:5], u[5] if wall_ms is None else wall_ms, at)
+        for u in units
+    ], LINEAGE)
 
 
 def _lineage_stamp(spark: SparkSession, lineage_path: str) -> tuple | None:
@@ -164,10 +240,8 @@ def _lineage_stamp(spark: SparkSession, lineage_path: str) -> tuple | None:
     adds a uniquely named part file, an overwrite rewrites ``_SUCCESS``.
     None when the directory does not exist. A fixed number of FileSystem
     calls whatever the file count, and no Spark job."""
-    sc = spark.sparkContext
-    target = _jclass(sc._jvm, "org.apache.hadoop.fs.Path")(lineage_path)
     try:
-        fs = target.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs, target = _filesystem(spark, lineage_path)
         if not fs.exists(target):
             return None
     except Py4JJavaError:  # no filesystem for the path's scheme

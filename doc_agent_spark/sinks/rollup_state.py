@@ -27,6 +27,7 @@ turns, they don't run together.
 
 from __future__ import annotations
 
+import datetime
 import os
 import time
 
@@ -34,11 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ledger import write_counted
-from .metrics import local_frame
+from .metrics import append_rows
 
 LEDGER_SCHEMA = (
     "batch_id string, version long, n_state_rows long, batch_rows long,"
-    " wall_ms long"
+    " wall_ms long, applied_at timestamp"
 )
 
 
@@ -52,7 +53,7 @@ def read_ledger(spark: SparkSession, state_path: str) -> DataFrame | None:
     if not os.path.exists(path):
         return None
     try:
-        return spark.read.schema(LEDGER_SCHEMA + ", applied_at timestamp").parquet(path)
+        return spark.read.schema(LEDGER_SCHEMA).parquet(path)
     except Exception as e:
         raise RuntimeError(
             f"rollup ledger at {path} exists but is unreadable — refusing to "
@@ -143,10 +144,11 @@ def apply_batch(
     n_state = write_counted(state, lambda df: df.write.mode("overwrite").parquet(snap_path))
     wall_ms = int((time.time() - t0) * 1000)
     check_or_write_config(cfg_base, cfg)  # first commit records the config
-    local_frame(
-        spark, [(batch_id, new_version, n_state, batch_rows, wall_ms)], LEDGER_SCHEMA
-    ).withColumn("applied_at", F.current_timestamp()).write.mode("append").parquet(
-        os.path.join(state_path, "applied")
+    append_rows(
+        spark, os.path.join(state_path, "applied"),
+        [(batch_id, new_version, n_state, batch_rows, wall_ms,
+          datetime.datetime.now(datetime.timezone.utc))],
+        LEDGER_SCHEMA,
     )
     return {
         "batch_id": batch_id, "skipped": False, "version": new_version,

@@ -315,8 +315,8 @@ def run_curate(
     from doc_agent_spark.sinks.ledger import commit
     from doc_agent_spark.sinks.metrics import (
         append_lineage,
+        append_rows,
         completed_partitions,
-        local_frame,
     )
     from doc_agent_spark.sources.tables import read_input
 
@@ -540,7 +540,7 @@ def run_curate(
             kept.alias("spans_out"),
             F.lit(0).alias("parse_failures"),
         ).withColumnRenamed("bucket", "partition_id")
-        append_lineage(units, lineage_path, run_id, "curate",
+        append_lineage(spark, units.collect(), lineage_path, run_id, "curate",
                        int((time.time() - t0) * 1000))
 
     wall_ms = int((time.time() - t0) * 1000)
@@ -548,8 +548,8 @@ def run_curate(
         "docs_in", "after_dedup", "after_filters", "kept", "lines_removed",
         "span_tokens_removed",
     )}
-    metrics_row = local_frame(
-        spark,
+    append_rows(
+        spark, metrics_path,
         [(
             run_id, "curate", counts["docs_in"], counts["after_dedup"],
             counts["after_filters"], counts["kept"],
@@ -557,7 +557,6 @@ def run_curate(
         "run_id string, stage string, docs_in long, after_dedup long, "
         "after_filters long, kept long",
     )
-    metrics_row.write.mode("append").parquet(metrics_path)
     return {
         **counts,
         "boilerplate_artifact_reused": boiler_reused,

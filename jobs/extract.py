@@ -53,10 +53,11 @@ def run_extract(
 ) -> dict:
     from doc_agent_spark.operators import extractor
     from doc_agent_spark.plans.skew import split_heavy
+    from doc_agent_spark.schema import METRICS
     from doc_agent_spark.sinks.metrics import (
         append_lineage,
+        append_rows,
         completed_partitions,
-        local_frame,
     )
     from doc_agent_spark.sources.tables import read_input
 
@@ -109,17 +110,12 @@ def run_extract(
         flat.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
         m = obs.get
 
-        append_lineage(lineage_from_written(spark, output_path, done), lineage_path,
-                       run_id, "extract", int((time.time() - t0) * 1000))
+        append_lineage(spark, lineage_from_written(spark, output_path, done).collect(),
+                       lineage_path, run_id, "extract", int((time.time() - t0) * 1000))
 
     wall_ms = int((time.time() - t0) * 1000)
     n_docs, n_spans, n_failures = (int(m.get(k) or 0) for k in ("docs", "spans", "failures"))
-    metrics_row = local_frame(
-        spark,
-        [(run_id, "extract", n_docs, n_spans, n_failures)],
-        "run_id string, stage string, docs_processed long, spans_emitted long, parse_failures long",
-    )
-    metrics_row.write.mode("append").parquet(metrics_path)
+    append_rows(spark, metrics_path, [(run_id, "extract", n_docs, n_spans, n_failures)], METRICS)
     return {
         "docs_processed": n_docs,
         "spans_emitted": n_spans,
@@ -130,7 +126,7 @@ def run_extract(
 
 
 def lineage_from_written(spark, output_path, done):
-    """Per-bucket lineage counts (``metrics.LINEAGE_UNITS``) from the
+    """Per-bucket lineage units (``metrics.append_lineage``) from the
     WRITTEN data (source of truth: a crash between write and lineage
     append just re-does those buckets).
 

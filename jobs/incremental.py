@@ -81,7 +81,7 @@ def run_incremental(
 ) -> dict:
     from doc_agent_spark.operators import dedup
     from doc_agent_spark.sinks.ledger import Ledger
-    from doc_agent_spark.sinks.metrics import local_frame
+    from doc_agent_spark.sinks.metrics import append_rows
     from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
@@ -204,14 +204,14 @@ def run_incremental(
     built = ledger.counts
 
     if metrics_path:
-        local_frame(
-            spark,
+        append_rows(
+            spark, metrics_path,
             [(run_id, "incremental", built["pairs_delta"],
               built["drop_delta"], built["bands_delta"],
               int((time.time() - t0) * 1000))],
             "run_id string, stage string, pairs long, dropped long,"
             " band_rows long, wall_ms long",
-        ).write.mode("append").parquet(metrics_path)
+        )
 
     return {
         "batch_docs": raw_batch.count(),

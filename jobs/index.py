@@ -37,9 +37,9 @@ exactly what was skipped, and a reused artifact reports the row count
 its newest lineage row recorded at commit instead of re-counting.
 
 The input is read (its schema inferred) only once some artifact builds.
-A fully-resumed run never touches it and launches at most 2 Spark jobs:
-the metrics append, and one lineage collect unless the run's lineage
-snapshot (sinks/metrics) is current.
+A fully-resumed run never touches it and launches at most 1 Spark job:
+one lineage collect unless the run's lineage snapshot (sinks/metrics) is
+current. Its metrics row is appended on the driver (no job).
 
 Scale notes: every artifact is one relational pass over the corpus;
 ivf_cells is the single Arrow stage (broadcast-codebook matmul assign —
@@ -85,7 +85,7 @@ def run_index(
     from doc_agent_spark.functions.textfns import words_of
     from doc_agent_spark.operators import dedup, similarity
     from doc_agent_spark.sinks.ledger import Ledger
-    from doc_agent_spark.sinks.metrics import local_frame
+    from doc_agent_spark.sinks.metrics import append_rows
     from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
@@ -160,13 +160,13 @@ def run_index(
 
     wall_ms = int((time.time() - t0) * 1000)
     built, reused = ledger.counts, ledger.reused
-    local_frame(
-        spark,
+    append_rows(
+        spark, metrics_path,
         [(run_id, "index", built.get("embeddings", 0),
           built.get("bm25_postings", 0), sum(reused.values()), wall_ms)],
         "run_id string, stage string, n_vectors long, n_postings long, "
         "artifacts_reused long, wall_ms long",
-    ).write.mode("append").parquet(metrics_path)
+    )
     return {
         "artifacts": built,
         "reused": reused,

@@ -84,6 +84,7 @@ def run_pack(
     from doc_agent_spark.operators import packing, sampling
     from doc_agent_spark.sinks.metrics import (
         append_lineage,
+        append_rows,
         completed_partitions,
         local_frame,
     )
@@ -268,16 +269,15 @@ def run_pack(
             F.coalesce(F.col("slices"), F.lit(0)).alias("spans_out"),
             F.lit(0).alias("parse_failures"),
         )
-        append_lineage(units, lineage_path, run_id, "pack", wall_ms)
+        append_lineage(spark, units.collect(), lineage_path, run_id, "pack", wall_ms)
 
     n_slices, n_tokens, n_windows = (int(m.get(k) or 0) for k in ("slices", "tokens", "windows"))
-    metrics_row = local_frame(
-        spark,
+    append_rows(
+        spark, metrics_path,
         [(run_id, "pack", n_slices, n_tokens, n_windows, budget)],
         "run_id string, stage string, slices long, tokens long, "
         "windows long, budget long",
     )
-    metrics_row.write.mode("append").parquet(metrics_path)
     return {
         "slices": n_slices,
         "tokens": n_tokens,

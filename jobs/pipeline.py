@@ -17,17 +17,17 @@ metrics row. A fully-resumed index reuses each artifact on its commit
 proof and takes its row count from the artifact's newest lineage row,
 not from a count() job.
 
-What a fully resumed run still launches (at most 5 Spark jobs with two
-buckets and two shards): one metrics append per stage but the bridge,
-and at most one lineage collect. Every lineage question is answered from
-one driver-side snapshot of the run's rows (sinks/metrics), re-read only
+What a fully resumed run still launches: at most one Spark job, a
+lineage collect. Every lineage question is answered from one
+driver-side snapshot of the run's rows (sinks/metrics), re-read only
 when the lineage directory changed, and a resumed stage writes no
 lineage, so the first stage reads it (or nobody does, when the last
 write was already read). No stage reads its input. A commit proof
 (sinks/ledger.readable) is driver-side: a FileSystem probe of
-``_SUCCESS`` and one parquet footer read for the written schema. Metrics
-rows are Arrow-built local relations (sinks/metrics.local_frame), so
-none of it runs a Python worker.
+``_SUCCESS`` and one parquet footer read for the written schema. Every
+metrics row — like every lineage row of the cold run — is appended on
+the driver (sinks/metrics.append_rows: pyarrow bytes committed through
+the Hadoop FileSystem), so none of it is a Spark job.
 
 The bridge (extract's exploded span rows -> curate's documents contract)
 is a real pipeline stage, not glue: per doc it reassembles span text in

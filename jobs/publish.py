@@ -66,10 +66,9 @@ def run_publish(
     from doc_agent_spark.operators import publish
     from doc_agent_spark.operators.packing import shard_of
     from doc_agent_spark.sinks.metrics import (
-        LINEAGE_UNITS,
         append_lineage,
+        append_rows,
         completed_partitions,
-        local_frame,
     )
     from doc_agent_spark.sources.tables import read_input
 
@@ -120,24 +119,20 @@ def run_publish(
         delta_rows = delta.collect()  # manifest is n_shards rows: metadata-sized
         n_written = sum(r["n_rows"] for r in delta_rows)
         wrote = sorted(r["shard"] for r in delta_rows)
-        local_frame(spark, delta_rows, delta.schema).write.mode("append").parquet(
-            manifest_path
-        )
+        append_rows(spark, manifest_path, delta_rows, delta.schema)
         # one LINEAGE-schema row per committed shard (docs_in = docs_out =
         # rows serialized; spans_out carries the shard's byte count)
-        units = local_frame(spark, [
+        append_lineage(spark, [
             (r["shard"], r["n_rows"], r["n_rows"], r["n_bytes"], 0) for r in delta_rows
-        ], LINEAGE_UNITS)
-        append_lineage(units, lineage_path, run_id, "publish",
-                       int((time.time() - t0) * 1000))
+        ], lineage_path, run_id, "publish", int((time.time() - t0) * 1000))
 
     wall_ms = int((time.time() - t0) * 1000)
-    local_frame(
-        spark,
+    append_rows(
+        spark, metrics_path,
         [(run_id, "publish", n_written, len(wrote), len(done), wall_ms)],
         "run_id string, stage string, rows_written long, shards_written int,"
         " shards_skipped int, wall_ms long",
-    ).write.mode("append").parquet(metrics_path)
+    )
 
     # terminal marker: all shards of THIS config have a lineage row
     if not complete:

@@ -567,6 +567,6 @@ def test_cold_fuzzy_run_counts_its_drop_list_on_the_write(spark, tmp_path):
 
 
 # Spark jobs of that cold run: the near-dup clustering rounds, the
-# drop-list write (which counts the list), the funnel write, its lineage
-# and metrics appends
+# drop-list write (which counts the list), the funnel write and its
+# lineage collect (the lineage and metrics appends are driver-side)
 JOBS_COLD_FUZZY = 35

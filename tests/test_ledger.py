@@ -2,10 +2,12 @@
 probe holds on URI paths, the footer proof rejects what does not read
 back as Spark wrote it and launches no Spark job, `local_frame` builds
 exactly the frame `createDataFrame(<python list>)` builds, as one local
-partition, only sinks/ write lineage, lineage questions share one
-snapshot that every write invalidates, the config stamp has one writer
-whose writes are atomic, and the rollup state (sinks/rollup_state.py)
-counts its snapshot without reading it back."""
+partition, `append_rows` appends driver rows with no Spark job in files
+every reader takes for Spark's, only sinks/metrics.py writes lineage and
+driver rows, lineage questions share one snapshot that every write
+invalidates, the config stamp has one writer whose writes are atomic,
+and the rollup state (sinks/rollup_state.py) counts its snapshot without
+reading it back."""
 
 from __future__ import annotations
 
@@ -16,7 +18,7 @@ import pathlib
 import pytest
 
 from doc_agent_spark.sinks.ledger import readable
-from doc_agent_spark.sinks.metrics import LINEAGE_UNITS, local_frame
+from doc_agent_spark.sinks.metrics import local_frame
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
@@ -138,7 +140,8 @@ def test_footer_schema_equals_inferred_schema_for_index_artifacts(spark, tmp_pat
 # (schema, rows) pairs: the ledger's lineage rows, every stage's metrics
 # row, a codebook-shaped table with the float edge cases, and no rows
 CASES = {
-    "lineage": (LINEAGE_UNITS + ", wall_ms long",
+    "lineage": ("partition_id int, docs_in long, docs_out long, spans_out long, "
+                "parse_failures long, wall_ms long",
                 [(i, 7 * i, 7 * i, 0, 0, 12) for i in range(9)]),
     "extract": ("run_id string, stage string, docs_processed long, "
                 "spans_emitted long, parse_failures long",
@@ -206,6 +209,19 @@ def test_create_dataframe_only_inside_local_frame():
     assert calls == [("doc_agent_spark/sinks/metrics.py", "local_frame")], calls
 
 
+def _local_frame_writes(tree: ast.AST) -> list[int]:
+    """Line numbers of every ``.write`` on a ``local_frame(...)`` result
+    or on a name the same module binds to one."""
+    bound = {t.id for node in ast.walk(tree) if isinstance(node, ast.Assign)
+             and "local_frame(" in ast.unparse(node.value)
+             for t in node.targets if isinstance(t, ast.Name)}
+    return [
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr == "write"
+        and ("local_frame(" in ast.unparse(node.value) or ast.unparse(node.value) in bound)
+    ]
+
+
 def _lineage_writes(tree: ast.AST) -> list[int]:
     """Line numbers of every ``<writer>.<format>(<...lineage...>)`` call:
     a write (``.write`` in the receiver) whose target names a lineage
@@ -218,17 +234,40 @@ def _lineage_writes(tree: ast.AST) -> list[int]:
     ]
 
 
+def _calls(tree: ast.AST, name: str) -> list[ast.Call]:
+    return [node for node in ast.walk(tree) if isinstance(node, ast.Call)
+            and (ast.unparse(node.func) == name or ast.unparse(node.func).endswith("." + name))]
+
+
 def test_lineage_and_stamp_have_one_writer():
-    """Lineage rows are appended only by sinks/ (metrics.append_lineage),
-    and one module names the config stamp file."""
+    """Lineage rows and appended driver-built rows are written only by
+    sinks/metrics.py (append_lineage over append_rows): no `.write` is
+    chained on a `local_frame(...)` result (or a name bound to one), no
+    lineage path is written with `.write`, every `append_rows` naming a
+    lineage path is append_lineage's, and every bucket/shard job and the
+    Ledger append lineage through append_lineage. One module names the
+    config stamp file."""
     sources = {
         str(path.relative_to(ROOT)): path.read_text()
         for top in ("doc_agent_spark", "jobs")
         for path in sorted((ROOT / top).rglob("*.py"))
     }
-    writes = [(name, line) for name, text in sources.items()
-              for line in _lineage_writes(ast.parse(text))]
-    assert writes and all(n.startswith("doc_agent_spark/sinks/") for n, _ in writes), writes
+    trees = {name: ast.parse(text) for name, text in sources.items()}
+    chained = [(name, line) for name, tree in trees.items()
+               for line in _local_frame_writes(tree)]
+    assert chained == [], chained
+    lineage_writes = [(name, line) for name, tree in trees.items()
+                      for line in _lineage_writes(tree)]
+    assert lineage_writes == [], lineage_writes
+    lineage_appends = [(name, ast.unparse(arg)) for name, tree in trees.items()
+                       for call in _calls(tree, "append_rows")
+                       for arg in [*call.args, *(k.value for k in call.keywords)]
+                       if "lineage" in ast.unparse(arg)]
+    assert lineage_appends == [("doc_agent_spark/sinks/metrics.py", "lineage_path")], \
+        lineage_appends
+    callers = {name for name, tree in trees.items() if _calls(tree, "append_lineage")}
+    assert callers >= {"jobs/extract.py", "jobs/curate.py", "jobs/pack.py", "jobs/publish.py",
+                       "doc_agent_spark/sinks/ledger.py"}, callers
     stamps = [name for name, text in sources.items() if "_config.json" in text]
     assert stamps == ["doc_agent_spark/operators/publish.py"], stamps
 
@@ -288,9 +327,9 @@ def test_rollup_counts_come_from_the_write_and_the_ledger(spark, tmp_path):
     assert rs.ledger_head(spark, state) == (1, 2)
 
 
-def _lineage_units(spark, rows):
-    """``(partition_id, docs_out)`` pairs as append_lineage's unit frame."""
-    return local_frame(spark, [(p, n, n, 0, 0) for p, n in rows], LINEAGE_UNITS)
+def _lineage_units(rows):
+    """``(partition_id, docs_out)`` pairs as append_lineage's units."""
+    return [(p, n, n, 0, 0) for p, n in rows]
 
 
 @pytest.fixture(params=["plain", "uri"])
@@ -304,8 +343,8 @@ def test_unchanged_lineage_is_answered_without_a_spark_job(spark, lineage):
     only the first after a write collects."""
     from doc_agent_spark.sinks.metrics import append_lineage, committed_outputs, completed_partitions
 
-    append_lineage(_lineage_units(spark, [(0, 3), (1, 4)]), lineage, "r1", "extract", 5)
-    append_lineage(_lineage_units(spark, [(0, 2)]), lineage, "r1", "curate", 5)
+    append_lineage(spark, _lineage_units([(0, 3), (1, 4)]), lineage, "r1", "extract", 5)
+    append_lineage(spark, _lineage_units([(0, 2)]), lineage, "r1", "curate", 5)
     first, n_first = _jobs_in_group(
         spark, f"snapshot-miss {lineage}", lambda: completed_partitions(spark, lineage, "r1", "extract"))
     assert first == {0, 1} and n_first == 1
@@ -326,9 +365,10 @@ def test_unchanged_lineage_is_answered_without_a_spark_job(spark, lineage):
 
 
 def test_lineage_snapshot_sees_every_write(spark, lineage):
-    """An append from this process, a file another writer drops into the
-    directory, and a rewrite with fewer rows are each seen by the next
-    question."""
+    """Back-to-back appends from this process (each well inside a second
+    of the one before: the directory's file count moves the stamp), a
+    file another writer drops into the directory, and a rewrite with
+    fewer rows are each seen by the next question."""
     import datetime
 
     import pyarrow as pa
@@ -339,10 +379,10 @@ def test_lineage_snapshot_sees_every_write(spark, lineage):
     from doc_agent_spark.sinks.metrics import append_lineage, committed_outputs, completed_partitions
 
     done = lambda: completed_partitions(spark, lineage, "r1", "extract")  # noqa: E731
-    append_lineage(_lineage_units(spark, [(0, 3)]), lineage, "r1", "extract", 5)
-    assert done() == {0}
-    append_lineage(_lineage_units(spark, [(1, 4)]), lineage, "r1", "extract", 5)
-    assert done() == {0, 1}
+    for i in range(4):
+        append_lineage(spark, _lineage_units([(i, 3 + i)]), lineage, "r1", "extract", 5)
+        got, n_jobs = _jobs_in_group(spark, f"sees-append {lineage} {i}", done)
+        assert got == set(range(i + 1)) and n_jobs == 1
 
     at = datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(seconds=1)
     row = {"run_id": "r1", "stage": "extract", "partition_id": 0, "status": "done",
@@ -351,13 +391,13 @@ def test_lineage_snapshot_sees_every_write(spark, lineage):
     pq.write_table(pa.Table.from_pylist([row, {**row, "partition_id": 2}],
                                         schema=to_arrow_schema(LINEAGE)),
                    os.path.join(lineage.removeprefix("file://"), "part-other-writer.parquet"))
-    assert done() == {0, 1, 2}
+    assert done() == {0, 1, 2, 3}
     assert committed_outputs(spark, lineage, "r1", "extract")[0][0] == 9
 
     # the partial-lineage pattern: the directory rewritten without a unit
     kept = spark.read.schema(LINEAGE).parquet(lineage).filter("partition_id != 1").collect()
     local_frame(spark, kept, LINEAGE).write.mode("overwrite").parquet(lineage)
-    assert done() == {0, 2}
+    assert done() == {0, 2, 3}
 
 
 def test_committed_outputs_newest_row_wins(spark, tmp_path):
@@ -371,12 +411,12 @@ def test_committed_outputs_newest_row_wins(spark, tmp_path):
     from doc_agent_spark.sinks.metrics import append_lineage, committed_outputs
 
     lin = str(tmp_path / "lineage")
-    append_lineage(_lineage_units(spark, [(0, 3), (1, 4), (2, 5)]), lin, "r1", "index", 5)
+    append_lineage(spark, _lineage_units([(0, 3), (1, 4), (2, 5)]), lin, "r1", "index", 5)
     time.sleep(0.01)
-    append_lineage(_lineage_units(spark, [(1, 40)]), lin, "r1", "index", 5)
-    append_lineage(_lineage_units(spark, [(1, 99)]), lin, "r2", "index", 5)
+    append_lineage(spark, _lineage_units([(1, 40)]), lin, "r1", "index", 5)
+    append_lineage(spark, _lineage_units([(1, 99)]), lin, "r2", "index", 5)
     time.sleep(0.01)
-    append_lineage(_lineage_units(spark, [(2, 50)]), lin, "r1", "index", 5)
+    append_lineage(spark, _lineage_units([(2, 50)]), lin, "r1", "index", 5)
     expected = {
         r.partition_id: (r.docs_out, r.at_us / 1e6) for r in
         spark.read.schema(LINEAGE).parquet(lin)
@@ -389,3 +429,144 @@ def test_committed_outputs_newest_row_wins(spark, tmp_path):
     got = committed_outputs(spark, lin, "r1", "index")
     assert got == expected
     assert {p: n for p, (n, _) in got.items()} == {0: 3, 1: 40, 2: 50}
+
+
+def test_append_rows_launches_no_spark_job(spark, lineage):
+    """A driver-row append commits through the path's FileSystem: no Spark
+    job, on a plain path and on a `file://` URI, and the rows read back
+    with the written schema."""
+    from doc_agent_spark.schema import METRICS
+    from doc_agent_spark.sinks.metrics import append_rows, fs_parquet_schema
+
+    rows = [("r1", "extract", 40, 311, 2), ("r1", "extract", 0, 0, 0)]
+    for i, row in enumerate(rows):
+        _, n_jobs = _jobs_in_group(spark, f"append-rows {lineage} {i}",
+                                   lambda: append_rows(spark, lineage, [row], METRICS))
+        assert n_jobs == 0
+    assert fs_parquet_schema(spark, lineage) == METRICS
+    assert readable(spark, lineage) is not None
+    assert sorted(map(tuple, spark.read.parquet(lineage).collect())) == sorted(rows)
+
+
+def _lineage_batch(first, n, at):
+    return [("r1", "extract", i, "done", i, i, 2 * i, i % 2, 7, at)
+            for i in range(first, first + n)]
+
+
+def test_mixed_spark_and_driver_appends_read_the_same(spark, tmp_path):
+    """A lineage directory holding Spark appends and `append_rows` files,
+    and one holding only `append_rows` files, read exactly as a directory
+    of Spark appends of the same rows: in Spark (inferred and given
+    schema), in pyarrow.dataset and in DuckDB; `finished_at` round-trips
+    to the microsecond."""
+    import datetime
+
+    import duckdb
+    import pyarrow.dataset as ds
+
+    from doc_agent_spark.schema import LINEAGE
+    from doc_agent_spark.sinks.metrics import append_rows, fs_parquet_schema
+
+    at = datetime.datetime(2026, 1, 2, 3, 4, 5, 678901, tzinfo=datetime.timezone.utc)
+    batches = [_lineage_batch(0, 2, at), _lineage_batch(2, 3, at),
+               _lineage_batch(5, 1, at), _lineage_batch(6, 2, at)]
+    ref, mixed, driver = (str(tmp_path / d) for d in ("spark", "mixed", "driver"))
+    for i, batch in enumerate(batches):
+        local_frame(spark, batch, LINEAGE).write.mode("append").parquet(ref)
+        append_rows(spark, driver, batch, LINEAGE)
+        if i % 2:
+            append_rows(spark, mixed, batch, LINEAGE)
+        else:
+            local_frame(spark, batch, LINEAGE).write.mode("append").parquet(mixed)
+    assert fs_parquet_schema(spark, driver) == fs_parquet_schema(spark, ref) == LINEAGE
+
+    def spark_rows(path, schema=None):
+        reader = spark.read.schema(schema) if schema else spark.read
+        df = reader.parquet(path)
+        return df.schema, sorted(map(tuple, df.collect()))
+
+    def arrow(path):
+        dataset = ds.dataset(path, format="parquet")
+        table = dataset.to_table().sort_by("partition_id")
+        return dataset.count_rows(), table.schema, table.to_pylist()
+
+    def duck(path):
+        return duckdb.sql(f"SELECT * FROM read_parquet('{path}/*.parquet') "
+                          "ORDER BY partition_id").fetchall()
+
+    want = spark_rows(ref)
+    assert [r[-1] for r in want[1]] == [at.replace(tzinfo=None)] * 8  # session zone is UTC
+    for path in (mixed, driver):
+        assert spark_rows(path) == want, path
+        assert spark_rows(path, LINEAGE) == spark_rows(ref, LINEAGE), path
+        assert arrow(path) == arrow(ref), path
+        assert duck(path) == duck(ref), path
+
+
+def test_append_that_dies_before_rename_leaves_no_row(spark, lineage, monkeypatch):
+    """A driver killed between the hidden file's `create` and its rename
+    leaves only the hidden file: no reader sees a row of it, and the next
+    append and `completed_partitions` are correct."""
+    import pyarrow.dataset as ds
+
+    from doc_agent_spark.schema import LINEAGE
+    from doc_agent_spark.sinks import metrics
+
+    append_lineage = metrics.append_lineage
+    append_lineage(spark, _lineage_units([(0, 3)]), lineage, "r1", "extract", 5)
+
+    class Killed(Exception):
+        pass
+
+    class DiesBeforeRename:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, *a):
+            raise Killed
+
+    filesystem = metrics._filesystem
+
+    def dying(*a):
+        fs, target = filesystem(*a)
+        return DiesBeforeRename(fs), target
+
+    monkeypatch.setattr(metrics, "_filesystem", dying)
+    with pytest.raises(Killed):
+        append_lineage(spark, _lineage_units([(1, 4)]), lineage, "r1", "extract", 5)
+    monkeypatch.undo()
+
+    local = lineage.removeprefix("file://")
+    hidden = [f for f in os.listdir(local) if f.startswith(".part-") and not f.endswith(".crc")]
+    assert len(hidden) == 1
+    assert spark.read.schema(LINEAGE).parquet(lineage).count() == 1
+    assert ds.dataset(local, format="parquet").count_rows() == 1
+    assert metrics.completed_partitions(spark, lineage, "r1", "extract") == {0}
+
+    append_lineage(spark, _lineage_units([(1, 4)]), lineage, "r1", "extract", 5)
+    assert metrics.completed_partitions(spark, lineage, "r1", "extract") == {0, 1}
+    assert metrics.committed_outputs(spark, lineage, "r1", "extract")[1][0] == 4
+    assert spark.read.parquet(lineage).count() == 2
+
+
+def test_concurrent_appends_lose_no_row(spark, tmp_path):
+    """Four threads appending to one directory at once: every row lands."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from doc_agent_spark.sinks.metrics import append_lineage, completed_partitions
+
+    lin = str(tmp_path / "lineage")
+
+    def appends(t):
+        for i in range(5):
+            append_lineage(spark, _lineage_units([(10 * t + i, 1)]), lin, "r1", "extract", 1)
+
+    with ThreadPoolExecutor(4) as pool:
+        list(pool.map(appends, range(4)))
+    want = {10 * t + i for t in range(4) for i in range(5)}
+    assert completed_partitions(spark, lin, "r1", "extract") == want
+    assert spark.read.parquet(lin).count() == len(want)
+

@@ -82,11 +82,12 @@ def _rows(spark, path):
 
 def test_fully_resumed_stage_reads_only_lineage(spark, corpus, cold, tmp_path):
     """A stage whose every bucket/shard is in lineage launches at most the
-    lineage read and the metrics append — it never reads its input, not
-    even its schema (running the full path over the empty remainder
-    takes 7-8 jobs) — and the lineage is read once for all three stages,
-    none of which writes it. A bucket missing from lineage still takes
-    the full path and rebuilds exactly the cold output."""
+    lineage read — it never reads its input, not even its schema (running
+    the full path over the empty remainder takes 7-8 jobs), and its
+    metrics row is a driver-side append — and the lineage is read once
+    for all three stages, none of which writes it. A bucket missing from
+    lineage still takes the full path and rebuilds exactly the cold
+    output."""
     import shutil
 
     from jobs.curate import run_curate
@@ -109,7 +110,7 @@ def test_fully_resumed_stage_reads_only_lineage(spark, corpus, cold, tmp_path):
     }
     for name, (run, skipped, units) in stages.items():
         st, n_jobs = _jobs_in_group(spark, f"resume-{name}", run)
-        assert n_jobs <= (2 if name == "extract" else 1), (name, n_jobs)
+        assert n_jobs <= (1 if name == "extract" else 0), (name, n_jobs)
         assert st[skipped] == units
         # a full resume still reports zero counts and appends one zero metrics row
         assert all(v in (0, None) for k, v in st.items() if k not in (skipped, "wall_ms"))
@@ -136,10 +137,11 @@ def test_fully_resumed_stage_reads_only_lineage(spark, corpus, cold, tmp_path):
 
 def test_fully_resumed_pipeline_job_inventory(spark, corpus, cold, monkeypatch):
     """A whole resumed pipeline leg: extract, curate and pack read only
-    their lineage and append a metrics row, the bridge's commit proof is
-    driver-side (no job), and index appends its metrics row. No stage
-    writes lineage, so the leg reads it at most once (the cold leg's
-    publish stage read it after the last write): 5 jobs at most."""
+    their lineage, the bridge's and index's commit proofs are driver-side,
+    and every metrics row is a driver-side append: no stage launches a
+    job but for the one lineage collect. No stage writes lineage, so the
+    leg reads it at most once (none when the last write was already
+    read): 1 job at most."""
     import jobs.pipeline as jp
 
     wd, _ = cold
@@ -155,10 +157,35 @@ def test_fully_resumed_pipeline_job_inventory(spark, corpus, cold, monkeypatch):
     stats = run_pipeline(spark, corpus, wd, "p1", buckets=4, shards=2)
     assert stats["bridge"]["resumed"] is True
     assert stats["index"]["artifacts_reused"] == 9
-    assert n_jobs["bridge"] == 0, n_jobs
-    assert n_jobs["index"] <= 1, n_jobs
-    assert all(n_jobs[s] <= 2 for s in ("extract", "curate", "pack")), n_jobs
-    assert sum(n_jobs.values()) <= 5, n_jobs
+    assert all(n <= 1 for n in n_jobs.values()), n_jobs
+    assert sum(n_jobs.values()) <= 1, n_jobs
+
+
+# each stage's own metrics columns (besides run_id and stage)
+METRIC_COLUMNS = {
+    "extract": {"docs_processed", "spans_emitted", "parse_failures"},
+    "curate": {"docs_in", "after_dedup", "after_filters", "kept"},
+    "pack": {"slices", "tokens", "windows", "budget"},
+    "index": {"n_vectors", "n_postings", "artifacts_reused", "wall_ms"},
+    "publish": {"rows_written", "shards_written", "shards_skipped", "wall_ms"},
+}
+
+
+def test_metrics_table_holds_one_row_per_stage_per_leg(spark, corpus, tmp_path):
+    """After a cold and a resumed leg, the shared metrics table, read with
+    every stage's schema merged, holds one row per stage per leg, each
+    with exactly its stage's columns set."""
+    wd = str(tmp_path / "run")
+    for _ in range(2):
+        run_pipeline(spark, corpus, wd, "m1", buckets=2, shards=2, publish=True)
+    metrics = spark.read.option("mergeSchema", True).parquet(wd + "/metrics")
+    assert set(metrics.columns) == {"run_id", "stage"}.union(*METRIC_COLUMNS.values())
+    rows = [r.asDict() for r in metrics.collect()]
+    assert sorted(r["stage"] for r in rows) == sorted([*METRIC_COLUMNS] * 2)
+    for r in rows:
+        assert r["run_id"] == "m1"
+        assert {k for k, v in r.items() if v is not None} == \
+            {"run_id", "stage"} | METRIC_COLUMNS[r["stage"]], r
 
 
 def test_pipeline_jsonl_ingest_with_quarantine(spark, tmp_path_factory):

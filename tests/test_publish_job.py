@@ -66,8 +66,9 @@ def test_manifest_matches_content(spark, published):
 
 def test_resume_skips_everything(spark, published):
     """Lineage holding every shard is a complete export: the resume reads
-    the input's schema (the config check), at most once its lineage, and
-    appends its metrics row; it plans, writes and collects nothing else."""
+    the input's schema (the config check) and appends its metrics row on
+    the driver; its lineage snapshot is current, and it plans, writes and
+    collects nothing else."""
     stats, in_p, out, lin, met = published
     sc = spark.sparkContext
     sc.setJobGroup("publish-resume", "publish-resume")
@@ -77,7 +78,7 @@ def test_resume_skips_everything(spark, published):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("publish-resume")) <= 3
+    assert len(sc.statusTracker().getJobIdsForGroup("publish-resume")) <= 1
     assert again["shards_written"] == 0
     assert again["shards_skipped"] == SHARDS
     assert again["complete"] is True
@@ -108,6 +109,24 @@ def test_tamper_detected(spark, published):
         lines = open(victim).read().splitlines(keepends=True)
         with open(victim, "w") as fh:
             fh.writelines(lines[:-1])
+
+
+def test_verify_flags_a_shard_missing_on_either_side(spark, published):
+    """A shard on disk but absent from the manifest, and a manifest row
+    whose shard is not on disk, each surface as one ok=false row that
+    keeps the side it has."""
+    stats, in_p, out, *_ = published
+    from doc_agent_spark.operators import publish as pub
+
+    man = final_manifest(spark, out + "_manifest")
+    ghost = man.filter("shard = 0").withColumn(
+        "shard", F.lit(SHARDS + 3).cast(man.schema["shard"].dataType))
+    vm = pub.verify_shards(spark, out + "_shards", man.filter("shard != 1").unionByName(ghost))
+    rows = {r["shard"]: r for r in vm.collect()}
+    assert {s: r["ok"] for s, r in rows.items()} == {
+        **{s: s != 1 for s in range(SHARDS)}, SHARDS + 3: False}
+    assert rows[1]["n_rows"] is None and rows[1]["rb_rows"] > 0
+    assert rows[SHARDS + 3]["rb_rows"] is None and rows[SHARDS + 3]["n_rows"] > 0
 
 
 def test_manifest_parallelism_invariant(spark, published):
