@@ -182,12 +182,15 @@ def append_rows(spark: SparkSession, path: str, rows: Sequence[Sequence],
     they read a Spark-written file.
 
     Through the path's Hadoop FileSystem (any URI scheme), with a fixed
-    number of calls: the bytes go to a hidden (``.``-prefixed) file in
-    one ``write``, which is renamed to its ``part-`` name, and
-    ``_SUCCESS`` is created if missing. A crash before the rename leaves
-    only the hidden file, which every reader skips; a failed rename
-    raises. Each append has its own file name, so concurrent appends
-    lose no row."""
+    number of calls: the bytes go in one ``write`` to a hidden
+    (``.``-prefixed) file beside the directory, in its parent, which is
+    renamed into the directory under its ``part-`` name, and ``_SUCCESS``
+    is created if missing. Staged outside the directory, the file enters
+    the lineage stamp (:func:`_lineage_stamp`) with the rename that makes
+    it visible, so a snapshot read during the append is never kept past
+    it. A crash before the rename leaves only the hidden file, which
+    every reader skips; a failed rename raises. Each append has its own
+    file name, so concurrent appends lose no row."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -203,7 +206,11 @@ def append_rows(spark: SparkSession, path: str, rows: Sequence[Sequence],
     fs, directory = _filesystem(spark, path)
     new_path = _jclass(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")
     name = f"part-{uuid.uuid4()}-c000{ext}.parquet"
-    hidden = new_path(directory, "." + name)
+    hidden = new_path(directory.getParent(), f".{directory.getName()}.{name}")
+    success = new_path(directory, "_SUCCESS")
+    fresh = not fs.exists(success)
+    if fresh:  # the rename needs its target directory
+        fs.mkdirs(directory)
     out = fs.create(hidden, False)
     try:
         out.write(buf.getvalue().to_pybytes())
@@ -213,10 +220,8 @@ def append_rows(spark: SparkSession, path: str, rows: Sequence[Sequence],
         raise OSError(f"could not rename {hidden} to {name} in {path}")
     # the rename is the commit; the marker only has to exist. Rewriting it
     # would cost a second create (on a local FileSystem without native
-    # libraries every create forks a chmod), and the lineage stamp already
-    # sees the new file in the directory's file count
-    success = new_path(directory, "_SUCCESS")
-    if not fs.exists(success):
+    # libraries every create forks a chmod)
+    if fresh:
         fs.create(success, True).close()
 
 
@@ -237,7 +242,10 @@ def _lineage_stamp(spark: SparkSession, lineage_path: str) -> tuple | None:
     """What a committed write to the lineage directory always changes:
     the (files, directories, bytes) under it, as one ``getContentSummary``
     on the path's Hadoop FileSystem, and its ``_SUCCESS`` time. An append
-    adds a uniquely named part file, an overwrite rewrites ``_SUCCESS``.
+    adds a uniquely named part file (:func:`append_rows` stages it outside
+    the directory, so it is counted from the moment it is visible; a
+    Spark append's ``_temporary`` directory moves the count while it
+    writes), an overwrite rewrites ``_SUCCESS``.
     None when the directory does not exist. A fixed number of FileSystem
     calls whatever the file count, and no Spark job."""
     try:

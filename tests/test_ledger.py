@@ -540,8 +540,10 @@ def test_append_that_dies_before_rename_leaves_no_row(spark, lineage, monkeypatc
     monkeypatch.undo()
 
     local = lineage.removeprefix("file://")
-    hidden = [f for f in os.listdir(local) if f.startswith(".part-") and not f.endswith(".crc")]
+    hidden = [f for f in os.listdir(os.path.dirname(local))
+              if f.startswith(".lineage.part-") and not f.endswith(".crc")]
     assert len(hidden) == 1
+    assert not [f for f in os.listdir(local) if f.startswith(".") and not f.endswith(".crc")]
     assert spark.read.schema(LINEAGE).parquet(lineage).count() == 1
     assert ds.dataset(local, format="parquet").count_rows() == 1
     assert metrics.completed_partitions(spark, lineage, "r1", "extract") == {0}
@@ -550,6 +552,40 @@ def test_append_that_dies_before_rename_leaves_no_row(spark, lineage, monkeypatc
     assert metrics.completed_partitions(spark, lineage, "r1", "extract") == {0, 1}
     assert metrics.committed_outputs(spark, lineage, "r1", "extract")[1][0] == 4
     assert spark.read.parquet(lineage).count() == 2
+
+
+def test_snapshot_read_during_an_append_is_not_kept_past_it(spark, lineage, monkeypatch):
+    """A lineage question asked after an append has written its bytes but
+    before the rename that commits them caches a snapshot without the
+    row; the rename moves the stamp, so the next question sees the row."""
+    from doc_agent_spark.sinks import metrics
+
+    metrics.append_lineage(spark, _lineage_units([(0, 3)]), lineage, "r1", "extract", 5)
+    asked = []
+
+    class AsksBeforeRename:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, *a):
+            asked.append(metrics.completed_partitions(spark, lineage, "r1", "extract"))
+            return self.fs.rename(*a)
+
+    filesystem = metrics._filesystem
+
+    def asking(*a):
+        fs, target = filesystem(*a)
+        return AsksBeforeRename(fs), target
+
+    monkeypatch.setattr(metrics, "_filesystem", asking)
+    metrics.append_lineage(spark, _lineage_units([(1, 4)]), lineage, "r1", "extract", 5)
+    monkeypatch.undo()
+    assert asked == [{0}]
+    assert metrics.completed_partitions(spark, lineage, "r1", "extract") == {0, 1}
+    assert metrics.committed_outputs(spark, lineage, "r1", "extract")[1][0] == 4
 
 
 def test_concurrent_appends_lose_no_row(spark, tmp_path):
