@@ -16,22 +16,22 @@ salts rows across partitions when the INPUT FILES are clustered (e.g. one
 parquet file holding all heavy docs) — a shuffle we only pay when needed.
 
 The one engine is ``mapInArrow``: each Arrow batch decodes the span
-structs column-wise and calls ``spec.extract_document_cols`` — the bit-exact
-column twin of ``spec.extract_document``, the function the test oracle uses;
-there is no row-at-a-time Python UDF serialization (input_hint requirement).
+structs column-wise, ``spec.extract_rows`` extracts every document of the
+batch, and the result columns are built per batch; there is no
+row-at-a-time Python UDF serialization (input_hint requirement). The test
+oracle, ``spec.extract_document``, runs the same extraction one document
+at a time.
 
-Every Python task also pays a fixed cost before its first batch: the
-worker's ``setup_spark_files`` calls ``importlib.invalidate_caches()``, and
-on CPython < 3.12 each cached ``zipimporter`` (one per imported package of
-``pyspark.zip``, ~16) eagerly re-reads the archive's directory — 0.15-0.3 s
-of CPU per task, a large share of a short extraction task's transport
-time. Importing ``doc_agent_spark`` in a worker installs a stat-guarded
-``invalidate_caches`` (``doc_agent_spark/__init__.py``) that re-reads an
-archive only when its mtime or size changed, so only a worker's first
-task pays.
+A Python task's fixed start-up cost is paid once per worker, not once per
+task: importing ``doc_agent_spark`` installs a stat-guarded
+``zipimporter.invalidate_caches`` (``doc_agent_spark/__init__.py``), so a
+task's ``setup_spark_files`` no longer re-reads ``pyspark.zip`` for each
+cached importer.
 """
 
 from __future__ import annotations
+
+from itertools import accumulate, chain
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,48 +41,72 @@ from ..schema import EXTRACTION_RESULT
 
 
 def extract_batches_arrow(batches):
-    """mapInArrow worker: decodes the span struct COLUMN-WISE and builds the
-    result batch as TYPED pyarrow arrays (explicit schema, C++ builders).
+    """mapInArrow worker: decodes the span struct COLUMN-WISE, extracts the
+    batch with ``spec.extract_rows`` and builds the result batch per
+    column as TYPED pyarrow arrays (explicit schema, C++ builders).
 
     Input decode never materializes a Python dict per span: the list<struct>
     column is flattened once and each needed field converts as a flat
     primitive list (``flatten().field(..).to_pylist()``), which measured 3×
     faster than ``to_pylist()``'s dict building (1.00 s → 0.33 s / 20k docs)
     — and the ``kind`` field is skipped entirely because extraction never
-    reads it. Per-doc slices feed ``spec.extract_document_cols`` (bit-exact
-    twin of the dict path, pinned by tests/test_extractor.py). Output-side,
-    typed builders skip pandas' per-row type inference over the two nested
-    array<struct> columns (items, out_spans) — the round-2 finding."""
-    import pyarrow as pa
+    reads it. The output is built the same way in reverse: the row tuples
+    transpose into one Python list per column, and the two nested
+    array<struct> columns (items, out_spans) are a flat list per struct
+    field plus list offsets (``StructArray``/``ListArray.from_arrays``), with
+    no dict per document, item or span."""
     import pyarrow.compute as pc
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(EXTRACTION_RESULT)
-    extract_cols = spec.extract_document_cols
     for batch in batches:
-        doc_ids = batch.column(0).to_pylist()
         col = batch.column(1)
         flat = col.flatten()
-        texts = flat.field("text").to_pylist()
-        refs = flat.field("media_ref").to_pylist()
-        offs = [0 if o is None else o for o in flat.field("offset").to_pylist()]
-        lens = pc.list_value_length(col).to_pylist()
-        results = []
-        start = 0
-        for did, n in zip(doc_ids, lens):
-            end = start + n
-            results.append(
-                extract_cols(str(did), texts[start:end], refs[start:end], offs[start:end])
-            )
-            start = end
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([r[f.name] for r in results], type=f.type)
-                for f in schema
-            ],
-            schema=schema,
+        rows = spec.extract_rows(
+            batch.column(0).to_pylist(),
+            flat.field("text").to_pylist(),
+            flat.field("media_ref").to_pylist(),
+            [0 if o is None else o for o in flat.field("offset").to_pylist()],
+            pc.list_value_length(col).to_pylist(),
         )
+        yield _result_batch(rows, schema)
+
+
+def _result_batch(rows: list[tuple], schema):
+    """The EXTRACTION_RESULT record batch of ``spec.extract_rows`` rows."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * len(schema)
+    arrays = []
+    for f, values in zip(schema, cols):
+        if f.name == "items":
+            arrays.append(_list_of_structs(values, f.type, with_order=False))
+        elif f.name == "out_spans":
+            arrays.append(_list_of_structs(values, f.type, with_order=True))
+        else:
+            arrays.append(pa.array(values, type=f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _list_of_structs(lists, list_type, with_order: bool):
+    """A list<struct> array of per-row lists of tuples (None = null list),
+    built from one flat list per struct field. ``with_order`` prepends each
+    element's position in its list as the first field."""
+    import pyarrow as pa
+
+    lens = [0 if x is None else len(x) for x in lists]
+    flat = list(chain.from_iterable(x for x in lists if x))
+    fields = list(list_type.value_type)
+    values = list(zip(*flat)) or [()] * (len(fields) - with_order)
+    if with_order:
+        values.insert(0, list(chain.from_iterable(map(range, lens))))
+    struct = pa.StructArray.from_arrays(
+        [pa.array(v, type=fd.type) for v, fd in zip(values, fields)], fields=fields)
+    mask = [x is None for x in lists]
+    return pa.ListArray.from_arrays(
+        pa.array(list(accumulate(lens, initial=0)), type=pa.int32()), struct,
+        type=list_type, mask=pa.array(mask, type=pa.bool_()) if any(mask) else None)
 
 
 def extract(documents: DataFrame) -> DataFrame:

@@ -128,20 +128,47 @@ def fs_parquet_schema(spark: SparkSession, path: str) -> StructType | None:
     the row-group metadata, as Spark's own schema inference does. No Spark
     job. The schema holds the data columns only: partition columns live in
     directory names."""
+    found = _footer_schema(spark, path)
+    return None if found is None else found[0]
+
+
+def fs_parquet_columns(spark: SparkSession, path: str) -> list[str] | None:
+    """The column names ``spark.read.parquet(path)`` has, with no Spark
+    job: the footer schema of :func:`fs_parquet_schema` plus the partition
+    columns named by the ``key=value`` directories above its data file.
+    None where that schema is None or a directory level is not a plain
+    ``key=value`` name."""
+    found = _footer_schema(spark, path)
+    if found is None:
+        return None
+    schema, dirs = found
+    keys = [d.split("=", 1)[0] for d in dirs]
+    if any("=" not in d or not k or "%" in k for d, k in zip(dirs, keys)):
+        return None
+    return schema.names + [k for k in keys if k not in schema.names]
+
+
+def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType, list[str]] | None:
+    """(the footer schema of one data file under ``path``, the names of the
+    directories descended to reach it), or None."""
     sc = spark.sparkContext
     jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    dirs = []
     try:
         node = _jclass(jvm, "org.apache.hadoop.fs.Path")(path)
         fs = node.getFileSystem(conf)
         while True:
             # skip what Spark's file index hides: _SUCCESS, _temporary, .crc
-            first = next((st for st in fs.listStatus(node)
-                          if st.getPath().getName()[:1] not in "_."), None)
-            if first is None:
+            for first in fs.listStatus(node):
+                name = first.getPath().getName()
+                if name[:1] not in "_.":
+                    break
+            else:
                 return None
             node = first.getPath()
             if first.isFile():
                 break
+            dirs.append(name)
         parquet = "org.apache.parquet."
         skip = _jclass(jvm, parquet + "format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS")
         options = _jclass(jvm, parquet + "HadoopReadOptions").builder(conf) \
@@ -157,7 +184,7 @@ def fs_parquet_schema(spark: SparkSession, path: str) -> StructType | None:
     if row_schema is None:
         return None
     try:
-        return StructType.fromJson(json.loads(row_schema))
+        return StructType.fromJson(json.loads(row_schema)), dirs
     except (ValueError, KeyError, TypeError):
         return None
 

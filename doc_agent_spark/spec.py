@@ -4,13 +4,22 @@ This module is the pure-Python statement of everything the reference computes
 deterministically, plus the deterministic replacement of its one
 non-deterministic stage (the vision-LLM call), per BASELINE.json north_star.
 
-It is used in TWO places:
-  1. inside the Spark pipeline's Arrow-batched Python stage (``mapInArrow``
-     by default, ``operators/extractor.py``) — the distributed execution;
-  2. as the test oracle (``tests/``) — golden span sequences are produced by
-     these same functions on collected rows, so any divergence between the
-     distributed plan and the spec (ordering, grouping, null handling) fails
-     the span-sequence equality gate ``(kind, text, media_ref, order)``.
+Where it runs:
+  1. the Spark extraction stage (``operators/extractor.py``): the
+     ``mapInArrow`` worker calls :func:`extract_rows` once per Arrow batch;
+  2. the normalize stage (``operators/normalize.py``): the Zod emulation
+     :func:`normalize_docdata` over model-JSON strings;
+  3. the tests and the benchmark, as the oracle: :func:`extract_document`
+     and :func:`extract_document_cols` give the same extraction one
+     document at a time, so any divergence between the distributed plan
+     and the spec (ordering, grouping, null handling) fails the
+     span-sequence equality gate ``(kind, text, media_ref, order)``.
+
+The extraction is :func:`extract_fields` (the regex rules over the page
+lines) then :func:`finish_typed` (normalize and render the spans straight
+from the extracted types). ``normalize_docdata`` stays the reference of
+that second step: tests/test_properties.py checks the two against each
+other.
 
 Reference citations (all /root/reference):
 - page assembly       packages/extract/src/ocr.ts:46,57-61
@@ -25,11 +34,11 @@ Reference citations (all /root/reference):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import math
 import re
-from dataclasses import dataclass
 
 from .jsdate import ABSENT, js_num_to_str, js_number, normalize_date
 
@@ -298,12 +307,19 @@ _RE_TOTAL_LINE = re.compile(r"^\s*total\b", re.I)
 _RE_TAX = re.compile(r"^\s*(?:sales\s+)?tax\b", re.I)
 _RE_PAYMENT = re.compile(r"^\s*(?:credit|cash|card|visa|mastercard|amex|debit|change|payment|tender)\b", re.I)
 _RE_MONEY_TAIL = re.compile(r"(-?)\$?\s*(-?\d{1,3}(?:,\d{3})*(?:\.\d{1,4})?|-?\d+(?:\.\d{1,4})?)\s*$")
-_RE_DATE_TOKEN = re.compile(
-    r"(\d{4}-\d{2}-\d{2}"
-    r"|\d{1,2}/\d{1,2}/\d{2,4}"
-    r"|(?:January|February|March|April|May|June|July|August|September|October|November|December"
-    r"|Jan|Feb|Mar|Apr|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\.?\s+\d{1,2},?\s+\d{4})"
+_DATE_ISO = r"\d{4}-\d{2}-\d{2}"
+_DATE_SLASH = r"\d{1,2}/\d{1,2}/\d{2,4}"
+_DATE_NAMED = (
+    r"(?:January|February|March|April|May|June|July|August|September|October|November|December"
+    r"|Jan|Feb|Mar|Apr|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\.?\s+\d{1,2},?\s+\d{4}"
 )
+_RE_DATE_TOKEN = re.compile(f"({_DATE_ISO}|{_DATE_SLASH}|{_DATE_NAMED})")
+# its alternatives, searched apart by _date_match, and their hints
+_RE_DATE_ISO = re.compile(_DATE_ISO)
+_RE_DATE_SLASH = re.compile(_DATE_SLASH)
+_RE_DATE_NAMED = re.compile(_DATE_NAMED)
+_RE_ISO_HINT = re.compile(r"-\d{2}-")
+_RE_SLASH_HINT = re.compile(r"/\d{1,2}/")
 _RE_ITEM_QTY = re.compile(r"^\s*(\d+)\s*[xX]\s+(.+?)(?:\s\s+|\s+@[^@]*?\s+)(-?\$?[\d,]+\.\d{2})\s*$")
 _RE_ITEM_PLAIN = re.compile(r"^\s*(.+?)\s{2,}(-?\$?[\d,]+\.\d{2})\s*$")
 _RE_TXN = re.compile(r"^\s*(\d{1,2}/\d{1,2}(?:/\d{2,4})?)\s+(.+?)\s{2,}(-?\$?[\d,]+\.\d{2})\s*$")
@@ -315,8 +331,14 @@ _RE_RESERVED = re.compile(
 _RESERVED_FIRST = frozenset("stcvmadpbeo")
 
 
+# Every ASCII character a _RE_MONEY_TAIL match can span (\s in ASCII
+# includes \x1c-\x1f): in ASCII text a match starts after the last
+# character outside this set, so the search starts there.
+_MONEY_CHARS = "0123456789-$,. \t\n\r\x0b\x0c\x1c\x1d\x1e\x1f"
+
+
 def _parse_money(s: str) -> float | None:
-    m = _RE_MONEY_TAIL.search(s)
+    m = _RE_MONEY_TAIL.search(s, len(s.rstrip(_MONEY_CHARS)) if s.isascii() else 0)
     if not m:
         return None
     neg = m.group(1) == "-"
@@ -326,6 +348,43 @@ def _parse_money(s: str) -> float | None:
     except ValueError:
         return None
     return -v if neg and v > 0 else v
+
+
+def _parse_amount(g: str) -> float | None:
+    """:func:`_parse_money` of a money group of the item patterns
+    (``-?\\$?[\\d,]+\\.\\d{2}``). Without a comma the tail pattern matches
+    the whole group, so the value is its digits read by ``float()``."""
+    if "," in g:
+        return _parse_money(g)
+    try:
+        v = float(g.lstrip("-$"))
+    except ValueError:
+        return None
+    return -v if g[0] == "-" and v > 0 else v
+
+
+def _date_match(raw_text: str):
+    """``_RE_DATE_TOKEN.search(raw_text)``, one alternative at a time. No
+    two alternatives match at the same start (a month name starts with a
+    letter; an ISO date has a digit where a slash date has its slash), so
+    the leftmost of their leftmost matches is the union's. Each alternative
+    alone scans faster than the union (the regex engine skips to the
+    initials of the month names), and the digit forms are searched only
+    from their first possible start: an ISO date starts 4 characters
+    before a ``-dd-`` hint, a slash date 1 or 2 before a ``/d/`` or
+    ``/dd/`` hint. An ISO or slash date is at most 10 characters
+    long, so one that starts before a match found at ``b`` lies within
+    ``raw_text[:b + 9]``."""
+    best = _RE_DATE_NAMED.search(raw_text)
+    for pat, hint, lead in ((_RE_DATE_ISO, _RE_ISO_HINT, 4),
+                            (_RE_DATE_SLASH, _RE_SLASH_HINT, 2)):
+        h = hint.search(raw_text)
+        if h:
+            m = pat.search(raw_text, max(0, h.start() - lead),
+                           len(raw_text) if best is None else best.start() + 9)
+            if m and (best is None or m.start() < best.start()):
+                best = m
+    return best
 
 
 def classify(text: str) -> str:
@@ -340,7 +399,16 @@ def classify(text: str) -> str:
     regex runs unguarded. Within ASCII the equivalence is exact: ASCII
     pattern literals under re.I fold only with their ASCII counterparts."""
     asc = text.isascii()
-    low = text.lower() if asc else ""
+    return _classify(text, asc, text.lower() if asc else "", (text.split("\n"),))
+
+
+def _classify(text: str, asc: bool, low: str, pages) -> str:
+    """:func:`classify` over the document's ASCII flag, its lower-cased text
+    (``""`` unless ``asc``) and its lines grouped in lists. The line rules
+    only look at lines that can start with total/subtotal/tax, so the page
+    lines of :func:`extract_fields` give the same answer as the split of
+    the assembled text: the page headers and blank separators it adds
+    match none of them."""
     if ((not asc or "account" in low) and _RE_ACCOUNT.search(text)) or (
         (not asc or "balance" in low) and _RE_BALANCE.search(text)
     ):
@@ -349,225 +417,234 @@ def classify(text: str) -> str:
         (not asc or "due" in low) and _RE_DUE.search(text)
     ):
         return "invoice"
-    lns = text.split("\n")
     has_total = any(
         _RE_TOTAL_LINE.match(ln)
-        for ln in lns
+        for lns in pages for ln in lns
         if not asc or ln.lstrip()[:1] in "tT"
     )
     has_sub_or_tax = has_total and any(
         ((not asc or ln.lstrip()[:1] in "sS") and _RE_SUBTOTAL.match(ln))
         or ((not asc or ln.lstrip()[:1] in "sStT") and _RE_TAX.match(ln))
-        for ln in lns
+        for lns in pages for ln in lns
     )
     if has_total and has_sub_or_tax:
         return "receipt"
     return "other"
 
 
-@dataclass
-class PageLine:
-    """A text line with provenance: which span (page) it came from."""
-    offset: int       # source span offset
-    media_ref: str    # source span media_ref ('' for text spans)
-    page_num: int     # 1-based pre-filter page number
-    line: str
-
-
-def _doc_lines(spans: list[dict]) -> list[PageLine]:
-    """Flatten kept (non-whitespace) pages into provenance-tracked lines.
-
-    Spans MUST be pre-sorted by offset — the pipeline and oracle both sort
-    explicitly; order never comes from partition iteration (SURVEY §7.3).
-    """
-    out = []
-    for i, sp in enumerate(spans):
-        t = (sp.get("text") or "").strip()
-        if not t:
-            continue
-        for ln in t.split("\n"):
-            out.append(PageLine(sp.get("offset", i), sp.get("media_ref") or "", i + 1, ln))
-    return out
-
-
 _RE_ENDING_BAL = re.compile(r"(?:ending|closing)\s+balance", re.I)
 _RE_HAS_ALPHA = re.compile(r"[A-Za-z]")
 
 
-def extract_fields(lines: list[PageLine], doc_type: str) -> dict:
-    """Deterministic field extraction per the prompt's amount rules
-    (ollama.ts:94-103). Every extracted field carries the provenance
-    media_ref of the line it came from.
+def extract_fields(texts: list[str | None], media_refs: list[str | None],
+                   offsets: list[int]) -> tuple:
+    """Deterministic field extraction for one document, per the prompt's
+    amount rules (ollama.ts:94-103), from its spans as parallel lists in
+    any order (sorted here by offset; order never comes from partition
+    iteration, SURVEY §7.3).
 
-    Single pass over lines with each regex evaluated at most once per line
-    (the line-anchored patterns all tolerate surrounding whitespace, so raw
-    vs stripped evaluation is boolean-identical). Field semantics: vendor/
-    date/account/invoice-amount/bank-amount = FIRST match; receipt/other
-    amount = LAST matching total line; items = every matching line in order.
-    The plain-item-equals-vendor skip compares against the FINAL vendor, so
-    it is applied as a post-filter (a plain item line can precede the vendor
-    line only when the vendor is not yet known mid-pass)."""
-    vendor = None  # (text, ref)
-    date_raw = None
-    amount = None
-    account = None
-    raw_items: list[tuple[dict, str, str | None]] = []  # (item, ref, plain_desc)
+    Returns ``(raw_text, doc_type, vendor, vendor_ref, date_raw, date_ref,
+    amount, amount_ref, account, account_ref, items)``: each field is None
+    when not extracted and carries the media_ref of the line it came from;
+    ``items`` is a list of ``(description, quantity, total, media_ref)``.
+    Field semantics: vendor/date/account/invoice-amount/bank-amount = FIRST
+    match; receipt/other amount = LAST matching total line; items = every
+    matching line in order, minus plain items whose description equals
+    the FINAL vendor (a plain item line can precede the vendor line).
 
-    for pl in lines:
-        s = pl.line
-        # Guarded regex evaluation (the per-line regex battery was ~40% of
-        # end-to-end extraction CPU): for pure-ASCII lines each guard is a
-        # NECESSARY condition of its pattern, so guard-failure ⇒ no match —
-        # boolean-identical. Non-ASCII lines skip the guards entirely:
-        # re.IGNORECASE folds ı/ſ/K onto i/s/k, which the str.lower()
-        # first-char / substring gates cannot see (and \d/\s stay safe in
-        # both directions — checked exhaustively over Unicode in
-        # tests/test_properties.py).
-        #   reserved: ^\s*<keyword> ⇒ first non-ws char ∈ keyword initials
-        #   due:      needs literal case-insensitive "due"
-        #   txn/qty:  ^\s*\d ... \.\d{2}\s*$ ⇒ digit start AND 2-dec money tail
-        #   plain:    ... \.\d{2}\s*$ ⇒ money tail
-        asc = s.isascii()
-        first = s.lstrip()[:1]
-        rst = s.rstrip()
-        money_tail = bool(rst) and rst[-1].isdigit() and "." in rst
-        reserved = (
-            _RE_RESERVED.match(s)
-            if not asc or first.lower() in _RESERVED_FIRST
-            else None
-        )
-        due = _RE_DUE.search(s) if not asc or "due" in s.lower() else None
-        digit_start = first.isdigit()
-        m_txn = _RE_TXN.match(s) if money_tail and digit_start else None
-        m_qty = _RE_ITEM_QTY.match(s) if money_tail and digit_start else None
-        m_plain = _RE_ITEM_PLAIN.match(s) if money_tail else None
+    Each regex runs only where its result can matter, and only when a
+    cheap necessary condition holds (each is proven in
+    tests/test_properties.py):
+      - keyword guards (a first character, or a substring of the lower-cased
+        line or document) apply to pure-ASCII documents only: re.IGNORECASE
+        folds ı/ſ/K onto i/s/k, which str.lower() cannot see;
+      - txn/qty need a digit start and plain a 2-decimal money tail, safe
+        over all of Unicode (\\s ⊆ str.isspace, \\d ⊆ str.isdigit);
+      - a whitespace-only line matches no pattern;
+      - txn runs for bank statements only: elsewhere it is read only to
+        reject a vendor line, and every txn match is also a plain match;
+      - a total line matches neither the subtotal nor the payment pattern;
+      - the date pattern has no anchor, so no match in the assembled text
+        means none in any line, and a leftmost match that does not cross
+        a line break is exactly the first line's match: its line is the
+        first one that contains the token.
+    """
+    order = sorted(range(len(texts)), key=offsets.__getitem__)
+    parts, refs, pages = [], [], []
+    for num, i in enumerate(order, 1):
+        t = texts[i]
+        if t and (t := t.strip()):  # whitespace-only pages dropped (ocr.ts:59)
+            parts.append(f"--- Page {num} ---\n{t}")
+            refs.append(media_refs[i] or "")
+            pages.append(t.split("\n"))
+    raw_text = "\n\n".join(parts)  # == assemble_pages of the sorted texts
+    if not raw_text:
+        return ("", "other", None, None, None, None, None, None, None, None, [])
 
-        if vendor is None:
+    asc = raw_text.isascii()
+    low = raw_text.lower() if asc else ""
+    doc_type = _classify(raw_text, asc, low, pages)
+    is_bank = doc_type == "bank_statement"
+    is_invoice = doc_type == "invoice"
+    has_due = not asc or "due" in low
+    has_bal = is_bank and (not asc or "balance" in low)
+    want_account = is_bank and (not asc or "account" in low)
+    dm = _date_match(raw_text)
+    has_date = dm is not None
+    date_tok = dm.group() if has_date and "\n" not in dm.group() else None
+
+    vendor = vref = date_raw = dref = amount = aref = account = acref = None
+    raw_items = []  # (description, quantity, total, ref, plain_desc)
+    for ref, lines in zip(refs, pages):
+        for s in lines:
             st = s.strip()
+            if not st:
+                continue
+            first = st[0]
+            if date_raw is None and has_date:
+                if date_tok is None:
+                    m = _RE_DATE_TOKEN.search(s)
+                    if m:
+                        date_raw, dref = m.group(1), ref
+                elif date_tok in s:
+                    date_raw, dref = date_tok, ref
+            if want_account and account is None:
+                m = _RE_ACCOUNT.search(s)
+                if m:
+                    account, acref = m.group(1), ref
+            due = (_RE_DUE.search(s)
+                   if has_due and (not asc or "due" in s.lower()) else None)
+
+            # amount by type (ollama.ts:94-103)
+            if is_invoice:
+                if amount is None and due:
+                    v = _parse_money(s)
+                    if v is not None:
+                        amount, aref = v, ref
+            elif is_bank:
+                if (
+                    amount is None
+                    and has_bal
+                    and (not asc or "balance" in s.lower())
+                    and _RE_ENDING_BAL.search(s)
+                ):
+                    v = _parse_money(s)
+                    if v is not None:
+                        amount, aref = v, ref
+            elif (not asc or first in "tT") and _RE_TOTAL_LINE.match(s):
+                # receipt/other: the main total amount shown, last line wins
+                v = _parse_money(s)
+                if v is not None:
+                    amount, aref = v, ref
+
+            # vendor and line items (products / services / transactions,
+            # ollama.ts:99): neither is read from a reserved or due line
+            money_tail = st[-1].isdigit() and "." in st
+            if not money_tail and vendor is not None:
+                continue
+            if due or (
+                (not asc or first.lower() in _RESERVED_FIRST) and _RE_RESERVED.match(s)
+            ):
+                continue
+            m_txn = m_qty = m_plain = None
+            if money_tail:
+                if first.isdigit():
+                    if is_bank:
+                        m_txn = _RE_TXN.match(s)
+                    if not m_txn:
+                        m_qty = _RE_ITEM_QTY.match(s)
+                if not m_txn and not m_qty:
+                    m_plain = _RE_ITEM_PLAIN.match(s)
             if (
-                st
+                vendor is None
+                and not (m_txn or m_qty or m_plain)
                 and _RE_HAS_ALPHA.search(st)
-                and not reserved
-                and not due
                 and not _RE_INVOICE.match(st)
-                and not m_qty
-                and not m_txn
-                and not m_plain
-                and not _RE_DATE_TOKEN.fullmatch(st)
+                and not (has_date and _RE_DATE_TOKEN.fullmatch(st))
             ):
-                vendor = (st, pl.media_ref)
-        if date_raw is None:
-            m = _RE_DATE_TOKEN.search(s)
-            if m:
-                date_raw = (m.group(1), pl.media_ref)
-        # account is only ever consumed for bank statements (output span is
-        # gated on type == bank_statement in extract_document), so the scan
-        # is skipped for the other ~2/3 of documents
-        if account is None and doc_type == "bank_statement":
-            m = _RE_ACCOUNT.search(s)
-            if m:
-                account = (m.group(1), pl.media_ref)
+                vendor, vref = st, ref
+            if m_txn:
+                raw_items.append((m_txn.group(2).strip(), None,
+                                  _parse_amount(m_txn.group(3)), ref, None))
+            elif m_qty:
+                raw_items.append((m_qty.group(2).strip(), float(m_qty.group(1)),
+                                  _parse_amount(m_qty.group(3)), ref, None))
+            elif m_plain and _RE_HAS_ALPHA.search(m_plain.group(1)):
+                desc = m_plain.group(1).strip()
+                raw_items.append((desc, None, _parse_amount(m_plain.group(2)), ref, desc))
 
-        # amount by type (ollama.ts:94-103); ^\s*total ⇒ first char t
-        if doc_type == "receipt":
-            if (
-                (not asc or first in "tT")
-                and _RE_TOTAL_LINE.match(s)
-                and not _RE_SUBTOTAL.match(s)
-                and not _RE_PAYMENT.match(s)
-            ):
-                v = _parse_money(s)
-                if v is not None:
-                    amount = (v, pl.media_ref)  # last total line wins
-        elif doc_type == "invoice":
-            if amount is None and due:
-                v = _parse_money(s)
-                if v is not None:
-                    amount = (v, pl.media_ref)
-        elif doc_type == "bank_statement":
-            if (
-                amount is None
-                and (not asc or "balance" in s.lower())
-                and _RE_ENDING_BAL.search(s)
-            ):
-                v = _parse_money(s)
-                if v is not None:
-                    amount = (v, pl.media_ref)
-        else:  # other: the main total amount shown (last)
-            if (not asc or first in "tT") and _RE_TOTAL_LINE.match(s):
-                v = _parse_money(s)
-                if v is not None:
-                    amount = (v, pl.media_ref)
-
-        # line items (products / services / transactions, ollama.ts:99)
-        if reserved or due:
-            continue
-        if m_txn and doc_type == "bank_statement":
-            raw_items.append((
-                {"description": m_txn.group(2).strip(), "quantity": None,
-                 "unit_price": None, "total": _parse_money(m_txn.group(3))},
-                pl.media_ref, None,
-            ))
-            continue
-        if m_qty:
-            raw_items.append((
-                {"description": m_qty.group(2).strip(), "quantity": float(m_qty.group(1)),
-                 "unit_price": None, "total": _parse_money(m_qty.group(3))},
-                pl.media_ref, None,
-            ))
-            continue
-        if m_plain and _RE_HAS_ALPHA.search(m_plain.group(1)):
-            raw_items.append((
-                {"description": m_plain.group(1).strip(), "quantity": None,
-                 "unit_price": None, "total": _parse_money(m_plain.group(2))},
-                pl.media_ref, m_plain.group(1).strip(),
-            ))
-
-    vtext = vendor[0] if vendor else None
     items = [
-        (it, ref) for it, ref, plain_desc in raw_items
-        if plain_desc is None or vtext is None or plain_desc != vtext
+        (desc, qty, total, ref) for desc, qty, total, ref, plain in raw_items
+        if plain is None or vendor is None or plain != vendor
     ]
-
-    return {
-        "vendor": vendor,
-        "date_raw": date_raw,
-        "amount": amount,
-        "account": account,
-        "items": items,
-    }
+    return (raw_text, doc_type, vendor, vref, date_raw, dref, amount, aref,
+            account, acref, items)
 
 
-def _fmt_item(it: dict) -> str:
-    """Canonical line_item span text (deterministic, order-stable)."""
-    def f(v):
-        return "" if v is None else js_num_to_str(v)
-    return (
-        f"description={it['description']};quantity={f(it['quantity'])};"
-        f"unitPrice={f(it['unit_price'])};total={f(it['total'])}"
-    )
+# normalize_date is pure, and a corpus repeats its date strings
+_norm_date = functools.lru_cache(maxsize=1 << 12)(normalize_date)
 
 
-def extract_document(doc_id: str, spans: list[dict]) -> dict:
-    """End-to-end deterministic extraction for one document.
+def finish_typed(doc_id: str, fields: tuple) -> tuple:
+    """Normalize the fields of :func:`extract_fields` and render the
+    golden span sequence, straight from their types.
 
-    Input spans: [{kind,text,media_ref,offset}] in ANY order (sorted here).
-    Returns {doc_id, doc_type, vendor, amount, date, date_raw, account,
-             items, raw_text, parse_failure, out_spans} where out_spans is the
-    golden-comparable ordered list of {order, kind, text, media_ref}.
+    Returns one row in EXTRACTION_RESULT field order: ``(id, doc_id, type,
+    vendor, amount, date, date_raw, account_number, items, raw_text,
+    parse_failure, out_spans)``, with ``items`` None or a list of
+    ``(description, quantity, unit_price, total)`` and ``out_spans`` a list
+    of ``(kind, text, media_ref)`` in order.
+
+    This is what the reference's validate step (ollama.ts:232,
+    :func:`normalize_docdata`) yields for the "model JSON" these fields
+    make, where it can never raise: the type is one of the four, vendor
+    and date are non-empty strings, amounts come from ``float()`` of digit
+    strings (never NaN), and every item has exactly the keys of
+    normalize_line_item's fast path, so a null number becomes 0 (JS
+    ``Number(null)``) and an empty description "Unknown item".
+    tests/test_properties.py checks it against that route over the corpus
+    and adversarial pages.
 
     Output span sequence spec (FIXTURES.md §1 golden_spans):
-      0: doc_type | then vendor? date? amount? account_number? (each only when
-      extracted, in that fixed kind order) | line_item* (line order) |
-      last: raw_text (assembled page text). media_ref = provenance span's ref,
-      '' for whole-document spans.
+      0: doc_type | then vendor? date? amount? account_number? (each only
+      when extracted, in that fixed kind order) | line_item* (line order) |
+      last: raw_text (assembled page text). media_ref = provenance span's
+      ref, '' for whole-document spans.
     """
-    spans = sorted(spans, key=lambda s: s["offset"])
-    pages = [s.get("text") for s in spans]
-    raw_text = assemble_pages(pages)
-    doc_type = classify(raw_text) if raw_text else "other"
-    lines = _doc_lines(spans)
-    return _finish_document(doc_id, raw_text, doc_type, lines)
+    (raw_text, doc_type, vendor, vref, date_raw, dref, amount, aref,
+     account, acref, found) = fields
+    spans = [("doc_type", doc_type, "")]
+    if vendor is not None:
+        spans.append(("vendor", vendor, vref))
+    date = None
+    if date_raw is not None:
+        date = _norm_date(date_raw)
+        if date is not None:
+            spans.append(("date", date, dref))
+    if amount is not None:
+        spans.append(("amount", js_num_to_str(amount), aref))
+    if account is not None:  # extracted for bank statements only
+        spans.append(("account_number", account, acref))
+    items = None
+    if found:
+        items = []
+        for desc, qty, total, ref in found:
+            desc = desc or "Unknown item"
+            qty = 0.0 if qty is None else qty
+            total = 0.0 if total is None else total
+            items.append((desc, qty, 0.0, total))  # no unit price is extracted
+            spans.append(("line_item", f"description={desc};quantity={js_num_to_str(qty)};"
+                          f"unitPrice=0;total={js_num_to_str(total)}", ref))
+    if raw_text:
+        spans.append(("raw_text", raw_text, ""))
+    return (
+        deterministic_id(doc_id), doc_id, doc_type, vendor, amount, date, date_raw,
+        account, items, raw_text or None,
+        # a typed document with no extractable amount is a parse failure for
+        # metrics purposes (north_star: parse failures recorded, not raised)
+        doc_type != "other" and amount is None,
+        spans,
+    )
 
 
 def extract_document_cols(
@@ -576,97 +653,64 @@ def extract_document_cols(
     media_refs: list[str | None],
     offsets: list[int],
 ) -> dict:
-    """Columnar twin of :func:`extract_document` — same extraction, but the
-    span fields arrive as parallel lists instead of per-span dicts, so the
-    Arrow worker can decode the struct fields straight to primitive lists
-    (``flatten().field(..).to_pylist()``) and never build a Python dict per
-    span. The span ``kind`` field is not an input because extraction never
-    reads it (media spans carry empty text and are dropped by the
-    whitespace filter). Bit-exact equality with the dict path is pinned by
-    tests/test_extractor.py::test_cols_path_bit_exact.
+    """End-to-end deterministic extraction for one document, from its span
+    fields as parallel lists in any order (the span ``kind`` is not an
+    input: extraction never reads it).
+
+    Returns {doc_id, id, type, vendor, amount, date, date_raw,
+    account_number, items, raw_text, parse_failure, out_spans}, where items
+    is None or a list of {description, quantity, unit_price, total} and
+    out_spans the golden-comparable ordered list of {order, kind, text,
+    media_ref}. The Arrow worker calls :func:`extract_rows` instead, which
+    builds the same values with no dict per document or span.
     """
-    order = sorted(range(len(texts)), key=offsets.__getitem__)
-    raw_text = assemble_pages([texts[i] for i in order])
-    doc_type = classify(raw_text) if raw_text else "other"
-    lines = []
-    for page_num, i in enumerate(order, 1):
-        t = (texts[i] or "").strip()
-        if not t:
-            continue
-        ref = media_refs[i] or ""
-        off = offsets[i]
-        for ln in t.split("\n"):
-            lines.append(PageLine(off, ref, page_num, ln))
-    return _finish_document(doc_id, raw_text, doc_type, lines)
-
-
-def _finish_document(doc_id: str, raw_text: str, doc_type: str, lines: list[PageLine]) -> dict:
-    return finish_fields(doc_id, raw_text, doc_type, extract_fields(lines, doc_type))
-
-
-def finish_fields(doc_id: str, raw_text: str, doc_type: str, fields: dict) -> dict:
-    """Normalize extracted fields and render the golden span sequence.
-
-    Shared tail of the dict path (:func:`extract_document`) and the column
-    path (:func:`extract_document_cols`) — everything downstream of the
-    per-line battery is identical by construction."""
-    # Route through the Zod-exact normalizer for parity with the reference's
-    # validate step (ollama.ts:232): build the "model JSON" equivalent.
-    model_doc: dict = {"type": doc_type}
-    if fields["vendor"]:
-        model_doc["vendor"] = fields["vendor"][0]
-    if fields["amount"]:
-        model_doc["amount"] = fields["amount"][0]
-    if fields["date_raw"]:
-        model_doc["date"] = fields["date_raw"][0]
-    if fields["items"]:
-        model_doc["items"] = [it for it, _ref in fields["items"]]
-    if raw_text:
-        model_doc["rawText"] = raw_text
-
-    parse_failure = False
-    try:
-        norm = normalize_docdata(model_doc)
-    except ZodParseError:
-        parse_failure = True
-        norm = {"type": "other", "vendor": None, "amount": None, "date": None,
-                "date_raw": None, "items": None, "raw_text": raw_text or None}
-
-    # A typed document with no extractable amount is a parse failure for
-    # metrics purposes (north_star: parse failures recorded, not raised).
-    if norm["type"] != "other" and norm["amount"] is None:
-        parse_failure = True
-
-    out = []
-    out.append(("doc_type", norm["type"], ""))
-    if norm["vendor"] is not None:
-        out.append(("vendor", norm["vendor"], fields["vendor"][1]))
-    if norm["date"] is not None:
-        out.append(("date", norm["date"], fields["date_raw"][1]))
-    if norm["amount"] is not None:
-        out.append(("amount", js_num_to_str(norm["amount"]), fields["amount"][1]))
-    if fields["account"] and norm["type"] == "bank_statement":
-        out.append(("account_number", fields["account"][0], fields["account"][1]))
-    if norm["items"]:
-        for it, ref in zip(norm["items"], [r for _i, r in fields["items"]]):
-            out.append(("line_item", _fmt_item(it), ref))
-    if raw_text:
-        out.append(("raw_text", raw_text, ""))
-
+    (id_, doc_id, doc_type, vendor, amount, date, date_raw, account, items,
+     raw_text, parse_failure, spans) = finish_typed(
+        doc_id, extract_fields(texts, media_refs, offsets))
     return {
         "doc_id": doc_id,
-        "id": deterministic_id(doc_id),
-        "type": norm["type"],
-        "vendor": norm["vendor"],
-        "amount": norm["amount"],
-        "date": norm["date"],
-        "date_raw": norm["date_raw"],
-        "account_number": fields["account"][0] if fields["account"] and norm["type"] == "bank_statement" else None,
-        "items": norm["items"],
-        "raw_text": raw_text or None,
+        "id": id_,
+        "type": doc_type,
+        "vendor": vendor,
+        "amount": amount,
+        "date": date,
+        "date_raw": date_raw,
+        "account_number": account,
+        "items": None if items is None else [
+            {"description": d, "quantity": q, "unit_price": u, "total": t}
+            for d, q, u, t in items],
+        "raw_text": raw_text,
         "parse_failure": parse_failure,
-        "out_spans": [
-            {"order": i, "kind": k, "text": t, "media_ref": r}
-            for i, (k, t, r) in enumerate(out)
-        ],
+        "out_spans": [{"order": i, "kind": k, "text": t, "media_ref": r}
+                      for i, (k, t, r) in enumerate(spans)],
     }
+
+
+def extract_document(doc_id: str, spans: list[dict]) -> dict:
+    """:func:`extract_document_cols` over per-span dicts
+    ``{kind, text, media_ref, offset}`` in ANY order (sorted here) — the
+    shape the test oracle collects."""
+    spans = sorted(spans, key=lambda s: s["offset"])
+    return extract_document_cols(
+        doc_id, [s.get("text") for s in spans], [s.get("media_ref") for s in spans],
+        list(range(len(spans))))
+
+
+def extract_rows(
+    doc_ids: list,
+    texts: list[str | None],
+    media_refs: list[str | None],
+    offsets: list[int],
+    lens: list[int],
+) -> list[tuple]:
+    """Batch entry of the Arrow worker: the spans of consecutive documents
+    as flat parallel lists, ``lens[k]`` spans for ``doc_ids[k]``. Returns
+    one :func:`finish_typed` row per document."""
+    rows = []
+    start = 0
+    for did, n in zip(doc_ids, lens):
+        end = start + n
+        rows.append(finish_typed(str(did), extract_fields(
+            texts[start:end], media_refs[start:end], offsets[start:end])))
+        start = end
+    return rows

@@ -69,12 +69,22 @@ def run_publish(
         append_lineage,
         append_rows,
         completed_partitions,
+        fs_parquet_columns,
     )
     from doc_agent_spark.sources.tables import read_input
 
     t0 = time.time()
-    df = read_input(spark, input_path)
-    cols = columns or sorted(df.columns)
+    # the column names come from one parquet footer on the driver, so a
+    # complete resume reads no input; a table name or a directory without
+    # a Spark footer is read (a schema-inference job)
+    df = None
+    cols = columns
+    if cols is None:
+        names = fs_parquet_columns(spark, input_path) if "/" in input_path else None
+        if names is None:
+            df = read_input(spark, input_path)
+            names = df.columns
+        cols = sorted(names)
     shards_path = output_path.rstrip("/") + "_shards"
     manifest_path = output_path.rstrip("/") + "_manifest"
 
@@ -89,42 +99,45 @@ def run_publish(
         {"shards": shards, "columns": cols, "seed": seed, "key_col": key_col},
     )
 
-    staged = df.select(
-        shard_of(F.col(key_col), shards, seed).alias("shard"),
-        publish.json_line(*cols).alias("line"),
-    )
     done = completed_partitions(spark, lineage_path, run_id, "publish")
     # every shard id is < shards: lineage holding them all is complete,
-    # and the stage skips its plan, its write and the shard-set collect
+    # and the stage reads no input and skips its plan, its write and the
+    # shard-set collect
     complete = set(range(shards)) <= done
-    if done:
-        staged = staged.filter(~F.col("shard").isin(*sorted(done)))
-
-    # manifest from the SAME staged frame the shards are written from —
-    # localCheckpoint would also work, but the frame is two narrow
-    # projections off the scan, so recomputing it for the aggregate is
-    # cheaper than materializing the serialized lines twice.
-    delta = publish.manifest_agg(staged, shard_col="shard", line_col="line")
 
     n_written, wrote = 0, []
-    if not complete and not staged.isEmpty():
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            staged.repartition(min(shards, spark.sparkContext.defaultParallelism * 2), "shard")
-            .select("shard", "line")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .text(shards_path)
+    if not complete:
+        if df is None:
+            df = read_input(spark, input_path)
+        staged = df.select(
+            shard_of(F.col(key_col), shards, seed).alias("shard"),
+            publish.json_line(*cols).alias("line"),
         )
-        delta_rows = delta.collect()  # manifest is n_shards rows: metadata-sized
-        n_written = sum(r["n_rows"] for r in delta_rows)
-        wrote = sorted(r["shard"] for r in delta_rows)
-        append_rows(spark, manifest_path, delta_rows, delta.schema)
-        # one LINEAGE-schema row per committed shard (docs_in = docs_out =
-        # rows serialized; spans_out carries the shard's byte count)
-        append_lineage(spark, [
-            (r["shard"], r["n_rows"], r["n_rows"], r["n_bytes"], 0) for r in delta_rows
-        ], lineage_path, run_id, "publish", int((time.time() - t0) * 1000))
+        if done:
+            staged = staged.filter(~F.col("shard").isin(*sorted(done)))
+        # manifest from the SAME staged frame the shards are written from —
+        # localCheckpoint would also work, but the frame is two narrow
+        # projections off the scan, so recomputing it for the aggregate is
+        # cheaper than materializing the serialized lines twice.
+        delta = publish.manifest_agg(staged, shard_col="shard", line_col="line")
+        if not staged.isEmpty():
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            (
+                staged.repartition(min(shards, spark.sparkContext.defaultParallelism * 2), "shard")
+                .select("shard", "line")
+                .write.mode("overwrite")
+                .partitionBy("shard")
+                .text(shards_path)
+            )
+            delta_rows = delta.collect()  # manifest is n_shards rows: metadata-sized
+            n_written = sum(r["n_rows"] for r in delta_rows)
+            wrote = sorted(r["shard"] for r in delta_rows)
+            append_rows(spark, manifest_path, delta_rows, delta.schema)
+            # one LINEAGE-schema row per committed shard (docs_in = docs_out =
+            # rows serialized; spans_out carries the shard's byte count)
+            append_lineage(spark, [
+                (r["shard"], r["n_rows"], r["n_rows"], r["n_bytes"], 0) for r in delta_rows
+            ], lineage_path, run_id, "publish", int((time.time() - t0) * 1000))
 
     wall_ms = int((time.time() - t0) * 1000)
     append_rows(

@@ -4,14 +4,16 @@ sequence on the synthetic interleaved corpus — including the skewed
 media-heavy tail and the split-heavy plan variant.
 """
 
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from doc_agent_spark import corpus, spec
 from doc_agent_spark.operators import extractor
 from doc_agent_spark.plans.skew import split_heavy, spread_by_doc
-from doc_agent_spark.schema import DOCUMENTS_SPANS
+from doc_agent_spark.schema import DOCUMENTS_SPANS, EXTRACTION_RESULT
 
 N_DOCS = 400
 
@@ -105,3 +107,57 @@ def test_cols_path_bit_exact():
             [0 if s["offset"] is None else s["offset"] for s in spans],
         )
         assert a == b, d["doc_id"]
+
+
+def _per_doc_table(rows):
+    """EXTRACTION_RESULT built one document at a time: a dict per document
+    from spec.extract_document_cols, then one pa.array per field."""
+    schema = to_arrow_schema(EXTRACTION_RESULT)
+    results = [
+        spec.extract_document_cols(
+            str(d["doc_id"]),
+            [s["text"] for s in d["spans"]],
+            [s["media_ref"] for s in d["spans"]],
+            [0 if s["offset"] is None else s["offset"] for s in d["spans"]],
+        )
+        for d in rows
+    ]
+    return pa.Table.from_batches([pa.RecordBatch.from_arrays(
+        [pa.array([r[f.name] for r in results], type=f.type) for f in schema], schema=schema)])
+
+
+def _span(text, ref="", offset=0, kind="text"):
+    return {"kind": kind, "text": text, "media_ref": ref, "offset": offset}
+
+
+# documents the corpus does not make: no spans, null/whitespace pages, null
+# offsets, a -0.00 amount, an item total that reads as inf, an item with an
+# empty description, fold-trap keywords
+EDGE_DOCS = [
+    {"doc_id": "e-empty", "spans": []},
+    {"doc_id": "e-blank", "spans": [_span(None), _span(" \n\t ", offset=1)]},
+    {"doc_id": "e-null-offsets", "spans": [
+        _span("Total  4.00\nSubtotal  4.00", "m://b", None), _span("ACME\nTax  0.00", "", None)]},
+    {"doc_id": "e-neg-zero", "spans": [_span("SHOP\nSubtotal  1.00\nTotal  -0.00\nTax  0.00")]},
+    {"doc_id": "e-inf", "spans": [_span("SHOP\n2x Big    " + "9" * 400 + ".00\nTotal  1.00\nTax  1.00")]},
+    {"doc_id": "e-no-desc", "spans": [_span("Invoice #A-1\n1x    5.00\nAmount Due  5.00")]},
+    {"doc_id": "e-fold", "spans": [_span("\u0131nvoice No: A-17\nTotal  5.00\n\u017fubtotal  4.00")]},
+]
+
+
+def test_batch_columns_equal_per_doc_build():
+    """extract_batches_arrow builds its columns per batch (flat lists plus
+    list offsets); the table must equal the per-document build, for every
+    batch size, including a batch with no rows."""
+    schema = to_arrow_schema(DOCUMENTS_SPANS)
+    rows = list(corpus.gen_docs(1500)) + EDGE_DOCS
+    table = pa.Table.from_pylist(rows, schema=schema)
+    want = _per_doc_table(rows)
+    out_schema = to_arrow_schema(EXTRACTION_RESULT)
+    for size in (1, 7, 2048):
+        batches = table.to_batches(max_chunksize=size)
+        got = pa.Table.from_batches(list(extractor.extract_batches_arrow(iter(batches))),
+                                    schema=out_schema)
+        assert got.equals(want), size
+    empty = list(extractor.extract_batches_arrow(iter([pa.RecordBatch.from_pylist([], schema=schema)])))
+    assert len(empty) == 1 and empty[0].num_rows == 0 and empty[0].schema.equals(out_schema)

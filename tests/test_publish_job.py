@@ -65,10 +65,10 @@ def test_manifest_matches_content(spark, published):
 
 
 def test_resume_skips_everything(spark, published):
-    """Lineage holding every shard is a complete export: the resume reads
-    the input's schema (the config check) and appends its metrics row on
-    the driver; its lineage snapshot is current, and it plans, writes and
-    collects nothing else."""
+    """Lineage holding every shard is a complete export: the resume takes
+    the input's column names (the config check) from a parquet footer and
+    appends its metrics row on the driver; its lineage snapshot is
+    current, and it reads, plans, writes and collects nothing: no job."""
     stats, in_p, out, lin, met = published
     sc = spark.sparkContext
     sc.setJobGroup("publish-resume", "publish-resume")
@@ -78,13 +78,31 @@ def test_resume_skips_everything(spark, published):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("publish-resume")) <= 1
+    assert len(sc.statusTracker().getJobIdsForGroup("publish-resume")) == 0
     assert again["shards_written"] == 0
     assert again["shards_skipped"] == SHARDS
     assert again["complete"] is True
     # the no-op resume appended no manifest duplicates to collapse, and
     # even if it had, final_manifest DISTINCTs them away
     assert final_manifest(spark, out + "_manifest").count() == SHARDS
+
+
+def test_input_columns_from_footer(spark, tmp_path):
+    """The config check's column names come from a footer on the driver
+    and equal what reading the input gives, partition columns included;
+    a layout the footer cannot name is read instead."""
+    from doc_agent_spark.sinks.metrics import fs_parquet_columns
+
+    df = spark.createDataFrame([(1, "a", 0), (2, "b", 1)], "doc_id long, text string, bucket int")
+    flat, parted, odd = (str(tmp_path / x) for x in ("flat", "parted", "odd"))
+    df.write.parquet(flat)
+    df.write.partitionBy("bucket").parquet(parted)
+    df.write.parquet(odd + "/not_a_partition")
+    for path in (flat, parted):
+        assert sorted(fs_parquet_columns(spark, path)) == sorted(spark.read.parquet(path).columns)
+    assert "bucket" in fs_parquet_columns(spark, parted)
+    assert fs_parquet_columns(spark, odd) is None
+    assert fs_parquet_columns(spark, str(tmp_path / "missing")) is None
 
 
 def test_tamper_detected(spark, published):
