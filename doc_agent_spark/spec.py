@@ -34,7 +34,6 @@ Reference citations (all /root/reference):
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import json
 import math
@@ -331,14 +330,8 @@ _RE_RESERVED = re.compile(
 _RESERVED_FIRST = frozenset("stcvmadpbeo")
 
 
-# Every ASCII character a _RE_MONEY_TAIL match can span (\s in ASCII
-# includes \x1c-\x1f): in ASCII text a match starts after the last
-# character outside this set, so the search starts there.
-_MONEY_CHARS = "0123456789-$,. \t\n\r\x0b\x0c\x1c\x1d\x1e\x1f"
-
-
 def _parse_money(s: str) -> float | None:
-    m = _RE_MONEY_TAIL.search(s, len(s.rstrip(_MONEY_CHARS)) if s.isascii() else 0)
+    m = _RE_MONEY_TAIL.search(s)
     if not m:
         return None
     neg = m.group(1) == "-"
@@ -367,24 +360,20 @@ def _date_match(raw_text: str):
     """``_RE_DATE_TOKEN.search(raw_text)``, one alternative at a time. No
     two alternatives match at the same start (a month name starts with a
     letter; an ISO date has a digit where a slash date has its slash), so
-    the leftmost of their leftmost matches is the union's. Each alternative
-    alone scans faster than the union (the regex engine skips to the
-    initials of the month names), and the digit forms are searched only
-    from their first possible start: an ISO date starts 4 characters
-    before a ``-dd-`` hint, a slash date 1 or 2 before a ``/d/`` or
-    ``/dd/`` hint. An ISO or slash date is at most 10 characters
-    long, so one that starts before a match found at ``b`` lies within
-    ``raw_text[:b + 9]``."""
-    best = _RE_DATE_NAMED.search(raw_text)
+    the leftmost of their leftmost matches is the union's.
+
+    Each search starts from a literal the regex engine can skip to: the
+    month names' initials, and for the digit forms their first hint (an
+    ISO date starts 4 characters before a ``-dd-``, a slash date 1 or 2
+    before a ``/d/`` or ``/dd/``); the union's digit branches make the
+    engine try every position."""
+    found = [_RE_DATE_NAMED.search(raw_text)]
     for pat, hint, lead in ((_RE_DATE_ISO, _RE_ISO_HINT, 4),
                             (_RE_DATE_SLASH, _RE_SLASH_HINT, 2)):
         h = hint.search(raw_text)
         if h:
-            m = pat.search(raw_text, max(0, h.start() - lead),
-                           len(raw_text) if best is None else best.start() + 9)
-            if m and (best is None or m.start() < best.start()):
-                best = m
-    return best
+            found.append(pat.search(raw_text, max(0, h.start() - lead)))
+    return min(filter(None, found), key=re.Match.start, default=None)
 
 
 def classify(text: str) -> str:
@@ -581,10 +570,6 @@ def extract_fields(texts: list[str | None], media_refs: list[str | None],
             account, acref, items)
 
 
-# normalize_date is pure, and a corpus repeats its date strings
-_norm_date = functools.lru_cache(maxsize=1 << 12)(normalize_date)
-
-
 def finish_typed(doc_id: str, fields: tuple) -> tuple:
     """Normalize the fields of :func:`extract_fields` and render the
     golden span sequence, straight from their types.
@@ -618,7 +603,7 @@ def finish_typed(doc_id: str, fields: tuple) -> tuple:
         spans.append(("vendor", vendor, vref))
     date = None
     if date_raw is not None:
-        date = _norm_date(date_raw)
+        date = normalize_date(date_raw)
         if date is not None:
             spans.append(("date", date, dref))
     if amount is not None:

@@ -4,6 +4,9 @@ sequence on the synthetic interleaved corpus — including the skewed
 media-heavy tail and the split-heavy plan variant.
 """
 
+import hashlib
+import json
+
 import pyarrow as pa
 import pytest
 
@@ -93,20 +96,28 @@ def test_deterministic_across_parallelism(spark, docs):
     assert one == eight
 
 
+# sha256 of spec.extract_document_cols over corpus.gen_docs(600), one
+# sort_keys JSON line per document, as the per-line extractor with the
+# model-JSON finish through normalize_docdata produced it
+GEN_DOCS_600_SHA256 = "1589e7af68be5a534a9d2942ab392c6101da7bcd02d368ca1c92db2858d49514"
+
+
 def test_cols_path_bit_exact():
-    """spec.extract_document_cols (the Arrow worker's columnar entry) must be
-    bit-exact with the dict path on every corpus shape, including media spans,
-    null-ish offsets, and whitespace-only pages."""
+    """spec.extract_document_cols (the columnar entry perfbench calls) is
+    bit-exact with the pinned output of the extractor it replaced, on every
+    corpus shape, including media spans, null offsets and whitespace-only
+    pages."""
+    h = hashlib.sha256()
     for d in corpus.gen_docs(600):
         spans = d["spans"]
-        a = spec.extract_document(d["doc_id"], [dict(s) for s in spans])
-        b = spec.extract_document_cols(
+        r = spec.extract_document_cols(
             d["doc_id"],
             [s["text"] for s in spans],
             [s["media_ref"] for s in spans],
             [0 if s["offset"] is None else s["offset"] for s in spans],
         )
-        assert a == b, d["doc_id"]
+        h.update(json.dumps(r, sort_keys=True).encode() + b"\n")
+    assert h.hexdigest() == GEN_DOCS_600_SHA256
 
 
 def _per_doc_table(rows):
