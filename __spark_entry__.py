@@ -1960,12 +1960,12 @@ def media_metadata(spark, sf_dir):
     # point: 65,536 buckets/band; 8-bit bands hot-bucketed at sf1.0 —
     # 8e7 candidate pairs from correlated docs), candidates meet only
     # inside sub-cap band buckets (max_band_df=256, the stop-shingle
-    # rule), exact popcount verify (pigeonhole-exact at max_hamming 3
-    # among uncapped buckets).
+    # rule), exact bit_count(a ^ b) verify (pigeonhole-exact at
+    # max_hamming 3 among uncapped buckets) — hamming_near_pairs' defaults.
     # The knn arm is the `doc search --mode media` serve shape: doc 0's
     # signature as the query, a static 8-branch band-OR scan filter, top-10
     # by (hamming, ref). The afp_pair arm runs the same banded machinery
-    # over the 31-bit audio fingerprint (2 ceil-split 16-bit bands).
+    # over the 31-bit audio fingerprint (2 ceil-split bands, 16 + 15 bits).
     near_txt = F.concat(
         F.substring(F.col("text"), 1, F.length("text") - 1), F.lit("z")
     )
@@ -1986,8 +1986,10 @@ def media_metadata(spark, sf_dir):
     )
     sigs = multimodal.image_dhash(img_media).localCheckpoint(eager=True)
     # dhash arm (multimodal.image_dhash): the 64-bit perceptual image
-    # fingerprint as a bit string — digest carries the full signature so
-    # the gate value-checks every bit; n1/n2 pin the FakeCodec dims.
+    # fingerprint, a bigint — digest renders all 64 bits MSB-first
+    # (lpad(bin(sig), 64, '0'); bin() of a negative long is its two's
+    # complement) so the gate value-checks every bit; n1/n2 pin the
+    # FakeCodec dims.
     # ONE signature pass over base ∪ copy ∪ near feeds this arm AND the
     # Hamming pair/knn arms below (shared-scan law — the base refs are a
     # strict subset of img_media, so a second Arrow pass would be the
@@ -1999,12 +2001,12 @@ def media_metadata(spark, sf_dir):
         F.col("width").cast("long").alias("n1"),
         F.col("height").cast("long").alias("n2"),
         F.col("popcnt").cast("double").alias("metric"),
-        F.col("dhash").alias("digest"),
+        F.lpad(F.bin("dhash"), 64, "0").alias("digest"),
     )
     # audio arm (multimodal.audio_fingerprint): 31-bit energy-delta
     # signature, all-integer frame comparison (cross-multiplied means) so
     # numpy's pairwise summation and the oracle's sequential fold agree
-    # bit-for-bit; digest carries the full signature.
+    # bit-for-bit; digest renders all 31 bits MSB-first.
     audio = docs.select(
         F.concat(
             F.lit("media://doc/"), F.col("doc_id").cast("string"), F.lit("/clip.wav")
@@ -2028,11 +2030,9 @@ def media_metadata(spark, sf_dir):
         F.col("n_samples").cast("long").alias("n1"),
         F.col("popcnt").cast("long").alias("n2"),
         F.col("popcnt").cast("double").alias("metric"),
-        F.col("afp").alias("digest"),
+        F.lpad(F.bin("afp"), 31, "0").alias("digest"),
     )
-    e_pair = multimodal.hamming_near_pairs(
-        sigs, max_hamming=3, n_bands=4, max_band_df=256
-    ).select(
+    e_pair = multimodal.hamming_near_pairs(sigs, max_hamming=3).select(
         F.lit("dhash_pair").alias("variant"),
         F.col("ref_a").alias("ref"), "ref_b",
         F.col("hamming").alias("n1"), F.lit(None).cast("long").alias("n2"),
@@ -2076,13 +2076,12 @@ def media_metadata(spark, sf_dir):
     )
     # afp_pair arm: the audio-FP analog of dhash_pair — every 10th doc's
     # clip duplicated as '/copy.wav' (hamming 0 known positives), 31-bit
-    # signatures in 2 ceil-split 16-bit bands (max_hamming 1), capped
-    # buckets, exact verify.
+    # signatures in 2 ceil-split bands (max_hamming 1), capped buckets,
+    # exact verify.
     # Signatures come from the SAME checkpointed afp_all pass as the audio
     # arm above.
     e_afp = multimodal.hamming_near_pairs(
         afp_all, max_hamming=1, sig_col="afp", n_bands=2, n_bits=31,
-        max_band_df=256,
     ).select(
         F.lit("afp_pair").alias("variant"),
         F.col("ref_a").alias("ref"), "ref_b",
@@ -4093,14 +4092,6 @@ SELECT 'beam', query_id, id, score FROM beam
 """
 
 
-# static 8-branch band-OR for the dhash_knn oracle (mirrors hamming_knn's
-# scan filter: a candidate shares >= 1 of the 8 byte bands with the query)
-_DHASH_BAND_OR = " OR ".join(
-    f"substring(sig, {b * 8 + 1}, 8) = substring(qsig, {b * 8 + 1}, 8)"
-    for b in range(8)
-)
-
-
 def oracle_sql() -> dict[str, str]:
     stop_en = "['the','and','of','to','a','in','is','it','that','for']"
     stop_de = "['der','die','das','und','ist','von','mit','für','auf','ein']"
@@ -5252,31 +5243,24 @@ WITH imgsrc AS (
          substring(text, 1, length(text) - 1) || 'z'
   FROM documents WHERE doc_id % 7 = 0),
 dh AS (
-  SELECT ref, array_to_string(list_transform(range(0, 64), b -> CASE WHEN
+  SELECT ref, CAST(CAST(array_to_string(list_transform(range(0, 64), b -> CASE WHEN
       unicode(substring(text, ((((b // 8) * h) // 8) * w + ((b % 8) * w) // 9) % n + 1, 1))
       > unicode(substring(text, ((((b // 8) * h) // 8) * w + (((b % 8) + 1) * w) // 9) % n + 1, 1))
-      THEN '1' ELSE '0' END), '') AS sig
+      THEN '1' ELSE '0' END), '') AS BIT) AS BIGINT) AS sig
   FROM (
     SELECT ref, text, CAST(length(text) AS INTEGER) AS n,
            16 + CAST(length(text) AS INTEGER) % 241 AS w,
            16 + (CAST(length(text) AS INTEGER) // 7) % 181 AS h
     FROM imgsrc)),
-dhb0 AS (SELECT ref, sig, b, substring(sig, CAST(b * 16 + 1 AS INT), 16) AS bb
+dhb0 AS (SELECT ref, sig, b, (sig >> (48 - 16 * b)) & 65535 AS bb
          FROM dh CROSS JOIN (SELECT unnest(range(0, 4)) AS b)),
 dhb AS (SELECT * FROM dhb0 WHERE (b, bb) NOT IN
           (SELECT (b, bb) FROM dhb0 GROUP BY b, bb HAVING count(*) > 256)),
 dhc AS (SELECT DISTINCT l.ref AS ref_a, l.sig AS sig_a, r.ref AS ref_b, r.sig AS sig_b
         FROM dhb l JOIN dhb r ON l.b = r.b AND l.bb = r.bb AND l.ref < r.ref),
-dhp AS (SELECT ref_a, ref_b,
-               list_aggregate(list_transform(range(1, 65),
-                 i -> CASE WHEN sig_a[i] <> sig_b[i] THEN 1 ELSE 0 END), 'sum') AS ham
-        FROM dhc),
+dhp AS (SELECT ref_a, ref_b, bit_count(xor(sig_a, sig_b)) AS ham FROM dhc),
 q AS (SELECT sig AS qsig FROM dh WHERE ref = 'media://doc/0/full.png'),
-knn AS (SELECT ref,
-               list_aggregate(list_transform(range(1, 65),
-                 i -> CASE WHEN sig[i] <> qsig[i] THEN 1 ELSE 0 END), 'sum') AS ham
-        FROM dh CROSS JOIN q
-        WHERE {_DHASH_BAND_OR}),
+knn AS (SELECT ref, bit_count(xor(sig, qsig)) AS ham FROM dh CROSS JOIN q),
 afpsrc AS (
   SELECT 'media://doc/' || CAST(doc_id AS VARCHAR) || '/clip.wav' AS ref, text
   FROM documents
@@ -5284,8 +5268,9 @@ afpsrc AS (
   SELECT 'media://doc/' || CAST(doc_id AS VARCHAR) || '/copy.wav', text
   FROM documents WHERE doc_id % 10 = 0),
 af AS (
-  SELECT ref, array_to_string(list_transform(range(0, 31), f -> CASE WHEN
-      e[f + 1] * c[f + 2] > e[f + 2] * c[f + 1] THEN '1' ELSE '0' END), '') AS sig
+  SELECT ref, CAST(CAST(array_to_string(list_transform(range(0, 31), f -> CASE WHEN
+      e[f + 1] * c[f + 2] > e[f + 2] * c[f + 1] THEN '1' ELSE '0' END), '') AS BIT)
+      AS BIGINT) AS sig
   FROM (
     SELECT ref, n,
       list_transform(range(0, 32), f ->
@@ -5294,16 +5279,13 @@ af AS (
       list_transform(range(0, 32), f ->
         greatest(((f + 1) * n) // 32 - (f * n) // 32, 1)) AS c
     FROM (SELECT ref, text, CAST(length(text) AS INTEGER) AS n FROM afpsrc))),
-afb0 AS (SELECT ref, sig, b, substring(sig, CAST(b * 16 + 1 AS INT), 16) AS bb
+afb0 AS (SELECT ref, sig, b, (sig >> (15 - 15 * b)) & (65535 >> b) AS bb
          FROM af CROSS JOIN (SELECT unnest(range(0, 2)) AS b)),
 afb AS (SELECT * FROM afb0 WHERE (b, bb) NOT IN
           (SELECT (b, bb) FROM afb0 GROUP BY b, bb HAVING count(*) > 256)),
 afc AS (SELECT DISTINCT l.ref AS ref_a, l.sig AS sig_a, r.ref AS ref_b, r.sig AS sig_b
         FROM afb l JOIN afb r ON l.b = r.b AND l.bb = r.bb AND l.ref < r.ref),
-afp AS (SELECT ref_a, ref_b,
-               list_aggregate(list_transform(range(1, 32),
-                 i -> CASE WHEN sig_a[i] <> sig_b[i] THEN 1 ELSE 0 END), 'sum') AS ham
-        FROM afc)
+afp AS (SELECT ref_a, ref_b, bit_count(xor(sig_a, sig_b)) AS ham FROM afc)
 SELECT 'dhash_pair' AS variant, ref_a AS ref, ref_b, CAST(ham AS BIGINT) AS n1
 FROM dhp WHERE ham <= 3
 UNION ALL

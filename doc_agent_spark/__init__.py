@@ -31,7 +31,7 @@ Layout
 
 import sys
 
-__version__ = "0.1.0"
+__version__ = "0.1.1"
 
 
 def _guard_zip_invalidation() -> None:

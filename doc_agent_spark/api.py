@@ -132,12 +132,13 @@ def _search_documents(spark: SparkSession, input_path: str, query: str,
         ).withColumnRenamed("rrf_score", "score")
     elif mode == "media":
         # multi-modal search (roadmap :353): the query string is treated as
-        # media CONTENT, dHashed driver-side with the same codec kernel the
-        # corpus pass uses, and retrieved by banded Hamming-kNN — rows
-        # sharing >= 1 of 8 byte bands with the query are exact-verified
-        # (pigeonhole-exact within Hamming 7; beyond that it is LSH recall,
-        # the documented behavior of perceptual-hash retrieval at scale).
-        # score = 64 - hamming so "higher is better" like the other modes.
+        # media CONTENT, dHashed driver-side (an integer signature) with the
+        # same codec kernel the corpus pass uses, and retrieved by banded
+        # Hamming-kNN — rows sharing >= 1 of 8 byte bands with the query
+        # are exact-verified. max_hamming=7 is the 8-band pigeonhole bound,
+        # so every returned row is exact: nothing farther than 7 bits
+        # comes back. score = 64 - hamming so "higher is better" like the
+        # other modes.
         from .operators import multimodal
 
         sigs = multimodal.image_dhash(multimodal.media_from_documents(docs))
@@ -146,7 +147,7 @@ def _search_documents(spark: SparkSession, input_path: str, query: str,
         # mode (the knn k IS the retrieval cut); ties at the cut break on
         # the NUMERIC doc id, matching search.topk's id-asc convention
         knn = multimodal.hamming_knn(
-            sigs, qsig, k=(2 * limit if rerank else limit), max_hamming=63,
+            sigs, qsig, k=(2 * limit if rerank else limit), max_hamming=7,
             tie=F.regexp_extract("media_ref", r"media://doc/(\d+)/", 1)
             .cast("long"),
         )

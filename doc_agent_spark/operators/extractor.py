@@ -19,8 +19,8 @@ The one engine is ``mapInArrow``: each Arrow batch decodes the span
 structs column-wise, ``spec.extract_rows`` extracts every document of the
 batch, and the result columns are built per batch; there is no
 row-at-a-time Python UDF serialization (input_hint requirement). The test
-oracle, ``spec.extract_document``, runs the same extraction one document
-at a time.
+oracle, ``spec.extract_document_cols``, runs the same extraction one
+document at a time.
 
 A Python task's fixed start-up cost is paid once per worker, not once per
 task: importing ``doc_agent_spark`` installs a stat-guarded

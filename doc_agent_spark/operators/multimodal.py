@@ -318,18 +318,18 @@ def media_videos_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def dhash_of_bytes(b: bytes) -> tuple[int, int, str]:
-    """One image's (width, height, 64-bit dHash string) — the shared kernel
-    of the Arrow batch pass and the driver-side query hash for
-    `doc search --mode media` (the query is a single item; hashing it
+def dhash_of_bytes(b: bytes) -> tuple[int, int, int]:
+    """One image's (width, height, 64-bit dHash as a signed long) — the
+    shared kernel of the Arrow batch pass and the driver-side query hash
+    for `doc search --mode media` (the query is a single item; hashing it
     locally is model-sized work, not a corpus collect)."""
     arr = FakeCodec.decode_image(b)
     h, w = arr.shape
     ri = (np.arange(8) * h) // 8
     cj = (np.arange(9) * w) // 9
     grid = arr[np.ix_(ri, cj)].astype(np.int16)
-    bits = (grid[:, :8] > grid[:, 1:]).astype(np.uint8).ravel()
-    return w, h, "".join("1" if x else "0" for x in bits)
+    bits = grid[:, :8] > grid[:, 1:]
+    return w, h, int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
 
 
 def image_dhash(
@@ -342,32 +342,25 @@ def image_dhash(
     to an 8x9 grid, emit bit (i,j) = px[i,j] > px[i,j+1] -> a 64-bit
     row-major signature. Identical/near-identical pixels give identical
     signatures regardless of container bytes — the image analog of the
-    text fingerprint arm. Hash ships as a 64-char '0'/'1' string (no
-    sign-bit trap, trivially mirrorable).
+    text fingerprint arm. The hash ships as a ``bigint``: grid bit p
+    (row-major) is bit 63-p of the long, so bit (0,0) is the sign bit.
 
     Decodes via FakeCodec DIRECTLY (not the Pillow-first path): the gate
     needs the deterministic pseudo-codec on both engines; a real
     deployment swaps one line to decode_image. Arrow mapInPandas with
     the grid fully vectorized per image; zero shuffle.
     """
-    schema = f"{ref_col} string, width int, height int, popcnt int, dhash string"
+    schema = f"{ref_col} string, width int, height int, dhash bigint"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            refs, ws, hs, pops, hashes = [], [], [], [], []
-            for ref, content in zip(pdf[ref_col], pdf[content_col]):
-                w, h, sig = dhash_of_bytes(bytes(content or b"\x00"))
-                refs.append(ref)
-                ws.append(w)
-                hs.append(h)
-                pops.append(sig.count("1"))
-                hashes.append(sig)
-            yield pd.DataFrame(
-                {ref_col: refs, "width": ws, "height": hs,
-                 "popcnt": pops, "dhash": hashes}
-            )
+            rows = [(ref, *dhash_of_bytes(bytes(content or b"\x00")))
+                    for ref, content in zip(pdf[ref_col], pdf[content_col])]
+            yield pd.DataFrame(rows, columns=[ref_col, "width", "height", "dhash"])
 
-    return media.select(ref_col, content_col).mapInPandas(run, schema=schema)
+    return media.select(ref_col, content_col).mapInPandas(
+        run, schema=schema
+    ).withColumn("popcnt", F.bit_count("dhash"))
 
 
 def audio_fingerprint(
@@ -380,102 +373,83 @@ def audio_fingerprint(
     deterministically simplified): split the decoded sample stream into
     ``n_frames`` equal frames, bit f = mean |amplitude| of frame f >
     frame f+1 -> an (n_frames-1)-bit signature robust to container bytes
-    and re-encoding offsets the way dHash is for images.
+    and re-encoding offsets the way dHash is for images. It ships as a
+    ``bigint`` with frame bit f at bit n_frames-2-f (frame 0 most
+    significant).
 
     ALL-INTEGER comparison: frame energy is the exact integer sum of
     |2*byte - 255| and means compare cross-multiplied (e_i*n_j >
     e_j*n_i), so no float summation order can flip a bit between numpy
     (pairwise summation) and the DuckDB mirror (sequential fold).
     """
-    schema = f"{ref_col} string, n_samples int, popcnt int, afp string"
+    schema = f"{ref_col} string, n_samples int, afp bigint"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            refs, ns, pops, fps = [], [], [], []
+            refs, ns, fps = [], [], []
             for ref, content in zip(pdf[ref_col], pdf[content_col]):
                 b = bytes(content or b"\x00")
                 buf = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
                 amp = np.abs(2 * buf - 255)
                 n = len(buf)
                 bounds = [(f * n) // n_frames for f in range(n_frames + 1)]
-                e = np.array(
-                    [int(amp[bounds[f]:bounds[f + 1]].sum()) for f in range(n_frames)],
-                    dtype=object,
-                )
-                c = np.array(
-                    [max(bounds[f + 1] - bounds[f], 1) for f in range(n_frames)],
-                    dtype=object,
-                )
-                bits = "".join(
-                    "1" if e[f] * c[f + 1] > e[f + 1] * c[f] else "0"
-                    for f in range(n_frames - 1)
-                )
+                e = [int(amp[bounds[f]:bounds[f + 1]].sum()) for f in range(n_frames)]
+                c = [max(bounds[f + 1] - bounds[f], 1) for f in range(n_frames)]
+                sig = 0
+                for f in range(n_frames - 1):
+                    sig = (sig << 1) | (e[f] * c[f + 1] > e[f + 1] * c[f])
                 refs.append(ref)
                 ns.append(n)
-                pops.append(bits.count("1"))
-                fps.append(bits)
-            yield pd.DataFrame(
-                {ref_col: refs, "n_samples": ns, "popcnt": pops, "afp": fps}
-            )
+                fps.append(sig)
+            yield pd.DataFrame({ref_col: refs, "n_samples": ns, "afp": fps})
 
-    return media.select(ref_col, content_col).mapInPandas(run, schema=schema)
+    return media.select(ref_col, content_col).mapInPandas(
+        run, schema=schema
+    ).withColumn("popcnt", F.bit_count("afp"))
 
 
 # ---------------------------------------------------------------------------
 # Perceptual-hash retrieval (SEMANTIC-SEARCH-ROADMAP.md:353 "multi-modal
 # search"): Hamming-nearest queries over the dHash / audio-FP signatures
-# through the same banded-LSH machinery the SimHash text path uses — band
-# the bit signature into byte bands, candidates meet ONLY inside a band
-# bucket (never all-pairs), then an exact popcount verify. By pigeonhole a
-# pair within Hamming distance <= n_bands - 1 shares at least one intact
-# band, so max_hamming = 7 over 8 bands is EXACT retrieval, not approximate.
+# through the same banded-LSH machinery the SimHash text path uses — cut
+# the integer signature into bit bands, candidates meet ONLY inside a band
+# bucket (never all-pairs), then an exact bit_count(a ^ b) verify. By
+# pigeonhole a pair within Hamming distance <= n_bands - 1 shares at least
+# one intact band, so max_hamming = n_bands - 1 is EXACT retrieval, not
+# approximate.
 # ---------------------------------------------------------------------------
 
-def _sig_bands(sigs: DataFrame, ref_col: str, sig_col: str, n_bands: int,
-               n_bits: int) -> DataFrame:
-    """Explode a '0'/'1' bit-string signature into (ref, band, band_bits)
-    rows — ceil-split so a non-multiple width (the 31-bit audio FP) puts
-    the remainder in the last band."""
+def _bands(sig, n_bands: int, n_bits: int) -> list:
+    """The band layout of an ``n_bits``-wide long signature: band b holds
+    bits [b*per, (b+1)*per) counted from the most significant one, as the
+    non-negative long ``(sig >> shift_b) & mask_b``. The split is ceil, so
+    a non-multiple width (the 31-bit audio FP) puts the remainder in the
+    last band."""
     per = (n_bits + n_bands - 1) // n_bands
-    bands = F.array(*[
-        F.substring(F.col(sig_col), b * per + 1, per) for b in range(n_bands)
-    ])
-    return sigs.select(
-        F.col(ref_col).alias("ref"), F.col(sig_col).alias("sig"),
-        F.posexplode(bands).alias("band", "band_bits"),
-    )
-
-
-def _hamming(a, b, n_bits: int):
-    """Exact Hamming distance between two equal-width bit strings, JVM-side:
-    conv() each 32-bit half to a long, XOR, bit_count — no UDF, no explode."""
-    total = None
-    for lo in range(0, n_bits, 32):
-        w = min(32, n_bits - lo)
-        ai = F.conv(F.substring(a, lo + 1, w), 2, 10).cast("long")
-        bi = F.conv(F.substring(b, lo + 1, w), 2, 10).cast("long")
-        d = F.bit_count(ai.bitwiseXOR(bi))
-        total = d if total is None else total + d
-    return total
+    out = []
+    for lo in range(0, n_bits, per):
+        w = min(per, n_bits - lo)
+        out.append(F.shiftright(sig, n_bits - lo - w).bitwiseAND((1 << w) - 1))
+    return out
 
 
 def hamming_near_pairs(
     sigs: DataFrame,
-    max_hamming: int = 7,
+    max_hamming: int = 3,
     ref_col: str = "media_ref",
     sig_col: str = "dhash",
-    n_bands: int = 8,
+    n_bands: int = 4,
     n_bits: int = 64,
-    max_band_df: int | None = None,
+    max_band_df: int | None = 256,
 ) -> DataFrame:
     """All signature pairs within ``max_hamming`` bits: banded candidate
-    generation (equi-join on (band, band_bits)) then exact verify.
+    generation (equi-join on (band, band_val)) then exact verify.
     EXACT when max_hamming <= n_bands - 1 (pigeonhole) and no bucket is
     capped. Returns (ref_a, ref_b, hamming).
 
-    Scale levers (r5, found by the sf1.0 bench — 50k CORRELATED docs in
-    8-bit bands produced 1.3k-doc hot buckets and 8e7 candidate pairs,
-    a 50× super-linear entry):
+    The defaults are the corpus-scale operating point (r5, found by the
+    sf1.0 bench — 50k CORRELATED docs in 8-bit bands produced 1.3k-doc hot
+    buckets and 8e7 candidate pairs, a 50× super-linear entry):
     - band WIDTH is the primary dial: n_bands=4 → 16-bit bands → 65,536
       buckets per band; candidates ≈ T·N²/2^width. Wider bands trade the
       pigeonhole exactness bound down (≤ n_bands-1) — the standard
@@ -485,25 +459,31 @@ def hamming_near_pairs(
       cap before the self-join (the stop-shingle / video frame-DF rule).
       A pair whose every intact band is hot is missed — the documented
       recall trade every production LSH makes on boilerplate-heavy data.
+      ``None`` keeps every bucket.
     """
-    b = _sig_bands(sigs, ref_col, sig_col, n_bands, n_bits)
+    b = sigs.select(
+        F.col(ref_col).alias("ref"), F.col(sig_col).alias("sig"),
+        F.posexplode(F.array(*_bands(F.col(sig_col), n_bands, n_bits)))
+        .alias("band", "band_val"),
+    )
     if max_band_df is not None:
         hot = (
-            b.groupBy("band", "band_bits")
+            b.groupBy("band", "band_val")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_band_df)
-            .select("band", "band_bits")
+            .select("band", "band_val")
         )
-        b = b.join(hot, ["band", "band_bits"], "left_anti")
+        b = b.join(hot, ["band", "band_val"], "left_anti")
     cands = (
-        b.alias("a").join(b.alias("b"), ["band", "band_bits"])
+        b.alias("a").join(b.alias("b"), ["band", "band_val"])
         .where(F.col("a.ref") < F.col("b.ref"))
         .select(F.col("a.ref").alias("ref_a"), F.col("b.ref").alias("ref_b"),
                 F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"))
         .dropDuplicates(["ref_a", "ref_b"])
     )
+    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
-        cands.withColumn("hamming", _hamming(F.col("sig_a"), F.col("sig_b"), n_bits))
+        cands.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("ref_a", "ref_b", "hamming")
     )
@@ -511,7 +491,7 @@ def hamming_near_pairs(
 
 def hamming_knn(
     sigs: DataFrame,
-    query_sig: str,
+    query_sig: int,
     k: int = 10,
     max_hamming: int = 7,
     ref_col: str = "media_ref",
@@ -522,19 +502,22 @@ def hamming_knn(
 ) -> DataFrame:
     """Single-query Hamming top-k (the `doc search --mode media` serve
     shape): rows sharing >= 1 band with the query are scanned — a static
-    8-branch OR of substring equalities the scan evaluates without any
-    join or shuffle — then exact-verified and TakeOrdered'd. Exact for
-    max_hamming <= n_bands - 1. Returns (ref, hamming) ordered by
-    (hamming asc, ref asc)."""
-    per = (n_bits + n_bands - 1) // n_bands
-    qbands = [query_sig[b * per:(b + 1) * per] for b in range(n_bands)]
+    OR of band equalities the scan evaluates without any join or shuffle —
+    then exact-verified and TakeOrdered'd. Exact for max_hamming <=
+    n_bands - 1. Returns (ref, hamming) ordered by (hamming asc, ref asc).
+
+    Unlike :func:`hamming_near_pairs` this keeps 8 narrow bands: the band
+    filter is one linear scan with no self-join, so narrow bands cost no
+    candidate blow-up, and they keep the exactness bound at 7 bits, the
+    radius every caller asks for."""
+    q = F.lit(query_sig).cast("long")
+    sig = F.col(sig_col)
     match = None
-    for b, qb in enumerate(qbands):
-        cond = F.substring(F.col(sig_col), b * per + 1, per) == F.lit(qb)
-        match = cond if match is None else match | cond
+    for sb, qb in zip(_bands(sig, n_bands, n_bits), _bands(q, n_bands, n_bits)):
+        match = sb == qb if match is None else match | (sb == qb)
     out = (
         sigs.filter(match)
-        .withColumn("hamming", _hamming(F.col(sig_col), F.lit(query_sig), n_bits))
+        .withColumn("hamming", F.bit_count(sig.bitwiseXOR(q)))
         .filter(F.col("hamming") <= max_hamming)
     )
     # default tie-break is ref ASC (string order — what the oracle arm

@@ -9,11 +9,11 @@ Where it runs:
      ``mapInArrow`` worker calls :func:`extract_rows` once per Arrow batch;
   2. the normalize stage (``operators/normalize.py``): the Zod emulation
      :func:`normalize_docdata` over model-JSON strings;
-  3. the tests and the benchmark, as the oracle: :func:`extract_document`
-     and :func:`extract_document_cols` give the same extraction one
-     document at a time, so any divergence between the distributed plan
-     and the spec (ordering, grouping, null handling) fails the
-     span-sequence equality gate ``(kind, text, media_ref, order)``.
+  3. the tests and the benchmark, as the oracle:
+     :func:`extract_document_cols` gives the same extraction one document
+     at a time, so any divergence between the distributed plan and the
+     spec (ordering, grouping, null handling) fails the span-sequence
+     equality gate ``(kind, text, media_ref, order)``.
 
 The extraction is :func:`extract_fields` (the regex rules over the page
 lines) then :func:`finish_typed` (normalize and render the spans straight
@@ -669,16 +669,6 @@ def extract_document_cols(
         "out_spans": [{"order": i, "kind": k, "text": t, "media_ref": r}
                       for i, (k, t, r) in enumerate(spans)],
     }
-
-
-def extract_document(doc_id: str, spans: list[dict]) -> dict:
-    """:func:`extract_document_cols` over per-span dicts
-    ``{kind, text, media_ref, offset}`` in ANY order (sorted here) — the
-    shape the test oracle collects."""
-    spans = sorted(spans, key=lambda s: s["offset"])
-    return extract_document_cols(
-        doc_id, [s.get("text") for s in spans], [s.get("media_ref") for s in spans],
-        list(range(len(spans))))
 
 
 def extract_rows(

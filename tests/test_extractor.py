@@ -32,7 +32,13 @@ def docs(spark):
 def oracle_spans(rows):
     out = {}
     for d in rows:
-        r = spec.extract_document(d["doc_id"], [dict(s) for s in d["spans"]])
+        spans = d["spans"]
+        r = spec.extract_document_cols(
+            d["doc_id"],
+            [s["text"] for s in spans],
+            [s["media_ref"] for s in spans],
+            [0 if s["offset"] is None else s["offset"] for s in spans],
+        )
         out[d["doc_id"]] = [(s["order"], s["kind"], s["text"], s["media_ref"]) for s in r["out_spans"]]
     return out
 

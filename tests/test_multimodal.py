@@ -160,7 +160,7 @@ def test_image_dhash_matches_index_arithmetic(spark):
         expect = "".join(bits)
         row = got[f"media://doc/{i}/full.png"]
         assert (row.width, row.height) == (w, h)
-        assert row.dhash == expect
+        assert row.dhash == _signed(expect)
         assert row.popcnt == expect.count("1")
 
 
@@ -192,16 +192,25 @@ def test_audio_fingerprint_shift_and_constant(spark):
     rows = {r.media_ref: r for r in multimodal.audio_fingerprint(media).collect()}
     # identical streams -> identical fingerprints; constant stream -> all 0
     assert rows["a://1"].afp == rows["a://2"].afp
-    assert rows["a://3"].afp == "0" * 31 and rows["a://3"].popcnt == 0
+    assert rows["a://3"].afp == 0 and rows["a://3"].popcnt == 0
     assert rows["a://1"].n_samples == 256
 
 
 # --- Hamming-banded perceptual retrieval (roadmap :353 media search) -------
 
 
-def _sig_df(spark, rows, bits=64):
+def _signed(bits: str) -> int:
+    """A '0'/'1' string read MSB-first as a long: a 64-char string with a
+    leading '1' is negative (two's complement)."""
+    v = int(bits, 2)
+    return v - (1 << 64) if len(bits) == 64 and bits[0] == "1" else v
+
+
+def _sig_df(spark, rows, col="dhash"):
+    """BIGINT signatures from bit strings; the strings stay the brute-force
+    reference."""
     return spark.createDataFrame(
-        [(r, s.zfill(bits)) for r, s in rows], "media_ref string, dhash string"
+        [(r, _signed(s)) for r, s in rows], f"media_ref string, {col} bigint"
     )
 
 
@@ -235,7 +244,7 @@ def test_hamming_near_pairs_pigeonhole_exact(spark):
     got = {
         (r.ref_a, r.ref_b, r.hamming)
         for r in multimodal.hamming_near_pairs(
-            _sig_df(spark, rows), max_hamming=7
+            _sig_df(spark, rows), max_hamming=7, n_bands=8, max_band_df=None
         ).collect()
     }
     want = _brute_pairs(rows, 7)
@@ -252,7 +261,7 @@ def test_hamming_knn_matches_brute_force_within_bound(spark):
             for i in range(30)]
     q = rows[4][1]
     got = multimodal.hamming_knn(
-        _sig_df(spark, rows), q, k=5, max_hamming=7
+        _sig_df(spark, rows), _signed(q), k=5, max_hamming=7
     ).collect()
     brute = sorted(
         (sum(x != y for x, y in zip(s, q)), r) for r, s in rows
@@ -265,7 +274,7 @@ def test_hamming_knn_matches_brute_force_within_bound(spark):
 def test_hamming_audio_width_31(spark):
     """Non-multiple widths ceil-split (8,8,8,7) and still verify exactly."""
     rows = [("a", "1" * 31), ("b", "1" * 30 + "0"), ("c", "0" * 31)]
-    df = spark.createDataFrame(rows, "media_ref string, afp string")
+    df = _sig_df(spark, rows, col="afp")
     got = {
         (r.ref_a, r.ref_b, r.hamming)
         for r in multimodal.hamming_near_pairs(
@@ -305,7 +314,7 @@ def test_hamming_band_df_cap_drops_hot_buckets(spark):
     base = "0" * 8 + "1" * 48 + "10101010"
     near = "0" * 8 + "1" * 46 + "00" + "10101010"   # hamming 2, shares bands 0 and 7
     rows += [("p0", base), ("p1", near)]
-    df = spark.createDataFrame(rows, "media_ref string, dhash string")
+    df = _sig_df(spark, rows)
     got = {
         (r.ref_a, r.ref_b, r.hamming)
         for r in multimodal.hamming_near_pairs(
@@ -315,3 +324,93 @@ def test_hamming_band_df_cap_drops_hot_buckets(spark):
     # band 0's bucket (12 members) is capped out; p0/p1 still pair via band 7
     assert ("p0", "p1", 2) in got
     assert all(a.startswith("p") and b.startswith("p") for a, b, _ in got)
+
+
+# --- sign bit and band masks of the BIGINT signatures ----------------------
+
+
+def _one_bits(*positions):
+    """64-char bit string with a '1' at each string position (0 = MSB)."""
+    return "".join("1" if p in positions else "0" for p in range(64))
+
+
+SIGN_ROWS = [
+    ("zero", "0" * 64),
+    ("msb", _one_bits(0)),          # differs from zero only in the sign bit
+    ("ones", "1" * 64),             # -1: hamming 64 from zero
+    # band 2 of the 16-bit pair layout (string positions 32..47) is 0x8001
+    # in both; bands 0, 1 and 3 each differ by one bit (hamming 3), so the
+    # pair meets ONLY through a band whose top bit is set
+    ("band_a", _one_bits(32, 47)),
+    ("band_b", _one_bits(32, 47, 15, 31, 63)),
+]
+
+
+@pytest.mark.parametrize("n_bands,n_bits", [(4, 64), (8, 64), (2, 31), (4, 31)])
+def test_band_layout_is_the_string_slices(spark, n_bands, n_bits):
+    """Band b is the b-th ceil-split slice of the MSB-first bit string."""
+    rows = [(r, s[:n_bits]) for r, s in SIGN_ROWS]
+    df = _sig_df(spark, rows)
+    bands = multimodal._bands(df["dhash"], n_bands, n_bits)
+    got = {r[0]: list(r[1:]) for r in df.select("media_ref", *bands).collect()}
+    per = (n_bits + n_bands - 1) // n_bands
+    for r, s in rows:
+        assert got[r] == [int(s[lo:lo + per], 2) for lo in range(0, n_bits, per)]
+
+
+@pytest.mark.parametrize("n_bands", [4, 8])
+def test_hamming_pairs_sign_bit_and_band_masks(spark, n_bands):
+    got = {
+        (r.ref_a, r.ref_b, r.hamming)
+        for r in multimodal.hamming_near_pairs(
+            _sig_df(spark, SIGN_ROWS), max_hamming=n_bands - 1,
+            n_bands=n_bands, max_band_df=None,
+        ).collect()
+    }
+    assert got == _brute_pairs(SIGN_ROWS, n_bands - 1)
+    assert ("msb", "zero", 1) in got
+    assert ("band_a", "band_b", 3) in got
+    assert not any({"ones", "zero"} <= {a, b} for a, b, _ in got)
+
+
+def test_hamming_knn_sign_bit_and_band_masks(spark):
+    rows = SIGN_ROWS + [
+        # shares only band 3 of the 8-bit kNN layout (positions 24..31,
+        # 0x81) with band_q; every other band differs by one bit
+        ("band_q", _one_bits(24, 31)),
+        ("band_c", _one_bits(24, 31, 7, 15, 23, 39, 47, 55, 63)),
+    ]
+    df = _sig_df(spark, rows)
+    got = {}
+    for name, q in [("zero", "0" * 64), ("band_q", _one_bits(24, 31)),
+                    ("ones", "1" * 64)]:
+        got[name] = [(r.hamming, r.ref) for r in multimodal.hamming_knn(
+            df, _signed(q), k=10, max_hamming=7).collect()]
+        brute = sorted((sum(x != y for x, y in zip(s, q)), r) for r, s in rows)
+        assert got[name] == [(h, r) for h, r in brute if h <= 7]
+    assert got["zero"][:2] == [(0, "zero"), (1, "msb")]
+    assert (7, "band_c") in got["band_q"]
+    assert got["ones"] == [(0, "ones")]
+
+
+def test_search_mode_media_matches_brute_force(spark, sf_dir):
+    """`--mode media` returns exactly the documents within Hamming 7 of the
+    query's dHash (the 8-band pigeonhole bound), ordered by (hamming, id)
+    and cut at ``limit``."""
+    from doc_agent_spark import api
+
+    path = f"{sf_dir}/documents.parquet"
+    docs = spark.read.parquet(path)
+    sigs = {
+        int(r.media_ref.split("/")[3]): r.dhash
+        for r in multimodal.image_dhash(
+            multimodal.media_from_documents(docs)
+        ).collect()
+    }
+    text = {r.doc_id: r.text for r in docs.filter("doc_id IN (0, 3)").collect()}
+    for qtext, limit in [(text[3], 5), (text[0][:-1] + "z", 50)]:
+        _, _, q = multimodal.dhash_of_bytes(qtext.encode("utf-8"))
+        ham = {i: bin((s ^ q) & (2 ** 64 - 1)).count("1") for i, s in sigs.items()}
+        want = sorted((h, i) for i, h in ham.items() if h <= 7)[:limit]
+        out = api._search_documents(spark, path, qtext, limit=limit, mode="media")
+        assert sorted((64 - int(r.score), r.id) for r in out.collect()) == want
